@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Ops
 import graft.sources.{ParquetWarehouse, Warehouse}
@@ -12,7 +15,10 @@ import graft.sources.{ParquetWarehouse, Warehouse}
   * materialize-everything-between-steps pattern (transform.py eagerly
   * holds every intermediate in RAM) disappears; Spark streams
   * partition-wise and the shared prefix of the three sinks is planned
-  * once per sink without driver-side materialization.
+  * once per sink without driver-side materialization. Row counts for the
+  * reference's accounting logs come from the write pass itself (an
+  * [[Observation]] on each written frame), never from re-reading a
+  * table.
   */
 object MoviePipeline {
 
@@ -36,11 +42,6 @@ object MoviePipeline {
     "popularity", "genres_list", "production_countries_list",
   )
 
-  /** Ingest (EP2, ingest.py:53-95): CSV with header + schema inference →
-    * parquet, full replace. Spark derives DDL from the inferred
-    * StructType (the reference's hand-rolled get_schema/DROP/CREATE/COPY
-    * sequence is subsumed by write.mode(overwrite)).
-    */
   /** CSV read options matching pandas' dialect (ingest.py:64): RFC-4180
     * doubled-quote escaping ("" inside a quoted field), not Spark's
     * default backslash escape — movie titles/overviews contain quotes
@@ -53,21 +54,37 @@ object MoviePipeline {
       .option("quote", "\"")
       .option("escape", "\"")
 
-  def ingest(spark: SparkSession, csvPath: String, rawTablePath: String): Long = {
-    val df = csvReader(spark).csv(csvPath)
-    df.write.mode("overwrite").parquet(rawTablePath)
-    spark.read.parquet(rawTablePath).count()
+  /** How long a finished write may take to report its row count. The
+    * metric reaches the [[Observation]] through the listener bus, so it
+    * lags the write by milliseconds; a backend whose write never reports
+    * it fails here instead of blocking forever.
+    */
+  private val RowCountTimeout = 2.minutes
+
+  /** Runs `write` over `df` and returns the rows it wrote, counted by an
+    * [[Observation]] in the write's own pass.
+    */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    Await.result(rows.future, RowCountTimeout).getLong(0)
   }
+
+  /** Ingest (EP2, ingest.py:53-95): CSV with header + schema inference →
+    * parquet, full replace. Spark derives DDL from the inferred
+    * StructType (the reference's hand-rolled get_schema/DROP/CREATE/COPY
+    * sequence is subsumed by write.mode(overwrite)). Returns the rows
+    * written.
+    */
+  def ingest(spark: SparkSession, csvPath: String, rawTablePath: String): Long =
+    countedWrite(csvReader(spark).csv(csvPath))(_.write.mode("overwrite").parquet(rawTablePath))
 
   /** Warehouse-backed ingest: same S1 scan, sink chosen by the caller —
     * parquet natively, JDBC for Postgres parity (ingest.py:80-86), or
     * a catalog table (D1/D2).
     */
-  def ingest(spark: SparkSession, csvPath: String, wh: Warehouse, table: String): Long = {
-    val df = csvReader(spark).csv(csvPath)
-    wh.write(df, table)
-    wh.read(spark, table).count()
-  }
+  def ingest(spark: SparkSession, csvPath: String, wh: Warehouse, table: String): Long =
+    countedWrite(csvReader(spark).csv(csvPath))(wh.write(_, table))
 
   /** The cleaning/derivation stage (transform.py:96-105): list-parse the
     * text columns (X1, clean semantics per SURVEY §7.4 H2), coerce
@@ -144,8 +161,8 @@ object MoviePipeline {
       .orderBy(desc("average_revenue"), asc("genre_name"))
 
   /** Transform (EP3): raw table → the three production tables, full
-    * replace (D2 semantics). Returns (facts, genreFact, genreAvg) row
-    * counts for the reference's row-accounting logs (A2).
+    * replace (D2 semantics). Returns the (facts, genreFact, genreAvg) rows
+    * written, for the reference's row-accounting logs (A2).
     */
   def transform(spark: SparkSession, rawTablePath: String, outDir: String): (Long, Long, Long) =
     transform(
@@ -161,23 +178,23 @@ object MoviePipeline {
     * the reference's `production` schema boundary (transform.py:61-71).
     */
   def transform(spark: SparkSession, cleaned: DataFrame, wh: Warehouse): (Long, Long, Long) = {
-    wh.write(movieFacts(cleaned), "movie_facts")
-    wh.write(movieGenreFact(cleaned), "movie_genre_fact")
-    wh.write(genreAverageRevenue(cleaned), "genre_average_revenue")
+    def write(df: DataFrame, table: String) = countedWrite(df)(wh.write(_, table))
     (
-      wh.read(spark, "movie_facts").count(),
-      wh.read(spark, "movie_genre_fact").count(),
-      wh.read(spark, "genre_average_revenue").count(),
+      write(movieFacts(cleaned), "movie_facts"),
+      write(movieGenreFact(cleaned), "movie_genre_fact"),
+      write(genreAverageRevenue(cleaned), "genre_average_revenue"),
     )
   }
 
   /** Full pipeline (R1): sequential fail-fast — exceptions propagate,
     * aborting later stages exactly like run_pipeline.py's early returns.
+    * Returns transform's (facts, genreFact, genreAvg) row counts.
     */
   def run(spark: SparkSession, csvPath: String, warehouseDir: String,
-          sink: ChunkedSink, rowLimit: Int = Publish.DefaultRowLimit): Unit = {
+          sink: ChunkedSink, rowLimit: Int = Publish.DefaultRowLimit): (Long, Long, Long) = {
     ingest(spark, csvPath, s"$warehouseDir/raw/tmdb_movies_raw")
-    transform(spark, s"$warehouseDir/raw/tmdb_movies_raw", s"$warehouseDir/production")
+    val counts =
+      transform(spark, s"$warehouseDir/raw/tmdb_movies_raw", s"$warehouseDir/production")
     Seq("movie_facts", "movie_genre_fact", "genre_average_revenue").foreach { t =>
       val read = spark.read.parquet(s"$warehouseDir/production/$t")
       // A partitioned table appends its partition column LAST on read
@@ -194,5 +211,6 @@ object MoviePipeline {
         limit = if (t == "genre_average_revenue") None else Some(rowLimit),
       )
     }
+    counts
   }
 }

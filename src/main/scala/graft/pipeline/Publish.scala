@@ -48,13 +48,16 @@ object Publish {
               chunkSize: Int = ChunkSize): Long = {
     val normalized = normalizeDoubles(df)
     val capped = limit.fold(normalized)(normalized.limit)
-    if (capped.isEmpty) return 0L // publish.py:43-45 empty-frame guard
+    // Bounded by the row cap; streams one partition at a time. The first
+    // hasNext fetches partitions until one holds a row, so it doubles as
+    // the publish.py:43-45 empty-frame guard without a separate job.
+    val rows = capped.toLocalIterator().asScala
+    if (!rows.hasNext) return 0L
     sink.ensure(table) // publish.py:64-68 create-if-missing
     sink.clear(table)
     sink.appendHeader(table, capped.columns.toSeq)
     var published = 0L
-    // Bounded by the row cap; streams one partition at a time.
-    capped.toLocalIterator().asScala.grouped(chunkSize).foreach { chunk =>
+    rows.grouped(chunkSize).foreach { chunk =>
       sink.appendChunk(table, chunk.map(_.toSeq))
       published += chunk.size
     }

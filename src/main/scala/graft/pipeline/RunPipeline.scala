@@ -20,9 +20,10 @@ object RunPipeline {
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
-      MoviePipeline.run(spark, csvPath, warehouseDir, new CsvFileSink(sinkDir))
-      Seq("movie_facts", "movie_genre_fact", "genre_average_revenue").foreach { t =>
-        val n = spark.read.parquet(s"$warehouseDir/production/$t").count()
+      val (facts, genreFact, genreAvg) =
+        MoviePipeline.run(spark, csvPath, warehouseDir, new CsvFileSink(sinkDir))
+      Seq("movie_facts" -> facts, "movie_genre_fact" -> genreFact,
+        "genre_average_revenue" -> genreAvg).foreach { case (t, n) =>
         println(s"[pipeline] $t rows=$n")
       }
     } finally spark.stop()

@@ -133,7 +133,8 @@ object ScaleSmoke {
       val genSec = (System.nanoTime() - t0) / 1e9
 
       val t1 = System.nanoTime()
-      MoviePipeline.run(spark, csvDir, whDir, new CsvFileSink(sinkDir))
+      val (runFacts, runGenre, runAvg) =
+        MoviePipeline.run(spark, csvDir, whDir, new CsvFileSink(sinkDir))
       val pipeSec = (System.nanoTime() - t1) / 1e9
 
       // ---- Row-accounting contract, expectations derived from the RAW
@@ -161,6 +162,10 @@ object ScaleSmoke {
       check("raw_rows", rawN, rows)
       check("movie_facts", factsN, expectedFacts)
       check("movie_genre_fact", genreN, expectedGenreRows)
+      // The counts run() returns come from the write pass, not a re-read.
+      check("returned movie_facts", runFacts, factsN)
+      check("returned movie_genre_fact", runGenre, genreN)
+      check("returned genre_average_revenue", runAvg, avgN)
       if (avgN < 1 || avgN > Genres.size.toLong)
         sys.error(s"genre_average_revenue implausible: $avgN")
 

@@ -2739,7 +2739,11 @@ object TextOps {
     * landed one document a last-ulp away across a round-to-4-decimals
     * boundary (0.4312 vs 0.4313) in the first formulation. Exact
     * integers + one correctly-rounded division is bit-identical by
-    * IEEE, which is what a hash-compared score needs.
+    * IEEE, which is what a hash-compared score needs. The 4-decimal
+    * rounding is spelled round(x·10⁴, 0)/10⁴, DuckDB's own formula:
+    * Spark's round(x, 4) rounds the shortest decimal string of x
+    * half-up, so on a tie such as 1281/2400 (0.53375 in decimal, just
+    * under 5337.5 once scaled) it gives 0.5338 where DuckDB gives 0.5337.
     *
     * Scale shape: reads the at-rest [[termFrequencies]] snapshot —
     * corpus TEXT is scanned zero times in this plan. Ranks come from a
@@ -2805,8 +2809,8 @@ object TextOps {
         max("n_terms").as("n_terms"))
       .select(
         col("doc_id"), col("n_tokens"),
-        round(col("num").cast("double") /
-          (col("n_tokens") * greatest(col("n_terms") - 1, lit(1))), 4)
+        (round(col("num").cast("double") /
+          (col("n_tokens") * greatest(col("n_terms") - 1, lit(1))) * 10000.0, 0) / 10000.0)
           .as("rarity_score"),
       )
       .orderBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Storage backends for the pipeline's tables.
   *
@@ -42,6 +43,9 @@ trait Warehouse {
   *                      reading one year of it. Null partition values
   *                      land in the default partition and read back as
   *                      null, so row accounting is unchanged.
+  *                      Rows are hash-clustered by that column before
+  *                      the write, so each partition directory gets one
+  *                      file instead of one per input task.
   */
 final class ParquetWarehouse(
     root: String,
@@ -50,10 +54,16 @@ final class ParquetWarehouse(
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(s"$root/$table")
 
-  override def write(df: DataFrame, table: String): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    partitionCols.get(table).fold(w)(w.partitionBy(_)).parquet(s"$root/$table")
-  }
+  override def write(df: DataFrame, table: String): Unit =
+    partitionCols.get(table) match {
+      case Some(p) =>
+        // A rebalance rather than a repartition: AQE may still split a
+        // skewed value across tasks, and coalesces small ones.
+        df.hint("rebalance", col(p)).write.mode(SaveMode.Overwrite)
+          .partitionBy(p).parquet(s"$root/$table")
+      case None =>
+        df.write.mode(SaveMode.Overwrite).parquet(s"$root/$table")
+    }
 }
 
 /** JDBC warehouse (Postgres parity; Derby in tests).

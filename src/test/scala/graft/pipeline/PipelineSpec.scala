@@ -115,6 +115,45 @@ class PipelineSpec extends SparkTestBase {
     assert(rows(1)._2 == """He said "hi" twice""")
   }
 
+  test("transform writes one file per release_year directory and returns the rows it wrote") {
+    val dir = Files.createTempDirectory("graft_pipeline_layout").toString
+    val csvDir = s"$dir/csv"
+    ScaleSmoke.syntheticMovies(spark, 4000).repartition(4).write
+      .option("header", "true").option("quote", "\"").option("escape", "\"")
+      .csv(csvDir)
+    val raw = s"$dir/raw"
+    val rawCount = MoviePipeline.ingest(spark, csvDir, raw)
+    assert(rawCount == spark.read.parquet(raw).count())
+    // Several input tasks, each holding rows of most years: without
+    // clustering, every task would write a file into every year.
+    assert(spark.read.parquet(raw).rdd.getNumPartitions > 1)
+
+    val counts = MoviePipeline.transform(spark, raw, s"$dir/production")
+    def readBack(t: String) = spark.read.parquet(s"$dir/production/$t").count()
+    assert(counts ==
+      ((readBack("movie_facts"), readBack("movie_genre_fact"), readBack("genre_average_revenue"))))
+
+    val yearDirs = new java.io.File(s"$dir/production/movie_facts").listFiles()
+      .filter(_.getName.startsWith("release_year="))
+    assert(yearDirs.length > 50, yearDirs.map(_.getName).toSeq)
+    yearDirs.foreach { d =>
+      val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"${d.getName}: ${files.toSeq}")
+    }
+  }
+
+  test("publish streams every row when the first partitions are empty") {
+    import sqlImplicits._
+    val dir = Files.createTempDirectory("graft_publish_sparse").toString
+    // Four range partitions of 10 ids each; only the last survives.
+    val df = spark.range(0, 40, 1, 4).filter($"id" >= 30).toDF()
+    assert(df.rdd.getNumPartitions == 4)
+    val sink = new CsvFileSink(dir)
+    assert(Publish.publish(df, sink, "t", limit = None, chunkSize = 4) == 10)
+    val lines = scala.io.Source.fromFile(s"$dir/t.csv").getLines().toSeq
+    assert(lines == "id" +: (30 until 40).map(_.toString))
+  }
+
   test("publish empty-frame guard skips the sink entirely (F5)") {
     val dir = Files.createTempDirectory("graft_publish_empty").toString
     import sqlImplicits._

@@ -385,6 +385,39 @@ class CurationQualitySpec extends SparkTestBase {
     assert(out(1L) == ((4L, 0.625)), s"tied tail ranks diverged from rank(): $out")
   }
 
+  /** q108 rounds a tie at the fourth decimal the way its DuckDB oracle
+    * does: round(x·10⁴)/10⁴ on the double. Every doc below has 100
+    * tokens over a 25-term vocabulary whose corpus counts strictly
+    * decrease from t0 to t24, so term ti has rank−1 = i and a doc's
+    * score is (its rank sum)/2400. The sums 1281, 1293 and 609 land
+    * just under a half once scaled (1281/2400·10⁴ = 5337.499999999999),
+    * where Spark's round(x, 4) would round the decimal string 0.53375
+    * up to 0.5338. 1287/2400 scales to exactly 5362.5 and rounds up in
+    * both engines. Expected values are DuckDB 1.0.0's round(x, 4).
+    */
+  test("q108 rounds fourth-decimal ties like DuckDB") {
+    val want = Map(1281 -> 0.5337, 1293 -> 0.5387, 609 -> 0.2537, 1287 -> 0.5363)
+    // 100 tokens with rank sum `num`: (num % 100) at rank q+1, the rest at q.
+    def ranks(num: Int): Seq[Int] = {
+      val (q, rem) = (num / 100, num % 100)
+      Seq.fill(rem)(q + 1) ++ Seq.fill(100 - rem)(q)
+    }
+    val docs = want.keys.toSeq.map(n => n -> ranks(n))
+    val used = docs.flatMap(_._2).groupBy(identity).map { case (r, v) => r -> v.size }
+    // Filler tops every term up to a corpus count of 600 − 10·i.
+    val filler = (0 until 25).flatMap(i => Seq.fill(600 - 10 * i - used.getOrElse(i, 0))(i))
+    def text(rs: Seq[Int]) = rs.map(r => s"t$r").mkString(" ")
+    val dir = writeDocs(
+      (0L, text(filler), "srcF") +:
+        docs.map { case (n, rs) => (n.toLong, text(rs), "srcT") })
+    val out = SparkEntry.queries("q108_unigram_rarity")(spark, dir)
+      .collect().map(r => r.getAs[Long]("doc_id") ->
+        ((r.getAs[Long]("n_tokens"), r.getAs[Double]("rarity_score")))).toMap
+    want.foreach { case (n, score) =>
+      assert(out(n.toLong) == ((100L, score)), s"rank sum $n: $out")
+    }
+  }
+
   // -------------------------------------------------------------------
   test("q113 model filter ranks degenerate docs strictly below diverse docs") {
     // 20 diverse docs (30–50 tokens from a 14-word vocabulary) and 2
