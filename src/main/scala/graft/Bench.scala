@@ -51,8 +51,8 @@ object Bench {
     "q75_rolling_fingerprint", "q95_pattern_scrub",
     // r22: full-scan consumers that moved from the raw upload to the
     // ship-date log at sf0.1 — recorded at ×10 so the raw-vs-log scan
-    // trade (see the q140 comment / AbProbe q140scan A/B) stays
-    // machine-measured as the corpus grows.
+    // trade (see the q140 comment / OPTIMIZATION_r22.md's raw-vs-log
+    // A/B) stays machine-measured as the corpus grows.
     "q20_join_broadcast", "q136_tpch_q16")
 
   /** Prepare only the modules the x10 roster reads: a derived scale
@@ -490,14 +490,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.localSession()
     // Untimed session warmup: JVM classloading, the codegen compiler,
     // and parquet reader init otherwise land on whichever query runs
     // first (~4-5s measured at sf0.1 misattributed to one query).

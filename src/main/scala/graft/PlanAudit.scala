@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit over every declared query: count parquet scan nodes and
   * hash exchanges, and — the signal that matters at 100 TB — how many
   * times a single query scans the SAME source. A documents-only query
@@ -237,12 +235,7 @@ object PlanAudit {
     val minScans = if (args.length > 1) args(1).toInt else 2
     val exec = args.contains("exec")
     val out = args.find(_.startsWith("out=")).map(_.stripPrefix("out="))
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
+    val spark = graft.util.Tables.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
 
     // Raw corpus tables print as .../<name>.parquet; engine-owned

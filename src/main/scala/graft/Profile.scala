@@ -2,59 +2,30 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev profiler, two modes:
+/** Dev profiler: the steady-state artifact. Prepares indexes, runs
+  * one untimed warm-up pass, then [[DefaultReps]] timed passes over
+  * every query and writes per-query MEDIANS (plus all raw runs) as one
+  * JSON object. This is the committed per-round `PROFILE_r{N}.json`:
+  * a contended box inflates some bench queries 2-4× (q110/q111/q143
+  * in r9/r10 showed graded bench times with FLAT gc deltas while five
+  * quiet-box runs sat at steady state) — a committed quiet-box median
+  * makes that class a diffable artifact instead of a changelog
+  * argument. Medians, not minima: the bench's
+  * min-of-N answers "steady-state floor under noise"; the profile's
+  * median answers "typical warm run", and comparing the two separates
+  * noise from drift.
   *
-  * 1. Interactive (the historical mode): runs selected queries twice
-  *    (cold = builds per-corpus snapshots, warm = reads them) so
-  *    snapshot-build cost is separable from query cost.
-  *    Usage: runMain graft.Profile [sfDir] [name ...]
-  *
-  * 2. Steady-state artifact (`out=path` present): prepares indexes,
-  *    runs one untimed warm-up pass, then [[DefaultReps]] timed passes
-  *    over every query and writes per-query MEDIANS (plus all raw
-  *    runs) as one JSON object. This is the committed per-round
-  *    `PROFILE_r{N}.json`: the driver-box bench inflates some queries
-  *    2-4× under box contention (q110/q111/q143 in r9/r10 showed
-  *    driver times with FLAT gc deltas while five quiet-box runs sat
-  *    at steady state) — a committed quiet-box median makes that
-  *    class a diffable artifact instead of a changelog argument.
-  *    Medians, not minima: the bench's min-of-N answers "steady-state
-  *    floor under noise"; the profile's median answers "typical warm
-  *    run", and comparing the two separates noise from drift.
-  *    Usage: runMain graft.Profile [sfDir] out=PROFILE_rN.json [reps=5]
-  *      [bench=BENCH_local_rN.json]  — bench= embeds the per-query
-  *    median-vs-bench-min reconciliation block (see
-  *    [[Profile.ReconcileThreshold]]).
+  * Usage: runMain graft.Profile [sfDir] out=PROFILE_rN.json [reps=5]
+  *   [bench=BENCH_local_rN.json]  — bench= embeds the per-query
+  * median-vs-bench-min reconciliation block (see
+  * [[Profile.ReconcileThreshold]]). Cold/warm timings of single
+  * queries are `graft.Smoke --time`.
   */
 object Profile {
 
   /** Timed passes in steady-state mode (after the untimed warm-up). */
   val DefaultReps = 5
 
-  /** Steady-state core, exposed for the schema spec: warm-up pass then
-    * `reps` timed PASSES over the whole query set — each pass in a
-    * different (rotated / alternately reversed) order — and the
-    * artifact JSON. Query errors are recorded per-query (`err`)
-    * rather than failing the whole profile — an artifact with one
-    * broken query and 138 medians beats no artifact.
-    *
-    * Pass-structured, NOT back-to-back reps (the r11 PROFILE-vs-BENCH
-    * reconciliation): the old shape ran each query's 5 reps
-    * consecutively, so one multi-second box stall spanned several
-    * consecutive runs of the SAME query and poisoned ≥3 of its 5
-    * samples — the median itself, which is exactly how q21's r11
-    * median read 2.34 s while three decorrelated bench passes put its
-    * min under 1.1 s on the same tree. A pass structure is the bench's
-    * own noise geometry: a wall-clock-localized stall lands on
-    * DIFFERENT queries in different passes, so a 5-pass median
-    * tolerates ⌊(reps-1)/2⌋ poisoned passes per query. Rotating the
-    * start offset per pass (and reversing odd passes) additionally
-    * decorrelates PERIODIC box noise, which a fixed order would land
-    * on the same queries every pass. Each per-query row also carries
-    * `min_sec` — the bench-comparable floor — so residual noise is
-    * self-documenting as the median/min ratio instead of needing a
-    * cross-artifact argument.
-    */
   /** Embed a per-query reconciliation block against a committed bench
     * artifact (`bench=path`): for every query present in both files,
     * ratio = profile median / bench min-of-3; queries over
@@ -110,6 +81,30 @@ object Profile {
       "}"
   }
 
+  /** Steady-state core, exposed for the schema spec: warm-up pass then
+    * `reps` timed PASSES over the whole query set — each pass in a
+    * different (rotated / alternately reversed) order — and the
+    * artifact JSON. Query errors are recorded per-query (`err`)
+    * rather than failing the whole profile — an artifact with one
+    * broken query and 138 medians beats no artifact.
+    *
+    * Pass-structured, NOT back-to-back reps (the r11 PROFILE-vs-BENCH
+    * reconciliation): the old shape ran each query's 5 reps
+    * consecutively, so one multi-second box stall spanned several
+    * consecutive runs of the SAME query and poisoned ≥3 of its 5
+    * samples — the median itself, which is exactly how q21's r11
+    * median read 2.34 s while three decorrelated bench passes put its
+    * min under 1.1 s on the same tree. A pass structure is the bench's
+    * own noise geometry: a wall-clock-localized stall lands on
+    * DIFFERENT queries in different passes, so a 5-pass median
+    * tolerates ⌊(reps-1)/2⌋ poisoned passes per query. Rotating the
+    * start offset per pass (and reversing odd passes) additionally
+    * decorrelates PERIODIC box noise, which a fixed order would land
+    * on the same queries every pass. Each per-query row also carries
+    * `min_sec` — the bench-comparable floor — so residual noise is
+    * self-documenting as the median/min ratio instead of needing a
+    * cross-artifact argument.
+    */
   private[graft] def steadyState(
       spark: SparkSession, sfDir: String, reps: Int,
       queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries,
@@ -195,6 +190,9 @@ object Profile {
       s""""queries":$qjson}"""
   }
 
+  val usage =
+    "usage: Profile [sfDir] out=PROFILE_rN.json [reps=N] [bench=BENCH_local_rN.json]"
+
   def main(args: Array[String]): Unit = {
     // key=value args are options wherever they appear; sfDir is the
     // first POSITIONAL arg (r11 review: a blind headOption consumed
@@ -204,6 +202,7 @@ object Profile {
       a.startsWith("out=") || a.startsWith("reps=") || a.startsWith("bench="))
     val sfDir = positional.headOption.getOrElse("/root/testdata/sf0.1")
     val out = opts.find(_.startsWith("out=")).map(_.stripPrefix("out="))
+      .getOrElse(throw new IllegalArgumentException(usage))
     val benchRef = opts.find(_.startsWith("bench=")).map(_.stripPrefix("bench="))
     val reps = opts.find(_.startsWith("reps="))
       .map { r =>
@@ -213,48 +212,12 @@ object Profile {
       }
       .getOrElse(DefaultReps)
     require(reps > 0, s"reps must be positive, got $reps")
-    val names = positional.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    out match {
-      case Some(path) =>
-        val json = steadyState(spark, sfDir, reps, benchPath = benchRef)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(path),
-          (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        println(json)
-      case None =>
-        val sel =
-          if (names.nonEmpty) names
-          else Seq("q64_fingerprint", "q65_minhash_lsh", "q67_ngram_jaccard", "q71_embedding_neardup")
-        def run(name: String, label: String): Unit = {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          println(f"[profile] $name $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        // Planned-vs-total file counts per parquet scan of the final
-        // adaptive plan — the files-pruned evidence the scale curves
-        // cite. Untimed third execution: metrics live on THIS plan
-        // instance, and the timed noop writes above plan their own.
-        def files(name: String): Unit = {
-          val (planned, total) = graft.util.PlanFiles.filesPlanned(
-            SparkEntry.queries(name)(spark, sfDir))
-          println(s"[profile] $name files=$planned/$total")
-        }
-        sel.foreach { n =>
-          run(n, "cold"); run(n, "warm")
-          try files(n)
-          catch { case scala.util.control.NonFatal(e) =>
-            println(s"[profile] $n files=? ($e)") }
-        }
-    }
+    val spark = graft.util.Tables.localSession()
+    val json = steadyState(spark, sfDir, reps, benchPath = benchRef)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(out),
+      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(json)
     spark.stop()
   }
 }

@@ -42,18 +42,18 @@ object SparkEntry {
     * comparable (otherwise whichever query sorts first absorbs the
     * build). Queries are correct without this — artifacts lazily build
     * on first use.
-    */
-  /** Returns the names of modules whose prebuild FAILED (empty =
+    *
+    * `only` non-empty restricts the build to those module names — the
+    * x10 heavy-slice bench prepares just the modules its roster reads
+    * (a derived scale corpus has no embeddings table, and building the
+    * similarity family there would be wasted ingest anyway).
+    *
+    * Returns the names of modules whose prebuild FAILED (empty =
     * healthy) so callers can surface degradation machine-readably —
     * Bench reports it as `index_build_failed` in the JSON line; a
     * stderr-only record disappears in the driver's stdout-tail capture
     * and a degraded build then masquerades as a fast one (the r8
     * signature).
-    */
-  /** `only` non-empty restricts the build to those module names — the
-    * x10 heavy-slice bench prepares just the modules its roster reads
-    * (a derived scale corpus has no embeddings table, and building the
-    * similarity family there would be wasted ingest anyway).
     */
   def prepareIndexes(spark: SparkSession, sfDir: String,
       only: Set[String] = Set.empty): Seq[String] =

@@ -1,26 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val usage = "usage: Verify <sfDir> <outDir> [queryPrefix,...]"
+
   def main(args: Array[String]): Unit = {
     // Optional 3rd arg (dev only; the driver passes 2): comma-separated
     // query-name prefixes to dump a subset for fast iteration.
     val (sfDir, outDir, filter) = args match {
       case Array(a, b) => (a, b, Option.empty[Set[String]])
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
+      case _ => throw new IllegalArgumentException(usage)
     }
     def keep(name: String): Boolean =
       filter.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

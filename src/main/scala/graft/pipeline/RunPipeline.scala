@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable equivalent of the reference's run_pipeline.py: CSV in,
   * three production parquet tables + published CSVs out.
   *
@@ -10,15 +8,7 @@ import org.apache.spark.sql.SparkSession
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(csvPath, warehouseDir, sinkDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-movie-pipeline")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.localSession()
     try {
       val (facts, genreFact, genreAvg) =
         MoviePipeline.run(spark, csvPath, warehouseDir, new CsvFileSink(sinkDir))

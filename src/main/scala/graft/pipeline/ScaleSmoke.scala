@@ -110,15 +110,7 @@ object ScaleSmoke {
     val root =
       if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_scale_smoke").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-scale-smoke")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.localSession()
     try {
       val csvDir = s"$root/csv"
       val whDir = s"$root/wh"

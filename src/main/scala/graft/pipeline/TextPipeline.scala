@@ -105,15 +105,7 @@ object TextPipeline {
   /** Runnable entry: runMain graft.pipeline.TextPipeline <corpusDir> <outDir> */
   def main(args: Array[String]): Unit = {
     val Array(corpusDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.util.Tables.withSessionConf(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-text-pipeline")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Tables.localSession()
     try {
       val c = run(spark, corpusDir, outDir)
       println(s"[text-pipeline] total=${c.total} kept=${c.kept} deduped=${c.deduped} " +

@@ -188,6 +188,22 @@ object Tables {
     }
   }
 
+  /** The one session every main in this library starts: `local[cpus]`,
+    * shuffle partitions sized to the cores, no UI, [[withSessionConf]]
+    * folded in, log level WARN. `cpus` defaults to `SPARK_GRAFT_CPUS`
+    * (4 when unset).
+    */
+  def localSession(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+    val spark = withSessionConf(
+      SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.ui.enabled", "false")
+    ).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Canonical events frame: `ts` as a microsecond TimestampType column
     * regardless of the file's physical encoding. Producers upgrade
     * timestamp encodings across writer versions (the corpus itself moved

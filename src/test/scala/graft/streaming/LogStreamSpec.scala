@@ -33,13 +33,17 @@ class LogStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("a checkpointed file stream lands each drop exactly once, across a restart") {
     val dir = tempCorpusDir("graft_logstream")
     val (src, root, ckpt) = (s"$dir/src", s"$dir/log", s"$dir/ckpt")
-    batchDf(0, 1000).write.mode("append").parquet(src)
+    // coalesce(1): each drop is ONE part file, published by one rename,
+    // so the file source can never list half a drop and split it
+    // across two micro-batches (whose files would both overlap the
+    // slice asserted at the end).
+    batchDf(0, 1000).coalesce(1).write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
 
     val q1 = LogStream.runLogStream(spark, src, root, ckpt, schema, "ts")
     try {
       q1.processAllAvailable()
-      batchDf(1000, 1500).write.mode("append").parquet(src)
+      batchDf(1000, 1500).coalesce(1).write.mode("append").parquet(src)
       q1.processAllAvailable()
     } finally q1.stop()
     assert(canon(ManifestLog.read(spark, root)) == expect(0, 1500))
@@ -51,7 +55,7 @@ class LogStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
       q2.processAllAvailable()
       assert(canon(ManifestLog.read(spark, root)) == expect(0, 1500),
         "restart replayed a committed batch into the log")
-      batchDf(1500, 2000).write.mode("append").parquet(src)
+      batchDf(1500, 2000).coalesce(1).write.mode("append").parquet(src)
       q2.processAllAvailable()
     } finally q2.stop()
     assert(canon(ManifestLog.read(spark, root)) == expect(0, 2000))
@@ -60,9 +64,8 @@ class LogStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
     // NON-EMPTY batch (a restart's no-data batch commits nothing), the
     // high-water mark at the last data-bearing batch id. How many
     // micro-batches the file source cuts the three drops into is ITS
-    // business (under load it occasionally splits one drop's part
-    // files across two triggers) — the contract is the op shapes, at
-    // least one commit per drop, and no replay (row-exactness above).
+    // business — the contract is the op shapes, at least one commit
+    // per drop, and no replay (row-exactness above).
     val trail = ManifestLog.describe(spark, root)
     val ops = trail.map(_._2)
     assert(ops.head == "create" && ops.tail.nonEmpty &&
