@@ -8,9 +8,10 @@ package graft
   * branches — see q105's history), i.e. a plan that reads the 100 TB
   * corpus more than once. The initial plan OVERCOUNTS for canonically-
   * equal subtrees (self-joins): AQE reuses those stages at runtime, so
-  * pass `exec` to execute each query (noop sink) and count
-  * ReusedExchange / ReusedQueryStage in the final adaptive plan — that
-  * is the number that matters, and the one the committed artifact uses.
+  * pass `exec` to run each query's own plan instance
+  * ([[graft.util.PlanFiles.executeFinal]]) and count ReusedExchange /
+  * ReusedQueryStage in its final adaptive plan — that is the number
+  * that matters, and the one the committed artifact uses.
   *
   * GATE (VERDICT r9 item 3): no query may scan the same source ≥
   * [[GateMaxSameSourceScans]] times without a documented entry in
@@ -257,11 +258,13 @@ object PlanAudit {
       val a =
         try {
           val df = fn(spark, sfDir)
-          if (exec) df.write.format("noop").mode("overwrite").save()
-          val qe = df.queryExecution
+          // exec: one line per node of the final adaptive plan.
           val p =
-            if (exec) qe.executedPlan.toString // post-AQE: reuse visible
-            else qe.explainString(
+            if (exec) graft.util.PlanFiles.finalNodes(
+                graft.util.PlanFiles.executeFinal(df).executedPlan)
+              .map(_.simpleString(spark.sessionState.conf.maxToStringFields))
+              .mkString("\n")
+            else df.queryExecution.explainString(
               org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           val lines = p.linesIterator.toSeq
           def nodes(s: String) =

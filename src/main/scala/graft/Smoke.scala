@@ -90,14 +90,10 @@ object Smoke {
     }
 
   /** The EXECUTED (post-AQE) plan: the committed sf0.1 plans say
-    * nothing about AQE's strategy picks at ×10/×100. The query's own
-    * plan instance is run — a `df.write` would plan and run a separate
-    * one, leaving this one at `isFinalPlan=false`. */
+    * nothing about AQE's strategy picks at ×10/×100. */
   private def plan(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     names.foreach { name =>
-      val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-      qe.executedPlan.execute().foreachPartition(
-        (_: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => ())
+      val qe = graft.util.PlanFiles.executeFinal(SparkEntry.queries(name)(spark, sfDir))
       println(s"==== $name (executed, $sfDir) ====")
       println(qe.executedPlan.toString.take(8000))
     }
@@ -114,6 +110,21 @@ object Smoke {
     println(f"[prep] total $total%.2f s failed=${failed.mkString(",")} modules{$mods}")
   }
 
+  /** A stage's label: the outermost RDD operation scope of each RDD it
+    * runs (`Exchange`, `WholeStageCodegen (n)`, `Scan parquet …`), in
+    * RDD order. The stage NAME is its call site, which for every
+    * AQE-submitted stage is the same submission frame inside
+    * `CompletableFuture`, so it cannot tie a row to an operator.
+    */
+  private def operators(si: org.apache.spark.scheduler.StageInfo): String = {
+    val names = si.rddInfos.sortBy(_.id).flatMap(_.scope).map { inner =>
+      var s = inner
+      while (s.parent.isDefined) s = s.parent.get
+      s.name.trim
+    }.distinct
+    if (names.isEmpty) si.name.takeWhile(_ != '\n') else names.mkString(" / ")
+  }
+
   /** Stage attribution after prepareIndexes, per query:
     *
     *   1. writes `df.explain("formatted")` to `<outDir>/<name>.txt`
@@ -123,7 +134,8 @@ object Smoke {
     *      listener attached, and
     *   3. prints a `[stage]` row per stage of the measured run — wall
     *      time, summed task time, executor CPU, input bytes, shuffle
-    *      read/write bytes, spill, task count — plus a `[tasks]`
+    *      read/write bytes, spill, task count, the stage's operators
+    *      ([[operators]]) — plus a `[tasks]`
     *      distribution for stages over 200 task-ms, so the dominant
     *      stage and its cost class (compute vs fetch vs scheduling) is
     *      attributable without the UI.
@@ -158,7 +170,7 @@ object Smoke {
         } yield c - s).getOrElse(-1L)
         rows.add(StageRow(
           si.stageId,
-          si.name.takeWhile(_ != '\n').take(90),
+          operators(si).take(90),
           si.numTasks, wall,
           m.executorRunTime, m.executorCpuTime / 1000000L,
           m.inputMetrics.bytesRead / 1e6,

@@ -144,14 +144,15 @@ object Events {
     * normalization is the batch frame's own `unix_micros` projection)
     * lands as new sorted files under the layout root. O(batch) per
     * ingest tick; boundary pruning holds across segments
-    * ([[graft.util.Segments]]; measured in SegmentAppendSpec). Event
+    * ([[graft.util.ManifestLog.appendSorted]]; measured in
+    * SegmentAppendSpec). Event
     * streams are append-only by nature, so this is the layout's ONLY
     * maintenance operation — there is no update path to design for.
     */
   private[graft] def appendEventsUsLogSegment(
       s: SparkSession, root: String, batchEventsUs: DataFrame): Unit = {
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.util.Segments.appendSorted(usLogFrame(batchEventsUs, n), root,
+    graft.util.ManifestLog.appendSorted(usLogFrame(batchEventsUs, n), root,
       boundCol = Some("ts_us"))
   }
 
@@ -200,7 +201,7 @@ object Events {
     * serves the keyed ones (fetch-a-user, forget-a-user). Appends:
     * [[appendEventsByUserSegment]] — a batch lands as ONE user-sorted
     * file whose keyed reads stay O(segments); the
-    * [[graft.util.Segments.maintainSorted]] tick re-compacts a grain
+    * [[graft.util.ManifestLog.maintainSorted]] tick re-compacts a grain
     * only when >16 segments overlap it (tiered-compaction
     * amortization, drilled in EventsQualitySpec and TickBench).
     *
@@ -240,13 +241,13 @@ object Events {
     * disjoint time segments — so appending it range-partitioned would
     * scatter N domain-overlapping files per tick). Keyed reads then
     * admit O(1) files per at-rest segment; once >16 segments overlap
-    * a grain, the [[graft.util.Segments.maintainSorted]] tick folds
+    * a grain, the [[graft.util.ManifestLog.maintainSorted]] tick folds
     * them back into the sorted history — O(grain) every 16 batches,
     * O(batch) otherwise, the standard tiered-compaction trade.
     */
   private[graft] def appendEventsByUserSegment(
       s: SparkSession, root: String, batchEventsUs: DataFrame): Unit =
-    graft.util.Segments.appendSorted(
+    graft.util.ManifestLog.appendSorted(
       byUserFrame(batchEventsUs, 1), root, boundCol = Some("user_id"))
 
   /** Maintenance tick for the by-user replica — the depth-triggered
@@ -259,7 +260,7 @@ object Events {
     * ranges). Returns whether a fold committed.
     */
   private[graft] def maintainEventsByUser(s: SparkSession, root: String,
-      maxDepth: Int = graft.util.Segments.CompactAfterSegments,
+      maxDepth: Int = graft.util.ManifestLog.CompactAfterSegments,
       targetFileBytes: Long = -1L, targetFileRows: Long = -1L): Boolean =
     graft.util.ManifestLog.maintainKeyed(s, root, "user_id", maxDepth,
       secondarySort = Seq("ts_us"), // the layout's documented within-user order

@@ -55,15 +55,16 @@ object Relational {
 
   /** Segment-append for the orders-by-year layout: the arriving orders
     * batch lands as new files INSIDE the existing year directories
-    * (directories are shared between segments — [[graft.util.Segments]]
-    * for the geometry argument and the compaction bound). O(batch) per
-    * ingest tick; history files untouched.
+    * (directories are shared between segments —
+    * [[graft.util.ManifestLog.appendSorted]] for the geometry argument
+    * and the compaction bound). O(batch) per ingest tick; history files
+    * untouched.
     */
   private[graft] def appendOrdersByYearSegment(
       s: org.apache.spark.sql.SparkSession, root: String,
       batchOrders: org.apache.spark.sql.DataFrame): Unit = {
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.util.Segments.appendSorted(
+    graft.util.ManifestLog.appendSorted(
       ordersYearFrame(batchOrders, n), root, partitionDirs = Seq("order_year"),
       boundCol = Some("o_orderdate_us"))
   }
@@ -172,26 +173,6 @@ object Relational {
         .repartition(OrderkeyBuckets, col("o_orderkey"))
     }
 
-  /** Segment-append for the orderkey co-location pair: each arriving
-    * batch becomes new bucket FILES of the two at-rest tables — same
-    * pinned hash and [[OrderkeyBuckets]] count, so every future row
-    * lands in its key's bucket and co-located plans stay exchange-free
-    * across segments ([[graft.util.Segments]] for the geometry and the
-    * compaction bound; SegmentAppendSpec pins no-exchange + row
-    * fidelity + query-level merge==rebuild on q121).
-    */
-  private[graft] def appendLineitemBucketSegment(
-      batchLi: org.apache.spark.sql.DataFrame, table: String): Unit =
-    graft.util.Segments.appendBucketed(batchLi, table, "l_orderkey", OrderkeyBuckets)
-
-  /** [[appendLineitemBucketSegment]]'s orders twin (applies the
-    * family's projection before the bucketed write). */
-  private[graft] def appendOrdersBucketSegment(
-      batchOrders: org.apache.spark.sql.DataFrame, table: String): Unit =
-    graft.util.Segments.appendBucketed(
-      batchOrders.select(OrdersOrderkeyCols.map(col): _*),
-      table, "o_orderkey", OrderkeyBuckets)
-
   /** Bucket count of the custkey pair — its OWN constant: the two
     * pairs are independent layouts, and co-location holds only while
     * both tables of ONE pair share a count. Retuning the orderkey
@@ -242,21 +223,6 @@ object Relational {
         .select("c_custkey")
         .repartition(CustkeyBuckets, col("c_custkey"))
     }
-
-  /** Segment-append for the custkey pair — the orderkey pair's
-    * maintenance story with this family's own constant and
-    * projections. */
-  private[graft] def appendOrdersCustkeyBucketSegment(
-      batchOrders: org.apache.spark.sql.DataFrame, table: String): Unit =
-    graft.util.Segments.appendBucketed(
-      batchOrders.select(OrdersCustkeyCols.map(col): _*),
-      table, "o_custkey", CustkeyBuckets)
-
-  /** [[appendOrdersCustkeyBucketSegment]]'s customer twin. */
-  private[graft] def appendCustomerBucketSegment(
-      batchCustomer: org.apache.spark.sql.DataFrame, table: String): Unit =
-    graft.util.Segments.appendBucketed(
-      batchCustomer.select("c_custkey"), table, "c_custkey", CustkeyBuckets)
 
   /** Partsupp-shaped at-rest artifact (supplier×part grain): this corpus
     * ships no partsupp table, so the four TPC-H shapes that need one
@@ -443,13 +409,14 @@ object Relational {
     * arriving fact batch is clustered by the shared recipe and lands
     * as new files under the layout root — O(batch) per ingest tick,
     * history files untouched, boundary pruning intact across segments
-    * ([[graft.util.Segments]]; measured in SegmentAppendSpec).
+    * ([[graft.util.ManifestLog.appendSorted]]; measured in
+    * SegmentAppendSpec).
     */
   private[graft] def appendLineitemSdLogSegment(
       s: org.apache.spark.sql.SparkSession, root: String,
       batchLi: org.apache.spark.sql.DataFrame): Unit = {
     val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-    graft.util.Segments.appendSorted(sdLogFrame(batchLi, n), root,
+    graft.util.ManifestLog.appendSorted(sdLogFrame(batchLi, n), root,
       boundCol = Some("l_shipdate_us"))
   }
 

@@ -1171,7 +1171,7 @@ object TextOps {
     * overhead grows with file count even though no tick rescans
     * history. The bound and the per-grain rewrite recipe are the
     * layout-level policy, stated once at
-    * [[graft.util.Segments.CompactAfterSegments]]. FOLD-geometry
+    * [[graft.util.ManifestLog.CompactAfterSegments]]. FOLD-geometry
     * artifacts (shingle-df, term-stats, gram counts) are
     * vocabulary-sized and rewritten whole per tick — never compacted
     * because they never fragment. N-sequential-tick convergence for

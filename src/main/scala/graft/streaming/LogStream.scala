@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.util.{ManifestLog, Segments}
+import graft.util.ManifestLog
 
 /** Streaming ingest into a MANIFESTED sorted log — the incremental
   * writer for the layouts [[graft.util.ManifestLog]] maintains. Where
@@ -28,7 +28,7 @@ import graft.util.{ManifestLog, Segments}
   *
   * Scale shape: a micro-batch writes `filesPerBatch` sorted files and
   * one manifest line apiece — O(batch) work, history untouched; the
-  * self-driving tick ([[graft.util.Segments.maintainSorted]]) bounds
+  * self-driving tick ([[ManifestLog.maintainSorted]]) bounds
   * file-count growth the same way it does for batch appends.
   */
 object LogStream {
@@ -75,7 +75,7 @@ object LogStream {
     */
   /** [[runLogStream]]'s maintenance cadence: after every
     * `maintainEveryBatches` committed batches the sink runs the
-    * self-driving tick on its own log — [[Segments.maintainSorted]]
+    * self-driving tick on its own log — [[ManifestLog.maintainSorted]]
     * for a plain sorted log, [[ManifestLog.maintainClustered]] when
     * `clusterCols` declares a Z-layout (new batches land boundCol-
     * sorted with single-column stats; the tick z-rewrites ONLY the
@@ -112,7 +112,7 @@ object LogStream {
       boundCol: String, filesPerBatch: Int = 1,
       partitionDirs: Seq[String] = Nil,
       maintainEveryBatches: Int = 0,
-      maintainMaxFiles: Int = Segments.CompactAfterSegments,
+      maintainMaxFiles: Int = ManifestLog.CompactAfterSegments,
       clusterCols: Seq[String] = Nil,
       clusterTargetRows: Long = 1L << 20,
       keyedDepth: Boolean = false,
@@ -168,7 +168,7 @@ object LogStream {
             ManifestLog.maintainKeyed(spark, root, boundCol,
               maintainMaxFiles, secondarySort = keyedSecondarySort)
           else
-            Segments.maintainSorted(spark, root, boundCol, maintainMaxFiles)
+            ManifestLog.maintainSorted(spark, root, boundCol, maintainMaxFiles)
           ()
         }
         ()

@@ -28,15 +28,14 @@ import org.apache.spark.sql.types.StructType
   * the full [[ManifestLog]] contract, now for bucket grains.
   *
   * The bucket spec (key, count) is recorded next to the manifests at
-  * adoption and validated on every append — the loud-mismatch
-  * guarantee `bucketBy`'s append mode gave the catalog path.
+  * adoption and validated on every append, so a mismatched segment
+  * fails loudly before any write.
   *
-  * Scale shape: identical to the catalog layout — K appends leave K
-  * files per bucket, [[maintain]] compacts per bucket grain, and a
-  * join on the bucket key never shuffles either side. The cost over
-  * the catalog path is the manifest read at plan build; the gain is
-  * snapshot isolation for a layout whose maintenance previously
-  * demanded no concurrent readers.
+  * Scale shape: K appends leave K files per bucket, [[maintain]]
+  * compacts per bucket grain, and a join on the bucket key never
+  * shuffles either side. The cost over a catalog table is the
+  * manifest read at plan build; the gain is snapshot isolation —
+  * appends and compactions run under concurrent readers.
   */
 object BucketedManifest {
 
@@ -533,7 +532,7 @@ object BucketedManifest {
         // does not graduate: the grain retires without replacement.
         val out = fs.listStatus(stage).toSeq
           .find(st => st.isFile && st.getPath.getName.startsWith("part-") &&
-            Segments.fileRowCount(st.getPath,
+            ManifestLog.fileRowCount(st.getPath,
               spark.sessionState.newHadoopConf()) > 0L)
           .map { st =>
             val rel = bucketNamed(st.getPath.getName, b)
@@ -561,7 +560,7 @@ object BucketedManifest {
     * Returns the compacted bucket ids.
     */
   def maintain(spark: SparkSession, root: String,
-      maxFiles: Int = Segments.CompactAfterSegments): Seq[Int] = {
+      maxFiles: Int = ManifestLog.CompactAfterSegments): Seq[Int] = {
     require(maxFiles >= 1, "maxFiles must admit at least one file per bucket")
     val counts = ManifestLog.currentEntries(spark, root)
       .flatMap(e => bucketIdOf(e.path))
@@ -571,10 +570,25 @@ object BucketedManifest {
     targets
   }
 
-  // Bucket file-name contract: one copy, shared with Segments'
-  // catalog path ([[BucketNames]]).
-  private def bucketIdOf(name: String): Option[Int] =
-    BucketNames.bucketIdOf(name)
-  private def bucketNamed(partName: String, bucketId: Int): String =
-    BucketNames.bucketNamed(partName, bucketId)
+  /** Spark maps a data file to its bucket by NAME — the trailing
+    * `_NNNNN` id before the extensions (BucketingUtils' contract, which
+    * bucketBy's writer follows when naming files).
+    */
+  private val BucketFileName = """.*_(\d+)(?:\..*)?$""".r
+
+  /** The bucket id a data file's name parses to, if any. */
+  private def bucketIdOf(name: String): Option[Int] = name match {
+    case BucketFileName(id) => Some(id.toInt)
+    case _ => None
+  }
+
+  /** Splice a bucket id between a plain part name's stem and its
+    * extensions ("part-...-c000" + "_00007" + ".snappy.parquet"), so
+    * a replacement file parses to its grain's bucket.
+    */
+  private def bucketNamed(partName: String, bucketId: Int): String = {
+    val dot = partName.indexOf('.')
+    val (stem, ext) = partName.splitAt(if (dot < 0) partName.length else dot)
+    f"$stem%s_$bucketId%05d$ext%s"
+  }
 }

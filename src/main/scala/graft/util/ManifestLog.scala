@@ -3,15 +3,16 @@ package graft.util
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-committed generations for the sorted-log layouts — the
-  * snapshot-isolation upgrade over [[Segments]]' staged-swap protocol
-  * (the public Iceberg/Delta idea reduced to what a parquet log needs).
+  * one commit protocol for the engine's segment-appended at-rest
+  * layouts (the public Iceberg/Delta idea reduced to what a parquet
+  * log needs; [[BucketedManifest]] applies it to the bucketed pairs).
   *
   * A bare parquet directory equates "visible" with "listed": the
   * directory listing IS the table state, so any maintenance that
   * deletes or replaces files (compaction, restatement) has a window
-  * where a concurrent reader's listing sees a gap or a double — which
-  * is why every [[Segments]] mutation carries a single-writer,
-  * no-concurrent-readers contract. A manifested log separates the two:
+  * where a concurrent reader's listing sees a gap or a double, and
+  * every mutation would need a single-writer, no-concurrent-readers
+  * contract. A manifested log separates the two:
   * the live state is the highest `_manifests/vNNNNNNNNN.manifest`
   * (one relative data-file path per line), and every mutation is
   * (1) write new files nobody can see yet, then (2) publish ONE new
@@ -51,7 +52,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At 100 TB a sorted log is hundreds of thousands of files; stats in
   * the manifest let [[readSlice]] pick a date slice's files at plan
   * time without opening a single footer, and let the maintenance tick
-  * ([[Segments.maintainSorted]]) and [[expireBefore]] classify grains
+  * ([[maintainSorted]]) and [[expireBefore]] classify grains
   * from the manifest alone. Stats are recorded only when trustworthy
   * (non-null, decidable footer statistics); a stats-less line is
   * always selected — pruning may only ever widen, never drop.
@@ -145,8 +146,9 @@ object ManifestLog {
   private[util] final case class Manifest(
       op: String, batchHwm: Long, entries: Seq[Entry])
 
-  /** Crash-drill seam (the [[Segments.failpoint]] pattern): invoked
-    * with a step tag at each mutation step; identity in production.
+  /** Crash-drill seam: invoked with a step tag at each mutation step;
+    * identity in production. The specs install a throwing hook to kill
+    * a mutation at an exact step.
     */
   @volatile private[graft] var failpoint: String => Unit = _ => ()
 
@@ -158,10 +160,7 @@ object ManifestLog {
   private[util] def manifestDir(root: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(root, ManifestDirName)
 
-  /** Whether `root` is a manifested log (the [[Segments]] entry points
-    * route on this, so adopting a layout upgrades every later
-    * maintenance call transparently).
-    */
+  /** Whether `root` is a manifested log (holds a manifest directory). */
   def isManifested(spark: SparkSession, root: String): Boolean = {
     val (p, fs) = hadoop(spark, root)
     fs.exists(manifestDir(p))
@@ -305,7 +304,7 @@ object ManifestLog {
         // One footer read per file regardless of how many columns the
         // layout records — at a z-layout's 3-4 cluster columns the
         // per-column variant would triple the maintenance metadata IO.
-        val ranges = Segments.fileRanges(
+        val ranges = fileRanges(
           new org.apache.hadoop.fs.Path(p, rel), statCols, conf)
         Entry(rel, statCols.flatMap(c =>
           ranges.get(c).map { case (mn, mx) => (c, mn, mx) }))
@@ -522,7 +521,7 @@ object ManifestLog {
         // Row counts from footers (no data IO) size the output; one
         // lightweight agg finds each lane's normalization range.
         val rows = es.map(e =>
-          Segments.fileRowCount(new org.apache.hadoop.fs.Path(p, e.path), conf)).sum
+          fileRowCount(new org.apache.hadoop.fs.Path(p, e.path), conf)).sum
         val nOut = math.max(1L, (rows + targetFileRows - 1L) / targetFileRows).toInt
         val aggs = cols.flatMap { c =>
           Seq(org.apache.spark.sql.functions.min(col(c).cast("long")),
@@ -700,7 +699,7 @@ object ManifestLog {
     * any single key — a keyed read's worst-case file admission, and
     * therefore THE maintenance trigger for a key-clustered replica
     * (whose appended segments overlap all of history by nature, so
-    * [[Segments.maintainSorted]]'s component-size trigger would fold
+    * [[maintainSorted]]'s component-size trigger would fold
     * on every tick). Driver-side sweep of the manifest's per-file
     * stats: +1 at each min, −1 past each max, openings before closings
     * at equal coordinates (inclusive intervals); no data or footer IO.
@@ -789,7 +788,7 @@ object ManifestLog {
     val sig = files.map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
     val rows = fanoutRows.compute(srcPath, (_, old) =>
       if (old != null && old._1 == sig) old
-      else (sig, files.map(s => Segments.fileRowCount(s.getPath, conf)).sum))._2
+      else (sig, files.map(s => fileRowCount(s.getPath, conf)).sum))._2
     foldFanout(bytes, rows,
       targetFoldBytes(spark, targetBytes), targetFoldRows(spark, targetRows))
   }
@@ -824,7 +823,7 @@ object ManifestLog {
       bytes: Long, rows: Long)
 
   /** The minimal fold sets that restore `depth ≤ maxDepth` everywhere —
-    * [[Segments.maintainSorted]]'s component idea transposed to key
+    * [[maintainSorted]]'s component idea transposed to key
     * space, but seeded from the OVER-DEPTH points rather than from
     * range connectivity: two-column range partitioning deliberately
     * splits a whale key across neighboring files, so adjacent settled
@@ -871,7 +870,7 @@ object ManifestLog {
       val paths = all.map(t => new org.apache.hadoop.fs.Path(p, t._3.path))
       KeyComponent(all.map(_._3), lo, hi, worst,
         paths.map(fs.getFileStatus(_).getLen).sum,
-        paths.map(Segments.fileRowCount(_, conf)).sum)
+        paths.map(fileRowCount(_, conf)).sum)
     }
   }
 
@@ -980,7 +979,7 @@ object ManifestLog {
     * refused loudly rather than ticking forever.
     */
   def maintainKeyed(spark: SparkSession, root: String, keyCol: String,
-      maxDepth: Int = Segments.CompactAfterSegments, nOut: Int = -1,
+      maxDepth: Int = CompactAfterSegments, nOut: Int = -1,
       secondarySort: Seq[String] = Nil,
       targetFileBytes: Long = -1L, targetFileRows: Long = -1L): Boolean = {
     require(maxDepth >= 1, s"maxDepth must be positive, got $maxDepth")
@@ -1020,21 +1019,44 @@ object ManifestLog {
     vs.max
   }
 
-  /** Segment append, manifest-committed: stage the recipe-clustered
-    * batch into the root (invisible — the current manifest does not
-    * list it, and the staged file set is tracked EXACTLY, never
-    * derived from a listing diff, so a concurrent writer's files and
-    * a crashed attempt's orphans can never enter this commit), then
-    * publish prev ∪ new as one atomic commit, retrying the union if a
-    * concurrent commit wins the rename. A crash before the commit
-    * leaves the current generation untouched and the staged files as
-    * vacuumable orphans; there is no torn state to recover.
+  /** Segment files per grain (a sorted log's date range, a year
+    * partition, a bucket) above which the maintenance ticks
+    * ([[maintainSorted]], [[maintainKeyed]], [[BucketedManifest.maintain]])
+    * rewrite THAT grain — the LSM bound applied at the layout grain,
+    * never the whole table. Every append adds ≤ N files (N = the
+    * layout's partition/bucket count), and scan task setup plus footer
+    * reads grow with file count even when pruning is perfect; 16 keeps
+    * scan setup O(ideal) while a compaction amortizes over many appends.
+    */
+  val CompactAfterSegments = 16
+
+  /** Segment append, manifest-committed. `segment` must already carry
+    * the layout's clustering (the caller applies its recipe function:
+    * range-partitioned and sorted within partitions on the boundary
+    * column), so every file it writes has tight disjoint min/max stats
+    * over the batch's span — parquet stats are per file, so a boundary
+    * scan prunes old segments by theirs and new segments by theirs.
+    * `partitionDirs` writes the batch's rows as new files inside the
+    * layout's SHARED partition directories (the orders-by-year
+    * layout), so directory pruning still sees one tree.
+    *
+    * The batch is staged into the root (invisible — the current
+    * manifest does not list it, and the staged file set is tracked
+    * EXACTLY, never derived from a listing diff, so a concurrent
+    * writer's files and a crashed attempt's orphans can never enter
+    * this commit), then prev ∪ new is published as one atomic commit,
+    * retrying the union if a concurrent commit wins the rename. A crash
+    * before the commit leaves the current generation untouched and the
+    * staged files as vacuumable orphans; there is no torn state to
+    * recover. A root without a committed manifest is refused before
+    * any write ([[create]] or [[adopt]] it first).
     */
   def appendSorted(segment: DataFrame, root: String,
       partitionDirs: Seq[String] = Nil,
       boundCol: Option[String] = None): Unit = {
     val spark = segment.sparkSession
     val (p, fs) = hadoop(spark, root)
+    guardNotPartitionDir(spark, root)
     currentVersion(spark, root) // fail fast before any data is written
     val added = stageAppend(spark, p, fs, segment, partitionDirs)
     failpoint("written:append")
@@ -1043,11 +1065,29 @@ object ManifestLog {
     ()
   }
 
+  /** An op aimed at a partition directory OF a manifested log would
+    * write or retire files no manifest generation lists — invisible to
+    * every reader and deleted as orphans by the next vacuum. Refuse
+    * loudly toward the root-level API (`partitionDirs` for appends,
+    * `relDir` for compaction and restatement). One parent level is the
+    * layout family's nesting depth (root/year=YYYY).
+    */
+  private def guardNotPartitionDir(spark: SparkSession, root: String): Unit = {
+    val parent = new org.apache.hadoop.fs.Path(root).getParent
+    if (parent != null && isManifested(spark, parent.toString))
+      throw new IllegalStateException(
+        s"$root is a partition directory of the manifested log $parent — " +
+          "an op here is invisible to the manifest and its files vacuumed " +
+          "as orphans; append with partitionDirs or compact/restate with " +
+          "relDir at the log root instead")
+  }
+
   /** Per-grain compaction, manifest-committed: the grain is the LIVE
     * (manifest-listed) files of `relDir` whose footer stats lie fully
-    * inside [loIncl, hiExcl) — straddlers and null-bearing files stay,
-    * exactly as in [[Segments.compactSortedRange]]. The key-sorted
-    * replacement lands under a unique name, the commit swaps grain →
+    * inside [loIncl, hiExcl) — straddling files and files holding NULL
+    * boundary values stay (compacting them would widen some grain's
+    * stats; the null rows live in the log's leading files by the
+    * recipe's nulls-first sort). The key-sorted replacement lands under a unique name, the commit swaps grain →
     * replacement in the file LIST, and the grain's files stay on disk
     * for pinned readers until [[vacuum]]. `relDir` selects a partition
     * directory of the year-partitioned layout ("" for flat logs).
@@ -1056,6 +1096,7 @@ object ManifestLog {
       boundCol: String, loIncl: Long, hiExcl: Long, nOut: Int = 1,
       secondarySort: Seq[String] = Nil): Unit = {
     require(nOut >= 1, s"nOut must be positive, got $nOut")
+    guardNotPartitionDir(spark, root)
     val (p, fs) = hadoop(spark, root)
     val conf = spark.sessionState.newHadoopConf()
     val v = currentVersion(spark, root)
@@ -1064,7 +1105,7 @@ object ManifestLog {
     val grain = live.filter { e =>
       dirOf(e.path) == relDir &&
         classify(p, e, boundCol, loIncl, hiExcl, conf) ==
-          Segments.Containment.Contained
+          Containment.Contained
     }
     if (grain.length <= 1) return // already compact
     // nOut > 1 is the whole-domain fold of a KEY-clustered replica
@@ -1087,7 +1128,7 @@ object ManifestLog {
       "compact", m.batchHwm)
   }
 
-  /** [[Segments.containment]] answered from manifest stats when the
+  /** [[containment]] answered from manifest stats when the
     * entry carries them for this column (stats are recorded only when
     * the footer was trustworthy and null-free, so a stats straddle is
     * genuinely Unknown-for-this-grain), with a footer read as the
@@ -1095,27 +1136,39 @@ object ManifestLog {
     */
   private def classify(p: org.apache.hadoop.fs.Path, e: Entry, col: String,
       loIncl: Long, hiExcl: Long,
-      conf: org.apache.hadoop.conf.Configuration): Segments.Containment =
+      conf: org.apache.hadoop.conf.Configuration): Containment =
     e.statFor(col) match {
       case Some((mn, mx)) =>
-        if (mx < loIncl || mn >= hiExcl) Segments.Containment.Disjoint
-        else if (mn >= loIncl && mx < hiExcl) Segments.Containment.Contained
-        else Segments.Containment.Unknown
+        if (mx < loIncl || mn >= hiExcl) Containment.Disjoint
+        else if (mn >= loIncl && mx < hiExcl) Containment.Contained
+        else Containment.Unknown
       case None =>
-        Segments.containment(new org.apache.hadoop.fs.Path(p, e.path), col,
+        containment(new org.apache.hadoop.fs.Path(p, e.path), col,
           loIncl, hiExcl, conf)
     }
 
-  /** Grain restatement (the correction primitive), manifest-committed.
-    * Same alignment contract as [[Segments.restateSortedRange]]: live
-    * files fully inside the grain are superseded, fully-outside (and
-    * all-null) files untouched, anything undecidable throws — but here
-    * the superseded history REMAINS READABLE at the prior generation,
-    * which is exactly what an auditable correction wants.
+  /** Grain restatement (the correction primitive), manifest-committed:
+    * upstream restated history (late fixes, recomputed amounts,
+    * takedown edits) replaces the grain's files with a corrected batch,
+    * re-clustered to ONE file sorted on the boundary column, never
+    * rewriting the rest of the log. The superseded history REMAINS
+    * READABLE at the prior generation, which is exactly what an
+    * auditable correction wants.
+    *
+    * Alignment contract: live files fully inside [loIncl, hiExcl) are
+    * superseded; files fully outside (and all-null leading files —
+    * null boundaries live outside every value range) are untouched;
+    * anything else — a straddling file, a null-bearing in-range file,
+    * or a file without trustworthy stats — throws: restating over it
+    * would leave stale rows alive next to their corrections. Compact
+    * the grain (or restate a wider, segment-aligned range) first. The
+    * corrected batch must be non-empty and lie entirely inside the
+    * grain ([[validatedRestateBatch]]).
     */
   def restateRange(spark: SparkSession, root: String, relDir: String,
       boundCol: String, loIncl: Long, hiExcl: Long,
       replacement: DataFrame): Unit = {
+    guardNotPartitionDir(spark, root)
     val (p, fs) = hadoop(spark, root)
     val conf = spark.sessionState.newHadoopConf()
     val v = currentVersion(spark, root)
@@ -1124,16 +1177,16 @@ object ManifestLog {
     val grain = live.filter { e =>
       dirOf(e.path) == relDir && {
         classify(p, e, boundCol, loIncl, hiExcl, conf) match {
-          case Segments.Containment.Contained => true
-          case Segments.Containment.Disjoint => false
-          case Segments.Containment.Unknown => throw new IllegalStateException(
+          case Containment.Contained => true
+          case Containment.Disjoint => false
+          case Containment.Unknown => throw new IllegalStateException(
             s"restatement grain [$loIncl, $hiExcl) is not segment-aligned at " +
               s"'${e.path}' (straddling range, in-range nulls, or unusable stats) " +
               "— compact the grain or restate a segment-aligned range")
         }
       }
     }
-    val batch = Segments.validatedRestateBatch(replacement, boundCol, loIncl, hiExcl)
+    val batch = validatedRestateBatch(replacement, boundCol, loIncl, hiExcl)
     val staged = stageIntoRoot(spark, p, fs, relDir,
       batch.repartitionByRange(1, org.apache.spark.sql.functions.col(boundCol))
         .sortWithinPartitions(boundCol))
@@ -1141,6 +1194,65 @@ object ManifestLog {
     commit(fs, p, v + 1,
       live.diff(grain) ++ entriesFor(spark, p, staged, Seq(boundCol)),
       "restate", m.batchHwm)
+  }
+
+  /** The self-driving end of the [[CompactAfterSegments]] policy: ONE
+    * maintenance-tick call that finds every over-fragmented grain and
+    * compacts it, instead of leaving grain selection to the operator.
+    * Grains are DERIVED from the live files' ranges, per partition
+    * directory of the CURRENT manifest: files whose [min,max] intervals
+    * overlap form a connected component (appends over the same span
+    * always land in one component), and a component holding more than
+    * `maxFiles` files is compacted over its exact span through
+    * [[compactRange]]. Components of ≤ maxFiles files — including every
+    * already-compacted history grain — are untouched, so a tick over a
+    * year of history costs a manifest parse plus only the fragmented
+    * grains' rewrites. Files without trustworthy stats (or with null
+    * boundary values) belong to no component and are never touched.
+    * Returns the compacted grains as (relDir, lo, hiExcl) for the
+    * caller's ledger.
+    */
+  def maintainSorted(spark: SparkSession, root: String,
+      boundCol: String,
+      maxFiles: Int = CompactAfterSegments): Seq[(String, Long, Long)] = {
+    require(maxFiles >= 1, "maxFiles must admit at least one file per grain")
+    val conf = spark.sessionState.newHadoopConf()
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    // (relDir, recorded-or-footer range). Manifest entries carrying
+    // stats for the bound column classify WITHOUT a footer read — at
+    // 100k files the tick's discovery pass is then a manifest parse.
+    val byDir: Map[String, Seq[Option[(Long, Long)]]] =
+      currentEntries(spark, root)
+        .map { e =>
+          (dirOf(e.path), e.statFor(boundCol).orElse(fileRange(
+            new org.apache.hadoop.fs.Path(rootPath, e.path), boundCol, conf)))
+        }
+        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val done = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+    byDir.toSeq.sortBy(_._1).foreach { case (relDir, fileRanges) =>
+      // Interval components over the files with usable stats.
+      val ranged = fileRanges.flatten.sortBy(_._1)
+      var i = 0
+      while (i < ranged.length) {
+        var (lo, hi) = ranged(i)
+        var count = 1
+        var j = i + 1
+        while (j < ranged.length && ranged(j)._1 <= hi) {
+          hi = math.max(hi, ranged(j)._2)
+          count += 1
+          j += 1
+        }
+        // hi == Long.MaxValue cannot be expressed as an exclusive
+        // bound; such a grain (a sentinel timestamp) stays fragmented
+        // rather than silently widening into a neighbor.
+        if (count > maxFiles && hi < Long.MaxValue) {
+          compactRange(spark, root, relDir, boundCol, lo, hi + 1)
+          done += ((relDir, lo, hi + 1))
+        }
+        i = j
+      }
+    }
+    done.toSeq
   }
 
   /** Keyed row deletion (the right-to-be-forgotten primitive),
@@ -1304,7 +1416,7 @@ object ManifestLog {
         // replacement" literal in the manifest.
         stageIntoRoot(spark, p, fs, relDir, clustered).filter { rel =>
           val f = new org.apache.hadoop.fs.Path(p, rel)
-          Segments.fileRowCount(f, conf) > 0L || { fs.delete(f, false); false }
+          fileRowCount(f, conf) > 0L || { fs.delete(f, false); false }
         }
     }
     val remaining = live.diff(touched)
@@ -1339,7 +1451,7 @@ object ManifestLog {
     val m = readRaw(fs, p, v)
     val (expired, kept) = m.entries.partition { e =>
       classify(p, e, boundCol, Long.MinValue, cutoff, conf) ==
-        Segments.Containment.Contained
+        Containment.Contained
     }
     if (expired.isEmpty) return 0
     require(kept.nonEmpty,
@@ -1412,6 +1524,130 @@ object ManifestLog {
   }
 
   // ---- internals ----
+
+  /** The restatement batch contract: non-empty (a whole-grain delete is
+    * not a restatement) and entirely inside the grain — both checked
+    * loudly BEFORE anything is written. Returns the batch locally
+    * checkpointed so the (possibly expensive) upstream plan evaluates
+    * once for both the validation aggregate and the write.
+    */
+  private[util] def validatedRestateBatch(replacement: DataFrame,
+      boundCol: String, loIncl: Long, hiExcl: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    val batch = replacement.localCheckpoint()
+    val checks = batch.agg(
+      count(lit(1)).as("total"),
+      count(when(
+        col(boundCol).isNull || col(boundCol) < loIncl || col(boundCol) >= hiExcl,
+        lit(1))).as("strays")).head()
+    require(checks.getLong(0) > 0,
+      "restatement batch is empty — a whole-grain delete is not expressible " +
+        "as a restatement (the staged recovery could not tell it from a torn swap)")
+    require(checks.getLong(1) == 0,
+      s"${checks.getLong(1)} replacement row(s) fall outside the grain " +
+        s"[$loIncl, $hiExcl) — a restatement replaces exactly its own grain")
+    batch
+  }
+
+  private[util] sealed trait Containment
+  private[util] object Containment {
+    case object Contained extends Containment
+    case object Disjoint extends Containment
+    case object Unknown extends Containment
+  }
+
+  /** Footer classification of one file against a value grain: fully
+    * inside, fully outside (all-null files count as outside — null
+    * boundaries sort into the log's leading files and belong to no
+    * value range), or not decidable from trustworthy stats. One footer
+    * read, no data pages.
+    */
+  private[util] def containment(file: org.apache.hadoop.fs.Path, column: String,
+      lo: Long, hi: Long,
+      conf: org.apache.hadoop.conf.Configuration): Containment = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      import scala.jdk.CollectionConverters._
+      var nulls = 0L
+      var mn = Long.MaxValue
+      var mx = Long.MinValue
+      var anyValue = false
+      var unusable = false
+      reader.getFooter.getBlocks.asScala.foreach { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == column)
+          .flatMap(c => Option(c.getStatistics)) match {
+          case Some(s) if s.getNumNulls >= 0 =>
+            nulls += s.getNumNulls
+            if (s.hasNonNullValue) (s.genericGetMin, s.genericGetMax) match {
+              case (a: java.lang.Long, z: java.lang.Long) =>
+                anyValue = true
+                mn = math.min(mn, a.toLong)
+                mx = math.max(mx, z.toLong)
+              case _ => unusable = true
+            }
+          case _ => unusable = true
+        }
+      }
+      if (unusable) Containment.Unknown
+      else if (!anyValue) Containment.Disjoint
+      else if (mx < lo || mn >= hi) Containment.Disjoint
+      else if (mn >= lo && mx < hi && nulls == 0) Containment.Contained
+      else Containment.Unknown
+    } finally reader.close()
+  }
+
+  /** Footer min/max of a BIGINT column in one parquet file — None when
+    * any row group lacks usable stats or holds nulls (the conservative
+    * answer: such a file is never selected for compaction). One footer
+    * read, no data pages.
+    */
+  private[util] def fileRange(file: org.apache.hadoop.fs.Path, column: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[(Long, Long)] =
+    fileRanges(file, Seq(column), conf).get(column)
+
+  /** Trustworthy footer [min, max] per requested column, from ONE
+    * footer read — the multi-stat manifest recording path would
+    * otherwise open the same footer once per cluster column. A column
+    * is present in the result only when EVERY row group carries
+    * null-free, long-decodable statistics for it (the single-column
+    * contract, unchanged).
+    */
+  private[util] def fileRanges(file: org.apache.hadoop.fs.Path,
+      columns: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration): Map[String, (Long, Long)] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try {
+      import scala.jdk.CollectionConverters._
+      val blocks = reader.getFooter.getBlocks.asScala
+      columns.flatMap { column =>
+        val perBlock = blocks.map { b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == column)
+            .flatMap(c => Option(c.getStatistics))
+            .filter(s => !s.isEmpty && s.hasNonNullValue && s.getNumNulls == 0)
+            .flatMap(s => (s.genericGetMin, s.genericGetMax) match {
+              case (mn: java.lang.Long, mx: java.lang.Long) => Some((mn.toLong, mx.toLong))
+              case _ => None
+            })
+        }
+        if (perBlock.isEmpty || perBlock.exists(_.isEmpty)) None
+        else Some(column ->
+          (perBlock.flatten.map(_._1).min, perBlock.flatten.map(_._2).max))
+      }.toMap
+    } finally reader.close()
+  }
+
+  /** Footer row count of one parquet file — one footer read, no data
+    * pages. The delete paths use it to drop schema-only empty parts a
+    * fully-tombstoned grain's write may leave behind.
+    */
+  private[util] def fileRowCount(file: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try reader.getRecordCount finally reader.close()
+  }
 
   private[util] def manifestName(v: Long) = f"v$v%09d.manifest"
 

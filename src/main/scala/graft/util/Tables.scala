@@ -478,8 +478,8 @@ object Snapshots {
       // Self-adopt: the one-shot build IS the manifested layout's
       // first generation ([[ManifestLog.adopt]] — one footer pass
       // records per-file boundCol ranges). Readers then plan from the
-      // manifest (file skipping); the Segments maintenance path sees
-      // a manifested root and appends through manifest commits.
+      // manifest (file skipping), and segment maintenance appends,
+      // compacts and restates through manifest commits.
       adoptBound.foreach(b => ManifestLog.adopt(spark, out, Some(b)))
       out
     })
@@ -627,7 +627,7 @@ object Snapshots {
   }
 
   /** Ingest-pipeline seam: register an externally maintained at-rest
-    * layout (e.g. a SEGMENT-APPENDED parquet root — [[Segments]]) as
+    * layout (e.g. a SEGMENT-APPENDED manifested root — [[ManifestLog]]) as
     * the artifact for (dir, name), replacing any memoized build. This
     * is how the maintenance path and the query path compose: queries
     * consume whatever is at rest under the artifact's key, so an
@@ -639,15 +639,6 @@ object Snapshots {
   private[graft] def install(spark: SparkSession, dir: String, name: String,
       path: String): Unit =
     paths.put((dir, name, fingerprint(spark, dir)), new Cell(() => path))
-
-  /** [[install]] for bucketed catalog-table artifacts: `table` is the
-    * catalog name of an externally maintained bucketed table (same
-    * bucket key/count as the one-shot build — append-mode bucketBy
-    * validates this at every segment write).
-    */
-  private[graft] def installTable(spark: SparkSession, dir: String, name: String,
-      table: String): Unit =
-    paths.put((dir, s"bkt-$name", fingerprint(spark, dir)), new Cell(() => table))
 
   /** Garbage-collect superseded artifact generations for a corpus dir
     * — the disposal end of the lifecycle (build → [[install]] append →

@@ -15,13 +15,11 @@ import org.apache.spark.sql.functions._
   *     for any positional assumption) and comparing row-for-row.
   *  2. The sorted-log append path survives widening: a widened batch
   *     lands as a new segment and a mergeSchema read sees one table —
-  *     old rows null-filled, boundary stats intact.
-  *  3. The bucketed append path REJECTS widening loudly (the bucket
-  *     spec validation): co-location metadata is catalog-owned, so a
-  *     drifted producer fails at write time instead of corrupting the
-  *     layout. (In-place corpus rewrites re-keying the at-rest
-  *     artifacts is SnapshotsSpec's "rewriting the corpus at the same
-  *     path" proof.)
+  *     old rows null-filled, boundary stats intact. (The bucketed
+  *     layouts widen the same way — BucketedManifestSpec's mergeSchema
+  *     case; in-place corpus rewrites re-keying the at-rest artifacts
+  *     is SnapshotsSpec's "rewriting the corpus at the same path"
+  *     proof.)
   */
 class SchemaDriftSpec extends SparkTestBase with TempCorpusDirs {
   import sqlImplicits._
@@ -65,14 +63,15 @@ class SchemaDriftSpec extends SparkTestBase with TempCorpusDirs {
 
   test("a widened batch appends as a segment; a mergeSchema read sees one null-filled table") {
     val root = s"${tempCorpusDir("graft_drift_log")}/log"
+    graft.util.ManifestLog.create(spark, root)
     val v1 = (0 until 1000).map(i => (i.toLong, i.toLong * 1000L)).toDF("k", "ts")
-    graft.util.Segments.appendSorted(
+    graft.util.ManifestLog.appendSorted(
       v1.repartitionByRange(2, col("ts")).sortWithinPartitions("ts"), root)
     val v2 = (1000 until 2000).map(i => (i.toLong, i.toLong * 1000L, s"attr$i"))
       .toDF("k", "ts", "attr")
-    graft.util.Segments.appendSorted(
+    graft.util.ManifestLog.appendSorted(
       v2.repartitionByRange(2, col("ts")).sortWithinPartitions("ts"), root)
-    val merged = spark.read.option("mergeSchema", "true").parquet(root)
+    val merged = graft.util.ManifestLog.read(spark, root, Map("mergeSchema" -> "true"))
     assert(merged.columns.toSet == Set("k", "ts", "attr"))
     assert(merged.count() == 2000)
     assert(merged.filter(col("attr").isNull).count() == 1000, "v1 rows must read null-filled")
@@ -94,7 +93,7 @@ class SchemaDriftSpec extends SparkTestBase with TempCorpusDirs {
     graft.util.ManifestLog.adopt(spark, root, boundCol = Some("ts"))
     val v2 = (1000 until 2000).map(i => (i.toLong, i.toLong * 1000L, s"attr$i"))
       .toDF("k", "ts", "attr")
-    graft.util.Segments.appendSorted(
+    graft.util.ManifestLog.appendSorted(
       v2.repartitionByRange(2, col("ts")).sortWithinPartitions("ts"), root,
       boundCol = Some("ts"))
     val merged = graft.util.ManifestLog.read(spark, root,
@@ -110,17 +109,5 @@ class SchemaDriftSpec extends SparkTestBase with TempCorpusDirs {
     assert(slice.inputFiles.length < merged.inputFiles.length,
       "slice planned every schema generation's files")
     assert(slice.filter(col("ts") >= 1500000L && col("ts") < 1600000L).count() == 100)
-  }
-
-  test("the bucketed append path rejects a widened batch loudly") {
-    val t = s"graft_drift_bkt_${System.nanoTime()}"
-    val v1 = (0 until 100).map(i => (i.toLong, i.toString)).toDF("k", "v")
-    graft.util.Segments.appendBucketed(v1, t, "k", 4)
-    val v2 = (100 until 200).map(i => (i.toLong, i.toString, "x")).toDF("k", "v", "extra")
-    intercept[org.apache.spark.sql.AnalysisException] {
-      graft.util.Segments.appendBucketed(v2, t, "k", 4)
-    }
-    // The failed append corrupted nothing: the table still reads v1.
-    assert(spark.table(t).count() == 100)
   }
 }

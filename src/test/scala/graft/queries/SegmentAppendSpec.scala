@@ -18,9 +18,12 @@ import graft.SparkTestBase
   *       joins with ZERO hash exchange when every bucket has one file
   *       per segment;
   *   (b) merged read == rebuild read at the QUERY level: q46/q47/
-  *       q121/q151 answer row-identically over one-shot and
+  *       q151 answer row-identically over one-shot and
   *       segment-appended layouts (the `Snapshots.install` seam — the
   *       query path consumes whatever is at rest).
+  * Every segmented root is manifested (created empty, or a one-shot
+  * write adopted), so reads go through `ManifestLog.read`: a directory
+  * listing would also see files a compaction retired.
   */
 class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
 
@@ -49,12 +52,13 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val splitUs = baseUs + (n * 8 / 10) * 1000000L
     val splitTs = timestamp_micros(lit(splitUs))
     val root = s"${tempCorpusDir("graft_seg_sdlog")}/lineitem-sd-log"
-    // Two ingest ticks: the one-shot build IS the first segment.
+    // Two ingest ticks on an empty manifested root.
+    graft.util.ManifestLog.create(spark, root)
     Relational.appendLineitemSdLogSegment(
       spark, root, li.filter(col("l_shipdate") < splitTs))
     Relational.appendLineitemSdLogSegment(
       spark, root, li.filter(col("l_shipdate") >= splitTs))
-    val log = spark.read.parquet(root)
+    val log = graft.util.ManifestLog.read(spark, root)
     // The layout is genuinely multi-segment: more files than one
     // range-partitioned write could produce.
     assert(log.inputFiles.length > shufflePartitions,
@@ -84,16 +88,17 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val n = 50000L
     val li = syntheticLineitem(n)
     val root = s"${tempCorpusDir("graft_seg_compact")}/lineitem-sd-log"
+    graft.util.ManifestLog.create(spark, root)
     Relational.appendLineitemSdLogSegment(spark, root, li.filter(col("l_orderkey") % 2 === 0))
     Relational.appendLineitemSdLogSegment(spark, root, li.filter(col("l_orderkey") % 2 === 1))
-    val before = spark.read.parquet(root)
+    val before = graft.util.ManifestLog.read(spark, root)
     val filesBefore = before.inputFiles.length
     assert(filesBefore > shufflePartitions, "fixture must be multi-segment")
     val rowsBefore = rows(before.select("l_orderkey", "l_shipdate_us"))
 
-    graft.util.Segments.compactSortedRange(
-      spark, root, "l_shipdate_us", baseUs, baseUs + (n * 6 / 10) * 1000000L)
-    val after = spark.read.parquet(root)
+    graft.util.ManifestLog.compactRange(
+      spark, root, "", "l_shipdate_us", baseUs, baseUs + (n * 6 / 10) * 1000000L)
+    val after = graft.util.ManifestLog.read(spark, root)
     assert(after.inputFiles.length < filesBefore - 1,
       s"compaction merged nothing: $filesBefore -> ${after.inputFiles.length} files")
     assert(rows(after.select("l_orderkey", "l_shipdate_us")) == rowsBefore,
@@ -108,9 +113,9 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       s"scan emitted $scanRows of $n rows — compaction broke row-group pruning")
     // Idempotent: the grain is compact now.
     val files2 = after.inputFiles.length
-    graft.util.Segments.compactSortedRange(
-      spark, root, "l_shipdate_us", baseUs, baseUs + (n * 6 / 10) * 1000000L)
-    assert(spark.read.parquet(root).inputFiles.length == files2)
+    graft.util.ManifestLog.compactRange(
+      spark, root, "", "l_shipdate_us", baseUs, baseUs + (n * 6 / 10) * 1000000L)
+    assert(graft.util.ManifestLog.read(spark, root).inputFiles.length == files2)
   }
 
   test("orders-by-year keeps directory pruning across segments (shared year dirs)") {
@@ -126,6 +131,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
           + (col("o_orderkey") % perYear) * 1000000L)
           .cast("timestamp_ntz"))
     val root = s"${tempCorpusDir("graft_seg_oby")}/orders-by-year"
+    graft.util.ManifestLog.create(spark, root)
     // Split ACROSS years (even/odd orderkey): both segments write into
     // the SAME year directories — the shared-dir claim, not just
     // "new year, new dir".
@@ -133,7 +139,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       spark, root, orders.filter(col("o_orderkey") % 2 === 0))
     Relational.appendOrdersByYearSegment(
       spark, root, orders.filter(col("o_orderkey") % 2 === 1))
-    val layout = spark.read.parquet(root)
+    val layout = graft.util.ManifestLog.read(spark, root)
     assert(layout.inputFiles.length > years,
       s"expected multi-segment files across year dirs, got ${layout.inputFiles.length}")
     // One-year slice: directory pruning must drop the other years'
@@ -151,18 +157,20 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(y1997.filter(col("o_orderkey") % 2 === 1).count() > 0)
 
     // Per-grain compaction of the partitioned layout: a year DIRECTORY
-    // is the grain, and compactSortedRange over it (full micros range)
+    // is the grain, and compactRange over it (full micros range)
     // merges that year's segment files without touching other years.
-    val yearDir = s"$root/order_year=1997"
-    val filesBefore = spark.read.parquet(yearDir).inputFiles.length
+    def yearFiles(): Int = graft.util.ManifestLog.read(spark, root).inputFiles
+      .count(_.contains("/order_year=1997/"))
+    val filesBefore = yearFiles()
     assert(filesBefore > 1, "year dir must be multi-segment for the compaction check")
-    graft.util.Segments.compactSortedRange(
-      spark, yearDir, "o_orderdate_us", Long.MinValue, Long.MaxValue)
-    val yAfter = spark.read.parquet(root).filter(col("order_year") === 1997)
-    assert(spark.read.parquet(yearDir).inputFiles.length < filesBefore,
+    graft.util.ManifestLog.compactRange(
+      spark, root, "order_year=1997", "o_orderdate_us", Long.MinValue, Long.MaxValue)
+    val yAfter = graft.util.ManifestLog.read(spark, root).filter(col("order_year") === 1997)
+    assert(yearFiles() < filesBefore,
       "year-dir compaction merged nothing")
     assert(yAfter.count() == perYear, "year-dir compaction lost rows")
-    val othersAfter = spark.read.parquet(root).filter(col("order_year") =!= 1997)
+    val othersAfter = graft.util.ManifestLog.read(spark, root)
+      .filter(col("order_year") =!= 1997)
     assert(othersAfter.count() == (years - 1) * perYear, "compaction touched other years")
   }
 
@@ -182,15 +190,22 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val tag = System.nanoTime()
     val liTable = s"graft_seg_li_$tag"
     val ordTable = s"graft_seg_ord_$tag"
-    // Two segments per table, split so both segments hit EVERY bucket
+    // Two segments per layout, split so both segments hit EVERY bucket
     // (key mod 2 is independent of the bucket hash) — each bucket
-    // holds one file per segment.
-    Relational.appendLineitemBucketSegment(li.filter(col("l_orderkey") % 2 === 0), liTable)
-    Relational.appendLineitemBucketSegment(li.filter(col("l_orderkey") % 2 === 1), liTable)
-    Relational.appendOrdersBucketSegment(orders.filter(col("o_orderkey") % 2 === 0), ordTable)
-    Relational.appendOrdersBucketSegment(orders.filter(col("o_orderkey") % 2 === 1), ordTable)
-    val bktLi = spark.table(liTable)
-    val bktOrd = spark.table(ordTable)
+    // holds one file per segment. The first is the one-shot bucketed
+    // build (the orderkey pair's 32 buckets), adopted as a manifested
+    // layout; the second appends through the manifest.
+    def pair(df: DataFrame, key: String, table: String): String = {
+      df.filter(col(key) % 2 === 0).repartition(32, col(key)).write
+        .option("path", s"${tempCorpusDir(s"graft_seg_$table")}/t")
+        .bucketBy(32, key).sortBy(key).saveAsTable(table)
+      val root = graft.util.BucketedManifest.adoptTable(spark, table)
+      graft.util.BucketedManifest.appendBucketed(df.filter(col(key) % 2 === 1), root)
+      root
+    }
+    val liRoot = pair(li, "l_orderkey", liTable)
+    val bktLi = graft.util.BucketedManifest.read(spark, liRoot)
+    val bktOrd = graft.util.BucketedManifest.read(spark, pair(orders, "o_orderkey", ordTable))
     // Multi-file buckets genuinely exercised: more files than buckets.
     assert(bktLi.inputFiles.length > 32,
       s"lineitem buckets are single-file (${bktLi.inputFiles.length}) — append produced no second segment")
@@ -211,13 +226,13 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       assert(!agg.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
         "segment append broke the exchange-free keyed aggregation")
 
-      // Per-grain COMPACTION (Segments.CompactAfterSegments's rewrite):
+      // Per-grain COMPACTION (ManifestLog.CompactAfterSegments's rewrite):
       // every lineitem bucket collapses back to one file; rows, bucket
       // mapping, and co-location must all survive the rewrite.
-      val filesBefore = spark.table(liTable).inputFiles.length
+      val filesBefore = bktLi.inputFiles.length
       (0 until 32).foreach(b =>
-        graft.util.Segments.compactBucket(spark, liTable, "l_orderkey", b))
-      val compacted = spark.table(liTable)
+        graft.util.BucketedManifest.compactBucket(spark, liRoot, b))
+      val compacted = graft.util.BucketedManifest.read(spark, liRoot)
       assert(compacted.inputFiles.length <= 32 &&
         compacted.inputFiles.length < filesBefore,
         s"compaction left ${compacted.inputFiles.length} files (was $filesBefore)")
@@ -243,9 +258,10 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       .select("user_id", "ts_us", "event_id", "event_type")
     val splitUs = baseUs + (n * 8 / 10) * 1000000L
     val root = s"${tempCorpusDir("graft_seg_evlog")}/events-us-log"
+    graft.util.ManifestLog.create(spark, root)
     Events.appendEventsUsLogSegment(spark, root, ev.filter(col("ts_us") < splitUs))
     Events.appendEventsUsLogSegment(spark, root, ev.filter(col("ts_us") >= splitUs))
-    val log = spark.read.parquet(root)
+    val log = graft.util.ManifestLog.read(spark, root)
     assert(log.inputFiles.length > shufflePartitions)
     val cutoff = baseUs + (n * 9 / 10) * 1000000L
     val qe = log.filter(col("ts_us") >= cutoff).queryExecution
@@ -256,10 +272,9 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       s"scan emitted $scanRows of $n rows — segment append broke ts pruning")
   }
 
-  test("q46/q47/q121/q127/q151 answer identically over one-shot and segment-appended layouts") {
+  test("q46/q47/q151 answer identically over one-shot and segment-appended layouts") {
     val sf = "/root/testdata/sf0.001"
-    val queries = Seq("q46_tpch_q6", "q47_tpch_q3", "q121_tpch_q18",
-      "q127_tpch_q13", "q151_partsupp_merge")
+    val queries = Seq("q46_tpch_q6", "q47_tpch_q3", "q151_partsupp_merge")
     // Expected: the one-shot artifact path on the pristine corpus.
     val expected = queries.map(q => q -> rows(graft.SparkEntry.queries(q)(spark, sf)))
     // A byte-identical corpus COPY gets its layouts built by
@@ -287,11 +302,13 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val liCut = timestamp_micros(
       lit(liSplit.getLong(0) + (liSplit.getLong(1) - liSplit.getLong(0)) * 8 / 10))
     val sdRoot = s"${tempCorpusDir("graft_seg_sd")}/lineitem-sd-log"
+    graft.util.ManifestLog.create(spark, sdRoot)
     Relational.appendLineitemSdLogSegment(
       spark, sdRoot, li.filter(coalesce(col("l_shipdate") < liCut, lit(true))))
     Relational.appendLineitemSdLogSegment(
       spark, sdRoot, li.filter(col("l_shipdate") >= liCut))
-    assert(spark.read.parquet(sdRoot).inputFiles.length > n, "sd-log is not multi-segment")
+    assert(graft.util.ManifestLog.read(spark, sdRoot).inputFiles.length > n,
+      "sd-log is not multi-segment")
     graft.util.Snapshots.install(spark, dir, s"lineitem-sd-log-n$n", sdRoot)
 
     // orders-by-year: 80/20 order-date split.
@@ -301,34 +318,12 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val oCut = timestamp_micros(
       lit(oSplit.getLong(0) + (oSplit.getLong(1) - oSplit.getLong(0)) * 8 / 10))
     val obyRoot = s"${tempCorpusDir("graft_seg_ob")}/orders-by-year"
+    graft.util.ManifestLog.create(spark, obyRoot)
     Relational.appendOrdersByYearSegment(
       spark, obyRoot, orders.filter(coalesce(col("o_orderdate") < oCut, lit(true))))
     Relational.appendOrdersByYearSegment(
       spark, obyRoot, orders.filter(col("o_orderdate") >= oCut))
     graft.util.Snapshots.install(spark, dir, s"orders-by-year-n$n", obyRoot)
-
-    // The orderkey co-location pair: orderkey-parity split so both
-    // segments land files in every bucket.
-    val tag = System.nanoTime()
-    val liTable = s"graft_seg_q_li_$tag"
-    val ordTable = s"graft_seg_q_ord_$tag"
-    Relational.appendLineitemBucketSegment(li.filter(col("l_orderkey") % 2 === 0), liTable)
-    Relational.appendLineitemBucketSegment(li.filter(col("l_orderkey") % 2 === 1), liTable)
-    Relational.appendOrdersBucketSegment(orders.filter(col("o_orderkey") % 2 === 0), ordTable)
-    Relational.appendOrdersBucketSegment(orders.filter(col("o_orderkey") % 2 === 1), ordTable)
-    graft.util.Snapshots.installTable(spark, dir, "lineitem-by-orderkey", liTable)
-    graft.util.Snapshots.installTable(spark, dir, "orders-by-orderkey", ordTable)
-
-    // The custkey pair (q127's layout) — custkey-parity split.
-    val customer = spark.read.parquet(s"$dir/customer.parquet")
-    val ordCkTable = s"graft_seg_q_ock_$tag"
-    val custTable = s"graft_seg_q_cust_$tag"
-    Relational.appendOrdersCustkeyBucketSegment(orders.filter(col("o_custkey") % 2 === 0), ordCkTable)
-    Relational.appendOrdersCustkeyBucketSegment(orders.filter(col("o_custkey") % 2 === 1), ordCkTable)
-    Relational.appendCustomerBucketSegment(customer.filter(col("c_custkey") % 2 === 0), custTable)
-    Relational.appendCustomerBucketSegment(customer.filter(col("c_custkey") % 2 === 1), custTable)
-    graft.util.Snapshots.installTable(spark, dir, "orders-by-custkey", ordCkTable)
-    graft.util.Snapshots.installTable(spark, dir, "customer-by-custkey", custTable)
 
     queries.zip(expected).foreach { case (q, (_, exp)) =>
       val got = rows(graft.SparkEntry.queries(q)(spark, dir))
@@ -357,11 +352,11 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val liCut = timestamp_micros(
       lit(liSplit.getLong(0) + (liSplit.getLong(1) - liSplit.getLong(0)) * 8 / 10))
     val sdRoot = s"${tempCorpusDir("graft_mseg_sd")}/lineitem-sd-log"
-    // First segment creates the bare root; ADOPTING it turns every
-    // later maintenance call into a manifest commit (the transparent-
-    // upgrade path an in-production layout would take).
-    Relational.appendLineitemSdLogSegment(
-      spark, sdRoot, li.filter(coalesce(col("l_shipdate") < liCut, lit(true))))
+    // The first segment is a one-shot build; ADOPTING it turns every
+    // later maintenance call into a manifest commit (the path an
+    // in-production layout takes).
+    Relational.sdLogFrame(li.filter(coalesce(col("l_shipdate") < liCut, lit(true))), n)
+      .write.parquet(sdRoot)
     graft.util.ManifestLog.adopt(spark, sdRoot)
     Relational.appendLineitemSdLogSegment(
       spark, sdRoot, li.filter(col("l_shipdate") >= liCut))
@@ -375,7 +370,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     }
     // Maintenance runs UNDER the pinned readers: compact the whole
     // span, then vacuum keeping the pinned generation readable.
-    graft.util.Segments.compactSortedRange(spark, sdRoot, "l_shipdate_us",
+    graft.util.ManifestLog.compactRange(spark, sdRoot, "", "l_shipdate_us",
       liSplit.getLong(0), liSplit.getLong(1) + 1L)
     graft.util.ManifestLog.vacuum(spark, sdRoot, keepLast = 2)
     pinned.zip(expected).foreach { case ((q, df), (_, exp)) =>
@@ -406,8 +401,8 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val cutUs = liSplit.getLong(0) + (liSplit.getLong(1) - liSplit.getLong(0)) * 8 / 10
     val liCut = timestamp_micros(lit(cutUs))
     val sdRoot = s"${tempCorpusDir("graft_mslice_sd")}/lineitem-sd-log"
-    Relational.appendLineitemSdLogSegment(
-      spark, sdRoot, li.filter(coalesce(col("l_shipdate") < liCut, lit(true))))
+    Relational.sdLogFrame(li.filter(coalesce(col("l_shipdate") < liCut, lit(true))), n)
+      .write.parquet(sdRoot)
     graft.util.ManifestLog.adopt(spark, sdRoot, boundCol = Some("l_shipdate_us"))
     Relational.appendLineitemSdLogSegment(
       spark, sdRoot, li.filter(col("l_shipdate") >= liCut))
@@ -444,9 +439,10 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val span = ev.agg(min("ts_us"), max("ts_us")).head()
     val cut = span.getLong(0) + (span.getLong(1) - span.getLong(0)) * 8 / 10
     val root = s"${tempCorpusDir("graft_seg_evroot")}/events-us-log"
+    graft.util.ManifestLog.create(spark, root)
     Events.appendEventsUsLogSegment(spark, root, ev.filter(col("ts_us") < cut))
     Events.appendEventsUsLogSegment(spark, root, ev.filter(col("ts_us") >= cut))
-    assert(spark.read.parquet(root).inputFiles.length > shufflePartitions,
+    assert(graft.util.ManifestLog.read(spark, root).inputFiles.length > shufflePartitions,
       "events log is not multi-segment")
     graft.util.Snapshots.install(spark, dir, s"events-us-log-n$shufflePartitions", root)
     queries.zip(expected).foreach { case (q, exp) =>
@@ -470,7 +466,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val span = ev.agg(min("ts_us"), max("ts_us")).head()
     val cut = span.getLong(0) + (span.getLong(1) - span.getLong(0)) * 8 / 10
     val root = s"${tempCorpusDir("graft_mseg_evroot")}/events-us-log"
-    Events.appendEventsUsLogSegment(spark, root, ev.filter(col("ts_us") < cut))
+    Events.usLogFrame(ev.filter(col("ts_us") < cut), shufflePartitions).write.parquet(root)
     graft.util.ManifestLog.adopt(spark, root)
     Events.appendEventsUsLogSegment(spark, root, ev.filter(col("ts_us") >= cut))
     graft.util.Snapshots.install(spark, dir, s"events-us-log-n$shufflePartitions", root)
@@ -483,7 +479,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     // An upstream CORRECTION arrives: the second segment's grain is
     // restated with byte-identical content (the equality-preserving
     // probe). The restatement must supersede exactly that grain.
-    graft.util.Segments.restateSortedRange(spark, root, "ts_us",
+    graft.util.ManifestLog.restateRange(spark, root, "", "ts_us",
       cut, span.getLong(1) + 1L, ev.filter(col("ts_us") >= cut))
     graft.util.ManifestLog.vacuum(spark, root, keepLast = 2)
     pinned.zip(expected).foreach { case (df, exp) =>
@@ -517,8 +513,9 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val oCut = timestamp_micros(
       lit(oSplit.getLong(0) + (oSplit.getLong(1) - oSplit.getLong(0)) * 8 / 10))
     val root = s"${tempCorpusDir("graft_mseg_oroot")}/orders-by-year"
-    Relational.appendOrdersByYearSegment(
-      spark, root, orders.filter(coalesce(col("o_orderdate") < oCut, lit(true))))
+    Relational.ordersYearFrame(
+        orders.filter(coalesce(col("o_orderdate") < oCut, lit(true))), n)
+      .write.partitionBy("order_year").parquet(root)
     graft.util.ManifestLog.adopt(spark, root)
     Relational.appendOrdersByYearSegment(
       spark, root, orders.filter(col("o_orderdate") >= oCut))

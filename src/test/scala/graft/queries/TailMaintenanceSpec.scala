@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.streaming.LogStream
-import graft.util.{ManifestLog, Segments, Tables}
+import graft.util.{ManifestLog, Tables}
 
 /** The manifest changes feed driving REAL artifact maintenance: a
   * consumer that folds each tail into the at-rest tf table (the
@@ -60,7 +60,7 @@ class TailMaintenanceSpec extends SparkTestBase with graft.ArtifactSpecHelpers {
         // Maintenance between ticks: collapse the whole log to one
         // file. The next tail must deliver ONLY batch 2.
         val r = docs.agg(min("doc_id"), max("doc_id")).head()
-        Segments.compactSortedRange(spark, root, "doc_id",
+        ManifestLog.compactRange(spark, root, "", "doc_id",
           r.getLong(0), r.getLong(1) + 1L)
         assert(ManifestLog.read(spark, root).inputFiles.length == 1)
       }
@@ -90,8 +90,8 @@ class TailMaintenanceSpec extends SparkTestBase with graft.ArtifactSpecHelpers {
     // derived tf rows for those docs are now WRONG at rest.
     val r = batches(0).agg(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (r.getLong(0), r.getLong(1) + 1L)
-    Segments.compactSortedRange(spark, root, "doc_id", lo, hi)
-    Segments.restateSortedRange(spark, root, "doc_id", lo, hi,
+    ManifestLog.compactRange(spark, root, "", "doc_id", lo, hi)
+    ManifestLog.restateRange(spark, root, "", "doc_id", lo, hi,
       batches(0).withColumn("text", upper(col("text"))))
 
     ManifestLog.tailSince(spark, root, cursor) match {

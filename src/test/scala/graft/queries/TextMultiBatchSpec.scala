@@ -25,7 +25,7 @@ import graft.util.Tables
   *   append  — minhash-sigs (per-doc signature grain)
   *
   * Compaction policy for the append-geometry artifacts lives with the
-  * layout maintenance primitive ([[graft.util.Segments]],
+  * layout maintenance primitive ([[graft.util.ManifestLog]],
   * `CompactAfterSegments`): each tick's materialization adds files at
   * the artifact root, and the same per-grain file-count bound applies.
   * Fold-geometry artifacts (df/stats/grams) are vocabulary-sized and

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.util.{ManifestLog, Segments}
+import graft.util.ManifestLog
 
 /** Streaming ingest into a manifested sorted log: exactly-once across
   * checkpointed restarts via the manifest's batch high-water mark,
@@ -118,7 +118,7 @@ class LogStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
 
     // Maintenance between micro-batches: compaction commits a new
     // generation and must CARRY the high-water mark.
-    Segments.compactSortedRange(spark, root, "ts", 0L, 2000000L)
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 2000000L)
     assert(ManifestLog.read(spark, root).inputFiles.length == 1)
     assert(ManifestLog.batchHwm(spark, root) == 1L,
       "maintenance dropped the batch high-water mark")

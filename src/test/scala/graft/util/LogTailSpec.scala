@@ -59,7 +59,7 @@ class LogTailSpec extends SparkTestBase with graft.TempCorpusDirs {
     LogStream.ingestBatch(batchDf(0, 500), 0L, root, "ts")
     val cursor = ManifestLog.tailSince(spark, root, 0L).toVersion
     LogStream.ingestBatch(batchDf(500, 800), 1L, root, "ts")
-    Segments.compactSortedRange(spark, root, "ts", 0L, 1000000L)
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 1000000L)
     assert(ManifestLog.read(spark, root).inputFiles.length == 1)
     // The tail across append+compact carries ONLY the append's rows —
     // re-emitting the compacted rewrite would double every row the
@@ -79,8 +79,8 @@ class LogTailSpec extends SparkTestBase with graft.TempCorpusDirs {
     val root = s"${tempCorpusDir("graft_tail_restate")}/log"
     LogStream.ingestBatch(batchDf(0, 500), 0L, root, "ts")
     val cursor = ManifestLog.tailSince(spark, root, 0L).toVersion
-    Segments.compactSortedRange(spark, root, "ts", 0L, 1000000L)
-    Segments.restateSortedRange(spark, root, "ts", 0L, 1000000L,
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 1000000L)
+    ManifestLog.restateRange(spark, root, "", "ts", 0L, 1000000L,
       batchDf(0, 500).withColumn("k", col("k") + 100000L))
     ManifestLog.tailSince(spark, root, cursor) match {
       case r: ManifestLog.TailResync =>

@@ -37,7 +37,7 @@ class ManifestLogPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
           (nextKey, lo + math.abs(rng.nextLong()) % math.max(1L, hiExcl - lo))
         }
       def append(rows: Seq[(Long, Long)]): Unit = {
-        Segments.appendSorted(
+        ManifestLog.appendSorted(
           rows.toDF("k", "ts").coalesce(1).sortWithinPartitions("ts"),
           root, boundCol = Some("ts"))
         model ++= rows
@@ -68,7 +68,7 @@ class ManifestLogPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
             val lo = rng.nextInt(4).toLong * 1000000L
             append(batch(lo, lo + 1000000L, 50 + rng.nextInt(150)))
           case 2 => // maintenance tick at a small bound
-            Segments.maintainSorted(spark, root, "ts", maxFiles = 2)
+            ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 2)
           case 3 => // restate a random committed span with shifted keys
             val lo = rng.nextInt(4).toLong * 1000000L
             val hi = lo + 1000000L
@@ -77,13 +77,13 @@ class ManifestLogPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
               val replacement = grainRows.map { case (k, ts) => (k + 1000000L, ts) }
               // Only aligned grains restate; fragmented ones throw —
               // compact first, as the contract prescribes.
-              Segments.maintainSorted(spark, root, "ts", maxFiles = 1)
+              ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1)
               // A z-clustered history may have merged ts bands into
               // files no boundary grain can align to — then the
               // restate REFUSES loudly (the documented contract), and
               // the refusal must leave the generation untouched.
               try {
-                Segments.restateSortedRange(spark, root, "ts", lo, hi,
+                ManifestLog.restateRange(spark, root, "", "ts", lo, hi,
                   replacement.toDF("k", "ts"))
                 model = model.filterNot(r => r._2 >= lo && r._2 < hi) ++ replacement
               } catch {
@@ -98,7 +98,7 @@ class ManifestLogPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
             val wouldKeep = model.exists(_._2 >= cutoff)
             if (cutoff > 0 && wouldKeep) {
               // Align grains so whole files fall below the cutoff.
-              Segments.maintainSorted(spark, root, "ts", maxFiles = 1)
+              ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1)
               val dropped = ManifestLog.expireBefore(spark, root, "ts", cutoff)
               if (dropped > 0)
                 model = model.filter(_._2 >= cutoff)

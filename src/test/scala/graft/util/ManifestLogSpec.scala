@@ -41,7 +41,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     val (root, rows) = freshLog()
     val pinned = ManifestLog.read(spark, root) // resolves v1's file list now
     val batch = (2000 until 2500).map(i => (i.toLong, i.toLong * 1000L))
-    Segments.appendSorted( // routes through the manifest: the root is adopted
+    ManifestLog.appendSorted(
       batch.toDF("k", "ts").repartitionByRange(1, col("ts")).sortWithinPartitions("ts"),
       root)
     assert(ManifestLog.currentVersion(spark, root) == 2L)
@@ -53,11 +53,11 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("compaction retires the grain without deleting it: pinned readers keep their files") {
     val (root, rows) = freshLog()
     val batch = (2000 until 2500).map(i => (i.toLong, i.toLong * 1000L))
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       batch.toDF("k", "ts").repartitionByRange(1, col("ts")).sortWithinPartitions("ts"),
       root)
     val pinned = ManifestLog.read(spark, root) // v2: 3 files
-    Segments.compactSortedRange(spark, root, "ts", 0L, 3000000L)
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)
     val compacted = ManifestLog.read(spark, root)
     assert(compacted.inputFiles.length == 1, "grain not collapsed to one file")
     assert(canon(compacted) == (rows ++ batch).sorted)
@@ -66,7 +66,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       "compaction deleted files a pinned reader references")
     // Idempotent: a second call is a no-op on the version counter.
     val v = ManifestLog.currentVersion(spark, root)
-    Segments.compactSortedRange(spark, root, "ts", 0L, 3000000L)
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)
     assert(ManifestLog.currentVersion(spark, root) == v)
   }
 
@@ -76,7 +76,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     val files = ManifestLog.read(spark, root).inputFiles.sorted
     assert(files.length == 2)
     val corrected = (1000 until 2000).map(i => (i.toLong + 100000L, i.toLong * 1000L))
-    Segments.restateSortedRange(spark, root, "ts", 1000000L, 2000000L,
+    ManifestLog.restateRange(spark, root, "", "ts", 1000000L, 2000000L,
       corrected.toDF("k", "ts"))
     val lower = rows.filter(_._2 < 1000000L)
     assert(canon(ManifestLog.read(spark, root)) == (lower ++ corrected).sorted)
@@ -85,11 +85,22 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
   }
 
   test("every crash window leaves the current generation untouched; vacuum removes the orphans") {
-    Seq("written:", "staged:manifest").foreach { window =>
+    val compact = (root: String) =>
+      ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)
+    val corrected = (1000 until 2000).map(i => (i.toLong + 100000L, i.toLong * 1000L))
+    val restate = (root: String) =>
+      ManifestLog.restateRange(spark, root, "", "ts", 1000000L, 2000000L,
+        corrected.toDF("k", "ts"))
+    val restated = (rows: Seq[(Long, Long)]) => rows.filter(_._2 < 1000000L) ++ corrected
+    // (window, mutation, rows once the retry converges, live files then)
+    Seq[(String, String => Unit, Seq[(Long, Long)] => Seq[(Long, Long)], Int)](
+      ("written:", compact, identity, 1),
+      ("staged:manifest", compact, identity, 1),
+      ("written:restate", restate, restated, 2),
+      ("staged:manifest", restate, restated, 2)
+    ).foreach { case (window, mutate, converged, filesAfter) =>
       val (root, rows) = freshLog()
-      killAt(window) {
-        Segments.compactSortedRange(spark, root, "ts", 0L, 3000000L)
-      }
+      killAt(window) { mutate(root) }
       // No torn state: v1 is still current and complete.
       assert(ManifestLog.currentVersion(spark, root) == 1L, s"window '$window'")
       assert(canon(ManifestLog.read(spark, root)) == rows.sorted, s"window '$window'")
@@ -98,9 +109,47 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       assert(canon(ManifestLog.read(spark, root)) == rows.sorted,
         s"window '$window': vacuum touched a live file")
       // Retry converges.
-      Segments.compactSortedRange(spark, root, "ts", 0L, 3000000L)
-      assert(canon(ManifestLog.read(spark, root)) == rows.sorted)
-      assert(ManifestLog.read(spark, root).inputFiles.length == 1)
+      mutate(root)
+      assert(canon(ManifestLog.read(spark, root)) == converged(rows).sorted,
+        s"window '$window'")
+      assert(ManifestLog.read(spark, root).inputFiles.length == filesAfter,
+        s"window '$window'")
+    }
+  }
+
+  test("a layout root without a manifest is refused before anything is written") {
+    val root = s"${tempCorpusDir("graft_mlog_bare")}/log"
+    val rows = (0 until 2000).map(i => (i.toLong, i.toLong * 1000L))
+    Seq((0L, 1000000L), (1000000L, 2000000L)).foreach { case (lo, hi) =>
+      rows.toDF("k", "ts").filter(col("ts") >= lo && col("ts") < hi)
+        .coalesce(1).sortWithinPartitions("ts").write.mode("append").parquet(root)
+    }
+    val base = java.nio.file.Paths.get(root)
+    def listing(): Seq[(String, Long)] = {
+      val walk = java.nio.file.Files.walk(base)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => (base.relativize(f).toString, java.nio.file.Files.size(f)))
+          .toSeq.sorted
+      } finally walk.close()
+    }
+    val before = listing()
+    assert(before.count(_._1.endsWith(".parquet")) == 2)
+    val batch = (2000 until 2500).map(i => (i.toLong, i.toLong * 1000L)).toDF("k", "ts")
+    Seq[(String, () => Unit)](
+      "appendSorted" -> (() => ManifestLog.appendSorted(batch.coalesce(1), root)),
+      "compactRange" -> (() =>
+        ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)),
+      "restateRange" -> (() =>
+        ManifestLog.restateRange(spark, root, "", "ts", 0L, 1000000L,
+          rows.filter(_._2 < 1000000L).toDF("k", "ts"))),
+      "maintainSorted" -> (() =>
+        ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1))
+    ).foreach { case (op, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("no committed manifest"), s"$op: ${e.getMessage}")
+      assert(listing() == before, s"$op wrote into a root without a manifest")
     }
   }
 
@@ -108,11 +157,11 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     val (root, rows) = freshLog()
     val batchDf = (2000 until 2500).map(i => (i.toLong, i.toLong * 1000L))
       .toDF("k", "ts").repartitionByRange(1, col("ts")).sortWithinPartitions("ts")
-    killAt("written:append") { Segments.appendSorted(batchDf, root) }
+    killAt("written:append") { ManifestLog.appendSorted(batchDf, root) }
     assert(canon(ManifestLog.read(spark, root)) == rows.sorted,
       "a crashed append leaked rows into the current generation")
     ManifestLog.vacuum(spark, root) // drop the orphaned batch files
-    Segments.appendSorted(batchDf, root)
+    ManifestLog.appendSorted(batchDf, root)
     assert(ManifestLog.read(spark, root).filter(col("k") >= 2000).count() == 500,
       "retry duplicated or lost the batch")
   }
@@ -120,10 +169,10 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("vacuum deletes retired files and old manifests, keeps the pinned window") {
     val (root, rows) = freshLog()
     val batch = (2000 until 2500).map(i => (i.toLong, i.toLong * 1000L))
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       batch.toDF("k", "ts").repartitionByRange(1, col("ts")).sortWithinPartitions("ts"),
       root)
-    Segments.compactSortedRange(spark, root, "ts", 0L, 3000000L) // v3
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L) // v3
     // keepLast=2: v2 still readable, v1's manifest goes; data files of
     // v2 (= superset incl. v1's) are all still referenced.
     val deleted2 = ManifestLog.vacuum(spark, root, keepLast = 2)
@@ -148,7 +197,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       .repartitionByRange(2, col("year"), col("ts")).sortWithinPartitions("ts")
     seg(0, 1000).write.partitionBy("year").parquet(root)
     ManifestLog.adopt(spark, root)
-    Segments.appendSorted(seg(1000, 2000), root, Seq("year"))
+    ManifestLog.appendSorted(seg(1000, 2000), root, Seq("year"))
     val df = ManifestLog.read(spark, root)
     assert(df.count() == 2000)
     assert(df.columns.contains("year"), "basePath read lost the partition column")
@@ -169,10 +218,10 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(after.inputFiles.count(_.contains("year=1990")) == 1,
       "year=1990's grain did not collapse to one file")
     assert(after.count() == 2000)
-    // The staged-swap entry point on the year SUBDIR must refuse: it
-    // would mutate files the manifest lists.
+    // A compaction aimed at the year SUBDIR must refuse: it would
+    // commit nothing the root's manifest lists.
     intercept[IllegalStateException] {
-      Segments.compactSortedRange(spark, s"$root/year=1991", "ts", 0L, 3000000L)
+      ManifestLog.compactRange(spark, s"$root/year=1991", "", "ts", 0L, 3000000L)
     }
   }
 
@@ -201,7 +250,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     rows.toDF("k", "ts").filter(col("ts") < 1000000L)
       .coalesce(1).sortWithinPartitions("ts").write.mode("append").parquet(root)
     ManifestLog.adopt(spark, root, boundCol = Some("ts"))
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       rows.toDF("k", "ts").filter(col("ts") >= 1000000L)
         .coalesce(1).sortWithinPartitions("ts"),
       root, boundCol = Some("ts"))
@@ -228,7 +277,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       "the slice touched a file its stats had excluded")
     // The maintenance tick classifies from the same stats: nothing to
     // compact here (each file its own component).
-    assert(Segments.maintainSorted(spark, root, "ts", maxFiles = 1).isEmpty)
+    assert(ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1).isEmpty)
   }
 
   test("maintainKeyed: unfoldable files never arm the trigger (no rewrite livelock)") {
@@ -313,10 +362,10 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
 
   test("describe narrates the lifecycle from the manifest directory alone") {
     val (root, _) = freshLog()
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       Seq((5000L, 2500000L)).toDF("k", "ts").coalesce(1), root)
     assert(ManifestLog.expireBefore(spark, root, "ts", 1500000L) == 1)
-    Segments.compactSortedRange(spark, root, "ts", 1000000L, 3000000L)
+    ManifestLog.compactRange(spark, root, "", "ts", 1000000L, 3000000L)
     val trail = ManifestLog.describe(spark, root)
     assert(trail.map(_._2) == Seq("adopt", "append", "expire", "compact"),
       s"unexpected audit trail: $trail")
@@ -327,7 +376,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
 
   test("a truncated manifest is refused, never served as a shrunken table") {
     val (root, rows) = freshLog()
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       Seq((9999L, 2500000L)).toDF("k", "ts").coalesce(1), root)
     val f = java.nio.file.Paths.get(root, "_manifests", "v000000002.manifest")
     val lines = java.nio.file.Files.readAllLines(f)
@@ -367,7 +416,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     val (root, rows) = freshLog()
     // boundCol records ts stats, so the new entry line carries
     // tab-separated (col, min, max) triples — the shape to garble.
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       Seq((9999L, 2500000L)).toDF("k", "ts").coalesce(1), root,
       boundCol = Some("ts"))
     val f = java.nio.file.Paths.get(root, "_manifests", "v000000002.manifest")
@@ -396,7 +445,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("a bare append into a partition directory of a manifested log is refused") {
     val root = s"${tempCorpusDir("graft_mlog_partguard")}/log"
     ManifestLog.create(spark, root)
-    Segments.appendSorted(
+    ManifestLog.appendSorted(
       Seq((1L, 1000L, 1990)).toDF("k", "ts", "year")
         .repartitionByRange(1, col("ts")).sortWithinPartitions("ts"),
       root, partitionDirs = Seq("year"))
@@ -405,7 +454,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     // orphans by the next vacuum. Must refuse loudly (the range ops
     // already do; this pins the append path's guard).
     val e = intercept[IllegalStateException] {
-      Segments.appendSorted(
+      ManifestLog.appendSorted(
         Seq((2L, 2000L)).toDF("k", "ts").coalesce(1), s"$root/year=1990")
     }
     assert(e.getMessage.contains("partition directory"), e.getMessage)
@@ -443,11 +492,11 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     // selection was computed against the superseded generation.
     injectOnce(3L, 4L)
     try intercept[ManifestLog.CommitConflict] {
-      Segments.compactSortedRange(spark, root, "ts", 0L, 20000000L)
+      ManifestLog.compactRange(spark, root, "", "ts", 0L, 20000000L)
     } finally ManifestLog.failpoint = _ => ()
     // The abort left no torn state: re-invoking against current
     // converges (CompactAfterSegments-style idempotence).
-    Segments.compactSortedRange(spark, root, "ts", 0L, 20000000L)
+    ManifestLog.compactRange(spark, root, "", "ts", 0L, 20000000L)
     assert(canon(ManifestLog.read(spark, root)) ==
       (rows :+ ((9999L, 9999000L))).sorted)
     assert(ManifestLog.read(spark, root).inputFiles.length == 1)

@@ -5,37 +5,39 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** The self-driving maintenance tick: grains are DERIVED from live
-  * file footer ranges (interval components), only over-fragmented
-  * components are rewritten, compacted history is never touched, and
-  * the tick works identically over bare and manifested roots.
+  * file ranges (interval components), only over-fragmented components
+  * are rewritten, compacted history is never touched, and the tick
+  * works per partition directory of a partitioned root.
   */
 class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
-  private def seg(root: String, lo: Int, hi: Int): Unit =
-    (lo until hi).map(i => (i.toLong, i.toLong * 1000L)).toDF("k", "ts")
-      .coalesce(1).sortWithinPartitions("ts")
-      .write.mode("append").parquet(root)
+  private def seg(root: String, lo: Int, hi: Int): Unit = {
+    if (!ManifestLog.isManifested(spark, root)) ManifestLog.create(spark, root)
+    ManifestLog.appendSorted(
+      (lo until hi).map(i => (i.toLong, i.toLong * 1000L)).toDF("k", "ts")
+        .coalesce(1).sortWithinPartitions("ts"), root)
+  }
 
   test("the tick compacts only the fragmented component and leaves settled history alone") {
     val root = s"${tempCorpusDir("graft_maint")}/log"
     // Settled history: one already-compact file over [2M, 3M).
     seg(root, 2000, 3000)
-    val historyFile = spark.read.parquet(root).inputFiles.head
+    val historyFile = ManifestLog.read(spark, root).inputFiles.head
     // A hot ingest range: 5 overlapping segments over [0, 1M).
     (0 until 5).foreach(_ => seg(root, 0, 1000))
-    val compacted = Segments.maintainSorted(spark, root, "ts", maxFiles = 3)
+    val compacted = ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 3)
     // Exactly one grain compacted, spanning the hot component only.
     assert(compacted == Seq(("", 0L, 999001L)),
       s"unexpected grains: $compacted")
-    val files = spark.read.parquet(root).inputFiles
+    val files = ManifestLog.read(spark, root).inputFiles
     assert(files.length == 2, s"expected hot-grain file + history file: ${files.toSeq}")
     assert(files.contains(historyFile),
       "the tick rewrote an already-compact history grain")
     // Row fidelity: 5× the hot rows plus history.
-    assert(spark.read.parquet(root).count() == 5 * 1000 + 1000)
+    assert(ManifestLog.read(spark, root).count() == 5 * 1000 + 1000)
     // A second tick finds nothing over the bound.
-    assert(Segments.maintainSorted(spark, root, "ts", maxFiles = 3).isEmpty)
+    assert(ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 3).isEmpty)
   }
 
   test("overlap chaining merges transitive segments into one grain") {
@@ -45,10 +47,10 @@ class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
     Seq((0, 500), (400, 900), (800, 1300), (1200, 1700)).foreach {
       case (lo, hi) => seg(root, lo, hi)
     }
-    val compacted = Segments.maintainSorted(spark, root, "ts", maxFiles = 3)
+    val compacted = ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 3)
     assert(compacted == Seq(("", 0L, 1699001L)), s"got: $compacted")
-    assert(spark.read.parquet(root).inputFiles.length == 1)
-    assert(spark.read.parquet(root).count() == 500 + 500 + 500 + 500)
+    assert(ManifestLog.read(spark, root).inputFiles.length == 1)
+    assert(ManifestLog.read(spark, root).count() == 500 + 500 + 500 + 500)
   }
 
   test("the tick composes with a manifested partitioned root, per partition directory") {
@@ -59,8 +61,8 @@ class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
         .repartition(1).sortWithinPartitions("ts")
     psegDf(0, 500).write.partitionBy("year").parquet(root)
     ManifestLog.adopt(spark, root)
-    (0 until 4).foreach(_ => Segments.appendSorted(psegDf(0, 500), root, Seq("year")))
-    val compacted = Segments.maintainSorted(spark, root, "ts", maxFiles = 3)
+    (0 until 4).foreach(_ => ManifestLog.appendSorted(psegDf(0, 500), root, Seq("year")))
+    val compacted = ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 3)
     assert(compacted.map(_._1).sorted == Seq("year=1990", "year=1991"),
       s"expected one grain per year dir: $compacted")
     val live = ManifestLog.read(spark, root)
@@ -68,22 +70,25 @@ class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(live.count() == 5 * 500)
     // Pre-tick generation still readable (retire-don't-delete).
     assert(ManifestLog.readAt(spark, root, 2L).count() == 2 * 500)
-    assert(Segments.maintainSorted(spark, root, "ts", maxFiles = 3).isEmpty)
+    assert(ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 3).isEmpty)
   }
 
   test("bucketed tick compacts exactly the over-fragmented buckets") {
     val t = s"graft_maint_bkt_${System.nanoTime()}"
     val df = (0 until 400).map(i => (i.toLong, i.toString)).toDF("k", "v")
-    // Four appends leave every bucket at the bound; the fifth tips
-    // both over it.
-    (0 until 4).foreach(_ => Segments.appendBucketed(df, t, "k", 2))
-    assert(Segments.maintainBucketed(spark, t, "k", maxFiles = 4).isEmpty,
+    // Four segments (the one-shot build, adopted, plus three appends)
+    // leave every bucket at the bound; the fifth tips both over it.
+    df.repartition(2, col("k")).write
+      .option("path", s"${tempCorpusDir("graft_maint_bkt")}/t")
+      .bucketBy(2, "k").sortBy("k").saveAsTable(t)
+    val root = BucketedManifest.adoptTable(spark, t)
+    (0 until 3).foreach(_ => BucketedManifest.appendBucketed(df, root))
+    assert(BucketedManifest.maintain(spark, root, maxFiles = 4).isEmpty,
       "4 files per bucket is within the bound")
-    Segments.appendBucketed(df, t, "k", 2)
-    val targets = Segments.maintainBucketed(spark, t, "k", maxFiles = 4)
+    BucketedManifest.appendBucketed(df, root)
+    val targets = BucketedManifest.maintain(spark, root, maxFiles = 4)
     assert(targets == Seq(0, 1), s"expected both buckets compacted: $targets")
-    assert(spark.table(t).count() == 5 * 400)
-    // Co-location survives the tick: zero-exchange keyed count.
-    assert(Segments.maintainBucketed(spark, t, "k", maxFiles = 4).isEmpty)
+    assert(BucketedManifest.read(spark, root).count() == 5 * 400)
+    assert(BucketedManifest.maintain(spark, root, maxFiles = 4).isEmpty)
   }
 }

@@ -36,6 +36,7 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
           timestamp_micros(col("us")).cast("timestamp_ntz"))
         .drop("us")
       val root = s"${tempCorpusDir(s"graft_segfuzz$trial")}/log"
+      ManifestLog.create(spark, root)
       // Random number of batches with random (possibly empty) spans,
       // split on orderkey so date ranges overlap across segments.
       val nBatches = 2 + rng.nextInt(4)
@@ -45,7 +46,7 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
           spark, root,
           li.filter(col("l_orderkey") >= lo && col("l_orderkey") < hi))
       }
-      val log = spark.read.parquet(root)
+      val log = ManifestLog.read(spark, root)
       def canon(df: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Long])] =
         df.select("l_orderkey", "l_shipdate_us").as[(Long, Option[Long])]
           .collect().toSeq.sorted
@@ -60,8 +61,8 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
       // A random grain compaction never changes any answer.
       val glo = baseUs + rng.nextInt(n / 2) * 1000000L
       val ghi = glo + (1 + rng.nextInt(n)) * 1000000L
-      Segments.compactSortedRange(spark, root, "l_shipdate_us", glo, ghi)
-      val compacted = spark.read.parquet(root)
+      ManifestLog.compactRange(spark, root, "", "l_shipdate_us", glo, ghi)
+      val compacted = ManifestLog.read(spark, root)
       assert(canon(compacted) == expectAll, s"trial $trial: compaction altered the multiset")
       assert(canon(compacted.filter(
         col("l_shipdate_us") >= cutoff || col("l_shipdate_us").isNull)) == expectSince,
@@ -76,24 +77,29 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
         .toDF("l_orderkey", "l_quantity")
       val orders = (0 until n / 2).map(i => (i.toLong, s"p${i % 5}"))
         .toDF("o_orderkey", "o_flag")
-      val tag = s"${System.nanoTime()}_$trial"
-      val (liT, ordT) = (s"graft_fuzz_li_$tag", s"graft_fuzz_ord_$tag")
       // Random batch count; batches may be empty (an ingest tick with
-      // no matching rows must be harmless).
+      // no matching rows must be harmless). Batch 0 is the one-shot
+      // bucketed build the layout adopts; the rest append as segments.
       val nBatches = 1 + rng.nextInt(4)
-      (0 until nBatches).foreach { b =>
-        Segments.appendBucketed(
-          li.filter(col("l_orderkey") % nBatches === b), liT, "l_orderkey", 8)
-        Segments.appendBucketed(
-          orders.filter(col("o_orderkey") % nBatches === b), ordT, "o_orderkey", 8)
+      def layout(df: org.apache.spark.sql.DataFrame, key: String, name: String): String = {
+        val t = s"graft_fuzz_${name}_${System.nanoTime()}_$trial"
+        df.filter(col(key) % nBatches === 0).repartition(8, col(key)).write
+          .option("path", s"${tempCorpusDir(s"graft_fuzz_$name$trial")}/t")
+          .bucketBy(8, key).sortBy(key).saveAsTable(t)
+        val root = BucketedManifest.adoptTable(spark, t)
+        (1 until nBatches).foreach(b =>
+          BucketedManifest.appendBucketed(df.filter(col(key) % nBatches === b), root))
+        root
       }
+      val (liRoot, ordRoot) = (layout(li, "l_orderkey", "li"), layout(orders, "o_orderkey", "ord"))
       // Empty-batch append: no-op on content, still valid.
-      Segments.appendBucketed(li.filter(lit(false)), liT, "l_orderkey", 8)
-      val bl = spark.table(liT)
+      BucketedManifest.appendBucketed(li.filter(lit(false)), liRoot)
+      val bl = BucketedManifest.read(spark, liRoot)
       assert(bl.count() == n, s"trial $trial: bucket append lost rows")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
-        val j = bl.join(spark.table(ordT), col("l_orderkey") === col("o_orderkey"))
+        val j = bl.join(BucketedManifest.read(spark, ordRoot),
+          col("l_orderkey") === col("o_orderkey"))
         assert(!j.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
           s"trial $trial: co-location broken")
         assert(j.count() ==
