@@ -61,14 +61,8 @@ object PlanAudit {
       // 2× allowance retired in r18: the pq-codes artifact stores the
       // cell id — FAISS's inverted-list layout — so the corpus-side
       // assignment scan is gone and only the query side reads it.)
-      "q71_embedding_neardup" -> 2,
       "q88_knn_ivf_multiprobe" -> 2, "q89_embedding_dedup_materialize" -> 3,
-      "q131_hard_negatives" -> 2,
-      "q132_label_noise_knn" -> 2) ++
-      fam("ivf-cell-sizes",
-        "hot-cell sub-bucketing: one occupancy read per cellPairs side")(
-        "q71_embedding_neardup" -> 2, "q89_embedding_dedup_materialize" -> 2,
-        "q131_hard_negatives" -> 2, "q132_label_noise_knn" -> 2) ++
+      "q131_hard_negatives" -> 2) ++
       // Designed dup-of-2 pins, BELOW the gate: exact-Jaccard
       // verification joins the forward doc-shingle-sets artifact once
       // per candidate side (d1/d2). These entries record design
@@ -77,10 +71,7 @@ object PlanAudit {
       // violation.
       fam("doc-shingle-sets-k3",
         "exact-Jaccard verification: one forward doc-set join per pair side")(
-        "q65_minhash_lsh" -> 2, "q92_incremental_neardup" -> 2) ++
-      fam("doc-shingle-sets-k4",
-        "exact-Jaccard verification: one forward doc-set join per pair side")(
-        "q67_ngram_jaccard" -> 2) ++
+        "q92_incremental_neardup" -> 2) ++
       fam("simhash-sigs-60",
         "band-bucket roles over the compact signature artifact")(
         "q80_simhash_neardup" -> 4) ++
@@ -92,31 +83,15 @@ object PlanAudit {
       fam("term-stats",
         "rank + count roles over the vocabulary-sized stats artifact")(
         "q108_unigram_rarity" -> 2) ++
-      // q101's dup of 2 is TwoPhaseRank's decomposition price: the
-      // offset branch (per-slice counts) re-consumes the range
-      // exchange, and AQE cannot reuse that exchange because the
-      // slice id is spark_partition_id() — nondeterministic, so the
-      // two subtrees never canonicalize equal. Two corpus scans
-      // replace the single-task global window a naive per-source
-      // percent_rank would plan; at 100 TB the second scan is
-      // embarrassingly parallel where the single task is a stall.
-      fam("documents",
-        "TwoPhaseRank offset branch: slice counts re-read the corpus " +
-          "(nondeterministic slice id blocks exchange reuse)")(
-        "q101_adaptive_quality_gate" -> 2) ++
       // (r11: q143's documents×4 allowance is gone — the corpus count
       // is a plan-time footer-metadata scalar now, so the plan holds
       // ONE doc_id-only documents scan.)
       fam("lineitem",
         "multi-distinct as k narrow single-column scans, no Expand")(
         "q35_distinct_agg" -> 3, "q35b_approx_distinct" -> 3) ++
-      fam("customer", "three set-op branches over narrow key columns")(
-        "q36_setops" -> 3) ++
-      fam("orders", "three set-op branches over narrow key columns")(
-        "q36_setops" -> 3) ++
-      // r17: the q101 treatment extended to EVERY remaining sub-gate
-      // dup — zero anonymous multi-scans. Each pin records the design
-      // intent so a regression past the gate cites it.
+      // r17: the pin-with-mechanism treatment extended to EVERY
+      // remaining sub-gate dup — zero anonymous multi-scans. Each pin
+      // records the design intent so a regression past the gate cites it.
       fam("events",
         "self-join roles: probe/quote (as-of), touch/conversion, band sides " +
           "of ONE event stream")(
@@ -124,30 +99,14 @@ object PlanAudit {
         "q117_asof_forward" -> 2, "q147_multitouch_attribution" -> 2,
         "q149_scd2_lookup" -> 2) ++
       fam("customer",
-        "scalar average subquery + the main filtered scan (TPC-H Q22); " +
-          "semi and anti branches (q22)")(
-        "q22_join_semi_anti" -> 2, "q126_tpch_q22" -> 2) ++
-      fam("orders",
-        "semi/anti branches (q22), " +
-          "correlated-scalar + outer scan (q43)")(
-        "q22_join_semi_anti" -> 2, "q43_correlated_subquery" -> 2) ++
-      // r22: q33 reads the custkey-bucketed projection (parallel
-      // at-rest scan); TwoPhaseRank's sample + rank passes are the
-      // same two window-vs-window roles over the new source.
-      fam("bkt-orders-by-custkey",
-        "window-vs-window roles of TwoPhaseRank (q33)")(
-        "q33_ranking_functions" -> 2) ++
+        "scalar average subquery + the main filtered scan (TPC-H Q22)")(
+        "q126_tpch_q22" -> 2) ++
+      fam("orders", "correlated-scalar + outer scan (q43)")(
+        "q43_correlated_subquery" -> 2) ++
       fam("nation",
         "the 25-row dim broadcasts twice: supplier-side and customer-side " +
-          "roles of TPC-H Q7/Q8 (and Q11's filter + output roles)")(
-        "q133_tpch_q7" -> 2, "q134_tpch_q8" -> 2, "q139_tpch_q11" -> 2) ++
-      fam("supplier",
-        "nation-filtered supplier list + supplier output columns (Q11)")(
-        "q139_tpch_q11" -> 2) ++
-      fam("part",
-        "the filtered part list broadcasts to BOTH join sides " +
-          "(fact inner join and partsupp semi join) — Q9/Q20's documented shape")(
-        "q140_tpch_q9" -> 2, "q141_tpch_q20" -> 2) ++
+          "roles of TPC-H Q8")(
+        "q134_tpch_q8" -> 2) ++
       fam("bkt-partsupp",
         "per-part values + the global-total scalar over the SMALL at-rest " +
           "grain (Q11's two aggregation passes, documented in the query)")(
@@ -164,8 +123,7 @@ object PlanAudit {
       // side reads the at-rest bench-shingles-k4 artifact — built at
       // ingest, maintained by set insert — so each source scans once.)
       fam("documents",
-        "batch/index, train/bench or score/profile split roles of one corpus")(
-        "q98_sequence_packing" -> 2,
+        "score/profile split roles of one corpus")(
         "q113_model_quality_filter" -> 2) ++
       // (q158's documents×2 retired in r19: both the accounting and
       // leakage branches now derive from ONE (digest, split)-grain
@@ -190,9 +148,6 @@ object PlanAudit {
       fam("minhash-sigs",
         "band-bucket candidate sides over the compact signature artifact")(
         "q65_minhash_lsh" -> 2, "q92_incremental_neardup" -> 2) ++
-      fam("term-frequencies",
-        "document-term + vocabulary roles of the tf snapshot")(
-        "q113_model_quality_filter" -> 2) ++
       fam("bigram-frequencies",
         "bigram + unigram-margin roles of the collocation score")(
         "q135_collocations" -> 2) ++
@@ -209,7 +164,7 @@ object PlanAudit {
     * DISTINCT sources — [[DocumentedReuse]] documents same-source
     * dups, this documents what each single scan IS, so the artifact
     * answers "why is this plan 5 scans wide" without a source dive
-    * (the q101 precedent: pin WITH mechanism). Emitted verbatim as
+    * (the pin-WITH-mechanism convention). Emitted verbatim as
     * `anatomy` in the per-query JSON.
     */
   val ScanAnatomy: Map[String, String] = Map(

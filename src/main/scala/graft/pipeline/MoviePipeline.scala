@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,16 +12,15 @@ import graft.engine.Ops
 import graft.sources.{ParquetWarehouse, Warehouse}
 
 /** The reference pipeline (run_pipeline.py:22-55: ingest → transform →
-  * publish, sequential, fail-fast) re-expressed as lazy DataFrame
-  * stages. Each stage is a pure DataFrame => DataFrame function so the
-  * whole pipeline is ONE Catalyst plan per sink — the reference's
-  * materialize-everything-between-steps pattern (transform.py eagerly
-  * holds every intermediate in RAM) disappears; Spark streams
-  * partition-wise and the shared prefix of the three sinks is planned
-  * once per sink without driver-side materialization. Row counts for the
-  * reference's accounting logs come from the write pass itself (an
-  * [[Observation]] on each written frame), never from re-reading a
-  * table.
+  * publish, sequential, fail-fast) re-expressed as DataFrame stages.
+  * Each stage is a pure DataFrame => DataFrame function. The raw table
+  * is read and cleaned once per run: the cleaned projection the three
+  * production tables read is persisted (Spark's in-memory columnar
+  * cache, spilling to disk), the three tables are derived from it and
+  * written concurrently, and publish streams those same frames instead
+  * of reading the tables back. Row counts for the reference's
+  * accounting logs come from the write pass itself (an [[Observation]]
+  * on each written frame), never from re-reading a table.
   */
 object MoviePipeline {
 
@@ -34,7 +36,10 @@ object MoviePipeline {
     "imdb_rating", "popularity",
   )
 
-  /** movie_facts projection (transform.py:107-113) — 17 columns. */
+  /** movie_facts projection (transform.py:107-113) — 17 columns. They
+    * are also every column the other two production tables read, so
+    * this is the projection of the cleaned frame the pipeline persists.
+    */
   val movieFactsCols: Seq[String] = Seq(
     "movie_fact_id", "title", "original_title", "release_date",
     "release_year", "status", "original_language", "revenue", "budget",
@@ -160,57 +165,79 @@ object MoviePipeline {
       )
       .orderBy(desc("average_revenue"), asc("genre_name"))
 
+  /** The at-rest layout of the parquet production tables. Facts are
+    * partitioned by year (SURVEY §4): per-year queries (Q3 "movies per
+    * year" and every dashboard date filter) prune to one directory
+    * instead of scanning the table.
+    */
+  private def parquetWarehouse(outDir: String): Warehouse =
+    new ParquetWarehouse(outDir, Map("movie_facts" -> "release_year"))
+
   /** Transform (EP3): raw table → the three production tables, full
     * replace (D2 semantics). Returns the (facts, genreFact, genreAvg) rows
     * written, for the reference's row-accounting logs (A2).
     */
   def transform(spark: SparkSession, rawTablePath: String, outDir: String): (Long, Long, Long) =
-    transform(
-      spark, clean(spark.read.parquet(rawTablePath)),
-      // Facts partitioned by year at rest (SURVEY §4): per-year queries
-      // (Q3 "movies per year" and every dashboard date filter) prune to
-      // one directory instead of scanning the table.
-      new ParquetWarehouse(outDir, Map("movie_facts" -> "release_year")),
-    )
+    produce(clean(spark.read.parquet(rawTablePath)), parquetWarehouse(outDir))((_, _) => ())
 
   /** Warehouse-backed transform: the three production tables land in
     * whichever backend the caller chose (parquet / JDBC / catalog) —
     * the reference's `production` schema boundary (transform.py:61-71).
     */
-  def transform(spark: SparkSession, cleaned: DataFrame, wh: Warehouse): (Long, Long, Long) = {
-    def write(df: DataFrame, table: String) = countedWrite(df)(wh.write(_, table))
-    (
-      write(movieFacts(cleaned), "movie_facts"),
-      write(movieGenreFact(cleaned), "movie_genre_fact"),
-      write(genreAverageRevenue(cleaned), "genre_average_revenue"),
-    )
-  }
+  def transform(spark: SparkSession, cleaned: DataFrame, wh: Warehouse): (Long, Long, Long) =
+    produce(cleaned, wh)((_, _) => ())
 
-  /** Full pipeline (R1): sequential fail-fast — exceptions propagate,
-    * aborting later stages exactly like run_pipeline.py's early returns.
-    * Returns transform's (facts, genreFact, genreAvg) row counts.
+  /** Full pipeline (R1): fail-fast — exceptions propagate, aborting
+    * later stages exactly like run_pipeline.py's early returns; publish
+    * starts only once all three tables are written. Returns transform's
+    * (facts, genreFact, genreAvg) row counts.
     */
   def run(spark: SparkSession, csvPath: String, warehouseDir: String,
           sink: ChunkedSink, rowLimit: Int = Publish.DefaultRowLimit): (Long, Long, Long) = {
-    ingest(spark, csvPath, s"$warehouseDir/raw/tmdb_movies_raw")
-    val counts =
-      transform(spark, s"$warehouseDir/raw/tmdb_movies_raw", s"$warehouseDir/production")
-    Seq("movie_facts", "movie_genre_fact", "genre_average_revenue").foreach { t =>
-      val read = spark.read.parquet(s"$warehouseDir/production/$t")
-      // A partitioned table appends its partition column LAST on read
-      // (movie_facts is partitioned by release_year); restore the
-      // reference's published column order (transform.py:107-113) so
-      // sheet consumers see the same layout.
-      val ordered =
-        if (t == "movie_facts") {
-          val present = read.columns.toSet
-          read.select(movieFactsCols.filter(present).map(col): _*)
-        } else read
-      Publish.publish(
-        ordered, sink, t,
-        limit = if (t == "genre_average_revenue") None else Some(rowLimit),
-      )
+    val rawTablePath = s"$warehouseDir/raw/tmdb_movies_raw"
+    ingest(spark, csvPath, rawTablePath)
+    produce(clean(spark.read.parquet(rawTablePath)), parquetWarehouse(s"$warehouseDir/production")) {
+      (table, df) =>
+        Publish.publish(df, sink, table,
+          limit = if (table == "genre_average_revenue") None else Some(rowLimit))
     }
-    counts
+  }
+
+  /** The one transform path: persists the cleaned projection, writes
+    * the three production tables from it concurrently, then hands each
+    * written frame to `publish` on the calling thread, in table order.
+    * movie_facts is handed over in the reference's column order
+    * (transform.py:107-113), which a partitioned table loses at rest.
+    * The persisted frame is released whether or not anything failed.
+    */
+  private def produce(cleaned: DataFrame, wh: Warehouse)(
+      publish: (String, DataFrame) => Unit): (Long, Long, Long) = {
+    val shared = cleaned.select(movieFactsCols.filter(cleaned.columns.toSet).map(col): _*).persist()
+    try {
+      val frames = Seq(
+        "movie_facts" -> movieFacts(shared),
+        "movie_genre_fact" -> movieGenreFact(shared),
+        "genre_average_revenue" -> genreAverageRevenue(shared))
+      val Seq(facts, genreFact, genreAvg) = concurrently(frames.map { case (table, df) =>
+        () => countedWrite(df)(wh.write(_, table))
+      })
+      frames.foreach(publish.tupled)
+      (facts, genreFact, genreAvg)
+    } finally shared.unpersist()
+  }
+
+  /** Runs every task on its own thread and waits for all of them, then
+    * returns their results or rethrows the first failure in task order.
+    * The pool is created here, on the calling thread, so its threads
+    * inherit the caller's Spark local properties.
+    */
+  private def concurrently[T](tasks: Seq[() => T]): Seq[T] = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try {
+      val futures = tasks.map(task => pool.submit(new Callable[T] { def call(): T = task() }))
+      futures.map { f =>
+        Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+      }.map(_.get)
+    } finally pool.shutdown()
   }
 }

@@ -14,10 +14,11 @@ import graft.engine.Ops
   *
   * Scale posture: the reference row-caps "large" tables at 50k
   * (publish.py:17,124-126) — an explicit bounded-collect contract. We
-  * keep that: the cap is applied IN the plan (limit pushes into the
-  * scan), and only the capped result streams through the driver via
-  * toLocalIterator (one partition in memory at a time, never the whole
-  * frame).
+  * keep that: the cap is applied IN the plan, over the frame the
+  * pipeline persisted for its writes (each partition of it stops after
+  * the cap, and nothing is read back from the warehouse), and only the
+  * capped result streams through the driver via toLocalIterator (one
+  * partition in memory at a time, never the whole frame).
   */
 trait ChunkedSink {
   /** Create the destination table if it doesn't exist (publish.py:64-68:

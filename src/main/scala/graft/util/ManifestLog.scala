@@ -1541,8 +1541,7 @@ object ManifestLog {
         col(boundCol).isNull || col(boundCol) < loIncl || col(boundCol) >= hiExcl,
         lit(1))).as("strays")).head()
     require(checks.getLong(0) > 0,
-      "restatement batch is empty — a whole-grain delete is not expressible " +
-        "as a restatement (the staged recovery could not tell it from a torn swap)")
+      "restatement batch is empty — a whole-grain delete is not a restatement")
     require(checks.getLong(1) == 0,
       s"${checks.getLong(1)} replacement row(s) fall outside the grain " +
         s"[$loIncl, $hiExcl) — a restatement replaces exactly its own grain")

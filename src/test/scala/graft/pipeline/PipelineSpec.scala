@@ -1,7 +1,22 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
+import graft.sources.{ParquetWarehouse, Warehouse}
 
 /** Pipeline smoke test on a movie-shaped fixture (SURVEY.md §5.4):
   * mirrors the reference's row-count accounting (transform.py:116-121)
@@ -161,5 +176,146 @@ class PipelineSpec extends SparkTestBase {
     val sink = new CsvFileSink(dir)
     assert(Publish.publish(empty, sink, "t") == 0)
     assert(!new java.io.File(dir, "t.csv").exists())
+  }
+
+  /** Keeps every row it is handed, per table, header first. */
+  private final class MemorySink extends ChunkedSink {
+    val tables = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Seq[Any]]]
+    override def clear(table: String): Unit = tables(table) = mutable.ArrayBuffer.empty
+    override def appendHeader(table: String, columns: Seq[String]): Unit =
+      tables(table) += columns
+    override def appendChunk(table: String, rows: Seq[Seq[Any]]): Unit =
+      tables(table) ++= rows
+  }
+
+  /** The query executions `body` runs, as the session's listeners see
+    * them. Listener events arrive asynchronously, so a marker query runs
+    * last and the collection waits until the listener has seen it.
+    */
+  private def executionsOf(body: => Unit): Seq[QueryExecution] = {
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe)
+    }
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == "executions_marker")
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("executions_marker").collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(isMarker), "the query listener never saw the marker query")
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.filterNot(isMarker).toSeq
+  }
+
+  /** Every node of an executed plan, through adaptive plans and query
+    * stages; a cached relation's own plan is not entered. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other.children.flatMap(nodes)
+  })
+
+  private def scanRoots(p: SparkPlan): Seq[String] = nodes(p).collect {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+  }.flatten
+
+  private def cachedScans(p: SparkPlan): Seq[InMemoryTableScanExec] =
+    nodes(p).collect { case s: InMemoryTableScanExec => s }
+
+  test("run reads no table back and cleans the raw table once, through one persisted relation") {
+    val dir = Files.createTempDirectory("graft_run_plans").toString
+    val csvPath = writeFixtureCsv(dir)
+    val wh = s"$dir/wh"
+    val sink = new MemorySink
+    val plans = executionsOf(MoviePipeline.run(spark, csvPath, wh, sink)).map(_.executedPlan)
+
+    // Everything any plan scans, including the plans of cached relations.
+    val allRoots = plans.flatMap(p =>
+      scanRoots(p) ++ cachedScans(p).flatMap(s => scanRoots(s.relation.cacheBuilder.cachedPlan)))
+    assert(!allRoots.exists(_.contains("/production")), allRoots)
+
+    val writes = plans.flatMap(p => nodes(p).collectFirst {
+      case DataWritingCommandExec(i: InsertIntoHadoopFsRelationCommand, _)
+          if i.outputPath.toString.contains("/production/") => p
+    })
+    assert(writes.size == 3, plans.map(_.getClass.getSimpleName))
+    // No write scans a file itself: each reads the one persisted relation,
+    // and that relation's plan is the only scan of the raw table.
+    writes.foreach(w => assert(scanRoots(w).isEmpty, w))
+    val builders = writes.flatMap(cachedScans).map(_.relation.cacheBuilder).distinct
+    assert(builders.size == 1, builders)
+    writes.foreach(w => assert(cachedScans(w).nonEmpty, w))
+    val rawRoots = scanRoots(builders.head.cachedPlan)
+    assert(rawRoots.size == 1 && rawRoots.head.endsWith("/raw/tmdb_movies_raw"), rawRoots)
+    assert(!plans.flatMap(scanRoots).exists(_.endsWith("/raw/tmdb_movies_raw")),
+      "a plan scans the raw table outside the persisted relation")
+
+    // What was published is what is at rest.
+    def strings(row: Seq[Any]): Seq[String] = row.map(v => if (v == null) null else v.toString)
+    def atRest(t: String, header: Seq[Any]): Seq[Seq[String]] =
+      spark.read.parquet(s"$wh/production/$t").select(strings(header).map(col): _*)
+        .collect().map(r => strings(r.toSeq)).toSeq
+    val facts = sink.tables("movie_facts")
+    assert(facts.tail.size == 4)
+    assert(facts.tail.map(strings).toSet == atRest("movie_facts", facts.head).toSet)
+    val avg = sink.tables("genre_average_revenue")
+    assert(avg.tail.map(strings) == atRest("genre_average_revenue", avg.head))
+  }
+
+  test("a failing sink propagates out of run and leaves nothing persisted") {
+    val dir = Files.createTempDirectory("graft_run_sink_fails").toString
+    val csvPath = writeFixtureCsv(dir)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var persistedDuringPublish = Set.empty[Int]
+    val sink = new ChunkedSink {
+      override def clear(table: String): Unit = ()
+      override def appendHeader(table: String, columns: Seq[String]): Unit = ()
+      override def appendChunk(table: String, rows: Seq[Seq[Any]]): Unit = {
+        persistedDuringPublish = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        throw new IllegalStateException("sink unavailable")
+      }
+    }
+    val e = intercept[IllegalStateException](
+      MoviePipeline.run(spark, csvPath, s"$dir/wh", sink))
+    assert(e.getMessage == "sink unavailable")
+    assert((persistedDuringPublish -- before).nonEmpty, "nothing was persisted during publish")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
+  test("a failed table write surfaces only after the other two writes finish") {
+    val dir = Files.createTempDirectory("graft_transform_write_fails").toString
+    val csvPath = writeFixtureCsv(dir)
+    MoviePipeline.ingest(spark, csvPath, s"$dir/raw")
+    val finished = new ConcurrentLinkedQueue[String]()
+    val parquet = new ParquetWarehouse(s"$dir/production")
+    val wh = new Warehouse {
+      override def read(spark: SparkSession, table: String): DataFrame = parquet.read(spark, table)
+      override def write(df: DataFrame, table: String): Unit = table match {
+        case "movie_genre_fact" => throw new IllegalStateException("write refused")
+        case "genre_average_revenue" =>
+          // Ends well after both other writes have settled, so returning
+          // on the failure, or once movie_facts is done, leaves it running.
+          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+          while (!finished.contains("movie_facts") && System.nanoTime() < deadline)
+            Thread.sleep(20)
+          Thread.sleep(500)
+          parquet.write(df, table)
+          finished.add(table)
+        case _ =>
+          parquet.write(df, table)
+          finished.add(table)
+      }
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[IllegalStateException](
+      MoviePipeline.transform(spark, MoviePipeline.clean(spark.read.parquet(s"$dir/raw")), wh))
+    assert(e.getMessage == "write refused")
+    assert(finished.asScala.toSet == Set("movie_facts", "genre_average_revenue"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 }

@@ -37,6 +37,18 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.select("k", "ts").as[(Long, Long)].collect().toSeq.sorted
 
+  /** Every file under `root`, recursively, with its size. */
+  private def filesUnder(root: String): Seq[(String, Long)] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = java.nio.file.Files.walk(base)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => (base.relativize(f).toString, java.nio.file.Files.size(f)))
+        .toSeq.sorted
+    } finally walk.close()
+  }
+
   test("adopt + append: reader pinned before the append never sees the batch; the next read does") {
     val (root, rows) = freshLog()
     val pinned = ManifestLog.read(spark, root) // resolves v1's file list now
@@ -84,6 +96,19 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       "the pre-correction state must stay readable for audit")
   }
 
+  test("an empty restatement batch is refused before anything is written") {
+    val (root, rows) = freshLog()
+    val before = filesUnder(root)
+    val v = ManifestLog.currentVersion(spark, root)
+    val e = intercept[IllegalArgumentException](
+      ManifestLog.restateRange(spark, root, "", "ts", 1000000L, 2000000L,
+        Seq.empty[(Long, Long)].toDF("k", "ts")))
+    assert(e.getMessage.contains("a whole-grain delete is not a restatement"), e.getMessage)
+    assert(filesUnder(root) == before, "a refused restatement wrote into the log")
+    assert(ManifestLog.currentVersion(spark, root) == v)
+    assert(canon(ManifestLog.read(spark, root)) == rows.sorted)
+  }
+
   test("every crash window leaves the current generation untouched; vacuum removes the orphans") {
     val compact = (root: String) =>
       ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)
@@ -124,16 +149,7 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       rows.toDF("k", "ts").filter(col("ts") >= lo && col("ts") < hi)
         .coalesce(1).sortWithinPartitions("ts").write.mode("append").parquet(root)
     }
-    val base = java.nio.file.Paths.get(root)
-    def listing(): Seq[(String, Long)] = {
-      val walk = java.nio.file.Files.walk(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-          .map(f => (base.relativize(f).toString, java.nio.file.Files.size(f)))
-          .toSeq.sorted
-      } finally walk.close()
-    }
+    def listing(): Seq[(String, Long)] = filesUnder(root)
     val before = listing()
     assert(before.count(_._1.endsWith(".parquet")) == 2)
     val batch = (2000 until 2500).map(i => (i.toLong, i.toLong * 1000L)).toDF("k", "ts")
