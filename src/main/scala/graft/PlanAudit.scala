@@ -182,6 +182,32 @@ object PlanAudit {
       "tiny scan for a same-source dup, not a narrower plan."),
   )
 
+  // Raw corpus tables live at .../<name>.parquet; engine-owned at-rest
+  // artifacts at .../graft-snap-<dirkey>-<fingerprint>-<name>. Both
+  // count: re-scanning a 100 TB artifact is as expensive as
+  // re-scanning the table it derives from. The sorted logs fold the
+  // session's partition count into their physical names (a layout
+  // property); the trailing -n<N> is stripped so gate identity and
+  // DocumentedReuse allowances stay stable across configs.
+  private val tableRe = "file:[^\\]\\,]*/([A-Za-z0-9_.-]+)\\.parquet".r
+  private val snapRe = "graft-snap-[0-9a-f]{12}-[0-9a-f]{12}-((?:bkt-)?[A-Za-z0-9_.-]+)".r
+
+  /** The source a scan path names. */
+  def sourceName(path: String): Option[String] =
+    snapRe.findFirstMatchIn(path).map(_.group(1))
+      .orElse(tableRe.findFirstMatchIn(path).map(_.group(1)))
+      .map(_.replaceAll("-n\\d+$", ""))
+
+  /** The source of every parquet scan among `nodes`, named from the
+    * scan relation's first root path — never from the node's one-line
+    * string, which Spark cuts at `spark.sql.maxMetadataStringLength`,
+    * so the names would depend on the length of `java.io.tmpdir`.
+    */
+  def scanSources(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]): Seq[String] =
+    nodes.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+      f.relation.location.rootPaths.headOption.flatMap(r => sourceName(r.toString))
+    }.flatten
+
   private final case class Audit(
       scans: Int, exchanges: Int, reused: Int,
       dup: Map[String, Int], err: Option[String])
@@ -194,45 +220,19 @@ object PlanAudit {
     val spark = graft.util.Tables.localSession("4")
     spark.sparkContext.setLogLevel("ERROR")
 
-    // Raw corpus tables print as .../<name>.parquet; engine-owned
-    // at-rest artifacts as .../graft-snap-<dirkey>-<fingerprint>-<name>
-    // (and bucketed ones via their catalog table location). Both count:
-    // re-scanning a 100 TB artifact is as expensive as re-scanning the
-    // table it derives from. The sorted logs fold the session's
-    // partition count into their physical names (a layout property);
-    // the trailing -n<N> is stripped here so gate identity and
-    // DocumentedReuse allowances stay stable across configs.
-    val tableRe = "file:[^\\]\\,]*/([A-Za-z0-9_.-]+)\\.parquet".r
-    val snapRe = "graft-snap-[0-9a-f]{12}-[0-9a-f]{12}-((?:bkt-)?[A-Za-z0-9_.-]+)".r
-    def sourcesOf(line: String): Option[String] =
-      snapRe.findFirstMatchIn(line).map(_.group(1))
-        .orElse(tableRe.findFirstMatchIn(line).map(_.group(1)))
-        .map(_.replaceAll("-n\\d+$", ""))
-
     val audits = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val a =
         try {
           val df = fn(spark, sfDir)
-          // exec: one line per node of the final adaptive plan.
-          val p =
-            if (exec) graft.util.PlanFiles.finalNodes(
-                graft.util.PlanFiles.executeFinal(df).executedPlan)
-              .map(_.simpleString(spark.sessionState.conf.maxToStringFields))
-              .mkString("\n")
-            else df.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-          val lines = p.linesIterator.toSeq
-          def nodes(s: String) =
-            if (exec) lines.count(_.contains(s))
-            else lines.count(l => l.trim.startsWith("(") && l.contains(s))
-          // exec mode: the one-line FileScan nodes carry their paths.
-          // plan (formatted) mode: paths live on the separate
-          // "Location:" detail lines — counting "Scan parquet" lines
-          // there would always yield an EMPTY dup map and a vacuously
-          // green gate.
-          val perTable = lines
-            .filter(l => if (exec) l.contains("Scan parquet") else l.contains("Location"))
-            .flatMap(sourcesOf)
+          // One line per plan node: exec walks the final adaptive plan
+          // (the query runs), plan mode the initial one (nothing runs).
+          val planNodes = graft.util.PlanFiles.finalNodes(
+            if (exec) graft.util.PlanFiles.executeFinal(df).executedPlan
+            else df.queryExecution.executedPlan)
+          val lines = planNodes
+            .flatMap(_.simpleString(spark.sessionState.conf.maxToStringFields).linesIterator)
+          def nodes(s: String) = lines.count(_.contains(s))
+          val perTable = scanSources(planNodes)
             .groupBy(identity).view.mapValues(_.size)
             .filter(_._2 >= 2).toMap
           Audit(

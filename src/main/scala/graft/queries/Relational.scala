@@ -463,7 +463,8 @@ object Relational {
   }
 
   /** MANIFESTED bucketed lineitem for the co-location pair, built as
-    * time-batched appends: one staged-catalog bootstrap (empty), then
+    * time-batched appends: one empty bootstrap (the bucket spec and a
+    * fileless v1), then
     * one [[graft.util.BucketedManifest.appendBucketed]] per ship-date
     * year — the incremental-ingest geometry a 100 TB fact actually
     * has, leaving each bucket with per-YEAR files whose declared
@@ -498,16 +499,11 @@ object Relational {
       out => scala.util.Try(
         graft.util.ManifestLog.batchHwm(s, out) == PairLayoutComplete)
         .getOrElse(false)
-    ) { out =>
+    ) { root =>
       val cols = Seq("l_orderkey", "l_extendedprice", "l_discount",
         "l_returnflag", "l_shipdate")
       val li = tbl(s, dir, "lineitem").select(cols.map(col): _*)
-      val t = s"graft_liokpair_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-      li.limit(0).repartition(OrderkeyBuckets, col("l_orderkey"))
-        .write.mode("overwrite").option("path", out)
-        .bucketBy(OrderkeyBuckets, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(t)
-      val root = graft.util.BucketedManifest.adoptTable(s, t)
+      graft.util.BucketedManifest.create(s, root, li.schema, Seq("l_orderkey"), OrderkeyBuckets)
       graft.util.BucketedManifest.declareStats(s, root, Seq("l_shipdate"))
       // Iterate the DISTINCT ship years actually present, not the
       // contiguous min..max range (r17 advice): one outlier/sentinel

@@ -27,9 +27,9 @@ import org.apache.spark.sql.types.StructType
   * maintenance retires-never-deletes, vacuum is the only deleter:
   * the full [[ManifestLog]] contract, now for bucket grains.
   *
-  * The bucket spec (key, count) is recorded next to the manifests at
-  * adoption and validated on every append, so a mismatched segment
-  * fails loudly before any write.
+  * The bucket spec (keys, count) is recorded next to the manifests at
+  * creation or adoption and validated on every append, so a
+  * mismatched segment fails loudly before any write.
   *
   * Scale shape: K appends leave K files per bucket, [[maintain]]
   * compacts per bucket grain, and a join on the bucket key never
@@ -39,13 +39,14 @@ import org.apache.spark.sql.types.StructType
   */
 object BucketedManifest {
 
-  /** The layout's recorded bucket spec. `keyType` (the key column's
-    * Catalyst type, recorded at adoption) lets [[deleteKeys]] hash
-    * tombstones with the exact bucketing type without opening any
-    * data file; spec files written before the field read as None and
-    * fall back to one footer read.
+  /** The layout's recorded bucket spec: the full bucketing key list
+    * (a composite grain plans with its full `BucketSpec`) and the
+    * bucket count. `keyType` (a single key column's Catalyst type)
+    * lets [[deleteKeys]] hash tombstones with the exact bucketing type
+    * without opening any data file; spec files written before the
+    * field read as None and fall back to one footer read.
     */
-  final case class Spec(key: String, buckets: Int,
+  final case class Spec(keys: Seq[String], buckets: Int,
       keyType: Option[org.apache.spark.sql.types.DataType] = None)
 
   private val SpecFile = "bucket-spec"
@@ -86,9 +87,49 @@ object BucketedManifest {
     ManifestLog.adopt(spark, root)
     val key = bs.bucketColumnNames.head
     writeSpec(spark, root,
-      Spec(key, bs.numBuckets, Some(meta.schema(key).dataType)))
+      Spec(Seq(key), bs.numBuckets, Some(meta.schema(key).dataType)))
     spark.sql(s"DROP TABLE `$table`")
     root
+  }
+
+  /** Bootstrap an EMPTY bucketed layout at `root`: record its spec,
+    * then [[ManifestLog.create]]'s fileless v1 — the anchor a layout
+    * built by appends commits onto.
+    */
+  def create(spark: SparkSession, root: String, schema: StructType,
+      keys: Seq[String], buckets: Int): Unit = {
+    recordSpec(spark, root, schema, keys, buckets)
+    ManifestLog.create(spark, root)
+  }
+
+  /** Build a bucketed layout at `root` in ONE commit: record its spec,
+    * stage one file per non-empty bucket, and commit exactly those
+    * files as generation 1 ([[ManifestLog.commitStaged]]: a builder
+    * that loses the v1 race drops its staged files and the winner's
+    * generation stands). An empty `df` stages one schema-only file in
+    * bucket 0, so the generation still reads back with the build's
+    * schema.
+    */
+  def build(df: DataFrame, root: String, keys: Seq[String], buckets: Int): Unit = {
+    val spark = df.sparkSession
+    val (p, fs) = ManifestLog.hadoop(spark, root)
+    val s = recordSpec(spark, root, df.schema, keys, buckets)
+    val staged = stageBucketed(spark, p, fs, df, s) match {
+      case Nil => stageBucketFile(spark, p, fs, df.limit(0), 0, keepEmpty = true).toSeq
+      case files => files
+    }
+    ManifestLog.commitStaged(fs, p, 1L, staged,
+      ManifestLog.entriesFor(spark, p, staged, Nil))
+  }
+
+  private def recordSpec(spark: SparkSession, root: String, schema: StructType,
+      keys: Seq[String], buckets: Int): Spec = {
+    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
+      s"bucket keys $keys must be columns of ${schema.fieldNames.mkString(",")}")
+    val s = Spec(keys, buckets,
+      if (keys.length == 1) Some(schema(keys.head).dataType) else None)
+    writeSpec(spark, root, s)
+    s
   }
 
   /** The layout's recorded bucket spec. */
@@ -99,19 +140,39 @@ object BucketedManifest {
     val line = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().next()
     finally in.close()
     line.split('\t') match {
-      case Array(k, n) => Spec(k, n.toInt)
-      case Array(k, n, tj) =>
-        Spec(k, n.toInt, Some(org.apache.spark.sql.types.DataType.fromJson(tj)))
+      case Array(k, n) => Spec(k.split(',').toSeq, n.toInt)
+      case Array(k, n, tj) => Spec(k.split(',').toSeq, n.toInt,
+        Some(org.apache.spark.sql.types.DataType.fromJson(tj)))
       case _ => throw new IllegalStateException(s"unparseable bucket spec at $f")
     }
   }
 
+  /** Written beside the spec file and renamed onto it, so a reader
+    * never sees a partial spec. A spec already recorded (an earlier or
+    * concurrent builder's) is kept and must equal this one. The check
+    * runs before the rename as well as after a refused one, because
+    * some filesystems' rename replaces its destination (POSIX
+    * rename(2), Hadoop's raw local filesystem): there, two builders
+    * that both find no spec both rename, and the later spec stands.
+    */
   private def writeSpec(spark: SparkSession, root: String, s: Spec): Unit = {
     val (p, fs) = ManifestLog.hadoop(spark, root)
-    val out = fs.create(new Path(ManifestLog.manifestDir(p), SpecFile), true)
+    val dir = ManifestLog.manifestDir(p)
+    val dst = new Path(dir, SpecFile)
+    def agree(): Unit = {
+      val recorded = spec(spark, root)
+      require(recorded == s, s"$root already records bucket spec $recorded, not $s")
+    }
+    if (fs.exists(dst)) return agree()
+    val tmp = new Path(dir, s".spec-${java.util.UUID.randomUUID}")
+    val out = fs.create(tmp, true)
     val tail = s.keyType.map(t => s"\t${t.json}").getOrElse("")
-    try out.write(s"${s.key}\t${s.buckets}$tail\n".getBytes("UTF-8"))
+    try out.write(s"${s.keys.mkString(",")}\t${s.buckets}$tail\n".getBytes("UTF-8"))
     finally out.close()
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(tmp, false)
+      agree()
+    }
   }
 
   private val StatColsFile = "stat-cols"
@@ -189,7 +250,7 @@ object BucketedManifest {
     val index = new ManifestFileIndex(p, statused)
     spark.baseRelationToDataFrame(HadoopFsRelation(
       index, StructType(Nil), schema,
-      Some(BucketSpec(s.buckets, Seq(s.key), Seq(s.key))),
+      Some(BucketSpec(s.buckets, s.keys, s.keys)),
       new ParquetFileFormat, options)(spark))
   }
 
@@ -335,8 +396,8 @@ object BucketedManifest {
     val (p, fs) = ManifestLog.hadoop(spark, root)
     ManifestLog.currentVersion(spark, root) // fail fast
     val s = spec(spark, root)
-    require(segment.columns.contains(s.key),
-      s"segment lacks the bucket key '${s.key}' recorded for $root")
+    require(s.keys.forall(segment.columns.contains),
+      s"segment lacks a bucket key of ${s.keys} recorded for $root")
     val staged = stageBucketed(spark, p, fs, segment, s)
     ManifestLog.failpoint("written:append-bucketed")
     ManifestLog.commitAppend(fs, p,
@@ -356,11 +417,12 @@ object BucketedManifest {
     val id = java.util.UUID.randomUUID.toString.replace("-", "")
     val stage = new Path(p, s".stage-$id")
     val t = s"graft_bstage_$id"
-    segment.repartition(s.buckets, col(s.key))
+    segment.repartition(s.buckets, s.keys.map(col): _*)
       .write.mode("overwrite")
       .options(ParquetBlooms.writerOptions(fs, p))
       .option("path", stage.toString)
-      .bucketBy(s.buckets, s.key).sortBy(s.key)
+      .bucketBy(s.buckets, s.keys.head, s.keys.tail: _*)
+      .sortBy(s.keys.head, s.keys.tail: _*)
       .saveAsTable(t)
     spark.sql(s"DROP TABLE `$t`") // external: metadata only, files stay
     val out = fs.listStatus(stage).toSeq
@@ -391,8 +453,8 @@ object BucketedManifest {
     val m0 = ManifestLog.readRaw(fs, p, ManifestLog.currentVersion(spark, root))
     if (batchId <= m0.batchHwm) return false
     val s = spec(spark, root)
-    require(segment.columns.contains(s.key),
-      s"segment lacks the bucket key '${s.key}' recorded for $root")
+    require(s.keys.forall(segment.columns.contains),
+      s"segment lacks a bucket key of ${s.keys} recorded for $root")
     val staged = stageBucketed(spark, p, fs, segment, s)
     ManifestLog.failpoint("written:append-bucketed")
     ManifestLog.commitAppend(fs, p,
@@ -416,20 +478,11 @@ object BucketedManifest {
     val m = ManifestLog.readRaw(fs, p, v)
     val grain = m.entries.filter(e => bucketIdOf(e.path).contains(bucketId))
     if (grain.length <= 1) return // already compact
-    val stage = new Path(p, s".stage-${java.util.UUID.randomUUID}")
-    spark.read.parquet(
-        grain.map(e => new Path(p, e.path).toString): _*)
-      .sort(s.key).coalesce(1)
-      .write.mode("overwrite")
-      .options(ParquetBlooms.writerOptions(fs, p))
-      .parquet(stage.toString)
-    val part = fs.listStatus(stage).toSeq
-      .find(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no staged part under $stage"))
-    val rel = bucketNamed(part.getPath.getName, bucketId)
-    if (!fs.rename(part.getPath, new Path(p, rel)))
-      throw new java.io.IOException(s"stage rename failed: ${part.getPath}")
-    fs.delete(stage, true)
+    val rel = stageBucketFile(spark, p, fs,
+      spark.read.parquet(grain.map(e => new Path(p, e.path).toString): _*)
+        .sort(s.keys.map(col): _*),
+      bucketId, keepEmpty = true).getOrElse(
+        throw new IllegalStateException(s"no staged part for bucket $bucketId of $root"))
     ManifestLog.failpoint("written:compact-bucket")
     ManifestLog.commit(fs, p, v + 1,
       m.entries.diff(grain) ++
@@ -456,26 +509,32 @@ object BucketedManifest {
     * Keys are cast to the table's key type BEFORE hashing — a LONG
     * column bucket-hashes its long values, so an INT-typed tombstone
     * feed would otherwise probe the wrong buckets and silently delete
-    * nothing.
+    * nothing. A composite-key layout is refused loudly before anything
+    * is read.
     */
   def deleteKeys(spark: SparkSession, root: String,
       keys: DataFrame): ManifestLog.DeleteResult = {
     import org.apache.spark.sql.functions.{count, hash, input_file_name, lit, pmod}
     val (p, fs) = ManifestLog.hadoop(spark, root)
     val s = spec(spark, root)
+    // A tombstone key set names single-key rows: hash(one column)
+    // cannot find rows a composite key placed.
+    require(s.keys.length == 1,
+      s"$root buckets on ${s.keys} — keyed deletion needs a single-key layout")
+    val key = s.keys.head
     val v = ManifestLog.currentVersion(spark, root)
     val m = ManifestLog.readRaw(fs, p, v)
     require(m.entries.nonEmpty, s"$root lists no live files at v$v")
     val keyType = s.keyType.getOrElse(
       // Legacy spec file without the recorded type: one footer read.
       spark.read.parquet(
-        new Path(p, m.entries.head.path).toString).schema(s.key).dataType)
+        new Path(p, m.entries.head.path).toString).schema(key).dataType)
     val keyCol = keys.columns.headOption.getOrElse(
       throw new IllegalArgumentException("tombstone frame has no columns"))
-    val tomb = keys.select(col(keyCol).cast(keyType).as(s.key))
-      .where(col(s.key).isNotNull).distinct().localCheckpoint()
+    val tomb = keys.select(col(keyCol).cast(keyType).as(key))
+      .where(col(key).isNotNull).distinct().localCheckpoint()
     val candBuckets = tomb
-      .select(pmod(hash(col(s.key)), lit(s.buckets)).as("_gf_b"))
+      .select(pmod(hash(col(key)), lit(s.buckets)).as("_gf_b"))
       .distinct().collect().map(_.getInt(0)).toSet
     val bucketCandidates = m.entries.filter(
       e => bucketIdOf(e.path).exists(candBuckets))
@@ -486,7 +545,7 @@ object BucketedManifest {
     // hold any tombstoned key from their footers, so the find scan
     // reads only the files that may actually rewrite.
     val candidates: Seq[ManifestLog.Entry] =
-      if (!ParquetBlooms.declaredOf(fs, p).exists(_._1 == s.key)) bucketCandidates
+      if (!ParquetBlooms.declaredOf(fs, p).exists(_._1 == key)) bucketCandidates
       else {
         val keyVals = tomb.limit(ParquetBlooms.MaxProbeKeys + 1)
           .collect().map(_.get(0)).toSeq
@@ -494,7 +553,7 @@ object BucketedManifest {
         else {
           val admitted = ParquetBlooms.mayContainAny(spark,
             bucketCandidates.map(e => new Path(p, e.path).toString),
-            s.key, keyVals).toSet
+            key, keyVals).toSet
           bucketCandidates.filter(e => admitted(new Path(p, e.path).toString))
         }
       }
@@ -502,8 +561,8 @@ object BucketedManifest {
     val byName = candidates.map(e => e.path -> e).toMap
     val perFile = spark.read.parquet(
         candidates.map(e => new Path(p, e.path).toString): _*)
-      .select(col(s.key), input_file_name().as("_gf_file"))
-      .join(tomb.withColumn("_gf_hit", lit(1)), Seq(s.key), "left")
+      .select(col(key), input_file_name().as("_gf_file"))
+      .join(tomb.withColumn("_gf_hit", lit(1)), Seq(key), "left")
       .groupBy("_gf_file")
       .agg(count(lit(1)).as("_gf_total"), count(col("_gf_hit")).as("_gf_hits"))
       .where(col("_gf_hits") > 0)
@@ -518,30 +577,14 @@ object BucketedManifest {
     val touched = perFile.map(_._1).toSeq
     val retired = perFile.count { case (_, total, hits) => hits == total }
     val rowsDeleted = perFile.map(_._3).sum
+    // A fully tombstoned grain stages no replacement (keepEmpty =
+    // false): it retires.
     val replacements = touched.groupBy(e => bucketIdOf(e.path).get)
       .toSeq.flatMap { case (b, es) =>
-        val survivors = spark.read.parquet(
-            es.map(e => new Path(p, e.path).toString): _*)
-          .join(tomb, Seq(s.key), "left_anti")
-        val stage = new Path(p, s".stage-${java.util.UUID.randomUUID}")
-        survivors.sort(s.key).coalesce(1)
-          .write.mode("overwrite")
-          .options(ParquetBlooms.writerOptions(fs, p))
-          .parquet(stage.toString)
-        // A schema-only empty part (every row of the grain tombstoned)
-        // does not graduate: the grain retires without replacement.
-        val out = fs.listStatus(stage).toSeq
-          .find(st => st.isFile && st.getPath.getName.startsWith("part-") &&
-            ManifestLog.fileRowCount(st.getPath,
-              spark.sessionState.newHadoopConf()) > 0L)
-          .map { st =>
-            val rel = bucketNamed(st.getPath.getName, b)
-            if (!fs.rename(st.getPath, new Path(p, rel)))
-              throw new java.io.IOException(s"stage rename failed: ${st.getPath}")
-            rel
-          }.toSeq
-        fs.delete(stage, true)
-        out
+        stageBucketFile(spark, p, fs,
+          spark.read.parquet(es.map(e => new Path(p, e.path).toString): _*)
+            .join(tomb, Seq(key), "left_anti").sort(key),
+          b, keepEmpty = false)
       }
     val remaining = m.entries.diff(touched)
     require(remaining.nonEmpty || replacements.nonEmpty,
@@ -568,6 +611,33 @@ object BucketedManifest {
     val targets = counts.filter(_._2 > maxFiles).keys.toSeq.sorted
     targets.foreach(compactBucket(spark, root, _))
     targets
+  }
+
+  /** Stage `df` (already in key order) as ONE file of bucket
+    * `bucketId` under the root, invisible until a manifest lists it:
+    * write it coalesced through a hidden stage dir, then rename the
+    * part to carry the bucket id. A part with no rows is staged only
+    * when `keepEmpty` (a schema-only file); otherwise nothing is.
+    */
+  private def stageBucketFile(spark: SparkSession, p: Path,
+      fs: org.apache.hadoop.fs.FileSystem, df: DataFrame, bucketId: Int,
+      keepEmpty: Boolean): Option[String] = {
+    val stage = new Path(p, s".stage-${java.util.UUID.randomUUID}")
+    df.coalesce(1).write.mode("overwrite")
+      .options(ParquetBlooms.writerOptions(fs, p))
+      .parquet(stage.toString)
+    val conf = spark.sessionState.newHadoopConf()
+    val out = fs.listStatus(stage).toSeq
+      .find(st => st.isFile && st.getPath.getName.startsWith("part-") &&
+        (keepEmpty || ManifestLog.fileRowCount(st.getPath, conf) > 0L))
+      .map { st =>
+        val rel = bucketNamed(st.getPath.getName, bucketId)
+        if (!fs.rename(st.getPath, new Path(p, rel)))
+          throw new java.io.IOException(s"stage rename failed: ${st.getPath}")
+        rel
+      }
+    fs.delete(stage, true)
+    out
   }
 
   /** Spark maps a data file to its bucket by NAME — the trailing

@@ -247,6 +247,42 @@ object ManifestLog {
     commit(fs, p, 1L, Nil, "create", -1L)
   }
 
+  /** Commit `df` as the WHOLE generation `v` of `root`, in one commit
+    * listing exactly the files this call staged ([[stageAppend]]'s
+    * path), with per-file `boundCol` stats. Generation 1 is op
+    * `snapshot` ([[tailSince]] reads it like `adopt`); a later one
+    * replaces the current generation as op `rebuild` ([[tailSince]]
+    * resyncs on it), and the replaced files stay for pinned readers
+    * until [[vacuum]].
+    */
+  private[util] def commitGeneration(df: DataFrame, root: String, v: Long,
+      partitionDirs: Seq[String], boundCol: Option[String]): Unit = {
+    val spark = df.sparkSession
+    val (p, fs) = hadoop(spark, root)
+    val staged = stageAppend(spark, p, fs, df, partitionDirs)
+    commitStaged(fs, p, v, staged, entriesFor(spark, p, staged, boundCol.toSeq))
+  }
+
+  /** [[commitGeneration]]'s commit, shared with the bucketed build. A
+    * builder that loses the race for generation 1 (a concurrent
+    * builder of the same root committed it first) leaves the winner's
+    * generation standing and deletes only those of its staged files
+    * the winning manifest does not list. A lost `rebuild` (v > 1)
+    * throws [[CommitConflict]]: the refresh did not land.
+    */
+  private[util] def commitStaged(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, v: Long, staged: Seq[String],
+      entries: Seq[Entry]): Unit = {
+    failpoint("staged:generation")
+    try commit(fs, p, v, entries, if (v == 1L) "snapshot" else "rebuild", -1L)
+    catch {
+      case _: CommitConflict if v == 1L =>
+        val listed = readRaw(fs, p, v).entries.map(_.path).toSet
+        staged.filterNot(listed).foreach(rel =>
+          fs.delete(new org.apache.hadoop.fs.Path(p, rel), false))
+    }
+  }
+
   /** The batch high-water mark: the highest streaming batch id any
     * [[appendBatch]] has committed to this log (-1 before the first).
     * Read from the CURRENT manifest header alone — every commit
@@ -1798,12 +1834,13 @@ object ManifestLog {
     * without any extra bookkeeping: the files committed AFTER a
     * consumer's version cursor that carry genuinely new rows. Each
     * commit's op tag decides its contribution: append/append-batch
-    * (and the adopting first generation, for a cursor of 0) contribute
-    * their added files; compaction contributes NOTHING (it rewrites
-    * rows the consumer already has — re-emitting them is exactly the
-    * bug this feed exists to avoid); retention removes-only (flagged);
-    * restatement invalidates incremental reading and demands a loud
-    * resync, as does a cursor older than the oldest kept manifest.
+    * (and the adopting or snapshot first generation, for a cursor of
+    * 0) contribute their added files; compaction contributes NOTHING
+    * (it rewrites rows the consumer already has — re-emitting them is
+    * exactly the bug this feed exists to avoid); retention
+    * removes-only (flagged); restatement and a whole-generation
+    * rebuild invalidate incremental reading and demand a loud resync,
+    * as does a cursor older than the oldest kept manifest.
     * Files referenced by kept manifests are vacuum-safe by the same
     * contract that protects pinned readers, so every returned file is
     * readable until the consumer's grace window closes.
@@ -1835,7 +1872,7 @@ object ManifestLog {
     ((fromVersion + 1L) to cur).foreach { v =>
       val m = readRaw(fs, p, v)
       m.op match {
-        case "append" | "append-batch" | "adopt" | "create" =>
+        case "append" | "append-batch" | "adopt" | "create" | "snapshot" =>
           added ++= m.entries.map(_.path).filterNot(prevPaths)
         case "compact" | "cluster" => () // rewrites of rows the consumer already has
         case "expire" => sawExpire = true
@@ -1843,6 +1880,9 @@ object ManifestLog {
           return TailResync(cur,
             s"v$v restated committed history — incremental consumption " +
               s"over (v$fromVersion, v$cur] is invalid; rebuild from v$cur")
+        case "rebuild" =>
+          return TailResync(cur,
+            s"v$v replaced the whole generation — rebuild derived state from v$cur")
         case "delete" =>
           // A delete's replacement files HOLD rows the consumer already
           // folded — emitting them would double those rows, and the
@@ -1885,56 +1925,65 @@ object ManifestLog {
     }
   }
 
+  private val commitLocks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]
+
   /** The ONE visibility step every mutation funnels through: write the
-    * manifest body to a dot-tmp sibling, fsync-close, then a single
-    * atomic rename to its final version name. Rename-onto-existing
+    * manifest body to a dot-tmp sibling named for this commit alone
+    * (version plus a random id, so no other writer, in this JVM or
+    * another, can rewrite it before the rename), fsync-close, then a
+    * single atomic rename to its final version name. Rename-onto-existing
     * fails, so a duplicate version (a second writer, or a replayed
-    * crash) is loud, never a silent overwrite. Every commit carries the
+    * crash) is loud, never a silent overwrite; the loser deletes its
+    * own temp. Every commit carries the
     * batch high-water mark forward (`batchHwm` < 0 = never seen a
     * batch), so the CURRENT manifest alone answers [[appendBatch]]'s
     * replay guard — the guard survives [[vacuum]] of old manifests and
     * any interleaved maintenance commit.
+    *
+    * `entries=<n>` makes truncation detectable: visibility is one
+    * rename, but a filesystem without atomic rename semantics (or
+    * plain bit rot) could surface a partial manifest — and a SHORT
+    * file list silently shrinks the table. Parse verifies the count.
+    *
+    * One commit at a time per root WITHIN this JVM. The exists+rename
+    * conflict check is atomic only on filesystems whose rename refuses
+    * an existing destination (HDFS and the object-store committers
+    * honor this); POSIX rename(2) — what RawLocalFileSystem's
+    * File.renameTo compiles to — REPLACES an existing destination, so
+    * two unserialized local-FS commits of the same version could both
+    * "win" the race with one manifest silently overwritten. Every
+    * concurrent writer this engine actually runs (prepare chains,
+    * streaming sinks, maintenance ticks) lives in one driver JVM, so
+    * the mutex closes the real race; cross-PROCESS writers keep the
+    * documented filesystem requirement (atomic no-overwrite rename).
+    * Without it, the later of two racing renames replaces the earlier
+    * manifest whole: the version lists one writer's files, and the
+    * other writer's staged files become unreferenced orphans.
     */
-  /** One commit at a time per root WITHIN this JVM. The exists+rename
-    * conflict check below is atomic only on filesystems whose rename
-    * refuses an existing destination (HDFS and the object-store
-    * committers honor this); POSIX rename(2) — what
-    * RawLocalFileSystem's File.renameTo compiles to — REPLACES an
-    * existing destination, so two unserialized local-FS commits of the
-    * same version could both "win" the race with one manifest silently
-    * overwritten. Every concurrent writer this engine actually runs
-    * (prepare chains, streaming sinks, maintenance ticks) lives in one
-    * driver JVM, so the mutex closes the real race; cross-PROCESS
-    * writers keep the documented filesystem requirement (atomic
-    * no-overwrite rename).
-    */
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
   private[util] def commit(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path, v: Long, entries: Seq[Entry],
       op: String, batchHwm: Long): Unit = {
     val lock = commitLocks.computeIfAbsent(root.toString, _ => new Object)
     lock.synchronized {
       val dir = manifestDir(root)
-      val tmp = new org.apache.hadoop.fs.Path(dir, s".tmp-${manifestName(v)}")
+      val tmp = new org.apache.hadoop.fs.Path(dir,
+        s".tmp-${manifestName(v)}-${java.util.UUID.randomUUID}")
       val dst = new org.apache.hadoop.fs.Path(dir, manifestName(v))
-      // `entries=<n>` makes truncation detectable: visibility is one
-      // rename, but a filesystem without atomic rename semantics (or
-      // plain bit rot) could surface a partial manifest — and a SHORT
-      // file list silently shrinks the table. Parse verifies the count.
       val header =
         s"$Header op=$op entries=${entries.length}" +
           (if (batchHwm >= 0L) s" batch-hwm=$batchHwm" else "")
-      val out = fs.create(tmp, true)
+      val out = fs.create(tmp, false)
       try out.write((header +: entries.sortBy(_.path).map(_.line))
         .mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
       failpoint("staged:manifest")
-      if (fs.exists(dst) || !fs.rename(tmp, dst))
+      if (fs.exists(dst) || !fs.rename(tmp, dst)) {
+        fs.delete(tmp, false)
         throw new CommitConflict(
           s"manifest commit lost the race: v$v already exists ($tmp -> $dst) " +
             "— a concurrent commit published first")
+      }
     }
   }
 }

@@ -49,10 +49,9 @@ object Tables {
   /** Top-level content signature of `path`: the direct children's
     * (name, length, mtime) — catches in-place rewrites (parquet writers
     * emit fresh part-file names and mtimes) at ~0.1 ms instead of the
-    * full re-resolution. Deeper mutation of an already-written
-    * partition subdir does not occur in this codebase: snapshot and
-    * layout paths are write-once per key (rebuilds use new generation
-    * suffixes), and the raw corpus tables are single files.
+    * full re-resolution. Only the raw corpus tables read through here
+    * (artifacts read their manifest generation), and those are single
+    * files or flat directories, so no deeper mutation can hide from it.
     */
   private def pathSig(path: String): String = {
     val f = new java.io.File(path)
@@ -335,14 +334,14 @@ object Tables {
 }
 
 /** Derived-artifact materialization: build once per (corpus, name),
-  * write to a parquet snapshot, read it back for every subsequent use
-  * in the session. This replaces `.cache()` for artifacts referenced
-  * from multiple plan branches or queries (Catalyst does not share
-  * subplans between self-join branches, and caches squat on executor
-  * storage for the session's lifetime): no storage residency, columnar
-  * scans thereafter — exactly what a cluster pipeline does with
-  * shingle/signature/cluster tables, persisted once per corpus
-  * snapshot.
+  * commit it as a manifested parquet root, read it back for every
+  * subsequent use in the session. This replaces `.cache()` for
+  * artifacts referenced from multiple plan branches or queries
+  * (Catalyst does not share subplans between self-join branches, and
+  * caches squat on executor storage for the session's lifetime): no
+  * storage residency, columnar scans thereafter — exactly what a
+  * cluster pipeline does with shingle/signature/cluster tables,
+  * persisted once per corpus snapshot.
   *
   * Keyed by (corpus dir, artifact name, corpus CONTENT fingerprint):
   * if the corpus parquet at a path is rewritten mid-session, the
@@ -351,20 +350,28 @@ object Tables {
   * stale snapshot. The mtime listing is the filesystem-generic stand-in
   * for what a table format gives as a snapshot id; its granularity is
   * the filesystem's mtime resolution.
+  *
+  * Every artifact is a [[ManifestLog]] root (bucketed ones through
+  * [[BucketedManifest]]), so one crash-safety argument covers them
+  * all: plain snapshots and bucketed tables commit their data as
+  * generation 1 in ONE manifest commit, a committed root is reused by
+  * every later builder (this JVM or another on the same corpus) and
+  * never rewritten, and [[rebuild]] commits a replacing generation on
+  * the same root.
   */
 object Snapshots {
   // Concurrency: prepareIndexes builds independent artifact chains on
   // parallel threads, and artifacts NEST (pq-codes builds pq-codebooks;
   // the half-index assignment builds its centroids). TrieMap
-  // .getOrElseUpdate may evaluate a racing key's builder twice — two
-  // overwrite-writes to the SAME parquet path — and running the builder
-  // INSIDE ConcurrentHashMap.computeIfAbsent throws IllegalStateException
-  // ("Recursive update") when a nested build touches the map mid-resize.
-  // So computeIfAbsent only allocates a cheap memo cell, and the build
-  // runs in the cell's lazy val: exactly-once per key, same-key callers
-  // block on the cell's monitor, nested different-key builds never
-  // mutate the map while a mapping function is on the stack. The
-  // dependency graph is a DAG, so cell-monitor deadlock cannot occur.
+  // .getOrElseUpdate may evaluate a racing key's builder twice, and
+  // running the builder INSIDE ConcurrentHashMap.computeIfAbsent throws
+  // IllegalStateException ("Recursive update") when a nested build
+  // touches the map mid-resize. So computeIfAbsent only allocates a
+  // cheap memo cell, and the build runs in the cell's lazy val:
+  // exactly-once per key, same-key callers block on the cell's monitor,
+  // nested different-key builds never mutate the map while a mapping
+  // function is on the stack. The dependency graph is a DAG, so
+  // cell-monitor deadlock cannot occur.
   private final class Cell(build: () => String) {
     @volatile private var done = false
     lazy val value: String = { val v = build(); done = true; v }
@@ -373,122 +380,124 @@ object Snapshots {
       * side effect of garbage collection). */
     def valueIfBuilt: Option[String] = if (done) Some(value) else None
   }
-  private val paths =
+  @volatile private var paths =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Cell]
 
+  /** Forget every memo cell, so the next ask of each artifact behaves
+    * like a second builder on the same corpus (another JVM). A test
+    * seam, like [[ManifestLog.failpoint]]. */
+  private[util] def resetMemo(): Unit =
+    paths = new java.util.concurrent.ConcurrentHashMap
+
+  private def rootOf(dir: String, fp: String, name: String): String =
+    // md5 of the corpus dir, not hashCode: hashCode collisions between
+    // two corpus dirs would silently serve wrong-corpus artifacts (and
+    // abs(Int.MinValue) is negative).
+    s"${System.getProperty("java.io.tmpdir")}/graft-snap-${md5Hex(dir).take(12)}-$fp-$name"
+
+  /** The one memo every artifact kind goes through: `build(root)` runs
+    * at most once per (corpus, name, fingerprint) in this JVM, and only
+    * when the root fails `complete` (no other builder finished it).
+    */
+  private def artifact(spark: SparkSession, dir: String, name: String)(
+      complete: String => Boolean)(build: String => Unit): String = {
+    val fp = fingerprint(spark, dir)
+    paths.computeIfAbsent((dir, name, fp), _ => new Cell(() => {
+      val out = rootOf(dir, fp, name)
+      if (!complete(out)) build(out)
+      out
+    })).value
+  }
+
+  /** Complete = a generation is committed. A root without one may be
+    * another builder's staging in flight, so it is never deleted here. */
+  private def committed(spark: SparkSession)(root: String): Boolean =
+    ManifestLog.versions(spark, root).nonEmpty
+
+  /** The torn-root rule of the artifacts built by SEVERAL commits: a
+    * root that failed its `complete` test is deleted before the
+    * rebuild. */
+  private def discard(spark: SparkSession, root: String): Unit = {
+    val (p, fs) = ManifestLog.hadoop(spark, root)
+    fs.delete(p, true)
+  }
+
+  private def plain(spark: SparkSession, dir: String, name: String,
+      partitionBy: Seq[String], bound: Option[String])(build: => DataFrame): String =
+    artifact(spark, dir, name)(committed(spark))(
+      ManifestLog.commitGeneration(build, _, 1L, partitionBy, bound))
+
+  /** `adoptBound` records each file's min/max of that column in the
+    * manifest, for the slice and file-skipping reads. */
   def apply(spark: SparkSession, dir: String, name: String,
       partitionBy: Seq[String] = Nil,
       adoptBound: Option[String] = None)(
-      build: => DataFrame): DataFrame = {
-    val fp = fingerprint(spark, dir)
-    val cell = paths.computeIfAbsent(
-      (dir, name, fp),
-      _ => writeCell(spark, dir, name, fp, partitionBy, () => build, adoptBound = adoptBound))
-    readArtifact(spark, cell.value)
-  }
+      build: => DataFrame): DataFrame =
+    readArtifact(spark, plain(spark, dir, name, partitionBy, adoptBound)(build))
 
-  /** Every parquet-artifact read funnels here: a manifested root
-    * ([[ManifestLog]] — an [[install]]ed, maintenance-owned layout)
-    * resolves its CURRENT manifest's exact file set, so queries built
-    * mid-maintenance see one committed generation, never a directory
-    * listing's torn in-between. Plain snapshot paths read as before.
+  /** Every full artifact read funnels here: the CURRENT manifest's
+    * exact file set, so queries built mid-maintenance see one committed
+    * generation, never a directory listing's torn in-between. FLAT
+    * roots read through the stats-aware FileIndex
+    * ([[BucketedManifest.readIndexed]]): a consumer's ordinary pushed
+    * integral-literal filters then skip whole files at PLAN time from
+    * the manifest-recorded per-file ranges. Partition-dir layouts keep
+    * the basePath read (their dir-encoded columns live in path names
+    * the flat relation cannot reconstruct); directory pruning and the
+    * readSlice hints cover them.
     */
-  private def readArtifact(spark: SparkSession, path: String): DataFrame =
-    if (ManifestLog.isManifested(spark, path)) {
-      // FLAT manifested roots read through the stats-aware FileIndex
-      // ([[BucketedManifest.readIndexed]]): a consumer's ordinary
-      // pushed integral-literal filters then skip whole files at PLAN
-      // time from the manifest-recorded per-file ranges — the default
-      // path the benched TPC-H date family rides once the one-shot
-      // build self-adopts. Partition-dir layouts keep the basePath
-      // read (their dir-encoded columns live in path names the flat
-      // relation cannot reconstruct); directory pruning and the
-      // readSlice hints cover them.
-      val flat = scala.util.Try(
-        ManifestLog.currentEntries(spark, path).forall(!_.path.contains("/")))
-        .getOrElse(false)
-      if (flat) BucketedManifest.readIndexed(spark, path)
-      else ManifestLog.read(spark, path)
-    } else Tables.cachedParquet(spark, path)
+  private def readArtifact(spark: SparkSession, root: String): DataFrame =
+    if (ManifestLog.currentEntries(spark, root).forall(!_.path.contains("/")))
+      BucketedManifest.readIndexed(spark, root)
+    else ManifestLog.read(spark, root)
 
   /** [[apply]] with a boundary hint: the incremental query paths (the
     * since/slice boundary reads) declare the [loIncl, hiExcl) window
-    * they will filter to, and a MANIFESTED artifact then plans only
-    * the files whose manifest-recorded stats may overlap it
+    * they will filter to, and the artifact then plans only the files
+    * whose manifest-recorded stats may overlap it
     * ([[ManifestLog.readSlice]] — stats-less files always included, so
     * selection is a row superset and the caller's filter stays
-    * load-bearing). On a plain snapshot path the hint is free: the
-    * read is identical to [[apply]] and row-group pruning does the
-    * skipping. This is how a manifested 100 TB deployment keeps a
+    * load-bearing). This is how a manifested 100 TB deployment keeps a
     * day's boundary read from planning a listing of years of history.
     */
   def slice(spark: SparkSession, dir: String, name: String,
       boundCol: String, loIncl: Long, hiExcl: Long,
       partitionBy: Seq[String] = Nil)(
-      build: => DataFrame): DataFrame = {
-    val fp = fingerprint(spark, dir)
-    val cell = paths.computeIfAbsent(
-      (dir, name, fp),
-      _ => writeCell(spark, dir, name, fp, partitionBy, () => build,
-        adoptBound = Some(boundCol)))
-    if (ManifestLog.isManifested(spark, cell.value))
-      ManifestLog.readSlice(spark, cell.value, boundCol, loIncl, hiExcl)
-    else Tables.cachedParquet(spark, cell.value)
-  }
+      build: => DataFrame): DataFrame =
+    ManifestLog.readSlice(spark,
+      plain(spark, dir, name, partitionBy, Some(boundCol))(build),
+      boundCol, loIncl, hiExcl)
 
-  /** Unconditional REBUILD of an artifact, replacing whatever the memo
-    * holds for (dir, name) — the refresh half of the maintenance
-    * lifecycle ([[install]] is the append half): when an incremental
-    * regime's validity condition breaks (the IVF quantizer-drift
-    * canary is the canonical case), the owning module re-derives the
-    * artifact from the current corpus and every later consumer reads
-    * the refreshed state. Same path scheme and write discipline as the
-    * memoized build.
+  /** Unconditional REBUILD of an artifact — the refresh half of the
+    * maintenance lifecycle ([[install]] is the append half): when an
+    * incremental regime's validity condition breaks (the IVF
+    * quantizer-drift canary is the canonical case), the owning module
+    * re-derives the artifact from the current corpus and every later
+    * consumer reads the refreshed state. The rebuild commits a
+    * replacing generation on the artifact's own root: a reader holding
+    * a plan over the old generation (a query built before the canary
+    * tripped) keeps its files until [[gc]] vacuums them. A concurrent
+    * rebuild that commits the same generation first makes this one
+    * throw [[ManifestLog.CommitConflict]].
     */
   private[graft] def rebuild(spark: SparkSession, dir: String, name: String,
       partitionBy: Seq[String] = Nil)(
       build: => DataFrame): DataFrame = {
     val fp = fingerprint(spark, dir)
-    // A rebuild writes a NEW generation dir instead of overwriting the
-    // memoized path in place: an overwrite DELETES the files first, so
-    // any reader holding a plan over the old artifact (a query built
-    // before the quantizer-drift canary tripped) would lose its scan
-    // mid-flight. The old generation stays on disk for pinned readers;
-    // [[gc]] collects whatever the memo no longer points to.
-    val cell = writeCell(spark, dir, name, fp, partitionBy, () => build,
-      suffix = s"-gen${java.util.UUID.randomUUID.toString.take(8)}")
-    cell.value // force the write before replacing the memo
+    val root = rootOf(dir, fp, name)
+    ManifestLog.commitGeneration(build, root,
+      ManifestLog.versions(spark, root).lastOption.getOrElse(0L) + 1L, partitionBy, None)
+    val cell = new Cell(() => root)
+    cell.value
     paths.put((dir, name, fp), cell)
-    readArtifact(spark, cell.value)
+    readArtifact(spark, root)
   }
 
-  private def writeCell(spark: SparkSession, dir: String, name: String,
-      fp: String, partitionBy: Seq[String], build: () => DataFrame,
-      suffix: String = "", adoptBound: Option[String] = None): Cell =
-    new Cell(() => {
-      // md5 of the corpus dir, not hashCode: hashCode collisions
-      // between two corpus dirs would silently serve wrong-corpus
-      // artifacts (and abs(Int.MinValue) is negative).
-      val dirKey = md5Hex(dir).take(12)
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft-snap-$dirKey-$fp-$name$suffix"
-      val w = build().write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(out)
-      // Self-adopt: the one-shot build IS the manifested layout's
-      // first generation ([[ManifestLog.adopt]] — one footer pass
-      // records per-file boundCol ranges). Readers then plan from the
-      // manifest (file skipping), and segment maintenance appends,
-      // compacts and restates through manifest commits.
-      adoptBound.foreach(b => ManifestLog.adopt(spark, out, Some(b)))
-      out
-    })
-
-  /** Bucketed-table variant: materialize the artifact as a catalog
-    * table bucketed (and sorted) by `key`, data at an external tmpdir
-    * path. Joins and aggregations keyed on the bucket column then plan
-    * with NO hash-partitioning Exchange — the shuffle is paid once at
-    * write time, the at-rest layout a 100 TB fact table repeatedly
+  /** Bucketed variant: materialize the artifact as a
+    * [[BucketedManifest]] root bucketed (and sorted) by `key`. Joins
+    * and aggregations keyed on the bucket column then plan with NO
+    * hash-partitioning Exchange — the shuffle is paid once at write
+    * time, the at-rest layout a 100 TB fact table repeatedly
     * joined/aggregated on one key wants. Same (dir, name, content
     * fingerprint) keying as parquet snapshots.
     */
@@ -502,25 +511,10 @@ object Snapshots {
     * the at-rest distribution with no exchange.
     */
   def bucketedTableKeys(spark: SparkSession, dir: String, name: String,
-      keys: Seq[String], buckets: Int)(build: => DataFrame): DataFrame = {
-    val fp = fingerprint(spark, dir)
-    val cell = paths.computeIfAbsent(
-      (dir, s"bkt-$name", fp),
-      _ => new Cell(() => {
-        val dirKey = md5Hex(dir).take(12)
-        val t = s"graft_snap_${dirKey}_${fp}_${name.replaceAll("[^A-Za-z0-9]", "_")}"
-        val out =
-          s"${System.getProperty("java.io.tmpdir")}/graft-snap-$dirKey-$fp-bkt-$name"
-        build.write.mode("overwrite")
-          .option("path", out)
-          .bucketBy(buckets, keys.head, keys.tail: _*)
-          .sortBy(keys.head, keys.tail: _*)
-          .saveAsTable(t)
-        t
-      }),
-    )
-    spark.table(cell.value)
-  }
+      keys: Seq[String], buckets: Int)(build: => DataFrame): DataFrame =
+    BucketedManifest.read(spark,
+      artifact(spark, dir, s"bkt-$name")(committed(spark))(
+        BucketedManifest.build(build, _, keys, buckets)))
 
   /** Manifested-log artifact: build once per (corpus, name) as a
     * [[ManifestLog]] root — created empty, the lookup-key bloom
@@ -532,99 +526,53 @@ object Snapshots {
     * root, not a frame). This is the at-rest shape of "fetch/forget by
     * id on a log sorted by something else": range stats answer the
     * boundary reads, blooms answer the keyed ones, one layout pays for
-    * both.
-    *
-    * Idempotent across JVMs: a root already manifested with live files
-    * under the same (corpus-fingerprint) path is reused as-is; a torn
-    * previous attempt (create committed, append never landed) is
-    * discarded and rebuilt.
+    * both. Built by several commits, so a torn root (created, append
+    * never landed) is deleted and rebuilt.
     */
   def manifestedLog(spark: SparkSession, dir: String, name: String,
-      boundCol: String, bloomCols: Seq[String])(build: => DataFrame): String = {
-    val fp = fingerprint(spark, dir)
-    val cell = paths.computeIfAbsent(
-      (dir, s"mlog-$name", fp),
-      _ => new Cell(() => {
-        val dirKey = md5Hex(dir).take(12)
-        val out =
-          s"${System.getProperty("java.io.tmpdir")}/graft-snap-$dirKey-$fp-mlog-$name"
-        val (p, fs) = ManifestLog.hadoop(spark, out)
-        val complete = ManifestLog.isManifested(spark, out) &&
-          scala.util.Try(ManifestLog.liveFileCount(spark, out) > 0).getOrElse(false)
-        if (!complete) {
-          fs.delete(p, true)
-          ManifestLog.create(spark, out)
-          if (bloomCols.nonEmpty) ParquetBlooms.declare(spark, out, bloomCols)
-          ManifestLog.appendSorted(build, out, Nil, Some(boundCol))
-        }
-        out
-      }),
-    )
-    cell.value
-  }
+      boundCol: String, bloomCols: Seq[String])(build: => DataFrame): String =
+    artifact(spark, dir, s"mlog-$name")(out =>
+      scala.util.Try(ManifestLog.liveFileCount(spark, out) > 0).getOrElse(false)) { out =>
+      discard(spark, out)
+      ManifestLog.create(spark, out)
+      if (bloomCols.nonEmpty) ParquetBlooms.declare(spark, out, bloomCols)
+      ManifestLog.appendSorted(build, out, Nil, Some(boundCol))
+    }
 
   /** Z-clustered manifested-log artifact: [[manifestedLog]] plus one
     * [[ManifestLog.cluster]] pass, so the at-rest layout answers
     * conjunctive boundary slices over EVERY cluster column from a
     * manifest parse ([[ManifestLog.readSliceN]]) — the multi-tenant /
     * multi-dimension read pattern a time-only sort cannot prune.
-    * Same idempotence contract: a complete root is reused as-is; a
-    * torn attempt (created or appended but never clustered — the last
-    * committed op tells) is discarded and rebuilt.
+    * Built by several commits, so a torn root (created or appended but
+    * never clustered — the last committed op tells) is deleted and
+    * rebuilt.
     */
   def clusteredLog(spark: SparkSession, dir: String, name: String,
       cols: Seq[String], targetFileRows: Long,
-      bloomCols: Seq[String] = Nil)(build: => DataFrame): String = {
-    val fp = fingerprint(spark, dir)
-    val cell = paths.computeIfAbsent(
-      (dir, s"zlog-$name", fp),
-      _ => new Cell(() => {
-        val dirKey = md5Hex(dir).take(12)
-        val out =
-          s"${System.getProperty("java.io.tmpdir")}/graft-snap-$dirKey-$fp-zlog-$name"
-        val (p, fs) = ManifestLog.hadoop(spark, out)
-        val complete = ManifestLog.isManifested(spark, out) &&
-          scala.util.Try(ManifestLog.describe(spark, out).last._2 == "cluster")
-            .getOrElse(false)
-        if (!complete) {
-          fs.delete(p, true)
-          ManifestLog.create(spark, out)
-          if (bloomCols.nonEmpty) ParquetBlooms.declare(spark, out, bloomCols)
-          ManifestLog.appendSorted(build, out, Nil, Some(cols.head))
-          ManifestLog.cluster(spark, out, cols, targetFileRows)
-        }
-        out
-      }),
-    )
-    cell.value
-  }
+      bloomCols: Seq[String] = Nil)(build: => DataFrame): String =
+    artifact(spark, dir, s"zlog-$name")(out =>
+      scala.util.Try(ManifestLog.describe(spark, out).last._2 == "cluster")
+        .getOrElse(false)) { out =>
+      discard(spark, out)
+      ManifestLog.create(spark, out)
+      if (bloomCols.nonEmpty) ParquetBlooms.declare(spark, out, bloomCols)
+      ManifestLog.appendSorted(build, out, Nil, Some(cols.head))
+      ManifestLog.cluster(spark, out, cols, targetFileRows)
+    }
 
-  /** Generic memoized layout root — the [[manifestedLog]] machinery
-    * for builders that own their whole write protocol (e.g. a
-    * manifested BUCKETED layout, whose bootstrap goes through a staged
-    * catalog table): `build(path)` runs once per (corpus, name,
-    * fingerprint); a root failing `complete` (a torn previous attempt)
-    * is deleted and rebuilt.
+  /** Memoized layout root for builders that own their whole write
+    * protocol (the li-ok-pair layout, built by per-year appends):
+    * `build(path)` runs once per (corpus, name, fingerprint). Built by
+    * several commits, so a root failing `complete` (a torn previous
+    * attempt) is deleted and rebuilt.
     */
   private[graft] def layoutRoot(spark: SparkSession, dir: String, name: String)(
-      complete: String => Boolean)(build: String => Unit): String = {
-    val fp = fingerprint(spark, dir)
-    val cell = paths.computeIfAbsent(
-      (dir, s"root-$name", fp),
-      _ => new Cell(() => {
-        val dirKey = md5Hex(dir).take(12)
-        val out =
-          s"${System.getProperty("java.io.tmpdir")}/graft-snap-$dirKey-$fp-root-$name"
-        if (!complete(out)) {
-          val (p, fs) = ManifestLog.hadoop(spark, out)
-          fs.delete(p, true)
-          build(out)
-        }
-        out
-      }),
-    )
-    cell.value
-  }
+      complete: String => Boolean)(build: String => Unit): String =
+    artifact(spark, dir, s"root-$name")(complete) { out =>
+      discard(spark, out)
+      build(out)
+    }
 
   /** Ingest-pipeline seam: register an externally maintained at-rest
     * layout (e.g. a SEGMENT-APPENDED manifested root — [[ManifestLog]]) as
@@ -640,85 +588,46 @@ object Snapshots {
       path: String): Unit =
     paths.put((dir, name, fingerprint(spark, dir)), new Cell(() => path))
 
-  /** Garbage-collect superseded artifact generations for a corpus dir
-    * — the disposal end of the lifecycle (build → [[install]] append →
-    * [[rebuild]] refresh → gc): when the corpus at `dir` is rewritten,
-    * its content fingerprint changes, every artifact rebuilds under
-    * the new fingerprint, and the previous generation's parquet
-    * snapshots and bucketed tables become unreachable (the memo keys
-    * on the current fingerprint) yet occupy disk forever. gc removes
-    * exactly the stale generations of THIS corpus dir: tmpdir
-    * snapshot dirs and catalog tables whose key carries this dir's
-    * hash but a different fingerprint, plus their memo entries. Other
-    * corpus dirs' artifacts are untouched by construction (the dir
-    * hash prefixes every key). Like compaction, gc is an
-    * ingest-pipeline operation: it must not run concurrently with a
-    * session still reading the old generation. Returns what it
-    * removed, for the caller's ledger.
+  /** Garbage-collect a corpus dir's artifacts — the disposal end of the
+    * lifecycle (build → [[install]] append → [[rebuild]] refresh →
+    * gc). When the corpus at `dir` is rewritten, its content
+    * fingerprint changes, every artifact rebuilds under the new
+    * fingerprint, and the previous fingerprint's roots become
+    * unreachable (the memo keys on the current fingerprint) yet occupy
+    * disk forever: gc deletes the tmpdir roots whose name carries this
+    * dir's hash but a different fingerprint, plus their memo entries.
+    * Within the current fingerprint it runs [[ManifestLog.vacuum]] on
+    * the roots this memo has built, so generations a [[rebuild]] or a
+    * maintenance commit retired leave the disk. Other corpus dirs'
+    * artifacts are untouched by construction (the dir hash prefixes
+    * every root). Like compaction, gc is an ingest-pipeline operation:
+    * it must not run concurrently with a session still reading a
+    * superseded generation. Returns what it removed, for the caller's
+    * ledger.
     */
   private[graft] def gc(spark: SparkSession, dir: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
     val fp = fingerprint(spark, dir)
-    val dirKey = md5Hex(dir).take(12)
-    val removed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Stale bucketed tables first (their external data dirs fall in
-    // the path sweep below): graft_snap_<dirKey>_<fp>_<name>.
-    val tPrefix = s"graft_snap_${dirKey}_"
-    val tKeep = s"$tPrefix${fp}_"
-    spark.catalog.listTables().collect()
-      .map(_.name)
-      .filter(n => n.startsWith(tPrefix) && !n.startsWith(tKeep))
-      .foreach { t =>
-        spark.sql(s"DROP TABLE IF EXISTS `$t`")
-        removed += s"table:$t"
-      }
-    // Stale parquet snapshot dirs: graft-snap-<dirKey>-<fp>-<name>.
     val tmp = new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir"))
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pPrefix = s"graft-snap-$dirKey-"
+    val pPrefix = s"graft-snap-${md5Hex(dir).take(12)}-"
     val pKeep = s"$pPrefix$fp-"
-    if (fs.exists(tmp))
-      fs.listStatus(tmp)
-        .map(_.getPath)
-        .filter(p => p.getName.startsWith(pPrefix) && !p.getName.startsWith(pKeep))
-        .foreach { p =>
-          fs.delete(p, true)
-          removed += s"path:$p"
-        }
-    // Superseded REBUILD generations within the current fingerprint:
-    // each [[rebuild]] writes a fresh `-gen<id>` dir so pinned readers
-    // keep their files; once no memo cell points at a generation (or
-    // at the base dir a generation superseded), it is stale. Only
-    // EVALUATED cells count — forcing a lazy cell here would build
+    val stale = if (!fs.exists(tmp)) Nil else fs.listStatus(tmp).toSeq
+      .map(_.getPath)
+      .filter(p => p.getName.startsWith(pPrefix) && !p.getName.startsWith(pKeep))
+    stale.foreach(fs.delete(_, true))
+    // Only EVALUATED cells count — forcing a lazy cell here would build
     // artifacts as a side effect of gc.
-    locally {
-      import scala.jdk.CollectionConverters._
-      val live = paths.entrySet().asScala
-        .filter(e => e.getKey._1 == dir && e.getKey._3 == fp)
-        .flatMap(_.getValue.valueIfBuilt)
-        .map(p => new org.apache.hadoop.fs.Path(p).getName)
-        .toSet
-      val GenDir = """^(.*)-gen[0-9a-f]{8}$""".r
-      val supersededBases = live.collect { case GenDir(base) => base }
-      if (fs.exists(tmp))
-        fs.listStatus(tmp)
-          .map(_.getPath)
-          .filter(_.getName.startsWith(pKeep))
-          .filter { p =>
-            p.getName match {
-              case GenDir(_) => !live.contains(p.getName)
-              case n => supersededBases.contains(n)
-            }
-          }
-          .foreach { p =>
-            fs.delete(p, true)
-            removed += s"path:$p"
-          }
-    }
+    val built = paths.entrySet().asScala.toSeq
+      .filter(e => e.getKey._1 == dir && e.getKey._3 == fp)
+      .flatMap(_.getValue.valueIfBuilt).distinct
+      .filter(r => new org.apache.hadoop.fs.Path(r).getName.startsWith(pKeep))
+    val vacuumed = built.flatMap(r => ManifestLog.vacuum(spark, r).map(f => s"path:$r/$f"))
     // Stale memo cells (same dir, superseded fingerprint) — without
-    // this, a session that GCs and then touches an old-generation key
-    // would read a deleted path instead of rebuilding.
+    // this, a session that GCs and then touches a stale-fingerprint
+    // key would read a deleted path instead of rebuilding.
     paths.keySet().removeIf { case (d, _, f) => d == dir && f != fp }
-    removed.toSeq
+    stale.map(p => s"path:$p") ++ vacuumed
   }
 
   /** Content fingerprint of the corpus dir: md5 over the sorted

@@ -6,7 +6,26 @@ package graft
   * that silently exempts nothing (and, worse, suggests the gate still
   * covers a query it no longer sees).
   */
-class PlanAuditSpec extends org.scalatest.funsuite.AnyFunSuite {
+class PlanAuditSpec extends SparkTestBase with TempCorpusDirs {
+
+  test("scan sources are named from the relation's root path, even past 100 characters") {
+    // Spark cuts a scan node's one-line string at 100 characters
+    // (spark.sql.maxMetadataStringLength): names parsed from that
+    // string depend on the length of java.io.tmpdir.
+    val long = tempCorpusDir("planaudit_" + "a_long_tmpdir_segment_" * 4)
+    val snap = s"$long/graft-snap-0123456789ab-0123456789ab-ivf-half-assigned-n4"
+    val raw = s"$long/lineitem.parquet"
+    assert(snap.length > 100 && raw.length > 100)
+    spark.range(10).write.parquet(snap)
+    spark.range(5).write.parquet(raw)
+    def df = spark.read.parquet(snap).union(spark.read.parquet(raw))
+    // exec mode: the final adaptive plan; plan mode: the initial one.
+    Seq(graft.util.PlanFiles.executeFinal(df).executedPlan,
+        df.queryExecution.executedPlan).foreach { plan =>
+      assert(PlanAudit.scanSources(graft.util.PlanFiles.finalNodes(plan)).sorted ==
+        Seq("ivf-half-assigned", "lineitem"))
+    }
+  }
 
   test("every DocumentedReuse allowance names a declared query") {
     val declared = SparkEntry.queries.keySet

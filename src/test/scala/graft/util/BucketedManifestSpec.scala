@@ -219,6 +219,46 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     } finally spark.sql(s"DROP TABLE IF EXISTS `$t`")
   }
 
+  test("a composite-key build records every key, plans its full BucketSpec and refuses keyed deletion") {
+    val root = s"${tempCorpusDir("graft_bman_composite")}/grain"
+    val grain = (0 until 400).map(i => (i.toLong % 20, i.toLong % 7, i.toLong)).toDF("a", "b", "v")
+    BucketedManifest.build(grain, root, Seq("a", "b"), Buckets)
+    val s = BucketedManifest.spec(spark, root)
+    assert(s.keys == Seq("a", "b") && s.buckets == Buckets && s.keyType.isEmpty, s"spec: $s")
+    val agg = BucketedManifest.read(spark, root).groupBy("a", "b").agg(sum("v").as("sv"))
+    val scan = agg.queryExecution.sparkPlan.collectLeaves().collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }
+    assert(scan.map(_.relation.bucketSpec) == Seq(Some(
+      org.apache.spark.sql.catalyst.catalog.BucketSpec(Buckets, Seq("a", "b"), Seq("a", "b")))))
+    val p = agg.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(!p.contains("Arguments: hashpartitioning("),
+      s"the composite-key aggregate must not re-shuffle:\n$p")
+    assert(canon(agg) == canon(grain.groupBy("a", "b").agg(sum("v").as("sv"))))
+    // hash(a) cannot find rows placed by hash(a, b): refused before
+    // anything is read or written.
+    val v = ManifestLog.currentVersion(spark, root)
+    val e = intercept[IllegalArgumentException] {
+      BucketedManifest.deleteKeys(spark, root, Seq(1L).toDF("a"))
+    }
+    assert(e.getMessage.contains("single-key"), e.getMessage)
+    assert(ManifestLog.currentVersion(spark, root) == v)
+  }
+
+  test("a build onto a root that records another bucket spec fails and keeps the recorded spec") {
+    val root = s"${tempCorpusDir("graft_bman_spec_clash")}/grain"
+    val df = (0 until 40).map(i => (i.toLong, i.toLong)).toDF("k", "v")
+    BucketedManifest.build(df, root, Seq("k"), Buckets)
+    val recorded = BucketedManifest.spec(spark, root)
+    val e = intercept[IllegalArgumentException] {
+      BucketedManifest.build(df, root, Seq("k"), Buckets * 2)
+    }
+    assert(e.getMessage.contains("already records bucket spec"), e.getMessage)
+    assert(BucketedManifest.spec(spark, root) == recorded)
+    assert(canon(BucketedManifest.read(spark, root)) == canon(df))
+  }
+
   test("mergeSchema widens the bucketed read across schema-drifted appends") {
     val (fact, _) = freshPair("drift")
     // A later producer adds a column; the bucketed append takes the

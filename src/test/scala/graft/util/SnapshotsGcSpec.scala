@@ -5,11 +5,12 @@ import java.nio.file.Files
 import graft.SparkTestBase
 
 /** Disposal end of the artifact lifecycle: when a corpus dir is
-  * rewritten, the previous generation's snapshots (parquet dirs +
-  * bucketed catalog tables) become unreachable under the new content
-  * fingerprint but stay on disk forever. [[Snapshots.gc]] must remove
-  * exactly that stale generation — and nothing else: not the current
-  * generation, not other corpus dirs' artifacts.
+  * rewritten, the previous fingerprint's artifact roots (plain and
+  * bucketed manifested roots alike) become unreachable under the new
+  * content fingerprint but stay on disk forever. [[Snapshots.gc]] must
+  * remove exactly that stale generation — and nothing else: not the
+  * current generation, not other corpus dirs' artifacts — and vacuum
+  * what a rebuild retired within the current fingerprint.
   */
 class SnapshotsGcSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
@@ -18,15 +19,23 @@ class SnapshotsGcSpec extends SparkTestBase with graft.TempCorpusDirs {
     (1 to n).map(i => (i.toLong, s"v$i")).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
 
+  /** The artifact root a frame reads: every artifact is flat, so it is
+    * the parent dir of any of its files. */
+  private def rootOf(df: org.apache.spark.sql.DataFrame): java.io.File =
+    new java.io.File(new java.net.URI(df.inputFiles.head).getPath).getParentFile
+
+  private def onDisk(f: String): Boolean =
+    new java.io.File(new java.net.URI(f).getPath).exists
+
   test("gc removes exactly the superseded generation's snapshots and tables") {
     val dir = tempCorpusDir("graft_gc")
     writeCorpus(dir, 10)
-    def build() = {
-      Snapshots(spark, dir, "gc-probe")(spark.read.parquet(s"$dir/t.parquet"))
+    def build() = (
+      Snapshots(spark, dir, "gc-probe")(spark.read.parquet(s"$dir/t.parquet")),
       Snapshots.bucketedTable(spark, dir, "gc-probe-b", "k", 2)(
-        spark.read.parquet(s"$dir/t.parquet"))
-    }
-    build()
+        spark.read.parquet(s"$dir/t.parquet")))
+    val (plain1, bkt1) = build()
+    val gen1 = Seq(rootOf(plain1), rootOf(bkt1))
     // Nothing stale yet: gc on a single-generation corpus is a no-op.
     assert(Snapshots.gc(spark, dir).isEmpty, "gc removed something from a fresh corpus")
 
@@ -38,21 +47,17 @@ class SnapshotsGcSpec extends SparkTestBase with graft.TempCorpusDirs {
 
     // The corpus is rewritten → new fingerprint → generation 2 builds.
     writeCorpus(dir, 25)
-    build()
+    val (plain2, bkt2) = build()
     val removed = Snapshots.gc(spark, dir)
     val removedPaths = removed.collect { case s if s.startsWith("path:") => s.stripPrefix("path:") }
-    val removedTables = removed.collect { case s if s.startsWith("table:") => s.stripPrefix("table:") }
-    assert(removedPaths.nonEmpty, s"gen-1 snapshot dir not collected: $removed")
-    assert(removedTables.nonEmpty, s"gen-1 bucketed table not collected: $removed")
-    removedPaths.foreach { p =>
-      assert(!new java.io.File(new java.net.URI(p).getPath).exists
-        || !p.startsWith("file:"), s"removed path still on disk: $p")
-    }
-    removedTables.foreach { t =>
-      assert(!spark.catalog.tableExists(t), s"removed table still cataloged: $t")
-    }
+    def collected(root: java.io.File) =
+      removedPaths.exists(p => new org.apache.hadoop.fs.Path(p).getName == root.getName)
+    assert(collected(gen1(0)), s"gen-1 snapshot root not collected: $removed")
+    assert(collected(gen1(1)), s"gen-1 bucketed root not collected: $removed")
+    gen1.foreach(r => assert(!r.exists, s"removed root still on disk: $r"))
     assert(Files.exists(bystander), "gc deleted another corpus dir's artifact")
     Files.deleteIfExists(bystander)
+    Seq(plain2, bkt2).foreach(df => assert(rootOf(df).exists, "gc removed a current root"))
 
     // The CURRENT generation survived: the memoized snapshot serves
     // without rebuilding (a throwing builder proves the memo is warm)
@@ -73,7 +78,7 @@ class SnapshotsGcSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(v1.count() == 10)
     // Refresh (the quantizer-retrain shape): the corpus is UNCHANGED —
     // same fingerprint — but the artifact is re-derived. The rebuild
-    // must not overwrite v1's path in place: `v1` is a pinned reader.
+    // must not overwrite v1's files: `v1` is a pinned reader.
     val v2 = Snapshots.rebuild(spark, dir, "gen-probe")(
       spark.read.parquet(s"$dir/t.parquet").filter($"k" <= 5))
     assert(v2.count() == 5)
@@ -81,13 +86,19 @@ class SnapshotsGcSpec extends SparkTestBase with graft.TempCorpusDirs {
       "rebuild reused the old generation's files")
     assert(v1.count() == 10,
       "rebuild deleted files a pinned reader references")
+    // One root, two generations: the rebuild committed on the
+    // artifact's own root instead of a new directory.
+    val root = rootOf(v1)
+    assert(rootOf(v2) == root, s"rebuild left the root ${root.getName}")
+    assert(ManifestLog.versions(spark, root.toString) == Seq(1L, 2L))
     // The memo serves the refreshed generation from now on.
     assert(Snapshots(spark, dir, "gen-probe")(
       sys.error("memo must be warm")).count() == 5)
-    // gc collects the superseded base generation, keeps the current.
+    // gc vacuums the retired generation's files, keeps the current.
     val removed = Snapshots.gc(spark, dir)
     assert(removed.exists(_.contains("gen-probe")),
       s"superseded base generation not collected: $removed")
+    v1Files.foreach(f => assert(!onDisk(f), s"retired file survived gc: $f"))
     assert(Snapshots(spark, dir, "gen-probe")(
       sys.error("memo must still be warm")).count() == 5,
       "gc damaged the live rebuilt generation")

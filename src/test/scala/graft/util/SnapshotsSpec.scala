@@ -13,10 +13,11 @@ import graft.SparkTestBase
 /** Concurrency contract of the snapshot memo: prepareIndexes fans
   * artifact chains out on parallel threads and artifacts NEST (an
   * outer builder forces an inner snapshot). Each key's builder must
-  * run exactly once under that load — a double-build is two
-  * overwrite-writes racing on one parquet path, and the original
-  * computeIfAbsent formulation threw 'Recursive update' when a nested
-  * build hit the map mid-resize (caught by the full suite in round 5).
+  * run exactly once under that load — a double-build repeats the
+  * whole derivation only to lose the generation-1 commit to the
+  * first, and the original computeIfAbsent formulation threw
+  * 'Recursive update' when a nested build hit the map mid-resize
+  * (caught by the full suite in round 5).
   */
 class SnapshotsSpec extends SparkTestBase {
   import sqlImplicits._
