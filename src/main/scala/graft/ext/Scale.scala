@@ -4,26 +4,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale techniques the 100 TB design point requires (SURVEY.md §4
-  * "Scale posture"): bucketed co-located joins, salted joins for skewed
-  * keys, partitioned-at-rest layouts. Each is a small composable helper
-  * whose effect is asserted at the PLAN level in ScaleSpec — a shuffle
-  * that silently reappears is a regression, not a style issue.
+  * "Scale posture"): salted joins for skewed keys and partitioned-at-rest
+  * layouts (bucketed co-located layouts are [[graft.util.BucketedManifest]]
+  * roots). Each is a small composable helper whose effect is asserted at
+  * the PLAN level in ScaleSpec — a shuffle that silently reappears is a
+  * regression, not a style issue.
   */
 object Scale {
-
-  /** Write a frame as a catalog table bucketed (and sorted) by the join
-    * key. Two tables bucketed the same way join with NO shuffle
-    * exchange on either side — the pre-shuffle is paid once at write
-    * time and amortized over every subsequent join, the standard
-    * layout for a fact table that is repeatedly joined on one key.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, numBuckets: Int): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(numBuckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
 
   /** Write a frame partitioned at rest by a column (e.g. release_year,
     * event date, IVF cluster id): queries filtering on it scan only the
@@ -33,47 +20,6 @@ object Scale {
     */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
-
-  /** Small-file compaction: rewrite a parquet directory into `numFiles`
-    * files. Streaming appends and fine-grained incremental writes leave
-    * thousands of KB-sized files whose per-file open/footer overhead
-    * dominates scan time at scale; periodic compaction restores
-    * full-bandwidth scans.
-    *
-    * Crash-safety contract: the swap is two renames — the live table is
-    * first set aside at `path.compact-old`, then the compacted rewrite
-    * is renamed in. The DATA is never lost: at every instant the
-    * complete table exists at `path` or at `path.compact-old`, and the
-    * next `compact` call heals an interrupted swap before doing
-    * anything else. What is NOT guaranteed is continuous readability —
-    * between the two renames a concurrent reader sees no directory at
-    * `path` (a filesystem without atomic multi-file swap cannot close
-    * that window; table formats like Iceberg/Delta exist precisely to
-    * move the swap into a metadata pointer).
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String, numFiles: Int): Unit = {
-    require(numFiles > 0, "numFiles must be positive")
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".compact-old")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Heal a swap interrupted between the two renames: the previous
-    // run moved the table aside but died before moving the rewrite in.
-    if (!fs.exists(dst) && fs.exists(old)) {
-      if (!fs.rename(old, dst))
-        throw new java.io.IOException(s"compact: failed to restore $old -> $dst")
-    }
-    spark.read.parquet(path).repartition(numFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true) // leftover from an older COMPLETED run
-    if (!fs.rename(dst, old))
-      throw new java.io.IOException(s"compact: failed to set aside $dst -> $old")
-    if (!fs.rename(tmp, dst)) {
-      fs.rename(old, dst) // roll back so the table stays live
-      throw new java.io.IOException(s"compact: failed to swap in $tmp -> $dst")
-    }
-    fs.delete(old, true)
-  }
 
   /** Incremental refresh of a partitioned table: overwrite ONLY the
     * partitions present in `df`, leaving every other partition

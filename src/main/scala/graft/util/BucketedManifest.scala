@@ -1,41 +1,37 @@
 package graft.util
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Manifest-committed generations for the BUCKETED co-location pairs —
-  * closing the one layout family [[ManifestLog]] could not cover.
+  * the bucketed twin of [[ManifestLog]], with no catalog anywhere.
   *
-  * The obstacle was never the commit protocol; it was the read path:
-  * exchange-free joins come from the session catalog's bucketed file
-  * index, and that index resolves by directory listing, so adopting a
-  * manifest under a catalog table would leave catalog readers seeing
-  * retired files. The Spark-first answer is the layer the catalog
-  * itself sits on: `FileIndex` is the planner's file-discovery seam
-  * (the developer API table formats implement), so a manifest-backed
-  * index inside a `HadoopFsRelation` carrying the layout's
-  * `BucketSpec` plans EXACTLY like a catalog bucketed table — bucket
-  * id from the `_NNNNN` file-name contract, `Bucketed: true` scans,
-  * zero key exchanges on co-located joins — while the file SET comes
-  * from one committed manifest generation. Readers pin a generation,
-  * maintenance retires-never-deletes, vacuum is the only deleter:
-  * the full [[ManifestLog]] contract, now for bucket grains.
+  * Both halves go through Spark's file-source layer directly. Writes
+  * run Spark's own bucketed file writer ([[stageBucketed]]), which
+  * names each file with its `_NNNNN` bucket id. Reads put a
+  * manifest-backed `FileIndex` (the planner's file-discovery seam)
+  * inside a `HadoopFsRelation` carrying the layout's `BucketSpec`, so
+  * the scan maps files to buckets by that name: `Bucketed: true`
+  * scans and zero key exchanges on co-located joins, while the file
+  * SET comes from one committed manifest generation. Readers pin a
+  * generation, maintenance retires-never-deletes, vacuum is the only
+  * deleter: the full [[ManifestLog]] contract, for bucket grains.
   *
   * The bucket spec (keys, count) is recorded next to the manifests at
-  * creation or adoption and validated on every append, so a
-  * mismatched segment fails loudly before any write.
+  * creation and validated on every append, so a mismatched segment
+  * fails loudly before any write.
   *
   * Scale shape: K appends leave K files per bucket, [[maintain]]
   * compacts per bucket grain, and a join on the bucket key never
-  * shuffles either side. The cost over a catalog table is the
-  * manifest read at plan build; the gain is snapshot isolation —
-  * appends and compactions run under concurrent readers.
+  * shuffles either side. The cost is the manifest read at plan build;
+  * the gain is snapshot isolation — appends and compactions run under
+  * concurrent readers.
   */
 object BucketedManifest {
 
@@ -50,47 +46,6 @@ object BucketedManifest {
       keyType: Option[org.apache.spark.sql.types.DataType] = None)
 
   private val SpecFile = "bucket-spec"
-
-  /** Adopt an existing bucketed CATALOG table's layout: manifest its
-    * location, record its bucket spec, and drop the catalog entry
-    * (external — the files stay), so the manifested read becomes the
-    * one read path; a catalog reader resolving by listing would see
-    * retired files after the first compaction. Returns the layout
-    * root the other entry points take.
-    */
-  def adoptTable(spark: SparkSession, table: String): String = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    // The drop below relies on "external — the files stay". A MANAGED
-    // table's DROP deletes its data directory, which would turn
-    // adoption into silent total data loss; fail before touching it.
-    require(meta.tableType ==
-        org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
-      s"$table is ${meta.tableType.name}, not EXTERNAL — dropping it would " +
-        "delete the data files just manifested. Recreate it as an external " +
-        "table (CREATE TABLE ... USING parquet LOCATION ...) and re-adopt")
-    val bs = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table is not bucketed — ManifestLog.adopt covers plain layouts"))
-    require(bs.sortColumnNames == bs.bucketColumnNames,
-      s"$table sorts on ${bs.sortColumnNames}, buckets on " +
-        s"${bs.bucketColumnNames} — the co-location layouts sort by their key")
-    // The Spec records ONE key; adopting a multi-column bucketing by
-    // its head would claim hash(head) placement over files placed by
-    // hash(all columns) — exchange elision and deleteKeys would then
-    // be silently WRONG (joins co-located on the wrong hash, deletes
-    // probing buckets the rows don't live in). Refuse loudly.
-    require(bs.bucketColumnNames.length == 1,
-      s"$table buckets on ${bs.bucketColumnNames} — the manifested " +
-        "co-location layouts are single-key (hash(key) % n placement); " +
-        "a multi-column spec cannot be adopted")
-    val root = meta.location.toString
-    ManifestLog.adopt(spark, root)
-    val key = bs.bucketColumnNames.head
-    writeSpec(spark, root,
-      Spec(Seq(key), bs.numBuckets, Some(meta.schema(key).dataType)))
-    spark.sql(s"DROP TABLE `$table`")
-    root
-  }
 
   /** Bootstrap an EMPTY bucketed layout at `root`: record its spec,
     * then [[ManifestLog.create]]'s fileless v1 — the anchor a layout
@@ -114,8 +69,10 @@ object BucketedManifest {
     val spark = df.sparkSession
     val (p, fs) = ManifestLog.hadoop(spark, root)
     val s = recordSpec(spark, root, df.schema, keys, buckets)
-    val staged = stageBucketed(spark, p, fs, df, s) match {
-      case Nil => stageBucketFile(spark, p, fs, df.limit(0), 0, keepEmpty = true).toSeq
+    val staged = stageBucketed(p, fs, df, s) match {
+      // The bucketed writer writes no file for no rows; the plain
+      // writer's one schema-only part is named into bucket 0.
+      case Nil => stage(p, fs, df.limit(0), None, bucketNamed(_, 0))
       case files => files
     }
     ManifestLog.commitStaged(fs, p, 1L, staged,
@@ -383,13 +340,12 @@ object BucketedManifest {
     }
   }
 
-  /** Append one segment: ONE new file per non-empty bucket, written
-    * through a hidden staging table so the files carry Spark's own
-    * `_NNNNN` bucket-id names (the contract the scan maps files by),
-    * renamed invisibly into the root, then manifest-committed with
-    * the append family's optimistic retry. Validates the recorded
-    * spec first — a mismatched key or count fails loudly before any
-    * write, exactly as catalog append mode did.
+  /** Append one segment: ONE new file per non-empty bucket, staged by
+    * [[stageBucketed]] (the files carry Spark's own `_NNNNN` bucket-id
+    * names, the contract the scan maps files by), then
+    * manifest-committed with the append family's optimistic retry.
+    * The segment must carry the recorded bucket keys; a mismatched
+    * segment fails loudly before any write.
     */
   def appendBucketed(segment: DataFrame, root: String): Unit = {
     val spark = segment.sparkSession
@@ -398,7 +354,7 @@ object BucketedManifest {
     val s = spec(spark, root)
     require(s.keys.forall(segment.columns.contains),
       s"segment lacks a bucket key of ${s.keys} recorded for $root")
-    val staged = stageBucketed(spark, p, fs, segment, s)
+    val staged = stageBucketed(p, fs, segment, s)
     ManifestLog.failpoint("written:append-bucketed")
     ManifestLog.commitAppend(fs, p,
       ManifestLog.entriesFor(spark, p, staged, declaredStats(fs, p)),
@@ -406,34 +362,39 @@ object BucketedManifest {
     ()
   }
 
-  /** bucketBy only writes through the catalog, so staging goes via a
-    * TEMPORARY external table at a hidden dir: write, drop the
-    * catalog entry (files remain), rename the bucket-named parts into
-    * the root. The names are the payload — they carry the bucket ids.
+  /** Stage `df` as one file per non-empty bucket of `s`: Spark's own
+    * bucketed file writer (the write a bucketed catalog table runs,
+    * here with no table) names each file with its `_NNNNN` bucket id
+    * and sorts it by the keys. Hash-partitioning by the keys first
+    * gives each bucket one writer task, so one file.
     */
-  private def stageBucketed(spark: SparkSession, p: Path,
-      fs: org.apache.hadoop.fs.FileSystem, segment: DataFrame,
-      s: Spec): Seq[String] = {
-    val id = java.util.UUID.randomUUID.toString.replace("-", "")
-    val stage = new Path(p, s".stage-$id")
-    val t = s"graft_bstage_$id"
-    segment.repartition(s.buckets, s.keys.map(col): _*)
-      .write.mode("overwrite")
-      .options(ParquetBlooms.writerOptions(fs, p))
-      .option("path", stage.toString)
-      .bucketBy(s.buckets, s.keys.head, s.keys.tail: _*)
-      .sortBy(s.keys.head, s.keys.tail: _*)
-      .saveAsTable(t)
-    spark.sql(s"DROP TABLE `$t`") // external: metadata only, files stay
-    val out = fs.listStatus(stage).toSeq
+  private def stageBucketed(p: Path, fs: FileSystem, df: DataFrame,
+      s: Spec): Seq[String] =
+    stage(p, fs, df.repartition(s.buckets, s.keys.map(col): _*),
+      Some(BucketSpec(s.buckets, s.keys, s.keys)), identity)
+
+  /** Write `df` as parquet into a hidden dir under the root, with the
+    * bloom writer options, and rename each data file into the root
+    * under `name(part)`: invisible until a manifest lists it. Returns
+    * the root-relative names.
+    */
+  private def stage(p: Path, fs: FileSystem, df: DataFrame,
+      bucketSpec: Option[BucketSpec], name: String => String): Seq[String] = {
+    val spark = df.sparkSession
+    val dir = new Path(p, s".stage-${java.util.UUID.randomUUID}")
+    val write = DataSource(spark, "parquet", bucketSpec = bucketSpec,
+      options = ParquetBlooms.writerOptions(fs, p) + ("path" -> dir.toString))
+      .planForWriting(SaveMode.ErrorIfExists, df.queryExecution.analyzed)
+    spark.sessionState.executePlan(write).commandExecuted
+    val out = fs.listStatus(dir).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .map { st =>
-        val dst = new Path(p, st.getPath.getName)
-        if (!fs.rename(st.getPath, dst))
+        val rel = name(st.getPath.getName)
+        if (!fs.rename(st.getPath, new Path(p, rel)))
           throw new java.io.IOException(s"stage rename failed: ${st.getPath}")
-        st.getPath.getName
+        rel
       }
-    fs.delete(stage, true)
+    fs.delete(dir, true)
     out
   }
 
@@ -455,7 +416,7 @@ object BucketedManifest {
     val s = spec(spark, root)
     require(s.keys.forall(segment.columns.contains),
       s"segment lacks a bucket key of ${s.keys} recorded for $root")
-    val staged = stageBucketed(spark, p, fs, segment, s)
+    val staged = stageBucketed(p, fs, segment, s)
     ManifestLog.failpoint("written:append-bucketed")
     ManifestLog.commitAppend(fs, p,
       ManifestLog.entriesFor(spark, p, staged, declaredStats(fs, p)),
@@ -465,11 +426,12 @@ object BucketedManifest {
 
   /** Compact ONE bucket grain back to a single file, manifest-
     * committed: the grain is the LIVE files whose name parses to
-    * `bucketId`; the replacement is key-sorted and renamed to carry
-    * the same bucket id before the commit swaps grain → replacement
-    * in the list. Retired files stay for pinned readers until
-    * [[ManifestLog.vacuum]]. A lost commit race aborts loudly
-    * ([[ManifestLog.CommitConflict]]) — grain selection was stale.
+    * `bucketId`; every row of it hashes to that bucket, so the bucketed
+    * writer stages one key-sorted file carrying the same bucket id
+    * before the commit swaps grain → replacement in the list. Retired
+    * files stay for pinned readers until [[ManifestLog.vacuum]]. A lost
+    * commit race aborts loudly ([[ManifestLog.CommitConflict]]) — grain
+    * selection was stale.
     */
   def compactBucket(spark: SparkSession, root: String, bucketId: Int): Unit = {
     val (p, fs) = ManifestLog.hadoop(spark, root)
@@ -478,15 +440,15 @@ object BucketedManifest {
     val m = ManifestLog.readRaw(fs, p, v)
     val grain = m.entries.filter(e => bucketIdOf(e.path).contains(bucketId))
     if (grain.length <= 1) return // already compact
-    val rel = stageBucketFile(spark, p, fs,
-      spark.read.parquet(grain.map(e => new Path(p, e.path).toString): _*)
-        .sort(s.keys.map(col): _*),
-      bucketId, keepEmpty = true).getOrElse(
-        throw new IllegalStateException(s"no staged part for bucket $bucketId of $root"))
+    val staged = stageBucketed(p, fs,
+      spark.read.parquet(grain.map(e => new Path(p, e.path).toString): _*), s)
+    if (staged.map(bucketIdOf) != Seq(Some(bucketId)))
+      throw new IllegalStateException(
+        s"compacting bucket $bucketId of $root staged $staged, not one file of that bucket")
     ManifestLog.failpoint("written:compact-bucket")
     ManifestLog.commit(fs, p, v + 1,
       m.entries.diff(grain) ++
-        ManifestLog.entriesFor(spark, p, Seq(rel), declaredStats(fs, p)),
+        ManifestLog.entriesFor(spark, p, staged, declaredStats(fs, p)),
       "compact", m.batchHwm)
   }
 
@@ -577,15 +539,11 @@ object BucketedManifest {
     val touched = perFile.map(_._1).toSeq
     val retired = perFile.count { case (_, total, hits) => hits == total }
     val rowsDeleted = perFile.map(_._3).sum
-    // A fully tombstoned grain stages no replacement (keepEmpty =
-    // false): it retires.
-    val replacements = touched.groupBy(e => bucketIdOf(e.path).get)
-      .toSeq.flatMap { case (b, es) =>
-        stageBucketFile(spark, p, fs,
-          spark.read.parquet(es.map(e => new Path(p, e.path).toString): _*)
-            .join(tomb, Seq(key), "left_anti").sort(key),
-          b, keepEmpty = false)
-      }
+    // One write stages every touched bucket's survivors, one file per
+    // bucket; a fully tombstoned grain has none, so it retires.
+    val replacements = stageBucketed(p, fs,
+      spark.read.parquet(touched.map(e => new Path(p, e.path).toString): _*)
+        .join(tomb, Seq(key), "left_anti"), s)
     val remaining = m.entries.diff(touched)
     require(remaining.nonEmpty || replacements.nonEmpty,
       s"this tombstone set deletes EVERY live row of $root — drop the " +
@@ -613,36 +571,9 @@ object BucketedManifest {
     targets
   }
 
-  /** Stage `df` (already in key order) as ONE file of bucket
-    * `bucketId` under the root, invisible until a manifest lists it:
-    * write it coalesced through a hidden stage dir, then rename the
-    * part to carry the bucket id. A part with no rows is staged only
-    * when `keepEmpty` (a schema-only file); otherwise nothing is.
-    */
-  private def stageBucketFile(spark: SparkSession, p: Path,
-      fs: org.apache.hadoop.fs.FileSystem, df: DataFrame, bucketId: Int,
-      keepEmpty: Boolean): Option[String] = {
-    val stage = new Path(p, s".stage-${java.util.UUID.randomUUID}")
-    df.coalesce(1).write.mode("overwrite")
-      .options(ParquetBlooms.writerOptions(fs, p))
-      .parquet(stage.toString)
-    val conf = spark.sessionState.newHadoopConf()
-    val out = fs.listStatus(stage).toSeq
-      .find(st => st.isFile && st.getPath.getName.startsWith("part-") &&
-        (keepEmpty || ManifestLog.fileRowCount(st.getPath, conf) > 0L))
-      .map { st =>
-        val rel = bucketNamed(st.getPath.getName, bucketId)
-        if (!fs.rename(st.getPath, new Path(p, rel)))
-          throw new java.io.IOException(s"stage rename failed: ${st.getPath}")
-        rel
-      }
-    fs.delete(stage, true)
-    out
-  }
-
   /** Spark maps a data file to its bucket by NAME — the trailing
-    * `_NNNNN` id before the extensions (BucketingUtils' contract, which
-    * bucketBy's writer follows when naming files).
+    * `_NNNNN` id before the extensions (BucketingUtils' contract; the
+    * bucketed file writer in [[stageBucketed]] names its files by it).
     */
   private val BucketFileName = """.*_(\d+)(?:\..*)?$""".r
 
@@ -653,8 +584,8 @@ object BucketedManifest {
   }
 
   /** Splice a bucket id between a plain part name's stem and its
-    * extensions ("part-...-c000" + "_00007" + ".snappy.parquet"), so
-    * a replacement file parses to its grain's bucket.
+    * extensions ("part-...-c000" + "_00000" + ".snappy.parquet"), so
+    * an empty build's schema-only file parses to a bucket.
     */
   private def bucketNamed(partName: String, bucketId: Int): String = {
     val dot = partName.indexOf('.')

@@ -390,10 +390,15 @@ object Snapshots {
     paths = new java.util.concurrent.ConcurrentHashMap
 
   private def rootOf(dir: String, fp: String, name: String): String =
-    // md5 of the corpus dir, not hashCode: hashCode collisions between
-    // two corpus dirs would silently serve wrong-corpus artifacts (and
-    // abs(Int.MinValue) is negative).
-    s"${System.getProperty("java.io.tmpdir")}/graft-snap-${md5Hex(dir).take(12)}-$fp-$name"
+    s"${System.getProperty("java.io.tmpdir")}/${rootPrefix(dir)}$fp-$name"
+
+  /** The name prefix of every artifact root built from corpus `dir`
+    * under `java.io.tmpdir`. md5 of the corpus dir, not hashCode:
+    * hashCode collisions between two corpus dirs would silently serve
+    * wrong-corpus artifacts (and abs(Int.MinValue) is negative).
+    */
+  private[graft] def rootPrefix(dir: String): String =
+    s"graft-snap-${md5Hex(dir).take(12)}-"
 
   /** The one memo every artifact kind goes through: `build(root)` runs
     * at most once per (corpus, name, fingerprint) in this JVM, and only
@@ -610,7 +615,7 @@ object Snapshots {
     val fp = fingerprint(spark, dir)
     val tmp = new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir"))
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pPrefix = s"graft-snap-${md5Hex(dir).take(12)}-"
+    val pPrefix = rootPrefix(dir)
     val pKeep = s"$pPrefix$fp-"
     val stale = if (!fs.exists(tmp)) Nil else fs.listStatus(tmp).toSeq
       .map(_.getPath)

@@ -11,11 +11,40 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   // Stable path for `import sqlImplicits._` in subclasses.
   val sqlImplicits: org.apache.spark.sql.SQLImplicits = SparkTestBase.session.implicits
+
+  /** The query executions `body` runs, as the session's listeners see
+    * them. Listener events arrive asynchronously, so a marker query runs
+    * last and the collection waits until the listener has seen it.
+    */
+  def executionsOf(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe)
+    }
+    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == "executions_marker")
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("executions_marker").collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(isMarker), "the query listener never saw the marker query")
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.filterNot(isMarker).toSeq
+  }
 }
 
 /** Per-suite temp corpus dirs with deep cleanup in afterAll — fixture
   * parquet is multi-MB per encoding and would otherwise accumulate in
-  * tmpdir across runs. Mix in, create dirs via [[tempCorpusDir]].
+  * tmpdir across runs. The cleanup also takes the `graft-snap-*`
+  * artifact roots built from each dir: their names carry the dir's
+  * hash, so no later run can reuse them. Mix in, create dirs via
+  * [[tempCorpusDir]].
   */
 trait TempCorpusDirs extends org.scalatest.BeforeAndAfterAll {
   this: org.scalatest.Suite =>
@@ -27,11 +56,16 @@ trait TempCorpusDirs extends org.scalatest.BeforeAndAfterAll {
   }
   override def afterAll(): Unit = {
     import scala.jdk.CollectionConverters._
-    tmpDirs.foreach { d =>
-      val p = java.nio.file.Paths.get(d)
+    def deleteTree(p: java.nio.file.Path): Unit =
       if (java.nio.file.Files.exists(p))
         java.nio.file.Files.walk(p).iterator().asScala.toSeq
           .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    tmpDirs.foreach { d =>
+      deleteTree(java.nio.file.Paths.get(d))
+      val prefix = graft.util.Snapshots.rootPrefix(d)
+      Option(tmp.listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith(prefix)).foreach(f => deleteTree(f.toPath))
     }
     super.afterAll()
   }

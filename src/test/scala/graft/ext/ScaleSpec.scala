@@ -1,15 +1,14 @@
 package graft.ext
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 
-/** Plan-level assertions for the scale helpers: bucketing must remove
+/** Plan-level assertions for the scale layouts: bucketing must remove
   * the shuffle, partitioning must prune at the scan, salting must not
   * change results. String-matching executed plans is deliberate — these
   * properties regress silently otherwise.
   */
-class ScaleSpec extends SparkTestBase {
+class ScaleSpec extends SparkTestBase with graft.TempCorpusDirs {
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // materialize so AQE finalizes the plan
@@ -20,14 +19,15 @@ class ScaleSpec extends SparkTestBase {
     import sqlImplicits._
     val facts = (1L to 1000L).map(i => (i % 100, i, i * 1.5)).toDF("k", "id", "v")
     val dims = (0L until 100L).map(i => (i, s"dim$i")).toDF("k", "name")
-    Scale.writeBucketed(facts, "bktest_facts", "k", 8)
-    Scale.writeBucketed(dims, "bktest_dims", "k", 8)
+    val dir = tempCorpusDir("graft_bktest")
+    graft.util.BucketedManifest.build(facts, s"$dir/facts", Seq("k"), 8)
+    graft.util.BucketedManifest.build(dims, s"$dir/dims", Seq("k"), 8)
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ, not broadcast
     try {
-      val joined = spark.table("bktest_facts")
-        .join(spark.table("bktest_dims"), "k")
+      val joined = graft.util.BucketedManifest.read(spark, s"$dir/facts")
+        .join(graft.util.BucketedManifest.read(spark, s"$dir/dims"), "k")
       val plan = executedPlan(joined)
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join should not shuffle:\n$plan")
@@ -41,7 +41,7 @@ class ScaleSpec extends SparkTestBase {
 
   test("partitioned-at-rest layout prunes partitions at the scan") {
     import sqlImplicits._
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = tempCorpusDir("graft_part")
     val df = (1 to 300).map(i => (i.toLong, 2000 + i % 3, s"t$i")).toDF("id", "year", "title")
     Scale.writePartitioned(df, s"$dir/facts", "year")
 
@@ -54,52 +54,9 @@ class ScaleSpec extends SparkTestBase {
     assert(pruned.select("year").distinct().collect().map(_.getInt(0)).toSeq == Seq(2001))
   }
 
-  test("compaction rewrites many small files into few, preserving data") {
-    import sqlImplicits._
-    val dir = Files.createTempDirectory("graft_compact").toString
-    val df = (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v")
-    df.repartition(32).write.parquet(s"$dir/t") // 32 tiny files
-    def parquetFiles = new java.io.File(s"$dir/t").listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(parquetFiles == 32)
-
-    Scale.compact(spark, s"$dir/t", 2)
-    assert(parquetFiles == 2)
-    val back = spark.read.parquet(s"$dir/t")
-    assert(back.count() == 1000)
-    assert(back.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) == 500500L)
-  }
-
-  test("compaction interrupted between the two renames heals on the next run") {
-    import sqlImplicits._
-    val dir = Files.createTempDirectory("graft_compact_crash").toString
-    val df = (1L to 500L).map(i => (i, s"v$i")).toDF("id", "v")
-    df.repartition(8).write.parquet(s"$dir/t")
-
-    // Simulate the crash window: a previous compact() wrote the rewrite
-    // to .compact-tmp and moved the live table aside to .compact-old,
-    // then died before the second rename — nothing is at `path`.
-    val fs = new org.apache.hadoop.fs.Path(s"$dir/t")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(s"$dir/t").repartition(2)
-      .write.parquet(s"$dir/t.compact-tmp")
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(s"$dir/t"),
-      new org.apache.hadoop.fs.Path(s"$dir/t.compact-old")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/t")))
-
-    // The next compact() must first restore the set-aside table, then
-    // complete normally — no data lost, table back at `path`.
-    Scale.compact(spark, s"$dir/t", 2)
-    val back = spark.read.parquet(s"$dir/t")
-    assert(back.count() == 500)
-    assert(back.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) == 125250L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/t.compact-old")))
-  }
-
   test("dynamic partition overwrite refreshes one partition, leaves the rest intact") {
     import sqlImplicits._
-    val dir = Files.createTempDirectory("graft_dpo").toString
+    val dir = tempCorpusDir("graft_dpo")
     val full = (1 to 300).map(i => (i.toLong, 2000 + i % 3, s"v$i")).toDF("id", "year", "v")
     Scale.writePartitioned(full, s"$dir/t", "year")
     assert(spark.read.parquet(s"$dir/t").count() == 300)

@@ -7,14 +7,13 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkTestBase
 import graft.sources.{ParquetWarehouse, Warehouse}
 
@@ -23,7 +22,7 @@ import graft.sources.{ParquetWarehouse, Warehouse}
   * and checks the flagship aggregate end to end, including the
   * clear/header/chunk sink contract.
   */
-class PipelineSpec extends SparkTestBase {
+class PipelineSpec extends SparkTestBase with graft.TempCorpusDirs {
 
   private def writeFixtureCsv(dir: String): String = {
     // FIXTURES.md §A rows: padded genres, bad dates/numerics, nulls, ties.
@@ -41,7 +40,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("ingest → transform → publish: row accounting and flagship aggregate") {
-    val dir = Files.createTempDirectory("graft_pipeline").toString
+    val dir = tempCorpusDir("graft_pipeline")
     val csvPath = writeFixtureCsv(dir)
     val wh = s"$dir/warehouse"
 
@@ -88,7 +87,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("full orchestrator run: ingest → transform → publish all three tables (R1)") {
-    val dir = Files.createTempDirectory("graft_full_run").toString
+    val dir = tempCorpusDir("graft_full_run")
     val csvPath = writeFixtureCsv(dir)
     MoviePipeline.run(spark, csvPath, s"$dir/wh", new CsvFileSink(s"$dir/sheets"))
     // All three sinks published; the capped tables carry the row cap
@@ -114,7 +113,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("CSV ingest parses RFC-4180 doubled quotes like pandas (quoted commas and quotes)") {
-    val dir = Files.createTempDirectory("graft_csv_quotes").toString
+    val dir = tempCorpusDir("graft_csv_quotes")
     val csv =
       """id,title,genres
         |1,"Movie, with comma","Action, Drama"
@@ -131,7 +130,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("transform writes one file per release_year directory and returns the rows it wrote") {
-    val dir = Files.createTempDirectory("graft_pipeline_layout").toString
+    val dir = tempCorpusDir("graft_pipeline_layout")
     val csvDir = s"$dir/csv"
     ScaleSmoke.syntheticMovies(spark, 4000).repartition(4).write
       .option("header", "true").option("quote", "\"").option("escape", "\"")
@@ -159,7 +158,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("publish streams every row when the first partitions are empty") {
     import sqlImplicits._
-    val dir = Files.createTempDirectory("graft_publish_sparse").toString
+    val dir = tempCorpusDir("graft_publish_sparse")
     // Four range partitions of 10 ids each; only the last survives.
     val df = spark.range(0, 40, 1, 4).filter($"id" >= 30).toDF()
     assert(df.rdd.getNumPartitions == 4)
@@ -170,7 +169,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("publish empty-frame guard skips the sink entirely (F5)") {
-    val dir = Files.createTempDirectory("graft_publish_empty").toString
+    val dir = tempCorpusDir("graft_publish_empty")
     import sqlImplicits._
     val empty = Seq.empty[(Long, Double)].toDF("id", "v")
     val sink = new CsvFileSink(dir)
@@ -186,30 +185,6 @@ class PipelineSpec extends SparkTestBase {
       tables(table) += columns
     override def appendChunk(table: String, rows: Seq[Seq[Any]]): Unit =
       tables(table) ++= rows
-  }
-
-  /** The query executions `body` runs, as the session's listeners see
-    * them. Listener events arrive asynchronously, so a marker query runs
-    * last and the collection waits until the listener has seen it.
-    */
-  private def executionsOf(body: => Unit): Seq[QueryExecution] = {
-    val seen = new ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(qe)
-    }
-    def isMarker(qe: QueryExecution) = qe.analyzed.output.exists(_.name == "executions_marker")
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).toDF("executions_marker").collect()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.asScala.exists(isMarker), "the query listener never saw the marker query")
-    } finally spark.listenerManager.unregister(listener)
-    seen.asScala.filterNot(isMarker).toSeq
   }
 
   /** Every node of an executed plan, through adaptive plans and query
@@ -228,7 +203,7 @@ class PipelineSpec extends SparkTestBase {
     nodes(p).collect { case s: InMemoryTableScanExec => s }
 
   test("run reads no table back and cleans the raw table once, through one persisted relation") {
-    val dir = Files.createTempDirectory("graft_run_plans").toString
+    val dir = tempCorpusDir("graft_run_plans")
     val csvPath = writeFixtureCsv(dir)
     val wh = s"$dir/wh"
     val sink = new MemorySink
@@ -268,7 +243,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("a failing sink propagates out of run and leaves nothing persisted") {
-    val dir = Files.createTempDirectory("graft_run_sink_fails").toString
+    val dir = tempCorpusDir("graft_run_sink_fails")
     val csvPath = writeFixtureCsv(dir)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     var persistedDuringPublish = Set.empty[Int]
@@ -288,7 +263,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("a failed table write surfaces only after the other two writes finish") {
-    val dir = Files.createTempDirectory("graft_transform_write_fails").toString
+    val dir = tempCorpusDir("graft_transform_write_fails")
     val csvPath = writeFixtureCsv(dir)
     MoviePipeline.ingest(spark, csvPath, s"$dir/raw")
     val finished = new ConcurrentLinkedQueue[String]()

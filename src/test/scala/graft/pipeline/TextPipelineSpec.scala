@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 
@@ -10,12 +9,12 @@ import graft.SparkTestBase
   * byte-deterministic, and the stage rules must agree with the
   * declared queries they share formulas with.
   */
-class TextPipelineSpec extends SparkTestBase {
+class TextPipelineSpec extends SparkTestBase with graft.TempCorpusDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
   test("pipeline runs end to end with monotone stage counts and a consistent at-rest corpus") {
-    val out = Files.createTempDirectory("graft_text_pipeline").toString
+    val out = tempCorpusDir("graft_text_pipeline")
     val c = TextPipeline.run(spark, sf, out)
     assert(c.total > 0)
     assert(c.total >= c.kept && c.kept >= c.deduped && c.deduped >= c.mixed,
@@ -29,8 +28,8 @@ class TextPipelineSpec extends SparkTestBase {
   }
 
   test("reruns are deterministic: same corpus, same counts, same survivor ids") {
-    val out1 = Files.createTempDirectory("graft_text_pipeline_a").toString
-    val out2 = Files.createTempDirectory("graft_text_pipeline_b").toString
+    val out1 = tempCorpusDir("graft_text_pipeline_a")
+    val out2 = tempCorpusDir("graft_text_pipeline_b")
     val c1 = TextPipeline.run(spark, sf, out1)
     val c2 = TextPipeline.run(spark, sf, out2)
     assert(c1 == c2)
@@ -41,7 +40,7 @@ class TextPipelineSpec extends SparkTestBase {
   }
 
   test("the gate stage agrees with the declared q77 accounting") {
-    val out = Files.createTempDirectory("graft_text_pipeline_q").toString
+    val out = tempCorpusDir("graft_text_pipeline_q")
     val c = TextPipeline.run(spark, sf, out)
     val keptPerQ77 = graft.SparkEntry.queries("q77_quality_gate")(spark, sf)
       .agg(org.apache.spark.sql.functions.sum("n_kept")).collect()(0).getLong(0)

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.util.Random
 
 import org.apache.spark.sql.functions.col
@@ -23,7 +22,7 @@ import graft.{SparkEntry, SparkTestBase}
   * pathological (all drawn from ONE tight cluster), the Lloyd-trained
   * quantizer must beat the untrained seeding on recall (VERDICT r2 #2).
   */
-class AnnQualitySpec extends SparkTestBase {
+class AnnQualitySpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val Dim = 64
@@ -45,7 +44,7 @@ class AnnQualitySpec extends SparkTestBase {
       (10 until 64).map(i => (i.toLong, noisyBasis(rng, (i - 10) % Clusters)))
   }
   private lazy val plantedDir: String = {
-    val dir = Files.createTempDirectory("graft_ann_quality").toString
+    val dir = tempCorpusDir("graft_ann_quality")
     plantedRows.toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     dir
@@ -123,7 +122,7 @@ class AnnQualitySpec extends SparkTestBase {
 
   private def randomCorpus(n: Int, seed: Int): String = {
     val rng = new Random(seed)
-    val dir = Files.createTempDirectory(s"graft_ann_scale_$n").toString
+    val dir = tempCorpusDir(s"graft_ann_scale_$n")
     (0 until n).map(i => (i.toLong, Seq.fill(Dim)(rng.nextFloat() * 2f - 1f)))
       .toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
@@ -155,7 +154,7 @@ class AnnQualitySpec extends SparkTestBase {
     // alone is ~72k pairs and grows O(cell²) with the hot-spot.
     val rng = new Random(37)
     val n = 400
-    val dir = Files.createTempDirectory("graft_ann_hotcell").toString
+    val dir = tempCorpusDir("graft_ann_hotcell")
     ((0 until 20).map(i => (i.toLong, noisyBasis(rng, i))) ++
       (20 until n).map(i => (i.toLong, noisyBasis(rng, 0))))
       .toDF("vec_id", "embedding")
@@ -195,7 +194,7 @@ class AnnQualitySpec extends SparkTestBase {
     // how much mass the hot direction attracts.
     val rng = new Random(43)
     val n = 400
-    val dir = Files.createTempDirectory("graft_ann_hotneg").toString
+    val dir = tempCorpusDir("graft_ann_hotneg")
     ((0 until 20).map(i => (i.toLong, noisyBasis(rng, i))) ++
       (20 until n).map(i => (i.toLong, noisyBasis(rng, 0))))
       .map { case (id, emb) => (id, emb, (id % 2).toInt) }
@@ -242,7 +241,7 @@ class AnnQualitySpec extends SparkTestBase {
     // second; MMR must put vec 3 there. Distant-direction vecs 4..59
     // fill the recall set.
     val rng = new Random(41)
-    val dir = Files.createTempDirectory("graft_ann_mmr").toString
+    val dir = tempCorpusDir("graft_ann_mmr")
     val near1 = noisyBasis(rng, 0)
     val near3 = noisyBasis(rng, 0)
     val rows = Seq(
@@ -274,7 +273,7 @@ class AnnQualitySpec extends SparkTestBase {
     // EXCEPT vec 10 (cluster 0, flipped to label 1) and vec 41
     // (cluster 7, flipped to label 0) — planted label noise.
     val flipped = Map(10L -> 1, 41L -> 0)
-    val dir = Files.createTempDirectory("graft_ann_labels").toString
+    val dir = tempCorpusDir("graft_ann_labels")
     plantedRows
       .map { case (id, emb) =>
         (id, emb, flipped.getOrElse(id, plantedClusterOf(id).toInt))
@@ -316,7 +315,7 @@ class AnnQualitySpec extends SparkTestBase {
     // search misses its true neighbors. Training must recover most of
     // the recall by moving centroids onto the actual mass.
     val rng = new Random(23)
-    val dir = Files.createTempDirectory("graft_ann_skew").toString
+    val dir = tempCorpusDir("graft_ann_skew")
     val rows =
       (0 until 10).map(i => (i.toLong, noisyBasis(rng, 0))) ++
         (10 until 100).map(i => (i.toLong, noisyBasis(rng, 1 + (i - 10) % 9)))
@@ -385,7 +384,7 @@ class AnnQualitySpec extends SparkTestBase {
     */
   test("semantic decontam flags benchmark-direction vectors and passes novel directions") {
     val rng = new Random(41)
-    val dir = Files.createTempDirectory("graft_semantic_decontam").toString
+    val dir = tempCorpusDir("graft_semantic_decontam")
     val rows =
       (0 until 50).map(i => (i.toLong, noisyBasis(rng, i % 8))) ++
         (50 until 60).map(i => (i.toLong, noisyBasis(rng, i % 8))) ++
@@ -411,7 +410,7 @@ class AnnQualitySpec extends SparkTestBase {
     * assignment is perfect on this geometry, proven above).
     */
   test("cluster profile reports the planted language mix per cluster") {
-    val dir = Files.createTempDirectory("graft_cluster_profile").toString
+    val dir = tempCorpusDir("graft_cluster_profile")
     plantedRows.toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     plantedRows.map { case (id, _) =>
@@ -492,7 +491,7 @@ class AnnQualitySpec extends SparkTestBase {
       .select(col("vec_id"), col("embedding"))
       .withColumn("nrm", l2Norm(col("embedding")))
     def atRest(df: org.apache.spark.sql.DataFrame, tick: Int) = {
-      val out = s"${Files.createTempDirectory("graft_ann_mb")}/sizes-t$tick"
+      val out = s"${tempCorpusDir("graft_ann_mb")}/sizes-t$tick"
       df.write.mode("overwrite").parquet(out)
       spark.read.parquet(out)
     }

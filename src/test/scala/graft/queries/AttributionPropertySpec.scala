@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.util.Random
 
 import graft.{SparkEntry, SparkTestBase}
@@ -18,7 +17,7 @@ import graft.{SparkEntry, SparkTestBase}
   * micro-credit division (1e6·a div np) whose per-purchase remainders
   * must match the reference exactly, not just sum close.
   */
-class AttributionPropertySpec extends SparkTestBase {
+class AttributionPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val rng = new Random(147)
@@ -70,7 +69,7 @@ class AttributionPropertySpec extends SparkTestBase {
           Ev(id, u.toLong, tpe, sec * 1000000L, k)
         }
       }
-      val dir = Files.createTempDirectory(s"graft_attr_fuzz$round").toString
+      val dir = tempCorpusDir(s"graft_attr_fuzz$round")
       rows.map { e =>
         val props = e.k match {
           case Some(v) if round == 6 && v == 0L => """{"k": "oops"}""" // try_cast → null → ch-1

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.util.Random
 
 import graft.{SparkEntry, SparkTestBase}
@@ -18,7 +17,7 @@ import graft.{SparkEntry, SparkTestBase}
   *   - q96 cluster-balanced sampling clips dense cells to the cap,
   *     keeps sparse cells whole, and is deterministic across runs.
   */
-class CurationQualitySpec extends SparkTestBase {
+class CurationQualitySpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val rng = new Random(91)
@@ -33,7 +32,7 @@ class CurationQualitySpec extends SparkTestBase {
     Seq.fill(n)(v(rng.nextInt(v.length))).mkString(" ")
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_curation_quality").toString
+    val dir = tempCorpusDir("graft_curation_quality")
     rows.map { case (id, text, source) => (id, text, "en", source, text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -161,7 +160,7 @@ class CurationQualitySpec extends SparkTestBase {
       (0 until 6).map(c => (c.toLong, noisyBasis(c))) ++
         (6 until 21).map(i => (i.toLong, noisyBasis(0))) ++
         (21 until 36).map(i => (i.toLong, noisyBasis(1 + (i - 21) % 5)))
-    val dir = Files.createTempDirectory("graft_q96").toString
+    val dir = tempCorpusDir("graft_q96")
     rows.toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
 
@@ -497,7 +496,7 @@ class CurationQualitySpec extends SparkTestBase {
       (i, (0 until 34).map(j => s"e${i}t$j").mkString(" "), "en"))
     val fr = (6L until 10L).map(i =>
       (i, (0 until 14).map(j => s"f${i}t$j").mkString(" "), "fr"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sweep").toString
+    val dir = tempCorpusDir("graft_sweep")
     (en ++ fr).map { case (id, text, lang) => (id, text, lang, "src", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")

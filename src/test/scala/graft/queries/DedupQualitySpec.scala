@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.util.Random
 
 import graft.{SparkEntry, SparkTestBase}
@@ -18,7 +17,7 @@ import graft.{SparkEntry, SparkTestBase}
   *     nothing inside a cluster larger than RareShingleCap,
   *   - the rolling fingerprint (q75) is identical across exact copies.
   */
-class DedupQualitySpec extends SparkTestBase {
+class DedupQualitySpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val rng = new Random(123)
@@ -32,7 +31,7 @@ class DedupQualitySpec extends SparkTestBase {
 
   /** One corpus dir with the documents schema the queries expect. */
   private lazy val corpusDir: String = {
-    val dir = Files.createTempDirectory("graft_dedup_quality").toString
+    val dir = tempCorpusDir("graft_dedup_quality")
 
     val identicalText = sentence(40) // cluster A: 25 exact copies
     val clusterA = (0L until 25L).map(i => (i, identicalText))
@@ -112,7 +111,7 @@ class DedupQualitySpec extends SparkTestBase {
     * round to converge. Background docs must not appear at all.
     */
   private lazy val chainDir: String = {
-    val dir = Files.createTempDirectory("graft_cc_quality").toString
+    val dir = tempCorpusDir("graft_cc_quality")
     val cliqueText = sentence(40)
     val clique = (0L until 3L).map(i => (i, cliqueText))
     val base = sentence(40).split(" ")
@@ -185,7 +184,7 @@ class DedupQualitySpec extends SparkTestBase {
     // bands, stricter ham ≤ 3 threshold — is what executes; the planted
     // identical pair has hamming 0 and must surface under ANY derived
     // layout (pigeonhole completeness is width-invariant at ham 0).
-    val dir = Files.createTempDirectory("graft_simhash_wide").toString
+    val dir = tempCorpusDir("graft_simhash_wide")
     val wideRng = new scala.util.Random(7)
     def s(n: Int) = Seq.fill(n)(vocab(wideRng.nextInt(vocab.length))).mkString(" ")
     val dup = s(40)
@@ -252,7 +251,7 @@ class DedupQualitySpec extends SparkTestBase {
     val docB = toks("h", 5) ++ span ++ toks("k", 30)             // 49 tokens, span at 6
     val docC = toks("c", 20) ++ span.take(8) ++ toks("d", 20)    // 8 shared < 12: clean
     val docD = toks("z", 30)
-    val dir = java.nio.file.Files.createTempDirectory("graft_span_quality").toString
+    val dir = tempCorpusDir("graft_span_quality")
     Seq(docA, docB, docC, docD).zipWithIndex
       .map { case (t, i) => (i.toLong, t.mkString(" "), "en", "src0", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 
 import graft.{SparkEntry, SparkTestBase}
 
@@ -9,7 +8,7 @@ import graft.{SparkEntry, SparkTestBase}
   * must flag, ordinary baseline wiggle must not, and minutes without a
   * full (or non-degenerate) baseline must not appear at all.
   */
-class EventsQualitySpec extends SparkTestBase {
+class EventsQualitySpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val BaseUs = 1704067200000000L // 2024-01-01T00:00:00Z
@@ -37,7 +36,7 @@ class EventsQualitySpec extends SparkTestBase {
         (m * 1000L + i, m.toLong, "click", tsUs, 1.0)
       }
     }
-    val dir = Files.createTempDirectory("graft_event_anomaly").toString
+    val dir = tempCorpusDir("graft_event_anomaly")
     writeEvents(dir, rows.toDF("event_id", "user_id", "event_type", "ts", "value"))
 
     val out = SparkEntry.queries("q115_event_anomaly")(spark, dir)
@@ -65,7 +64,7 @@ class EventsQualitySpec extends SparkTestBase {
       ev(4, 1, "B", 4), ev(5, 1, "A", 5),
       ev(6, 2, "C", 10),
     )
-    val dir = Files.createTempDirectory("graft_scd2").toString
+    val dir = tempCorpusDir("graft_scd2")
     writeEvents(dir, rows.toDF("event_id", "user_id", "event_type", "ts", "value"))
 
     val out = SparkEntry.queries("q142_scd2_history")(spark, dir)
@@ -126,7 +125,7 @@ class EventsQualitySpec extends SparkTestBase {
       ev(7, 5, "E", 40), ev(8, 5, "E", 100), // absorption (span anchor)
       ev(9, 6, "A", 50), ev(10, 6, "B", 82), ev(11, 6, "C", 88), ev(12, 6, "B", 93),
     )
-    val dir = Files.createTempDirectory("graft_scd2_merge").toString
+    val dir = tempCorpusDir("graft_scd2_merge")
     writeEvents(dir, rows.toDF("event_id", "user_id", "event_type", "ts", "value"))
 
     def collect(q: String) = SparkEntry.queries(q)(spark, dir)
@@ -165,7 +164,7 @@ class EventsQualitySpec extends SparkTestBase {
       ev(8, 2, "purchase", 118 * m, 0),
       ev(9, 3, "purchase", 500 * m, 0),
     )
-    val dir = Files.createTempDirectory("graft_multitouch").toString
+    val dir = tempCorpusDir("graft_multitouch")
     writeEvents(dir,
       rows.toDF("event_id", "user_id", "event_type", "ts", "value", "props"))
     val out = SparkEntry.queries("q147_multitouch_attribution")(spark, dir)
@@ -190,7 +189,7 @@ class EventsQualitySpec extends SparkTestBase {
       ev(4, 1, "purchase", 4), ev(5, 1, "A", 5),
       ev(6, 2, "C", 10), ev(7, 2, "purchase", 12), ev(8, 2, "C", 14),
     )
-    val dir = Files.createTempDirectory("graft_scd2_lookup").toString
+    val dir = tempCorpusDir("graft_scd2_lookup")
     writeEvents(dir, rows.toDF("event_id", "user_id", "event_type", "ts", "value"))
     val out = SparkEntry.queries("q149_scd2_lookup")(spark, dir)
       .collect()
@@ -218,7 +217,7 @@ class EventsQualitySpec extends SparkTestBase {
       burst("e", 5, 3, 78) ++
       burst("a", 12, 80, 100) ++ burst("b", 2, 81, 99) ++ burst("c", 6, 82, 99) ++
       burst("d", 3, 83, 98)
-    val dir = Files.createTempDirectory("graft_drift").toString
+    val dir = tempCorpusDir("graft_drift")
     writeEvents(dir,
       rows.toDF("event_id", "user_id", "event_type", "ts", "value", "props"))
     val collected = SparkEntry.queries("q148_snapshot_drift")(spark, dir).collect()

@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.util.Random
 
 import org.apache.spark.sql.functions._
@@ -25,7 +24,7 @@ import graft.{SparkEntry, SparkTestBase}
   *      from-scratch build on a byte-identical corpus copy — the
   *      merge==rebuild discipline applied to the refresh path.
   */
-class QuantizerRefreshSpec extends SparkTestBase {
+class QuantizerRefreshSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val Dim = 64
@@ -51,7 +50,7 @@ class QuantizerRefreshSpec extends SparkTestBase {
   }
 
   private def writeCorpus(): String = {
-    val dir = Files.createTempDirectory("graft_qrefresh").toString
+    val dir = tempCorpusDir("graft_qrefresh")
     rows.toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     dir
@@ -101,7 +100,7 @@ class QuantizerRefreshSpec extends SparkTestBase {
       .withColumn("nrm", graft.functions.VectorFunctions.l2Norm(col("embedding")))
     val frozenAssigned = Similarity.assign(all, frozenCents)
       .select("vec_id", "embedding", "nrm", "cluster")
-    val stale = s"${Files.createTempDirectory("graft_qstale")}/stale-assigned"
+    val stale = s"${tempCorpusDir("graft_qstale")}/stale-assigned"
     frozenAssigned.write.parquet(stale)
     graft.util.Snapshots.install(spark, unionDir, "ivf-assigned-i2", stale)
     val mergedBefore = Similarity.cellSizesOf(frozenAssigned)

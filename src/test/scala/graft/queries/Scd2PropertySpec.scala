@@ -1,6 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
 import scala.util.Random
 
 import graft.{SparkEntry, SparkTestBase}
@@ -13,7 +12,7 @@ import graft.{SparkEntry, SparkTestBase}
   * equal q142 whatever the random base/batch split looks like
   * (empty new batches, single-run users, all-changes users).
   */
-class Scd2PropertySpec extends SparkTestBase {
+class Scd2PropertySpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val rng = new Random(173)
@@ -46,7 +45,7 @@ class Scd2PropertySpec extends SparkTestBase {
           (id, u.toLong, s"S${rng.nextInt(3)}", rng.nextInt(16) * 1000000L)
         }
       }
-      val dir = Files.createTempDirectory(s"graft_scd2_fuzz$round").toString
+      val dir = tempCorpusDir(s"graft_scd2_fuzz$round")
       rows.map { case (e, u, t, us) => (e, u, t, us, 0.0) }
         .toDF("event_id", "user_id", "event_type", "ts", "value")
         // NTZ micros — the live corpus's encoding (the loader's footer
@@ -99,7 +98,7 @@ class Scd2PropertySpec extends SparkTestBase {
           if (rng.nextInt(10) == 0) None
           else Some(rng.nextInt(tsSpanSec).toLong * 1000000L))
       }
-      val dir = Files.createTempDirectory(s"graft_ps_fuzz$round").toString
+      val dir = tempCorpusDir(s"graft_ps_fuzz$round")
       rows.map { case (pk, sk, q, pr, us) =>
         (pk, sk, q, pr, us.map(u => java.time.LocalDateTime.ofEpochSecond(
           u / 1000000L, 0, java.time.ZoneOffset.UTC)).orNull)

@@ -187,25 +187,20 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       // r22: the orderkey projection grew o_orderpriority (q137).
       .withColumn("o_orderpriority",
         when(col("o_orderkey") % 5 === 0, "1-URGENT").otherwise("3-MEDIUM"))
-    val tag = System.nanoTime()
-    val liTable = s"graft_seg_li_$tag"
-    val ordTable = s"graft_seg_ord_$tag"
     // Two segments per layout, split so both segments hit EVERY bucket
     // (key mod 2 is independent of the bucket hash) — each bucket
     // holds one file per segment. The first is the one-shot bucketed
-    // build (the orderkey pair's 32 buckets), adopted as a manifested
-    // layout; the second appends through the manifest.
-    def pair(df: DataFrame, key: String, table: String): String = {
-      df.filter(col(key) % 2 === 0).repartition(32, col(key)).write
-        .option("path", s"${tempCorpusDir(s"graft_seg_$table")}/t")
-        .bucketBy(32, key).sortBy(key).saveAsTable(table)
-      val root = graft.util.BucketedManifest.adoptTable(spark, table)
+    // build (the orderkey pair's 32 buckets); the second appends
+    // through the manifest.
+    def pair(df: DataFrame, key: String, name: String): String = {
+      val root = s"${tempCorpusDir(s"graft_seg_$name")}/t"
+      graft.util.BucketedManifest.build(df.filter(col(key) % 2 === 0), root, Seq(key), 32)
       graft.util.BucketedManifest.appendBucketed(df.filter(col(key) % 2 === 1), root)
       root
     }
-    val liRoot = pair(li, "l_orderkey", liTable)
+    val liRoot = pair(li, "l_orderkey", "li")
     val bktLi = graft.util.BucketedManifest.read(spark, liRoot)
-    val bktOrd = graft.util.BucketedManifest.read(spark, pair(orders, "o_orderkey", ordTable))
+    val bktOrd = graft.util.BucketedManifest.read(spark, pair(orders, "o_orderkey", "ord"))
     // Multi-file buckets genuinely exercised: more files than buckets.
     assert(bktLi.inputFiles.length > 32,
       s"lineitem buckets are single-file (${bktLi.inputFiles.length}) — append produced no second segment")

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 import graft.functions.TextFunctions.qualityScore
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   * gating, within-batch dedup, and cross-batch dedup against the
   * digest index the stream itself maintains.
   */
-class DocStreamSpec extends SparkTestBase {
+class DocStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   // Long diverse sentences pass the q63/q77 quality floor (0.6 needs
@@ -25,7 +24,7 @@ class DocStreamSpec extends SparkTestBase {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
 
   test("micro-batches gate quality, dedup within the batch, and dedup against prior batches") {
-    val root = Files.createTempDirectory("graft_docstream").toString
+    val root = tempCorpusDir("graft_docstream")
     val (src, curated, index, ckpt) =
       (s"$root/src", s"$root/curated", s"$root/index", s"$root/ckpt")
     // Seed batch 1 before the stream starts.
@@ -65,7 +64,7 @@ class DocStreamSpec extends SparkTestBase {
     // after the crash; the staged-publish protocol must wipe the half
     // batch and converge to exactly the clean-run state instead of
     // duplicating survivors.
-    val root = Files.createTempDirectory("graft_docstream_torn").toString
+    val root = tempCorpusDir("graft_docstream_torn")
     val (curated, index) = (s"$root/curated", s"$root/index")
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -11,7 +11,7 @@ case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double, e
   * incremental plans produce the same aggregates as their batch twins
   * (which are themselves DuckDB-oracle-checked in queries.Events).
   */
-class EventStreamSpec extends SparkTestBase {
+class EventStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private def t(s: String) = Timestamp.valueOf(s)
@@ -253,7 +253,7 @@ class EventStreamSpec extends SparkTestBase {
   }
 
   test("file-source incremental pipeline: parquet drops → windowed aggregates → parquet out") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempCorpusDir("graft_stream")
     val (src, out, ckpt) = (s"$dir/src", s"$dir/out", s"$dir/ckpt")
     val schema = batch1.toDF().schema
 
@@ -313,7 +313,7 @@ class EventStreamSpec extends SparkTestBase {
 
     // Batch twin: the SAME rows through the oracle-gated q115 (the
     // parquet dir carries ts as int64 nanos, the events-table layout).
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_anomaly").toString
+    val dir = tempCorpusDir("graft_stream_anomaly")
     events.map(e => (e.event_id, e.user_id, e.event_type,
         (e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L) * 1000L, e.value))
       .toDF("event_id", "user_id", "event_type", "ts", "value")
@@ -547,7 +547,7 @@ class EventStreamSpec extends SparkTestBase {
     // same rows written as an events corpus (q109 uses the 1h
     // tolerance, so re-run the stream at 1h for the comparison).
     val streamed1h = runAsOf(Seq(asOfEvents), 3600L * 1000000L, "asof_1h")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_asof").toString
+    val dir = tempCorpusDir("graft_stream_asof")
     asOfEvents.map(e => (e.event_id, e.user_id, e.event_type,
         (e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L) * 1000L, e.value))
       .toDF("event_id", "user_id", "event_type", "ts", "value")
@@ -603,7 +603,7 @@ class EventStreamSpec extends SparkTestBase {
 
   test("streaming forward as-of join emits exactly the batch q117 rows on the same data") {
     val streamed = runAsOfFwd(Seq(asOfEvents), 3600L * 1000000L, "asof_fwd")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_asof_fwd").toString
+    val dir = tempCorpusDir("graft_stream_asof_fwd")
     asOfEvents.map(e => (e.event_id, e.user_id, e.event_type,
         (e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L) * 1000L, e.value))
       .toDF("event_id", "user_id", "event_type", "ts", "value")
@@ -780,7 +780,7 @@ class EventStreamSpec extends SparkTestBase {
 
   test("streaming SCD2 emits exactly the batch q142 closed intervals on the same data") {
     val streamed = runScd2(Seq(scd2Events), "scd2_whole")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_scd2").toString
+    val dir = tempCorpusDir("graft_stream_scd2")
     scd2Events.map(e => (e.event_id, e.user_id, e.event_type,
         (e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L) * 1000L, e.value))
       .toDF("event_id", "user_id", "event_type", "ts", "value")
@@ -856,7 +856,7 @@ class EventStreamSpec extends SparkTestBase {
 
   test("streaming attribution reproduces the batch q147 rows on the same data") {
     val streamed = runAttr(Seq(attrEvents), "attr_whole")
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_attr").toString
+    val dir = tempCorpusDir("graft_stream_attr")
     attrEvents.map { e =>
       val k = if (e.channel.startsWith("ch")) e.channel.drop(2) else "0"
       (e.event_id, e.user_id, e.event_type,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -17,7 +16,7 @@ import graft.SparkTestBase
   * clean-run state with no duplicates, and a committed batch never
   * re-runs.
   */
-class StagedCommitDrillSpec extends SparkTestBase {
+class StagedCommitDrillSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private final class InjectedCrash extends RuntimeException("injected crash")
@@ -50,7 +49,7 @@ class StagedCommitDrillSpec extends SparkTestBase {
 
   /** Clean-run reference: the same two batches with no fault. */
   private def docReference(): (Set[(Long, String)], Set[String]) = {
-    val root = Files.createTempDirectory("graft_drill_ref").toString
+    val root = tempCorpusDir("graft_drill_ref")
     val (curated, index) = (s"$root/curated", s"$root/index")
     DocStream.curateBatch(docs(1L -> goodA), 0L, curated, index)
     DocStream.curateBatch(docs(10L -> goodA, 11L -> goodC), 1L, curated, index)
@@ -59,7 +58,7 @@ class StagedCommitDrillSpec extends SparkTestBase {
 
   private def drillDocStream(step: String => String): Unit = {
     val (refCurated, refDigests) = docReference()
-    val root = Files.createTempDirectory("graft_drill").toString
+    val root = tempCorpusDir("graft_drill")
     val (curated, index) = (s"$root/curated", s"$root/index")
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -94,7 +93,7 @@ class StagedCommitDrillSpec extends SparkTestBase {
     // entry dies exactly between the two tables. Verify the drill
     // produced the genuine torn geometry before replaying.
     val (refCurated, _) = docReference()
-    val root = Files.createTempDirectory("graft_drill_geo").toString
+    val root = tempCorpusDir("graft_drill_geo")
     val (curated, index) = (s"$root/curated", s"$root/index")
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     DocStream.curateBatch(docs(1L -> goodA), 0L, curated, index)
@@ -143,8 +142,8 @@ class StagedCommitDrillSpec extends SparkTestBase {
         .map(r => r.getLong(0) -> r.getLong(1)).toSet
       (asg, digests(index))
     }
-    val ref = run(Files.createTempDirectory("graft_vdrill_ref").toString, kill = false)
-    val got = run(Files.createTempDirectory("graft_vdrill").toString, kill = true)
+    val ref = run(tempCorpusDir("graft_vdrill_ref"), kill = false)
+    val got = run(tempCorpusDir("graft_vdrill"), kill = true)
     assert(got == ref, "VecStream crash replay diverged from the clean run")
   }
 }

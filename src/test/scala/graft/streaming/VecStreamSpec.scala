@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import graft.SparkTestBase
 
@@ -9,7 +8,7 @@ import graft.SparkTestBase
   * maintains, and assignment to a FROZEN quantizer — plus the same
   * torn-replay convergence guarantee DocStream proves for documents.
   */
-class VecStreamSpec extends SparkTestBase {
+class VecStreamSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private val Dim = 8
@@ -33,7 +32,7 @@ class VecStreamSpec extends SparkTestBase {
     ).toDF("cid", "c_emb", "c_nrm").coalesce(1).write.parquet(dir)
 
   test("micro-batches dedup within and across batches and assign to the frozen centroids") {
-    val root = Files.createTempDirectory("graft_vecstream").toString
+    val root = tempCorpusDir("graft_vecstream")
     val (src, cents, assigned, index, ckpt) =
       (s"$root/src", s"$root/cents", s"$root/assigned", s"$root/index", s"$root/ckpt")
     writeCentroids(cents)
@@ -62,7 +61,7 @@ class VecStreamSpec extends SparkTestBase {
   }
 
   test("a crash between the assignment and index publishes replays to the clean-run state") {
-    val root = Files.createTempDirectory("graft_vecstream_torn").toString
+    val root = tempCorpusDir("graft_vecstream_torn")
     val (cents, assigned, index) = (s"$root/cents", s"$root/assigned", s"$root/index")
     writeCentroids(cents)
     val fs = new org.apache.hadoop.fs.Path(root)

@@ -29,11 +29,8 @@ class BucketedDeleteSpec extends SparkTestBase with graft.TempCorpusDirs {
   private def freshPair(tag: String): (String, String) = {
     val dir = tempCorpusDir(s"graft_bdel_$tag")
     def build(name: String, df: DataFrame): String = {
-      val t = s"graft_bdel_${tag}_$name"
-      df.repartition(Buckets, col("k"))
-        .write.mode("overwrite").option("path", s"$dir/$name")
-        .bucketBy(Buckets, "k").sortBy("k").saveAsTable(t)
-      BucketedManifest.adoptTable(spark, t)
+      BucketedManifest.build(df, s"$dir/$name", Seq("k"), Buckets)
+      s"$dir/$name"
     }
     val fact = build("fact",
       (0 until 4000).map(i => (i.toLong % 400, i.toLong)).toDF("k", "v"))

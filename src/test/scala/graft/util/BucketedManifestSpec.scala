@@ -28,11 +28,8 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   private def freshPair(tag: String): (String, String) = {
     val dir = tempCorpusDir(s"graft_bman_$tag")
     def build(name: String, df: DataFrame): String = {
-      val t = s"graft_bman_${tag}_$name"
-      df.repartition(Buckets, col("k"))
-        .write.mode("overwrite").option("path", s"$dir/$name")
-        .bucketBy(Buckets, "k").sortBy("k").saveAsTable(t)
-      BucketedManifest.adoptTable(spark, t)
+      BucketedManifest.build(df, s"$dir/$name", Seq("k"), Buckets)
+      s"$dir/$name"
     }
     val fact = build("fact",
       (0 until 4000).map(i => (i.toLong % 400, i.toLong)).toDF("k", "v"))
@@ -180,43 +177,49 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
       "bucket 0's grain did not collapse")
   }
 
-  test("adoptTable refuses a MANAGED table — dropping it would delete the data just manifested") {
-    val t = "graft_bman_managed_refusal"
-    spark.sql(s"DROP TABLE IF EXISTS `$t`")
-    // No path option: the catalog owns the data dir (MANAGED), and
-    // DROP TABLE would take the files with it.
-    (0 until 100).map(i => (i.toLong, i.toLong)).toDF("k", "v")
-      .repartition(Buckets, col("k"))
-      .write.bucketBy(Buckets, "k").sortBy("k").saveAsTable(t)
-    try {
-      val e = intercept[IllegalArgumentException] {
-        BucketedManifest.adoptTable(spark, t)
-      }
-      assert(e.getMessage.contains("EXTERNAL"), e.getMessage)
-      // Refusal must be side-effect-free: table intact, data readable.
-      assert(spark.table(t).count() == 100L, "refusal damaged the table")
-    } finally spark.sql(s"DROP TABLE IF EXISTS `$t`")
+  /** Every file the current generation lists holds only rows whose
+    * `pmod(hash(keys), Buckets)` is the bucket id its name carries. */
+  private def assertPlacement(root: String, keys: Seq[String]): Unit = {
+    val files = ManifestLog.currentEntries(spark, root).map(_.path)
+    assert(files.nonEmpty, s"$root lists no files")
+    files.foreach { f =>
+      val id = """_(\d{5})\.""".r.findFirstMatchIn(f).map(_.group(1).toInt)
+        .getOrElse(fail(s"$root/$f carries no bucket id"))
+      val got = spark.read.parquet(s"$root/$f")
+        .select(pmod(hash(keys.map(col): _*), lit(Buckets))).distinct().as[Int].collect().toSet
+      assert(got == Set(id), s"$root/$f is named bucket $id but holds rows of buckets $got")
+    }
   }
 
-  test("adoptTable refuses a multi-column bucket spec — its head is not the placement hash") {
-    val t = "graft_bman_multicol_refusal"
-    val dir = tempCorpusDir("graft_bman_multicol")
-    spark.sql(s"DROP TABLE IF EXISTS `$t`")
-    (0 until 100).map(i => (i.toLong, i.toLong)).toDF("k", "v")
-      .repartition(Buckets, col("k"), col("v"))
-      .write.option("path", s"$dir/t")
-      .bucketBy(Buckets, "k", "v").sortBy("k", "v").saveAsTable(t)
-    try {
-      // Files are placed by hash(k, v); a Spec recording key=k would
-      // claim hash(k) placement — exchange elision and deleteKeys
-      // would then be silently WRONG (co-location on the wrong hash,
-      // deletes probing buckets the rows don't live in). Refuse.
-      val e = intercept[IllegalArgumentException] {
-        BucketedManifest.adoptTable(spark, t)
-      }
-      assert(e.getMessage.contains("single-key"), e.getMessage)
-      assert(spark.table(t).count() == 100L, "refusal damaged the table")
-    } finally spark.sql(s"DROP TABLE IF EXISTS `$t`")
+  test("every write path stages files that hold exactly their bucket's rows, with no catalog table") {
+    val dir = tempCorpusDir("graft_bman_writer")
+    val (single, composite) = (s"$dir/single", s"$dir/composite")
+    def rows(lo: Int, hi: Int) =
+      (lo until hi).map(i => (i.toLong % 300, i.toLong % 7, i.toLong)).toDF("k1", "k2", "v")
+    val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
+    val executions = executionsOf {
+      BucketedManifest.build(rows(0, 2000).drop("k2").withColumnRenamed("k1", "k"),
+        single, Seq("k"), Buckets)
+      BucketedManifest.appendBucketed(
+        rows(2000, 2400).drop("k2").withColumnRenamed("k1", "k"), single)
+      BucketedManifest.compactBucket(spark, single, 0)
+      val del = BucketedManifest.deleteKeys(spark, single, Seq(1L, 2L, 3L, 4L).toDF("k"))
+      assert(del.rowsDeleted == 32L, s"four keys of eight rows each: $del")
+      BucketedManifest.build(rows(0, 2000), composite, Seq("k1", "k2"), Buckets)
+      BucketedManifest.appendBucketed(rows(2000, 2400), composite)
+      BucketedManifest.compactBucket(spark, composite, 0)
+    }
+    assert(ManifestLog.currentEntries(spark, single)
+      .count(_.path.matches(""".*_0{5}(?:\..*)?$""")) == 1, "bucket 0 did not compact")
+    assert(BucketedManifest.read(spark, single).count() == 2400L - 4L * 8L)
+    assert(BucketedManifest.read(spark, composite).count() == 2400L)
+    assertPlacement(single, Seq("k"))
+    assertPlacement(composite, Seq("k1", "k2"))
+    val nodes = executions.flatMap(_.analyzed.collect { case n => n.getClass.getSimpleName }).toSet
+    val catalogWrites = nodes.intersect(
+      Set("CreateDataSourceTableAsSelectCommand", "DropTable", "DropTableCommand"))
+    assert(catalogWrites.isEmpty, s"the bucketed writes went through the catalog: $catalogWrites")
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == tablesBefore)
   }
 
   test("a composite-key build records every key, plans its full BucketSpec and refuses keyed deletion") {
@@ -289,17 +292,12 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   }
 
   test("declared stat columns prune files at PLAN time through the manifest index") {
-    val dir = tempCorpusDir("graft_bman_stats")
-    val t = "graft_bman_stats_fact"
+    val root = s"${tempCorpusDir("graft_bman_stats")}/fact"
     def rows(lo: Int, hi: Int) =
       (lo until hi).map(i => (i.toLong % 100, i.toLong, i.toLong))
         .toDF("k", "v", "ts")
-    rows(0, 1000)
-      .repartition(Buckets, col("k"))
-      .write.mode("overwrite").option("path", s"$dir/fact")
-      .bucketBy(Buckets, "k").sortBy("k").saveAsTable(t)
-    val root = BucketedManifest.adoptTable(spark, t)
-    // Declaration AFTER adoption: the initial generation is stats-less
+    BucketedManifest.build(rows(0, 1000), root, Seq("k"), Buckets)
+    // Declaration AFTER the build: the initial generation is stats-less
     // and must stay a permanent candidate; only later appends record.
     BucketedManifest.declareStats(spark, root, Seq("ts"))
     BucketedManifest.appendBucketed(rows(1000, 2000), root)
@@ -307,7 +305,7 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     val df = BucketedManifest.read(spark, root)
     val total = df.inputFiles.length
     assert(total == 3 * Buckets)
-    // A ts window inside the SECOND batch: the stats-less adopt files
+    // A ts window inside the SECOND batch: the stats-less build files
     // stay admitted (conservative), batch 1's files prune — through
     // the ordinary .filter, no special read API.
     val q = df.filter(col("ts") >= 2000L && col("ts") < 2500L)

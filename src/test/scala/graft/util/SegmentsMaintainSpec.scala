@@ -74,14 +74,11 @@ class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
   }
 
   test("bucketed tick compacts exactly the over-fragmented buckets") {
-    val t = s"graft_maint_bkt_${System.nanoTime()}"
     val df = (0 until 400).map(i => (i.toLong, i.toString)).toDF("k", "v")
-    // Four segments (the one-shot build, adopted, plus three appends)
-    // leave every bucket at the bound; the fifth tips both over it.
-    df.repartition(2, col("k")).write
-      .option("path", s"${tempCorpusDir("graft_maint_bkt")}/t")
-      .bucketBy(2, "k").sortBy("k").saveAsTable(t)
-    val root = BucketedManifest.adoptTable(spark, t)
+    // Four segments (the one-shot build plus three appends) leave
+    // every bucket at the bound; the fifth tips both over it.
+    val root = s"${tempCorpusDir("graft_maint_bkt")}/t"
+    BucketedManifest.build(df, root, Seq("k"), 2)
     (0 until 3).foreach(_ => BucketedManifest.appendBucketed(df, root))
     assert(BucketedManifest.maintain(spark, root, maxFiles = 4).isEmpty,
       "4 files per bucket is within the bound")

@@ -79,14 +79,11 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
         .toDF("o_orderkey", "o_flag")
       // Random batch count; batches may be empty (an ingest tick with
       // no matching rows must be harmless). Batch 0 is the one-shot
-      // bucketed build the layout adopts; the rest append as segments.
+      // bucketed build; the rest append as segments.
       val nBatches = 1 + rng.nextInt(4)
       def layout(df: org.apache.spark.sql.DataFrame, key: String, name: String): String = {
-        val t = s"graft_fuzz_${name}_${System.nanoTime()}_$trial"
-        df.filter(col(key) % nBatches === 0).repartition(8, col(key)).write
-          .option("path", s"${tempCorpusDir(s"graft_fuzz_$name$trial")}/t")
-          .bucketBy(8, key).sortBy(key).saveAsTable(t)
-        val root = BucketedManifest.adoptTable(spark, t)
+        val root = s"${tempCorpusDir(s"graft_fuzz_$name$trial")}/t"
+        BucketedManifest.build(df.filter(col(key) % nBatches === 0), root, Seq(key), 8)
         (1 until nBatches).foreach(b =>
           BucketedManifest.appendBucketed(df.filter(col(key) % nBatches === b), root))
         root

@@ -1,6 +1,5 @@
 package graft.util
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -19,7 +18,7 @@ import graft.SparkTestBase
   * 'Recursive update' when a nested build hit the map mid-resize
   * (caught by the full suite in round 5).
   */
-class SnapshotsSpec extends SparkTestBase {
+class SnapshotsSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   /** Snapshots must be CONTENT-keyed, not just path-keyed: rewriting
@@ -28,7 +27,7 @@ class SnapshotsSpec extends SparkTestBase {
     * (VERDICT r2 wrong #2 — this test pins that shipped bug).
     */
   test("rewriting the corpus at the same path rebuilds the snapshot") {
-    val dir = Files.createTempDirectory("graft_snap").toString
+    val dir = tempCorpusDir("graft_snap")
     (1L to 10L).toDF("id").write.parquet(s"$dir/t.parquet")
 
     var builds = 0
@@ -53,8 +52,8 @@ class SnapshotsSpec extends SparkTestBase {
   }
 
   test("distinct corpus dirs never share snapshots") {
-    val d1 = Files.createTempDirectory("graft_snap_a").toString
-    val d2 = Files.createTempDirectory("graft_snap_b").toString
+    val d1 = tempCorpusDir("graft_snap_a")
+    val d2 = tempCorpusDir("graft_snap_b")
     (1L to 3L).toDF("id").write.parquet(s"$d1/t.parquet")
     (1L to 7L).toDF("id").write.parquet(s"$d2/t.parquet")
     def art(d: String) =
@@ -65,7 +64,7 @@ class SnapshotsSpec extends SparkTestBase {
   }
 
   test("concurrent nested snapshot builds run each builder exactly once") {
-    val dir = Files.createTempDirectory("graft_snapshots_conc").toString
+    val dir = tempCorpusDir("graft_snapshots_conc")
     val builds = new ConcurrentHashMap[String, AtomicInteger]
     def count(name: String): AtomicInteger =
       builds.computeIfAbsent(name, _ => new AtomicInteger)
