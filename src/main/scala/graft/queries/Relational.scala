@@ -463,81 +463,56 @@ object Relational {
   }
 
   /** MANIFESTED bucketed lineitem for the co-location pair, built as
-    * time-batched appends: one empty bootstrap (the bucket spec and a
-    * fileless v1), then
-    * one [[graft.util.BucketedManifest.appendBucketed]] per ship-date
-    * year — the incremental-ingest geometry a 100 TB fact actually
-    * has, leaving each bucket with per-YEAR files whose declared
-    * `l_shipdate` stats are tight and disjoint. Reads get BOTH wins at
-    * once: the bucket spec keeps orderkey joins exchange-free, and the
-    * stats-aware manifest FileIndex skips whole files for a pushed
-    * date bound at PLAN time — notably on the raw NTZ column, where
-    * this Spark's ParquetFilters cannot even form a row-group
-    * predicate (the r9 measured gap): manifest skipping sits ABOVE the
-    * parquet filter seam, so it prunes where footer predicates cannot.
-    * NULL ship dates ride with the first year's segment (their file
-    * stays stats-less — never pruned, the recording contract).
+    * one SEGMENT per ship-date year
+    * ([[graft.util.Snapshots.bucketedSegments]]): each bucket gets
+    * per-YEAR files — the incremental-ingest geometry a 100 TB fact
+    * actually has — whose `l_shipdate` stats are tight and disjoint.
+    * Reads get BOTH wins at once: the bucket spec keeps orderkey joins
+    * exchange-free, and the stats-aware manifest FileIndex skips whole
+    * files for a pushed date bound at PLAN time — notably on the raw
+    * NTZ column, where this Spark's ParquetFilters cannot even form a
+    * row-group predicate: manifest skipping sits ABOVE the parquet
+    * filter seam, so it prunes where footer predicates cannot. NULL ship dates ride with the first year's
+    * segment (their file stays stats-less — never pruned, the
+    * recording contract).
     *
-    * Torn-build safety: each year commits as batchId = year (the
-    * idempotent-replay contract), and a completion SENTINEL batch is
-    * the build's LAST commit — the layout counts as complete iff the
-    * batch high-water mark equals the sentinel, so a crash after any
-    * prefix of the per-year appends leaves a root that the next
-    * session deletes and rebuilds instead of silently under-counting
-    * (the pre-r17 check accepted any root with one live file). The
-    * year set derives from the corpus's DISTINCT ship years — corpus
-    * drift outside a hard-coded window cannot drop rows, and a lone
-    * sentinel year (9999-12-31) costs one extra batch instead of
-    * thousands of empty range iterations — and a final count assert
-    * (manifested == source) backstops the partition predicate itself.
+    * The whole build is ONE generation-1 commit, so a crash at any
+    * point leaves no committed generation and the next session builds
+    * the layout again. The year set derives from the corpus's DISTINCT
+    * ship years — corpus drift outside a hard-coded window cannot drop
+    * rows, and a lone sentinel year (9999-12-31) costs one extra
+    * segment instead of thousands of empty range iterations — and the
+    * staged files must hold every source row (footer counts, checked
+    * before the commit), which backstops the year predicates
+    * themselves.
     */
-  private[graft] val PairLayoutComplete = 1000000L
-
   private[graft] def lineitemPairManifested(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.util.Snapshots.layoutRoot(s, dir, s"li-ok-pair-b$OrderkeyBuckets")(
-      out => scala.util.Try(
-        graft.util.ManifestLog.batchHwm(s, out) == PairLayoutComplete)
-        .getOrElse(false)
-    ) { root =>
+    graft.util.Snapshots.bucketedSegments(s, dir, s"li-ok-pair-b$OrderkeyBuckets",
+      Seq("l_orderkey"), OrderkeyBuckets, Seq("l_shipdate")) {
       val cols = Seq("l_orderkey", "l_extendedprice", "l_discount",
         "l_returnflag", "l_shipdate")
       val li = tbl(s, dir, "lineitem").select(cols.map(col): _*)
-      graft.util.BucketedManifest.create(s, root, li.schema, Seq("l_orderkey"), OrderkeyBuckets)
-      graft.util.BucketedManifest.declareStats(s, root, Seq("l_shipdate"))
       // Iterate the DISTINCT ship years actually present, not the
       // contiguous min..max range (r17 advice): one outlier/sentinel
       // date (9999-12-31 is common in SCD-style data) would otherwise
-      // turn the build into thousands of empty bucketed append jobs,
-      // each staging a write and committing a manifest generation.
-      // batchId = year is unchanged, so the idempotent-replay contract
-      // holds; the collect is bounded by the year domain (a fact table
-      // spans decades, not thousands of distinct years).
+      // turn the build into thousands of empty bucketed segment
+      // writes. The collect is bounded by the year domain (a fact
+      // table spans decades, not thousands of distinct years).
       val years = li.select(year(col("l_shipdate")).as("y"))
         .where(col("y").isNotNull).distinct()
         .collect().map(_.getInt(0)).sorted
-      if (years.isEmpty) {
+      val segments =
         // No non-null ship dates: the (possibly empty) null segment is
         // the whole fact.
-        graft.util.BucketedManifest.appendBucketedBatch(
-          li.where(col("l_shipdate").isNull), root, 0L)
-        ()
-      } else {
-        years.foreach { y =>
+        if (years.isEmpty) Seq(li.where(col("l_shipdate").isNull))
+        else years.toSeq.map { y =>
           val lo = graft.util.Tables.ntzUs(yearStartUs(y))
           val hi = graft.util.Tables.ntzUs(yearStartUs(y + 1))
           val inYear = col("l_shipdate") >= lit(lo) && col("l_shipdate") < lit(hi)
-          val seg = li.where(
-            if (y == years.head) inYear || col("l_shipdate").isNull else inYear)
-          graft.util.BucketedManifest.appendBucketedBatch(seg, root, y.toLong)
+          li.where(if (y == years.head) inYear || col("l_shipdate").isNull else inYear)
         }
-      }
-      val srcN = li.count()
-      val gotN = graft.util.BucketedManifest.read(s, root).count()
-      require(gotN == srcN,
-        s"lineitem pair layout under-counts: manifested $gotN of $srcN source rows")
-      graft.util.ManifestLog.recordBatch(s, root, PairLayoutComplete)
-      ()
+      (segments, li.count())
     }
 
   /** The at-rest partsupp grain a previous incremental run left

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.StructType
   * deleter: the full [[ManifestLog]] contract, for bucket grains.
   *
   * The bucket spec (keys, count) is recorded next to the manifests at
-  * creation and validated on every append, so a mismatched segment
+  * the build and validated on every append, so a mismatched segment
   * fails loudly before any write.
   *
   * Scale shape: K appends leave K files per bucket, [[maintain]]
@@ -47,36 +47,42 @@ object BucketedManifest {
 
   private val SpecFile = "bucket-spec"
 
-  /** Bootstrap an EMPTY bucketed layout at `root`: record its spec,
-    * then [[ManifestLog.create]]'s fileless v1 — the anchor a layout
-    * built by appends commits onto.
+  /** Build a bucketed layout at `root` in ONE commit: record its spec
+    * (and `statCols`, the stat columns later appends record), stage
+    * each segment as one file per non-empty bucket, and commit exactly
+    * those files, with per-file `statCols` stats, as generation 1
+    * ([[ManifestLog.commitStaged]]: a builder that loses the v1 race
+    * drops its staged files and the winner's generation stands).
+    * Several segments leave each bucket one file per segment — the
+    * per-year files whose disjoint date stats the li-ok-pair layout
+    * prunes on. With `sourceRows`, the staged files' footer row counts
+    * must add up to it, or the build throws before the commit. When
+    * no segment has a row, one schema-only file is staged in bucket 0,
+    * so the generation still reads back with the build's schema.
     */
-  def create(spark: SparkSession, root: String, schema: StructType,
-      keys: Seq[String], buckets: Int): Unit = {
-    recordSpec(spark, root, schema, keys, buckets)
-    ManifestLog.create(spark, root)
-  }
-
-  /** Build a bucketed layout at `root` in ONE commit: record its spec,
-    * stage one file per non-empty bucket, and commit exactly those
-    * files as generation 1 ([[ManifestLog.commitStaged]]: a builder
-    * that loses the v1 race drops its staged files and the winner's
-    * generation stands). An empty `df` stages one schema-only file in
-    * bucket 0, so the generation still reads back with the build's
-    * schema.
-    */
-  def build(df: DataFrame, root: String, keys: Seq[String], buckets: Int): Unit = {
-    val spark = df.sparkSession
+  def build(segments: Seq[DataFrame], root: String, keys: Seq[String], buckets: Int,
+      statCols: Seq[String] = Nil, sourceRows: Option[Long] = None): Unit = {
+    require(segments.nonEmpty, s"no segment to build $root from")
+    val spark = segments.head.sparkSession
     val (p, fs) = ManifestLog.hadoop(spark, root)
-    val s = recordSpec(spark, root, df.schema, keys, buckets)
-    val staged = stageBucketed(p, fs, df, s) match {
+    val s = recordSpec(spark, root, segments.head.schema, keys, buckets)
+    if (statCols.nonEmpty) declareStats(spark, root, statCols)
+    val staged = segments.flatMap(stageBucketed(p, fs, _, s)) match {
       // The bucketed writer writes no file for no rows; the plain
       // writer's one schema-only part is named into bucket 0.
-      case Nil => stage(p, fs, df.limit(0), None, bucketNamed(_, 0))
+      case Nil => stage(p, fs, segments.head.limit(0), None, bucketNamed(_, 0))
       case files => files
     }
-    ManifestLog.commitStaged(fs, p, 1L, staged,
-      ManifestLog.entriesFor(spark, p, staged, Nil))
+    val entries = sourceRows match {
+      case None => ManifestLog.entriesFor(spark, p, staged, statCols)
+      case Some(n) =>
+        // The stats' footer read gives each staged file's row count too.
+        val footers = ManifestLog.footersFor(spark, p, staged, statCols)
+        val got = footers.map(_._2).sum
+        require(got == n, s"$root staged $got of $n source rows — refusing to commit")
+        footers.map(_._1)
+    }
+    ManifestLog.commitStaged(fs, p, 1L, staged, entries)
   }
 
   private def recordSpec(spark: SparkSession, root: String, schema: StructType,
@@ -85,7 +91,10 @@ object BucketedManifest {
       s"bucket keys $keys must be columns of ${schema.fieldNames.mkString(",")}")
     val s = Spec(keys, buckets,
       if (keys.length == 1) Some(schema(keys.head).dataType) else None)
-    writeSpec(spark, root, s)
+    val (p, fs) = ManifestLog.hadoop(spark, root)
+    val tail = s.keyType.map(t => s"\t${t.json}").getOrElse("")
+    ManifestLog.recordSidecar(fs, p, SpecFile, "bucket spec",
+      s"${s.keys.mkString(",")}\t${s.buckets}$tail\n")
     s
   }
 
@@ -104,34 +113,6 @@ object BucketedManifest {
     }
   }
 
-  /** Written beside the spec file and renamed onto it, so a reader
-    * never sees a partial spec. A spec already recorded (an earlier or
-    * concurrent builder's) is kept and must equal this one. The check
-    * runs before the rename as well as after a refused one, because
-    * some filesystems' rename replaces its destination (POSIX
-    * rename(2), Hadoop's raw local filesystem): there, two builders
-    * that both find no spec both rename, and the later spec stands.
-    */
-  private def writeSpec(spark: SparkSession, root: String, s: Spec): Unit = {
-    val (p, fs) = ManifestLog.hadoop(spark, root)
-    val dir = ManifestLog.manifestDir(p)
-    val dst = new Path(dir, SpecFile)
-    def agree(): Unit = {
-      val recorded = spec(spark, root)
-      require(recorded == s, s"$root already records bucket spec $recorded, not $s")
-    }
-    if (fs.exists(dst)) return agree()
-    val tmp = new Path(dir, s".spec-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    val tail = s.keyType.map(t => s"\t${t.json}").getOrElse("")
-    try out.write(s"${s.keys.mkString(",")}\t${s.buckets}$tail\n".getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, dst)) {
-      fs.delete(tmp, false)
-      agree()
-    }
-  }
-
   private val StatColsFile = "stat-cols"
 
   /** Declare columns whose per-file [min, max] every later staged
@@ -144,13 +125,13 @@ object BucketedManifest {
     * through the manifest index ([[ManifestFileIndex.listFiles]]) —
     * on top of the row-group pruning inside admitted files. Files
     * written before the declaration stay stats-less (never pruned).
+    * A root records ONE declaration ([[ManifestLog.recordSidecar]]).
     */
   def declareStats(spark: SparkSession, root: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "declare at least one stat column")
     val (p, fs) = ManifestLog.hadoop(spark, root)
-    val out = fs.create(new Path(ManifestLog.manifestDir(p), StatColsFile), true)
-    try out.write(cols.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    ManifestLog.recordSidecar(fs, p, StatColsFile, "stat columns",
+      cols.mkString("", "\n", "\n"))
   }
 
   private def declaredStats(fs: org.apache.hadoop.fs.FileSystem,

@@ -160,6 +160,37 @@ object ManifestLog {
   private[util] def manifestDir(root: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(root, ManifestDirName)
 
+  /** Record a sidecar file beside the manifests (the bucket spec, the
+    * bloom and stat column declarations): written under a unique
+    * `.tmp-` name ([[vacuum]] sweeps one a crash strands) and renamed
+    * onto `name`, so a reader never sees a partial file. A sidecar already recorded (an earlier or
+    * concurrent builder's) is kept and must hold this `body`. The
+    * check runs before the rename as well as after a refused one,
+    * because some filesystems' rename replaces its destination (POSIX
+    * rename(2), Hadoop's raw local filesystem): there, two builders
+    * that both find no sidecar both rename, and the later one stands.
+    */
+  private[util] def recordSidecar(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, name: String, what: String, body: String): Unit = {
+    val dir = manifestDir(p)
+    val dst = new org.apache.hadoop.fs.Path(dir, name)
+    def agree(): Unit = {
+      val in = fs.open(dst)
+      val recorded = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      require(recorded == body,
+        s"$p already records $what '${recorded.trim}', not '${body.trim}'")
+    }
+    if (fs.exists(dst)) return agree()
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".tmp-$name-${java.util.UUID.randomUUID}")
+    val out = fs.create(tmp, false)
+    try out.write(body.getBytes("UTF-8"))
+    finally out.close()
+    if (!fs.rename(tmp, dst)) {
+      fs.delete(tmp, false)
+      agree()
+    }
+  }
+
   /** Whether `root` is a manifested log (holds a manifest directory). */
   def isManifested(spark: SparkSession, root: String): Boolean = {
     val (p, fs) = hadoop(spark, root)
@@ -259,7 +290,7 @@ object ManifestLog {
       partitionDirs: Seq[String], boundCol: Option[String]): Unit = {
     val spark = df.sparkSession
     val (p, fs) = hadoop(spark, root)
-    val staged = stageAppend(spark, p, fs, df, partitionDirs)
+    val staged = stageAppend(p, fs, df, partitionDirs)
     commitStaged(fs, p, v, staged, entriesFor(spark, p, staged, boundCol.toSeq))
   }
 
@@ -317,7 +348,7 @@ object ManifestLog {
     val (p, fs) = hadoop(spark, root)
     val m0 = readRaw(fs, p, currentVersion(spark, root))
     if (batchId <= m0.batchHwm) return false // committed — replay is a no-op
-    val added = stageAppend(spark, p, fs, segment, partitionDirs)
+    val added = stageAppend(p, fs, segment, partitionDirs)
     failpoint("written:append-batch")
     // The guard re-checks under the commit loop: if a concurrent
     // replica committed this batch while we staged, the staged files
@@ -332,19 +363,22 @@ object ManifestLog {
     * file — never prunable).
     */
   private[util] def entriesFor(spark: SparkSession, p: org.apache.hadoop.fs.Path,
-      files: Seq[String], statCols: Seq[String]): Seq[Entry] = {
+      files: Seq[String], statCols: Seq[String]): Seq[Entry] =
+    if (statCols.isEmpty) files.map(Entry(_, Nil))
+    else footersFor(spark, p, files, statCols).map(_._1)
+
+  /** [[entriesFor]]'s entry plus the file's footer row count, for every
+    * file: ONE footer read per file regardless of how many columns the
+    * layout records — at a z-layout's 3-4 cluster columns the
+    * per-column variant would triple the maintenance metadata IO.
+    */
+  private[util] def footersFor(spark: SparkSession, p: org.apache.hadoop.fs.Path,
+      files: Seq[String], statCols: Seq[String]): Seq[(Entry, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     files.map { rel =>
-      if (statCols.isEmpty) Entry(rel, Nil)
-      else {
-        // One footer read per file regardless of how many columns the
-        // layout records — at a z-layout's 3-4 cluster columns the
-        // per-column variant would triple the maintenance metadata IO.
-        val ranges = fileRanges(
-          new org.apache.hadoop.fs.Path(p, rel), statCols, conf)
-        Entry(rel, statCols.flatMap(c =>
-          ranges.get(c).map { case (mn, mx) => (c, mn, mx) }))
-      }
+      val (rows, ranges) = fileFooter(new org.apache.hadoop.fs.Path(p, rel), statCols, conf)
+      (Entry(rel, statCols.flatMap(c => ranges.get(c).map { case (mn, mx) => (c, mn, mx) })),
+        rows)
     }
   }
 
@@ -524,96 +558,120 @@ object ManifestLog {
 
   /** The clustering engine behind [[cluster]] (grain = everything) and
     * [[maintainClustered]] (grain = stat-less newcomers): rewrite the
-    * selected live files per partition directory in Z-order, commit
-    * unselected entries BY REFERENCE (path and stats byte-identical).
-    * Returns false (no commit) when the selection is empty.
+    * selected live files per partition directory in Z-order
+    * ([[stageZOrdered]]), commit unselected entries BY REFERENCE (path
+    * and stats byte-identical). Returns false (no commit) when the
+    * selection is empty.
     */
   private def clusterGrain(spark: SparkSession, root: String, cols: Seq[String],
       targetFileRows: Long, select: Entry => Boolean): Boolean = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, shiftleft, shiftright}
-    require(cols.length >= 2 && cols.length <= 4,
-      s"cluster on 2..4 columns (got ${cols.length}) — one column is a " +
-        "plain sort (compactRange), more than 4 dilutes every lane " +
-        "below useful pruning")
-    require(cols.distinct.length == cols.length, s"duplicate cluster column in $cols")
-    require(targetFileRows > 0L, s"targetFileRows must be positive, got $targetFileRows")
+    requireClusterable(cols, targetFileRows)
     val (p, fs) = hadoop(spark, root)
-    val conf = spark.sessionState.newHadoopConf()
     val v = currentVersion(spark, root)
     val m = readRaw(fs, p, v)
     val live = m.entries
     require(live.nonEmpty, s"$root lists no live files at v$v")
     val grain = live.filter(select)
     if (grain.isEmpty) return false
-    val nb = math.min(16, 63 / cols.length) // bits per lane
     val staged = grain.groupBy(e => dirOf(e.path)).toSeq.sortBy(_._1)
       .flatMap { case (relDir, es) =>
-        val paths = es.map(e => new org.apache.hadoop.fs.Path(p, e.path).toString)
-        val df = spark.read.parquet(paths: _*)
-        cols.foreach { c =>
-          require(df.columns.contains(c),
-            s"'$c' is not a physical column of $root/$relDir")
-        }
-        // Row counts from footers (no data IO) size the output; one
-        // lightweight agg finds each lane's normalization range.
-        val rows = es.map(e =>
-          fileRowCount(new org.apache.hadoop.fs.Path(p, e.path), conf)).sum
-        val nOut = math.max(1L, (rows + targetFileRows - 1L) / targetFileRows).toInt
-        val aggs = cols.flatMap { c =>
-          Seq(org.apache.spark.sql.functions.min(col(c).cast("long")),
-            org.apache.spark.sql.functions.max(col(c).cast("long")))
-        }
-        val mm = df.agg(aggs.head, aggs.tail: _*).head()
-        val lanes = cols.zipWithIndex.map { case (c, i) =>
-          if (mm.isNullAt(2 * i)) lit(0L) // all-null column: one bucket
-          else {
-            val (mn, mx) = (mm.getLong(2 * i), mm.getLong(2 * i + 1))
-            // Exact integer bucketing, overflow-guarded: step sized so
-            // (v - mn) / step < 2^nb. Math.subtractExact rejects a
-            // pathological span that wraps Long (cluster columns are
-            // ids/micros in practice; refusing beats mis-bucketing).
-            val span =
-              try Math.subtractExact(mx, mn)
-              catch {
-                case _: ArithmeticException => throw new IllegalArgumentException(
-                  s"cluster column '$c' spans more than Long range " +
-                    s"[$mn, $mx] — normalize it before clustering")
-              }
-            val step = span / (1L << nb) + 1L
-            // LEFT-ALIGN the lane: a narrow domain (256 tenants, say)
-            // fills only the low bits of its bucket, and a curve built
-            // from right-aligned lanes degenerates to "sort by the
-            // widest column" — the wide column's high bits sit above
-            // every bit of the narrow one, so file boundaries never
-            // split on the narrow dimension. Shifting each lane's
-            // buckets to the lane's top bit gives every column equal
-            // weight at every level of the curve, which is what makes
-            // the per-dimension pruning multiplicative.
-            val maxBucket = span / step
-            val align =
-              if (maxBucket <= 0L) 0
-              else nb - (64 - java.lang.Long.numberOfLeadingZeros(maxBucket))
-            shiftleft(coalesce(
-              expr(s"(CAST(`$c` AS BIGINT) - ${mn}L) DIV ${step}L"), lit(0L)),
-              align)
-          }
-        }
-        val z = lanes.zipWithIndex.map { case (b, i) =>
-          (0 until nb).map { j =>
-            shiftleft(shiftright(b, j).bitwiseAND(lit(1L)), j * cols.length + i)
-          }.reduce(_ bitwiseOR _)
-        }.reduce(_ bitwiseOR _)
-        stageIntoRoot(spark, p, fs, relDir,
-          df.withColumn("_gf_z", z)
-            .repartitionByRange(nOut, col("_gf_z"))
-            .sortWithinPartitions("_gf_z")
-            .drop("_gf_z"))
+        stageZOrdered(p, fs, relDir, spark.read.parquet(
+          es.map(e => new org.apache.hadoop.fs.Path(p, e.path).toString): _*),
+          cols, targetFileRows)
       }
     failpoint("written:cluster")
     commit(fs, p, v + 1,
       live.diff(grain) ++ entriesFor(spark, p, staged, cols),
       "cluster", m.batchHwm)
     true
+  }
+
+  /** A Z-clustered layout built in ONE commit: `df` staged in Z-order
+    * over `cols` ([[stageZOrdered]]) and committed as generation 1
+    * ([[commitStaged]]) with every cluster column's per-file stats —
+    * the files and manifest lines a [[cluster]] pass over the same rows
+    * commits.
+    */
+  private[util] def commitClustered(df: DataFrame, root: String, cols: Seq[String],
+      targetFileRows: Long): Unit = {
+    requireClusterable(cols, targetFileRows)
+    val spark = df.sparkSession
+    val (p, fs) = hadoop(spark, root)
+    val staged = stageZOrdered(p, fs, "", df, cols, targetFileRows)
+    commitStaged(fs, p, 1L, staged, entriesFor(spark, p, staged, cols))
+  }
+
+  private def requireClusterable(cols: Seq[String], targetFileRows: Long): Unit = {
+    require(cols.length >= 2 && cols.length <= 4,
+      s"cluster on 2..4 columns (got ${cols.length}) — one column is a " +
+        "plain sort (compactRange), more than 4 dilutes every lane " +
+        "below useful pruning")
+    require(cols.distinct.length == cols.length, s"duplicate cluster column in $cols")
+    require(targetFileRows > 0L, s"targetFileRows must be positive, got $targetFileRows")
+  }
+
+  /** Stage `df` into `relDir` in Z-order over `cols`, as
+    * ceil(rows / targetFileRows) range-partitioned files: one
+    * lightweight agg finds the row count and each lane's
+    * normalization range, and the write range-partitions and sorts on
+    * the bit-interleaved lane buckets.
+    */
+  private def stageZOrdered(p: org.apache.hadoop.fs.Path,
+      fs: org.apache.hadoop.fs.FileSystem, relDir: String, df: DataFrame,
+      cols: Seq[String], targetFileRows: Long): Seq[String] = {
+    import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, max, min, shiftleft, shiftright}
+    cols.foreach { c =>
+      require(df.columns.contains(c), s"'$c' is not a physical column of $p/$relDir")
+    }
+    val nb = math.min(16, 63 / cols.length) // bits per lane
+    val aggs = cols.flatMap(c => Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
+    val mm = df.agg(count(lit(1)), aggs: _*).head()
+    val rows = mm.getLong(0)
+    val nOut = math.max(1L, (rows + targetFileRows - 1L) / targetFileRows).toInt
+    val lanes = cols.zipWithIndex.map { case (c, i) =>
+      if (mm.isNullAt(2 * i + 1)) lit(0L) // all-null column: one bucket
+      else {
+        val (mn, mx) = (mm.getLong(2 * i + 1), mm.getLong(2 * i + 2))
+        // Exact integer bucketing, overflow-guarded: step sized so
+        // (v - mn) / step < 2^nb. Math.subtractExact rejects a
+        // pathological span that wraps Long (cluster columns are
+        // ids/micros in practice; refusing beats mis-bucketing).
+        val span =
+          try Math.subtractExact(mx, mn)
+          catch {
+            case _: ArithmeticException => throw new IllegalArgumentException(
+              s"cluster column '$c' spans more than Long range " +
+                s"[$mn, $mx] — normalize it before clustering")
+          }
+        val step = span / (1L << nb) + 1L
+        // LEFT-ALIGN the lane: a narrow domain (256 tenants, say)
+        // fills only the low bits of its bucket, and a curve built
+        // from right-aligned lanes degenerates to "sort by the
+        // widest column" — the wide column's high bits sit above
+        // every bit of the narrow one, so file boundaries never
+        // split on the narrow dimension. Shifting each lane's
+        // buckets to the lane's top bit gives every column equal
+        // weight at every level of the curve, which is what makes
+        // the per-dimension pruning multiplicative.
+        val maxBucket = span / step
+        val align =
+          if (maxBucket <= 0L) 0
+          else nb - (64 - java.lang.Long.numberOfLeadingZeros(maxBucket))
+        shiftleft(coalesce(
+          expr(s"(CAST(`$c` AS BIGINT) - ${mn}L) DIV ${step}L"), lit(0L)),
+          align)
+      }
+    }
+    val z = lanes.zipWithIndex.map { case (b, i) =>
+      (0 until nb).map { j =>
+        shiftleft(shiftright(b, j).bitwiseAND(lit(1L)), j * cols.length + i)
+      }.reduce(_ bitwiseOR _)
+    }.reduce(_ bitwiseOR _)
+    stageAppend(p, fs,
+      df.withColumn("_gf_z", z)
+        .repartitionByRange(nOut, col("_gf_z"))
+        .sortWithinPartitions("_gf_z")
+        .drop("_gf_z"), Nil, relDir)
   }
 
   /** Point lookup: the current generation's rows whose `keyCol` is in
@@ -1094,7 +1152,7 @@ object ManifestLog {
     val (p, fs) = hadoop(spark, root)
     guardNotPartitionDir(spark, root)
     currentVersion(spark, root) // fail fast before any data is written
-    val added = stageAppend(spark, p, fs, segment, partitionDirs)
+    val added = stageAppend(p, fs, segment, partitionDirs)
     failpoint("written:append")
     commitAppend(fs, p, entriesFor(spark, p, added, boundCol.toSeq), "append",
       _ => true, _.batchHwm)
@@ -1153,11 +1211,11 @@ object ManifestLog {
     // whale-splitting range partitioning (see [[maintainKeyed]]).
     val sortCols = (boundCol +: secondarySort)
       .map(org.apache.spark.sql.functions.col)
-    val replacement = stageIntoRoot(spark, p, fs, relDir,
+    val replacement = stageAppend(p, fs,
       spark.read.parquet(
           grain.map(e => new org.apache.hadoop.fs.Path(p, e.path).toString): _*)
         .repartitionByRange(nOut, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*))
+        .sortWithinPartitions(sortCols: _*), Nil, relDir)
     failpoint("written:compact")
     commit(fs, p, v + 1,
       live.diff(grain) ++ entriesFor(spark, p, replacement, Seq(boundCol)),
@@ -1223,9 +1281,9 @@ object ManifestLog {
       }
     }
     val batch = validatedRestateBatch(replacement, boundCol, loIncl, hiExcl)
-    val staged = stageIntoRoot(spark, p, fs, relDir,
+    val staged = stageAppend(p, fs,
       batch.repartitionByRange(1, org.apache.spark.sql.functions.col(boundCol))
-        .sortWithinPartitions(boundCol))
+        .sortWithinPartitions(boundCol), Nil, relDir)
     failpoint("written:restate")
     commit(fs, p, v + 1,
       live.diff(grain) ++ entriesFor(spark, p, staged, Seq(boundCol)),
@@ -1450,7 +1508,7 @@ object ManifestLog {
         // A fully-tombstoned grain may still stage one schema-only
         // empty part; dropping it here is what makes "retired without
         // replacement" literal in the manifest.
-        stageIntoRoot(spark, p, fs, relDir, clustered).filter { rel =>
+        stageAppend(p, fs, clustered, Nil, relDir).filter { rel =>
           val f = new org.apache.hadoop.fs.Path(p, rel)
           fileRowCount(f, conf) > 0L || { fs.delete(f, false); false }
         }
@@ -1543,7 +1601,8 @@ object ManifestLog {
       fs.delete(st.getPath, true)
       deleted += st.getPath.getName
     }
-    // Superseded manifests, plus any crash-stranded commit temp.
+    // Superseded manifests, plus any crash-stranded commit or sidecar
+    // temp.
     vs.dropRight(keepLast).foreach { v =>
       fs.delete(new org.apache.hadoop.fs.Path(manifestDir(p), manifestName(v)), false)
       deleted += s"$ManifestDirName/${manifestName(v)}"
@@ -1639,24 +1698,24 @@ object ManifestLog {
     */
   private[util] def fileRange(file: org.apache.hadoop.fs.Path, column: String,
       conf: org.apache.hadoop.conf.Configuration): Option[(Long, Long)] =
-    fileRanges(file, Seq(column), conf).get(column)
+    fileFooter(file, Seq(column), conf)._2.get(column)
 
-  /** Trustworthy footer [min, max] per requested column, from ONE
-    * footer read — the multi-stat manifest recording path would
-    * otherwise open the same footer once per cluster column. A column
-    * is present in the result only when EVERY row group carries
-    * null-free, long-decodable statistics for it (the single-column
-    * contract, unchanged).
+  /** The row count and the trustworthy [min, max] per requested column
+    * of one parquet file, from ONE footer read (no data pages) — the
+    * multi-stat manifest recording path would otherwise open the same
+    * footer once per cluster column. A column is present in the ranges
+    * only when EVERY row group carries null-free, long-decodable
+    * statistics for it (the single-column contract, unchanged).
     */
-  private[util] def fileRanges(file: org.apache.hadoop.fs.Path,
+  private def fileFooter(file: org.apache.hadoop.fs.Path,
       columns: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Map[String, (Long, Long)] = {
+      conf: org.apache.hadoop.conf.Configuration): (Long, Map[String, (Long, Long)]) = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
     try {
       import scala.jdk.CollectionConverters._
       val blocks = reader.getFooter.getBlocks.asScala
-      columns.flatMap { column =>
+      reader.getRecordCount -> columns.flatMap { column =>
         val perBlock = blocks.map { b =>
           b.getColumns.asScala.find(_.getPath.toDotString == column)
             .flatMap(c => Option(c.getStatistics))
@@ -1678,11 +1737,8 @@ object ManifestLog {
     * fully-tombstoned grain's write may leave behind.
     */
   private[util] def fileRowCount(file: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try reader.getRecordCount finally reader.close()
-  }
+      conf: org.apache.hadoop.conf.Configuration): Long =
+    fileFooter(file, Nil, conf)._1
 
   private[util] def manifestName(v: Long) = f"v$v%09d.manifest"
 
@@ -1691,63 +1747,32 @@ object ManifestLog {
     if (i < 0) "" else rel.take(i)
   }
 
-  /** Stage-write an append batch: the batch lands under a hidden
-    * stage dir (optionally partitioned), then every data file renames
-    * to its final partition-dir-preserving location under the root.
-    * The renamed files are INVISIBLE until a manifest lists them, and
-    * the returned set is tracked exactly from the stage walk — never
-    * from a root listing — which is what makes concurrent appenders
-    * and crash replays unable to adopt each other's files. Part names
+  /** Stage-write `df`: it lands under a hidden stage dir (optionally
+    * partitioned by `partitionDirs`), with the declared bloom writer
+    * options, then every data file renames to its place under
+    * `relDir` ("" = the root), keeping its partition dirs. The renamed
+    * files are INVISIBLE until a manifest lists them, and the returned
+    * root-relative set is tracked exactly from the stage walk — never
+    * from a root listing — which is what makes concurrent writers and
+    * crash replays unable to adopt each other's files. Part names
     * carry a job UUID, so collisions cannot occur.
     */
-  private def stageAppend(spark: SparkSession, p: org.apache.hadoop.fs.Path,
+  private def stageAppend(p: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem, df: DataFrame,
-      partitionDirs: Seq[String]): Seq[String] = {
+      partitionDirs: Seq[String], relDir: String = ""): Seq[String] = {
     val stage = new org.apache.hadoop.fs.Path(p, s".stage-${java.util.UUID.randomUUID}")
     val w = df.write.mode("overwrite")
       .options(ParquetBlooms.writerOptions(fs, p))
     (if (partitionDirs.nonEmpty) w.partitionBy(partitionDirs: _*) else w)
       .parquet(stage.toString)
-    def walk(dir: org.apache.hadoop.fs.Path, prefix: String): Seq[String] =
-      fs.listStatus(dir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Nil
-        else if (st.isDirectory) walk(st.getPath, s"$prefix$n/")
-        else if (n.endsWith(".parquet")) Seq(s"$prefix$n")
-        else Nil
-      }
-    val out = walk(stage, "").map { rel =>
-      val dst = new org.apache.hadoop.fs.Path(p, rel)
+    val out = listDataFiles(fs, stage).map { rel =>
+      val dstRel = if (relDir.isEmpty) rel else s"$relDir/$rel"
+      val dst = new org.apache.hadoop.fs.Path(p, dstRel)
       fs.mkdirs(dst.getParent)
       if (!fs.rename(new org.apache.hadoop.fs.Path(stage, rel), dst))
         throw new java.io.IOException(s"stage rename failed: $rel under $stage")
-      rel
+      dstRel
     }
-    fs.delete(stage, true)
-    out
-  }
-
-  /** Write `df` into a hidden stage dir, then rename its parts into
-    * `relDir` under the root — the flat single-directory variant the
-    * grain mutations (compaction, restatement) use for their
-    * replacement files.
-    */
-  private def stageIntoRoot(spark: SparkSession, p: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem, relDir: String,
-      df: DataFrame): Seq[String] = {
-    val stage = new org.apache.hadoop.fs.Path(p, s".stage-${java.util.UUID.randomUUID}")
-    df.write.mode("overwrite")
-      .options(ParquetBlooms.writerOptions(fs, p))
-      .parquet(stage.toString)
-    val dstDir = if (relDir.isEmpty) p else new org.apache.hadoop.fs.Path(p, relDir)
-    val out = fs.listStatus(stage).map(_.getPath)
-      .filter(q => q.getName.startsWith("part-") && q.getName.endsWith(".parquet"))
-      .map { q =>
-        val dst = new org.apache.hadoop.fs.Path(dstDir, q.getName)
-        if (!fs.rename(q, dst))
-          throw new java.io.IOException(s"stage rename failed: $q -> $dst")
-        if (relDir.isEmpty) q.getName else s"$relDir/${q.getName}"
-      }.toSeq
     fs.delete(stage, true)
     out
   }

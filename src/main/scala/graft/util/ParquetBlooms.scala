@@ -49,19 +49,19 @@ object ParquetBlooms {
     * a split-block bloom filter per declared column, sized for
     * `expectedNdv` distinct values per row group. Declaring is
     * metadata-only (existing files are not rewritten — they gain
-    * filters as maintenance naturally rewrites them); re-declaring
-    * replaces the declaration.
+    * filters as maintenance naturally rewrites them), and a staged
+    * build declares before it stages, so the root needs no committed
+    * generation yet. A root records ONE declaration
+    * ([[ManifestLog.recordSidecar]]): declaring the same columns again
+    * is a no-op, and a different declaration fails and keeps the
+    * recorded one.
     */
   def declare(spark: SparkSession, root: String, cols: Seq[String],
       expectedNdv: Long = 100000L): Unit = {
     require(cols.nonEmpty, "declare at least one bloom column")
-    require(ManifestLog.isManifested(spark, root),
-      s"$root is not manifested — adopt() it first")
     val (p, fs) = ManifestLog.hadoop(spark, root)
-    val f = new org.apache.hadoop.fs.Path(ManifestLog.manifestDir(p), ColsFile)
-    val out = fs.create(f, true)
-    try out.write(cols.map(c => s"$c\t$expectedNdv\n").mkString.getBytes("UTF-8"))
-    finally out.close()
+    ManifestLog.recordSidecar(fs, p, ColsFile, "bloom columns",
+      cols.map(c => s"$c\t$expectedNdv\n").mkString)
   }
 
   /** The declared bloom columns (with expected NDV), empty when the

@@ -353,11 +353,14 @@ object Tables {
   *
   * Every artifact is a [[ManifestLog]] root (bucketed ones through
   * [[BucketedManifest]]), so one crash-safety argument covers them
-  * all: plain snapshots and bucketed tables commit their data as
-  * generation 1 in ONE manifest commit, a committed root is reused by
-  * every later builder (this JVM or another on the same corpus) and
-  * never rewritten, and [[rebuild]] commits a replacing generation on
-  * the same root.
+  * all: every kind stages its whole build and commits it as
+  * generation 1 in ONE manifest commit, so "complete" means
+  * "committed". A committed root is reused by every later builder
+  * (this JVM or another on the same corpus) and never rewritten; a
+  * root without a committed generation is never deleted (it may be
+  * another builder's staging in flight), and a crashed build leaves
+  * only staged files [[ManifestLog.vacuum]] removes. [[rebuild]]
+  * commits a replacing generation on the same root.
   */
 object Snapshots {
   // Concurrency: prepareIndexes builds independent artifact chains on
@@ -402,34 +405,22 @@ object Snapshots {
 
   /** The one memo every artifact kind goes through: `build(root)` runs
     * at most once per (corpus, name, fingerprint) in this JVM, and only
-    * when the root fails `complete` (no other builder finished it).
+    * when the root has no committed generation (no other builder
+    * finished it). `build` stages its files and commits generation 1.
     */
   private def artifact(spark: SparkSession, dir: String, name: String)(
-      complete: String => Boolean)(build: String => Unit): String = {
+      build: String => Unit): String = {
     val fp = fingerprint(spark, dir)
     paths.computeIfAbsent((dir, name, fp), _ => new Cell(() => {
       val out = rootOf(dir, fp, name)
-      if (!complete(out)) build(out)
+      if (ManifestLog.versions(spark, out).isEmpty) build(out)
       out
     })).value
   }
 
-  /** Complete = a generation is committed. A root without one may be
-    * another builder's staging in flight, so it is never deleted here. */
-  private def committed(spark: SparkSession)(root: String): Boolean =
-    ManifestLog.versions(spark, root).nonEmpty
-
-  /** The torn-root rule of the artifacts built by SEVERAL commits: a
-    * root that failed its `complete` test is deleted before the
-    * rebuild. */
-  private def discard(spark: SparkSession, root: String): Unit = {
-    val (p, fs) = ManifestLog.hadoop(spark, root)
-    fs.delete(p, true)
-  }
-
   private def plain(spark: SparkSession, dir: String, name: String,
       partitionBy: Seq[String], bound: Option[String])(build: => DataFrame): String =
-    artifact(spark, dir, name)(committed(spark))(
+    artifact(spark, dir, name)(
       ManifestLog.commitGeneration(build, _, 1L, partitionBy, bound))
 
   /** `adoptBound` records each file's min/max of that column in the
@@ -517,66 +508,62 @@ object Snapshots {
     */
   def bucketedTableKeys(spark: SparkSession, dir: String, name: String,
       keys: Seq[String], buckets: Int)(build: => DataFrame): DataFrame =
-    BucketedManifest.read(spark,
-      artifact(spark, dir, s"bkt-$name")(committed(spark))(
-        BucketedManifest.build(build, _, keys, buckets)))
+    BucketedManifest.read(spark, artifact(spark, dir, s"bkt-$name")(
+      BucketedManifest.build(Seq(build), _, keys, buckets)))
+
+  /** Bucketed layout built from SEVERAL segments in one commit
+    * ([[BucketedManifest.build]]): each bucket gets one file per
+    * non-empty segment, with per-file `statCols` stats — the per-year
+    * files of the li-ok-pair layout, whose disjoint date stats let a
+    * pushed date bound skip files at plan time. `build` returns the
+    * segments and the source row count they must add up to; a short
+    * stage throws before anything commits. Returns the ROOT.
+    */
+  private[graft] def bucketedSegments(spark: SparkSession, dir: String, name: String,
+      keys: Seq[String], buckets: Int, statCols: Seq[String])(
+      build: => (Seq[DataFrame], Long)): String =
+    artifact(spark, dir, s"bkt-$name") { root =>
+      val (segments, sourceRows) = build
+      BucketedManifest.build(segments, root, keys, buckets, statCols, Some(sourceRows))
+    }
 
   /** Manifested-log artifact: build once per (corpus, name) as a
-    * [[ManifestLog]] root — created empty, the lookup-key bloom
-    * columns declared FIRST ([[ParquetBlooms.declare]]), then the
-    * build frame appended as one sorted segment, so every data file
-    * carries boundary stats in the manifest AND a key bloom filter in
-    * its footer from birth. Returns the ROOT (the keyed entry points
-    * — [[ManifestLog.readKeyed]], [[ManifestLog.deleteKeys]] — take a
-    * root, not a frame). This is the at-rest shape of "fetch/forget by
-    * id on a log sorted by something else": range stats answer the
-    * boundary reads, blooms answer the keyed ones, one layout pays for
-    * both. Built by several commits, so a torn root (created, append
-    * never landed) is deleted and rebuilt.
+    * [[ManifestLog]] root — the lookup-key bloom columns declared
+    * FIRST ([[ParquetBlooms.declare]]), then the build frame staged
+    * and committed as generation 1 with per-file `boundCol` stats, so
+    * every data file carries boundary stats in the manifest AND a key
+    * bloom filter in its footer from birth. Returns the ROOT (the
+    * keyed entry points — [[ManifestLog.readKeyed]],
+    * [[ManifestLog.deleteKeys]] — take a root, not a frame). This is
+    * the at-rest shape of "fetch/forget by id on a log sorted by
+    * something else": range stats answer the boundary reads, blooms
+    * answer the keyed ones, one layout pays for both.
     */
   def manifestedLog(spark: SparkSession, dir: String, name: String,
       boundCol: String, bloomCols: Seq[String])(build: => DataFrame): String =
-    artifact(spark, dir, s"mlog-$name")(out =>
-      scala.util.Try(ManifestLog.liveFileCount(spark, out) > 0).getOrElse(false)) { out =>
-      discard(spark, out)
-      ManifestLog.create(spark, out)
+    // `log-`/`zorder-`: names no multi-commit build of these kinds
+    // wrote, so an old root (whose v1 is a fileless `create`) is never
+    // taken for a committed build.
+    artifact(spark, dir, s"log-$name") { out =>
       if (bloomCols.nonEmpty) ParquetBlooms.declare(spark, out, bloomCols)
-      ManifestLog.appendSorted(build, out, Nil, Some(boundCol))
+      ManifestLog.commitGeneration(build, out, 1L, Nil, Some(boundCol))
     }
 
-  /** Z-clustered manifested-log artifact: [[manifestedLog]] plus one
-    * [[ManifestLog.cluster]] pass, so the at-rest layout answers
-    * conjunctive boundary slices over EVERY cluster column from a
-    * manifest parse ([[ManifestLog.readSliceN]]) — the multi-tenant /
-    * multi-dimension read pattern a time-only sort cannot prune.
-    * Built by several commits, so a torn root (created or appended but
-    * never clustered — the last committed op tells) is deleted and
-    * rebuilt.
+  /** Z-clustered manifested-log artifact: [[manifestedLog]] with the
+    * build frame staged in Z-order over `cols` and every cluster
+    * column's per-file stats recorded ([[ManifestLog.commitClustered]]
+    * — the layout a [[ManifestLog.cluster]] pass leaves), so the
+    * at-rest layout answers conjunctive boundary slices over EVERY
+    * cluster column from a manifest parse ([[ManifestLog.readSliceN]])
+    * — the multi-tenant / multi-dimension read pattern a time-only
+    * sort cannot prune.
     */
   def clusteredLog(spark: SparkSession, dir: String, name: String,
       cols: Seq[String], targetFileRows: Long,
       bloomCols: Seq[String] = Nil)(build: => DataFrame): String =
-    artifact(spark, dir, s"zlog-$name")(out =>
-      scala.util.Try(ManifestLog.describe(spark, out).last._2 == "cluster")
-        .getOrElse(false)) { out =>
-      discard(spark, out)
-      ManifestLog.create(spark, out)
+    artifact(spark, dir, s"zorder-$name") { out =>
       if (bloomCols.nonEmpty) ParquetBlooms.declare(spark, out, bloomCols)
-      ManifestLog.appendSorted(build, out, Nil, Some(cols.head))
-      ManifestLog.cluster(spark, out, cols, targetFileRows)
-    }
-
-  /** Memoized layout root for builders that own their whole write
-    * protocol (the li-ok-pair layout, built by per-year appends):
-    * `build(path)` runs once per (corpus, name, fingerprint). Built by
-    * several commits, so a root failing `complete` (a torn previous
-    * attempt) is deleted and rebuilt.
-    */
-  private[graft] def layoutRoot(spark: SparkSession, dir: String, name: String)(
-      complete: String => Boolean)(build: String => Unit): String =
-    artifact(spark, dir, s"root-$name")(complete) { out =>
-      discard(spark, out)
-      build(out)
+      ManifestLog.commitClustered(build, out, cols, targetFileRows)
     }
 
   /** Ingest-pipeline seam: register an externally maintained at-rest

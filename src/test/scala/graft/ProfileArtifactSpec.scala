@@ -12,7 +12,7 @@ import org.json4s.jackson.JsonMethods
   * here would otherwise surface as an unreadable artifact in the round
   * where the driver-box-inflation argument needs it.
   */
-class ProfileArtifactSpec extends SparkTestBase {
+class ProfileArtifactSpec extends SparkTestBase with TempCorpusDirs {
 
   private val sf = "/root/testdata/sf0.001"
   private val sample = Seq(
@@ -75,7 +75,7 @@ class ProfileArtifactSpec extends SparkTestBase {
     // Synthetic bench artifact: q20 matches the profile closely (under
     // threshold), q60's bench min is tiny so its ratio lands over
     // threshold and it must be listed individually.
-    val benchPath = java.nio.file.Files.createTempFile("graft_prof_bench", ".json")
+    val benchPath = java.nio.file.Paths.get(tempCorpusDir("graft_prof_bench"), "bench.json")
     java.nio.file.Files.write(benchPath,
       """{"metric":"total","queries":{"q20_join_broadcast":1000.0,"q60_exact_dedup":0.000001}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -111,7 +111,7 @@ class ProfileArtifactSpec extends SparkTestBase {
     // Bench file listing BOTH queries: the erred one must be excluded
     // from the reconciliation (its -1.0 sentinel would otherwise drag
     // the mean offset negative and pad n_compared).
-    val benchPath = java.nio.file.Files.createTempFile("graft_prof_bench_err", ".json")
+    val benchPath = java.nio.file.Paths.get(tempCorpusDir("graft_prof_bench_err"), "bench.json")
     java.nio.file.Files.write(benchPath,
       """{"queries":{"q60_exact_dedup":0.3,"q_broken":0.3}}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))

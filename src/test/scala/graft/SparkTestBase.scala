@@ -55,17 +55,12 @@ trait TempCorpusDirs extends org.scalatest.BeforeAndAfterAll {
     d
   }
   override def afterAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    def deleteTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     tmpDirs.foreach { d =>
-      deleteTree(java.nio.file.Paths.get(d))
+      SparkTestBase.deleteTree(java.nio.file.Paths.get(d))
       val prefix = graft.util.Snapshots.rootPrefix(d)
       Option(tmp.listFiles()).toSeq.flatten
-        .filter(_.getName.startsWith(prefix)).foreach(f => deleteTree(f.toPath))
+        .filter(_.getName.startsWith(prefix)).foreach(f => SparkTestBase.deleteTree(f.toPath))
     }
     super.afterAll()
   }
@@ -101,16 +96,26 @@ trait ArtifactSpecHelpers extends TempCorpusDirs {
 }
 
 object SparkTestBase {
+  /** Delete a file or a directory tree, if present. */
+  def deleteTree(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
+  }
+
   lazy val session: SparkSession = {
+    // Catalog-table tests (saveAsTable) must not litter the repo cwd;
+    // the warehouse goes when the test JVM exits.
+    val warehouse = java.nio.file.Files.createTempDirectory("graft_warehouse")
+    sys.addShutdownHook(deleteTree(warehouse))
     val s = graft.util.Tables.withSessionConf(
       SparkSession.builder()
         .master("local[4]")
         .appName("graft-tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false")
-        // Catalog-table tests (saveAsTable) must not litter the repo cwd.
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+        .config("spark.sql.warehouse.dir", warehouse.toString)
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

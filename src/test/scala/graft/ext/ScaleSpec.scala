@@ -20,8 +20,8 @@ class ScaleSpec extends SparkTestBase with graft.TempCorpusDirs {
     val facts = (1L to 1000L).map(i => (i % 100, i, i * 1.5)).toDF("k", "id", "v")
     val dims = (0L until 100L).map(i => (i, s"dim$i")).toDF("k", "name")
     val dir = tempCorpusDir("graft_bktest")
-    graft.util.BucketedManifest.build(facts, s"$dir/facts", Seq("k"), 8)
-    graft.util.BucketedManifest.build(dims, s"$dir/dims", Seq("k"), 8)
+    graft.util.BucketedManifest.build(Seq(facts), s"$dir/facts", Seq("k"), 8)
+    graft.util.BucketedManifest.build(Seq(dims), s"$dir/dims", Seq("k"), 8)
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ, not broadcast

@@ -12,7 +12,7 @@ import graft.SparkTestBase
   * and without tolerance. Also pins the physical plan: the custom
   * operator must actually be what runs.
   */
-class AsOfJoinSpec extends SparkTestBase {
+class AsOfJoinSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
 
   private def leftDf(rows: Seq[(Option[Long], Option[Long], Long)]): DataFrame =
@@ -207,7 +207,7 @@ class AsOfJoinSpec extends SparkTestBase {
     * what a 100 TB deployment pre-pays at ingest by bucketing.
     */
   test("bucketed inputs elide both exchanges; plain inputs pay two") {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_asof_bkt").toString
+    val warehouse = tempCorpusDir("graft_asof_bkt")
     def bucketed(df: org.apache.spark.sql.DataFrame, table: String, key: String) = {
       df.write.mode("overwrite")
         .option("path", s"$warehouse/$table")

@@ -172,11 +172,11 @@ class LineitemLayoutSpec extends SparkTestBase with graft.TempCorpusDirs {
     // Two r16 ADVICE defects pinned at once: (1) ship years straddling
     // far outside the classic 1995–2001 window, plus a null date — the
     // pre-r17 hard-coded year loop silently DROPPED the drifted rows;
-    // bounds now derive from the corpus min/max ship year, and the
-    // build asserts manifested == source. (2) The build's last commit
-    // is the completion-sentinel batch; without it a crash after a
-    // prefix of per-year appends left a root that `liveFileCount > 0`
-    // accepted as complete, under-counting q157 forever after.
+    // bounds now derive from the corpus ship years, and the build
+    // checks staged == source rows before it commits. (2) The whole
+    // build is ONE generation-1 commit: a build made of per-year
+    // commits could leave a prefix that a later session accepted as
+    // complete, under-counting q157 forever after.
     val dir = tempCorpusDir("graft_li_pair_drift")
     import sqlImplicits._
     Seq(
@@ -193,9 +193,8 @@ class LineitemLayoutSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(got.count() == 5,
       "year loop dropped drifted or null-dated rows from the pair layout")
     assert(got.filter(col("l_shipdate").isNull).count() == 1)
-    assert(graft.util.ManifestLog.batchHwm(spark, root)
-        == Relational.PairLayoutComplete,
-      "completion sentinel missing — a torn build would be reused as complete")
+    assert(graft.util.ManifestLog.versions(spark, root) == Seq(1L),
+      "the build is not one committed generation — a torn build could be reused as complete")
   }
 
   test("a 9999-12-31 sentinel ship date costs one extra batch, not a crash") {
@@ -221,7 +220,29 @@ class LineitemLayoutSpec extends SparkTestBase with graft.TempCorpusDirs {
     val got = graft.util.BucketedManifest.read(spark, root)
     assert(got.count() == 3, "sentinel-dated row lost from the pair layout")
     assert(got.filter(year(col("l_shipdate")) === 9999).count() == 1)
-    assert(graft.util.ManifestLog.batchHwm(spark, root)
-      == Relational.PairLayoutComplete)
+    assert(graft.util.ManifestLog.versions(spark, root) == Seq(1L))
+  }
+
+  test("a pair build whose staged rows fall short of the source throws and commits nothing") {
+    // The row check runs on the staged files' footer counts BEFORE the
+    // commit: segments that miss a year (a wrong year predicate) must
+    // never become a committed layout that under-counts q157.
+    val dir = tempCorpusDir("graft_li_pair_short")
+    import sqlImplicits._
+    val li = Seq(
+      (1L, 101.01, 0.05, "N", "1997-06-01"),
+      (2L, 202.02, 0.00, "R", "1998-03-01"),
+      (3L, 303.03, 0.10, "A", "1998-07-04"),
+    ).toDF("l_orderkey", "l_extendedprice", "l_discount", "l_returnflag", "d")
+      .withColumn("l_shipdate", to_timestamp(col("d")).cast("timestamp_ntz"))
+      .drop("d")
+    val root = s"$dir/pair"
+    val e = intercept[IllegalArgumentException] {
+      graft.util.BucketedManifest.build(Seq(li.where(year(col("l_shipdate")) === 1998)),
+        root, Seq("l_orderkey"), 4, Seq("l_shipdate"), Some(li.count()))
+    }
+    assert(e.getMessage.contains("staged 2 of 3 source rows"), e.getMessage)
+    assert(graft.util.ManifestLog.versions(spark, root).isEmpty,
+      "a short build committed a generation")
   }
 }

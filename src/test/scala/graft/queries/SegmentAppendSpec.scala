@@ -194,7 +194,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     // through the manifest.
     def pair(df: DataFrame, key: String, name: String): String = {
       val root = s"${tempCorpusDir(s"graft_seg_$name")}/t"
-      graft.util.BucketedManifest.build(df.filter(col(key) % 2 === 0), root, Seq(key), 32)
+      graft.util.BucketedManifest.build(Seq(df.filter(col(key) % 2 === 0)), root, Seq(key), 32)
       graft.util.BucketedManifest.appendBucketed(df.filter(col(key) % 2 === 1), root)
       root
     }

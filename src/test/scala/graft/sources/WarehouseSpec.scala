@@ -14,12 +14,21 @@ import graft.pipeline.MoviePipeline
   * dialect. Catalog tables cover D1 (`CREATE SCHEMA IF NOT EXISTS`,
   * ingest.py:28 / transform.py:85) + D2 via saveAsTable.
   */
-class WarehouseSpec extends SparkTestBase {
+class WarehouseSpec extends SparkTestBase with graft.TempCorpusDirs {
 
   private lazy val derbyDir = {
-    val d = Files.createTempDirectory("graft_derby").toString
+    val d = tempCorpusDir("graft_derby")
     System.setProperty("derby.system.home", d) // keep derby.log out of the repo
     d
+  }
+
+  /** Shut the embedded Derby system down (it reports success as an
+    * SQLException) before its files are deleted with the suite's
+    * temp dirs. */
+  override def afterAll(): Unit = {
+    try java.sql.DriverManager.getConnection("jdbc:derby:;shutdown=true")
+    catch { case _: java.sql.SQLException => () }
+    super.afterAll()
   }
 
   private def derbyWarehouse(db: String) = new JdbcWarehouse(
@@ -58,7 +67,7 @@ class WarehouseSpec extends SparkTestBase {
     // The reference hardcodes its connection as module constants
     // (ingest.py:9-13); the engine resolves the same keys from a config
     // file with the environment taking precedence.
-    val f = Files.createTempFile("graft_cfg", ".env")
+    val f = java.nio.file.Paths.get(tempCorpusDir("graft_cfg"), "cfg.env")
     Files.write(f, (
       s"# test warehouse\n" +
         s"DB_URL=jdbc:derby:$derbyDir/fromcfg;create=true\n" +
@@ -114,7 +123,7 @@ class WarehouseSpec extends SparkTestBase {
   }
 
   test("two-schema catalog layout: raw_data ingest feeding production (reference parity)") {
-    val dir = Files.createTempDirectory("graft_two_schema").toString
+    val dir = tempCorpusDir("graft_two_schema")
     val csv =
       """id,title,release_date,genres,revenue,budget,popularity,imdb_rating
         |1,A,2009-12-15,"Action, Sci-Fi",100.0,50.0,9.0,7.9

@@ -29,7 +29,7 @@ class BucketedDeleteSpec extends SparkTestBase with graft.TempCorpusDirs {
   private def freshPair(tag: String): (String, String) = {
     val dir = tempCorpusDir(s"graft_bdel_$tag")
     def build(name: String, df: DataFrame): String = {
-      BucketedManifest.build(df, s"$dir/$name", Seq("k"), Buckets)
+      BucketedManifest.build(Seq(df), s"$dir/$name", Seq("k"), Buckets)
       s"$dir/$name"
     }
     val fact = build("fact",

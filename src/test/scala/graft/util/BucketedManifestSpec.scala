@@ -28,7 +28,7 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   private def freshPair(tag: String): (String, String) = {
     val dir = tempCorpusDir(s"graft_bman_$tag")
     def build(name: String, df: DataFrame): String = {
-      BucketedManifest.build(df, s"$dir/$name", Seq("k"), Buckets)
+      BucketedManifest.build(Seq(df), s"$dir/$name", Seq("k"), Buckets)
       s"$dir/$name"
     }
     val fact = build("fact",
@@ -198,14 +198,14 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
       (lo until hi).map(i => (i.toLong % 300, i.toLong % 7, i.toLong)).toDF("k1", "k2", "v")
     val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
     val executions = executionsOf {
-      BucketedManifest.build(rows(0, 2000).drop("k2").withColumnRenamed("k1", "k"),
+      BucketedManifest.build(Seq(rows(0, 2000).drop("k2").withColumnRenamed("k1", "k")),
         single, Seq("k"), Buckets)
       BucketedManifest.appendBucketed(
         rows(2000, 2400).drop("k2").withColumnRenamed("k1", "k"), single)
       BucketedManifest.compactBucket(spark, single, 0)
       val del = BucketedManifest.deleteKeys(spark, single, Seq(1L, 2L, 3L, 4L).toDF("k"))
       assert(del.rowsDeleted == 32L, s"four keys of eight rows each: $del")
-      BucketedManifest.build(rows(0, 2000), composite, Seq("k1", "k2"), Buckets)
+      BucketedManifest.build(Seq(rows(0, 2000)), composite, Seq("k1", "k2"), Buckets)
       BucketedManifest.appendBucketed(rows(2000, 2400), composite)
       BucketedManifest.compactBucket(spark, composite, 0)
     }
@@ -225,7 +225,7 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("a composite-key build records every key, plans its full BucketSpec and refuses keyed deletion") {
     val root = s"${tempCorpusDir("graft_bman_composite")}/grain"
     val grain = (0 until 400).map(i => (i.toLong % 20, i.toLong % 7, i.toLong)).toDF("a", "b", "v")
-    BucketedManifest.build(grain, root, Seq("a", "b"), Buckets)
+    BucketedManifest.build(Seq(grain), root, Seq("a", "b"), Buckets)
     val s = BucketedManifest.spec(spark, root)
     assert(s.keys == Seq("a", "b") && s.buckets == Buckets && s.keyType.isEmpty, s"spec: $s")
     val agg = BucketedManifest.read(spark, root).groupBy("a", "b").agg(sum("v").as("sv"))
@@ -252,10 +252,10 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("a build onto a root that records another bucket spec fails and keeps the recorded spec") {
     val root = s"${tempCorpusDir("graft_bman_spec_clash")}/grain"
     val df = (0 until 40).map(i => (i.toLong, i.toLong)).toDF("k", "v")
-    BucketedManifest.build(df, root, Seq("k"), Buckets)
+    BucketedManifest.build(Seq(df), root, Seq("k"), Buckets)
     val recorded = BucketedManifest.spec(spark, root)
     val e = intercept[IllegalArgumentException] {
-      BucketedManifest.build(df, root, Seq("k"), Buckets * 2)
+      BucketedManifest.build(Seq(df), root, Seq("k"), Buckets * 2)
     }
     assert(e.getMessage.contains("already records bucket spec"), e.getMessage)
     assert(BucketedManifest.spec(spark, root) == recorded)
@@ -296,7 +296,7 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     def rows(lo: Int, hi: Int) =
       (lo until hi).map(i => (i.toLong % 100, i.toLong, i.toLong))
         .toDF("k", "v", "ts")
-    BucketedManifest.build(rows(0, 1000), root, Seq("k"), Buckets)
+    BucketedManifest.build(Seq(rows(0, 1000)), root, Seq("k"), Buckets)
     // Declaration AFTER the build: the initial generation is stats-less
     // and must stay a permanent candidate; only later appends record.
     BucketedManifest.declareStats(spark, root, Seq("ts"))

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** dotenv-style config resolution (reference ingest.py:9-13 connection
   * constants, publish.py:146-149 credential/id resolution).
   */
-class EnvConfigSpec extends AnyFunSuite {
+class EnvConfigSpec extends AnyFunSuite with graft.TempCorpusDirs {
 
   test("parses KEY=VALUE with comments, blanks, export and quotes") {
     val cfg = EnvConfig.parse(Seq(
@@ -38,7 +38,7 @@ class EnvConfigSpec extends AnyFunSuite {
   }
 
   test("load() round-trips a config file") {
-    val f = Files.createTempFile("graft_env", ".env")
+    val f = java.nio.file.Paths.get(tempCorpusDir("graft_env"), "cfg.env")
     Files.write(f, "DB_URL=jdbc:derby:memory:cfg\nDB_DRIVER=x.Y\n".getBytes("UTF-8"))
     val cfg = EnvConfig.load(f.toString)
     assert(cfg("DB_URL") == "jdbc:derby:memory:cfg")

@@ -78,7 +78,7 @@ class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
     // Four segments (the one-shot build plus three appends) leave
     // every bucket at the bound; the fifth tips both over it.
     val root = s"${tempCorpusDir("graft_maint_bkt")}/t"
-    BucketedManifest.build(df, root, Seq("k"), 2)
+    BucketedManifest.build(Seq(df), root, Seq("k"), 2)
     (0 until 3).foreach(_ => BucketedManifest.appendBucketed(df, root))
     assert(BucketedManifest.maintain(spark, root, maxFiles = 4).isEmpty,
       "4 files per bucket is within the bound")

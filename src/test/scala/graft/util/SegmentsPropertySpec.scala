@@ -83,7 +83,7 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
       val nBatches = 1 + rng.nextInt(4)
       def layout(df: org.apache.spark.sql.DataFrame, key: String, name: String): String = {
         val root = s"${tempCorpusDir(s"graft_fuzz_$name$trial")}/t"
-        BucketedManifest.build(df.filter(col(key) % nBatches === 0), root, Seq(key), 8)
+        BucketedManifest.build(Seq(df.filter(col(key) % nBatches === 0)), root, Seq(key), 8)
         (1 until nBatches).foreach(b =>
           BucketedManifest.appendBucketed(df.filter(col(key) % nBatches === b), root))
         root

@@ -24,6 +24,29 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
     (1 to n).map(i => (i.toLong, s"v$i")).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
 
+  /** The li-ok-pair layout's source: `n` lineitem rows over three ship
+    * years plus one null ship date. */
+  private def writeLineitem(dir: String, n: Int): Unit =
+    (1 to n).map(i => (i.toLong, i * 1.5, 0.01 * (i % 5), if (i % 2 == 0) "N" else "R",
+        if (i == n) None else Some(s"${1995 + i % 3}-0${1 + i % 9}-1${i % 10}")))
+      .toDF("l_orderkey", "l_extendedprice", "l_discount", "l_returnflag", "d")
+      .withColumn("l_shipdate",
+        org.apache.spark.sql.functions.to_timestamp(col("d")).cast("timestamp_ntz"))
+      .drop("d").coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+
+  /** The li-ok-pair layout of corpus `dir`, read back. */
+  private def pair(dir: String): DataFrame =
+    BucketedManifest.read(spark, graft.queries.Relational.lineitemPairManifested(spark, dir))
+
+  /** A manifested log with a bloom column, read back. */
+  private def mlog(dir: String, name: String)(build: => DataFrame): DataFrame =
+    ManifestLog.read(spark, Snapshots.manifestedLog(spark, dir, name, "k", Seq("v"))(build))
+
+  /** A Z-clustered log over (k, u), read back as the source's (k, v). */
+  private def zlog(dir: String, name: String)(build: => DataFrame): DataFrame =
+    ManifestLog.read(spark, Snapshots.clusteredLog(spark, dir, name, Seq("k", "u"), 16L)(
+      build.withColumn("u", col("k") % 7L))).select("k", "v")
+
   private def rootOf(df: DataFrame): String =
     new java.io.File(new java.net.URI(df.inputFiles.head).getPath).getParent
 
@@ -49,6 +72,7 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("a second builder reuses every committed root: listing, version and pinned rows unchanged") {
     val dir = tempCorpusDir("graft_two_builders")
     writeCorpus(dir, 40)
+    writeLineitem(dir, 40)
     var builds = 0
     def src = { builds += 1; spark.read.parquet(s"$dir/t.parquet") }
     def three() = Seq(
@@ -56,14 +80,17 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
       Snapshots.slice(spark, dir, "tb-slice", "k", 10L, 30L)(
         src.repartitionByRange(4, col("k")).sortWithinPartitions("k"))
         .filter(col("k") >= 10L && col("k") < 30L),
-      Snapshots.bucketedTable(spark, dir, "tb-bkt", "k", 4)(src))
+      Snapshots.bucketedTable(spark, dir, "tb-bkt", "k", 4)(src),
+      mlog(dir, "tb-mlog")(src.repartition(3)),
+      zlog(dir, "tb-zlog")(src),
+      pair(dir))
 
     val pinned = three()
-    assert(builds == 3)
+    assert(builds == 5)
     val roots = pinned.map(rootOf)
     val before = roots.map(r => (listing(r), ManifestLog.versions(spark, r)))
     val rowsBefore = pinned.map(rows)
-    assert(rowsBefore.map(_.size) == Seq(40, 20, 40))
+    assert(rowsBefore.map(_.size) == Seq(40, 20, 40, 40, 40, 40))
 
     assert(before.forall(_._2 == Seq(1L)), s"not one committed generation each: $before")
     Snapshots.resetMemo()
@@ -72,7 +99,7 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
       assert(listing(r) == files, s"the second builder changed the files of $r")
       assert(ManifestLog.versions(spark, r) == vs, s"the second builder committed on $r")
     }
-    assert(builds == 3, "the second builder re-ran a build over committed roots")
+    assert(builds == 5, "the second builder re-ran a build over committed roots")
     assert(second.map(rootOf) == roots, "the second builder read another root")
     assert(pinned.map(rows) == rowsBefore, "a pinned frame lost or changed rows")
     assert(second.map(rows) == rowsBefore)
@@ -81,16 +108,20 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
   test("two builders racing on an uncommitted root both return and commit one full generation") {
     val dir = tempCorpusDir("graft_race_builders")
     writeCorpus(dir, 30)
-    val full = rows(spark.read.parquet(s"$dir/t.parquet"))
+    writeLineitem(dir, 30)
+    val corpus = rows(spark.read.parquet(s"$dir/t.parquet"))
     /** `ask(building)` asks for one artifact whose build counts
       * `building` down — the proof that the first builder holds its
-      * memo cell before the memo is reset for the second. */
-    def race(ask: CountDownLatch => DataFrame): Unit = {
+      * memo cell before the memo is reset for the second. A build that
+      * takes no closure (the pair layout) counts it down on reaching
+      * its commit. */
+    def race(full: Seq[String])(ask: CountDownLatch => DataFrame): Unit = {
       // Both builders stage their files, then both try to commit v1.
       val staged = new CountDownLatch(2)
       val building = new CountDownLatch(1)
       ManifestLog.failpoint = {
         case "staged:generation" =>
+          building.countDown()
           staged.countDown()
           assert(staged.await(60, TimeUnit.SECONDS), "the other builder never staged")
         case _ => ()
@@ -114,8 +145,11 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
       building.countDown()
       spark.read.parquet(s"$dir/t.parquet")
     }
-    race(b => Snapshots(spark, dir, "race-plain")(src(b).repartition(3)))
-    race(b => Snapshots.bucketedTable(spark, dir, "race-bkt", "k", 4)(src(b)))
+    race(corpus)(b => Snapshots(spark, dir, "race-plain")(src(b).repartition(3)))
+    race(corpus)(b => Snapshots.bucketedTable(spark, dir, "race-bkt", "k", 4)(src(b)))
+    race(corpus)(b => mlog(dir, "race-mlog")(src(b).repartition(3)))
+    race(corpus)(b => zlog(dir, "race-zlog")(src(b)))
+    race(rows(spark.read.parquet(s"$dir/lineitem.parquet")))(_ => pair(dir))
   }
 
   test("two JVMs committing generation 1 at once leave one readable generation; a lost rebuild throws") {
@@ -192,5 +226,47 @@ class SnapshotBuildersSpec extends SparkTestBase with graft.TempCorpusDirs {
         sys.error("committed: must not rebuild")))
     again.zip(Seq("plain (second builder)", "bucketed (second builder)"))
       .foreach { case (df, what) => check(df, what) }
+  }
+
+  test("a build torn before its commit leaves no generation; the next builder commits it whole") {
+    val dir = tempCorpusDir("graft_torn_builds")
+    writeCorpus(dir, 30)
+    writeLineitem(dir, 30)
+    def src = spark.read.parquet(s"$dir/t.parquet")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    /** The one root of corpus `dir` whose name ends with `name`. */
+    def rootNamed(name: String): String = {
+      val hits = Option(tmp.listFiles()).toSeq.flatten.filter(f =>
+        f.getName.startsWith(Snapshots.rootPrefix(dir)) && f.getName.endsWith(s"-$name"))
+      assert(hits.length == 1, s"expected one root named $name, got $hits")
+      hits.head.getPath
+    }
+    def drill(name: String, full: Seq[String])(ask: => DataFrame): Unit = {
+      ManifestLog.failpoint = {
+        case "staged:generation" => throw new IllegalStateException("torn before the commit")
+        case _ => ()
+      }
+      try intercept[IllegalStateException](ask)
+      finally ManifestLog.failpoint = _ => ()
+      val root = rootNamed(name)
+      assert(ManifestLog.versions(spark, root).isEmpty, s"$name: the torn build committed")
+      val torn = dataFiles(root)
+      assert(torn.nonEmpty, s"$name: the torn build staged no file")
+      Snapshots.resetMemo()
+      val df = ask
+      assert(rootOf(df) == root)
+      assert(ManifestLog.versions(spark, root) == Seq(1L), s"$name: not one generation")
+      assert(rows(df) == full, s"$name: the rebuilt generation lost or changed rows")
+      val live = ManifestLog.currentEntries(spark, root).map(_.path).toSet
+      assert(live.intersect(torn).isEmpty, s"$name: the rebuild listed a torn file")
+      ManifestLog.vacuum(spark, root)
+      assert(dataFiles(root) == live, s"$name: vacuum left the torn build's files")
+      assert(rows(df) == full)
+    }
+    val corpus = rows(src)
+    drill("log-torn-mlog", corpus)(mlog(dir, "torn-mlog")(src.repartition(3)))
+    assert(ParquetBlooms.declared(spark, rootNamed("log-torn-mlog")).map(_._1) == Seq("v"))
+    drill("zorder-torn-zlog", corpus)(zlog(dir, "torn-zlog")(src))
+    drill("bkt-li-ok-pair-b32", rows(spark.read.parquet(s"$dir/lineitem.parquet")))(pair(dir))
   }
 }
