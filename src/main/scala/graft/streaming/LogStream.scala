@@ -19,8 +19,8 @@ import graft.util.ManifestLog
   *  - readers pinned at any generation never observe a half batch —
   *    visibility is one rename, so there is no marker/undo machinery
   *    and no batch-stamped file names to reason about;
-  *  - maintenance composes: compaction / retention / restatement can
-  *    run BETWEEN micro-batches on the same log (they propagate the
+  *  - maintenance composes: compaction / clustering / keyed deletion
+  *    can run BETWEEN micro-batches on the same log (they propagate the
   *    high-water mark), so the log stays query-shaped while it ingests;
   *  - each batch is clustered on the log's boundary column before the
   *    write, so its manifest entries carry tight write-time stats and

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * A bare parquet directory equates "visible" with "listed": the
   * directory listing IS the table state, so any maintenance that
-  * deletes or replaces files (compaction, restatement) has a window
+  * deletes or replaces files (compaction, keyed deletion) has a window
   * where a concurrent reader's listing sees a gap or a double, and
   * every mutation would need a single-writer, no-concurrent-readers
   * contract. A manifested log separates the two:
@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scan exactly that file set; superseded files are RETIRED, not
   * deleted — [[vacuum]] is the only deleter, so a reader pinned at any
   * kept generation stays consistent through any number of concurrent
-  * appends/compactions/restatements. Crash-safety collapses to one
+  * appends/compactions/deletions. Crash-safety collapses to one
   * argument: no crash window contains a visible intermediate state,
   * because visibility is a single rename; everything a crash strands
   * is an orphan [[vacuum]] removes.
@@ -40,7 +40,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the single-rename commit loses to a concurrent commit it re-reads
   * the new current manifest and retries the union (appends commute;
   * the staged files were never part of any other writer's state).
-  * The GRAIN mutations (compaction, restatement, retention) stay
+  * The GRAIN mutations (compaction, clustering, keyed deletion) stay
   * single-maintainer: their file selection is computed against one
   * generation, so losing the rename means the selection is stale and
   * the op aborts loudly ([[CommitConflict]]) — safe to re-invoke,
@@ -52,10 +52,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At 100 TB a sorted log is hundreds of thousands of files; stats in
   * the manifest let [[readSlice]] pick a date slice's files at plan
   * time without opening a single footer, and let the maintenance tick
-  * ([[maintainSorted]]) and [[expireBefore]] classify grains
-  * from the manifest alone. Stats are recorded only when trustworthy
-  * (non-null, decidable footer statistics); a stats-less line is
-  * always selected — pruning may only ever widen, never drop.
+  * ([[maintainSorted]]) classify grains from the manifest alone.
+  * Stats are recorded only when trustworthy (non-null, decidable
+  * footer statistics); a stats-less line is always selected — pruning
+  * may only ever widen, never drop.
   */
 object ManifestLog {
 
@@ -161,14 +161,15 @@ object ManifestLog {
     new org.apache.hadoop.fs.Path(root, ManifestDirName)
 
   /** Record a sidecar file beside the manifests (the bucket spec, the
-    * bloom and stat column declarations): written under a unique
-    * `.tmp-` name ([[vacuum]] sweeps one a crash strands) and renamed
-    * onto `name`, so a reader never sees a partial file. A sidecar already recorded (an earlier or
-    * concurrent builder's) is kept and must hold this `body`. The
-    * check runs before the rename as well as after a refused one,
-    * because some filesystems' rename replaces its destination (POSIX
-    * rename(2), Hadoop's raw local filesystem): there, two builders
-    * that both find no sidecar both rename, and the later one stands.
+    * bloom column declaration): written under a unique `.tmp-` name
+    * ([[vacuum]] sweeps one a crash strands) and renamed onto `name`,
+    * so a reader never sees a partial file. A sidecar already recorded
+    * (an earlier or concurrent builder's) is kept and must hold this
+    * `body`. The check runs before the rename as well as after a
+    * refused one, because some filesystems' rename replaces its
+    * destination (POSIX rename(2), Hadoop's raw local filesystem):
+    * there, two builders that both find no sidecar both rename, and
+    * the later one stands.
     */
   private[util] def recordSidecar(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path, name: String, what: String, body: String): Unit = {
@@ -192,7 +193,7 @@ object ManifestLog {
   }
 
   /** Whether `root` is a manifested log (holds a manifest directory). */
-  def isManifested(spark: SparkSession, root: String): Boolean = {
+  private[util] def isManifested(spark: SparkSession, root: String): Boolean = {
     val (p, fs) = hadoop(spark, root)
     fs.exists(manifestDir(p))
   }
@@ -247,8 +248,8 @@ object ManifestLog {
     * generation; every later mutation goes through manifest commits.
     * Pass the layout's boundary column to record each file's min/max
     * in the manifest (one footer read per file, once — every later
-    * slice read, maintenance tick, and retention pass then classifies
-    * files without touching a footer).
+    * slice read and maintenance tick then classifies files without
+    * touching a footer).
     */
   def adopt(spark: SparkSession, root: String,
       boundCol: Option[String] = None): Unit = {
@@ -1114,13 +1115,13 @@ object ManifestLog {
   }
 
   /** Segment files per grain (a sorted log's date range, a year
-    * partition, a bucket) above which the maintenance ticks
-    * ([[maintainSorted]], [[maintainKeyed]], [[BucketedManifest.maintain]])
-    * rewrite THAT grain — the LSM bound applied at the layout grain,
-    * never the whole table. Every append adds ≤ N files (N = the
-    * layout's partition/bucket count), and scan task setup plus footer
-    * reads grow with file count even when pruning is perfect; 16 keeps
-    * scan setup O(ideal) while a compaction amortizes over many appends.
+    * partition, a key slice) above which the maintenance ticks
+    * ([[maintainSorted]], [[maintainKeyed]]) rewrite THAT grain — the
+    * LSM bound applied at the layout grain, never the whole table.
+    * Every append adds ≤ N files (N = the layout's partition count),
+    * and scan task setup plus footer reads grow with file count even
+    * when pruning is perfect; 16 keeps scan setup O(ideal) while a
+    * compaction amortizes over many appends.
     */
   val CompactAfterSegments = 16
 
@@ -1163,8 +1164,8 @@ object ManifestLog {
     * write or retire files no manifest generation lists — invisible to
     * every reader and deleted as orphans by the next vacuum. Refuse
     * loudly toward the root-level API (`partitionDirs` for appends,
-    * `relDir` for compaction and restatement). One parent level is the
-    * layout family's nesting depth (root/year=YYYY).
+    * `relDir` for compaction). One parent level is the layout
+    * family's nesting depth (root/year=YYYY).
     */
   private def guardNotPartitionDir(spark: SparkSession, root: String): Unit = {
     val parent = new org.apache.hadoop.fs.Path(root).getParent
@@ -1172,7 +1173,7 @@ object ManifestLog {
       throw new IllegalStateException(
         s"$root is a partition directory of the manifested log $parent — " +
           "an op here is invisible to the manifest and its files vacuumed " +
-          "as orphans; append with partitionDirs or compact/restate with " +
+          "as orphans; append with partitionDirs or compact with " +
           "relDir at the log root instead")
   }
 
@@ -1240,55 +1241,6 @@ object ManifestLog {
         containment(new org.apache.hadoop.fs.Path(p, e.path), col,
           loIncl, hiExcl, conf)
     }
-
-  /** Grain restatement (the correction primitive), manifest-committed:
-    * upstream restated history (late fixes, recomputed amounts,
-    * takedown edits) replaces the grain's files with a corrected batch,
-    * re-clustered to ONE file sorted on the boundary column, never
-    * rewriting the rest of the log. The superseded history REMAINS
-    * READABLE at the prior generation, which is exactly what an
-    * auditable correction wants.
-    *
-    * Alignment contract: live files fully inside [loIncl, hiExcl) are
-    * superseded; files fully outside (and all-null leading files —
-    * null boundaries live outside every value range) are untouched;
-    * anything else — a straddling file, a null-bearing in-range file,
-    * or a file without trustworthy stats — throws: restating over it
-    * would leave stale rows alive next to their corrections. Compact
-    * the grain (or restate a wider, segment-aligned range) first. The
-    * corrected batch must be non-empty and lie entirely inside the
-    * grain ([[validatedRestateBatch]]).
-    */
-  def restateRange(spark: SparkSession, root: String, relDir: String,
-      boundCol: String, loIncl: Long, hiExcl: Long,
-      replacement: DataFrame): Unit = {
-    guardNotPartitionDir(spark, root)
-    val (p, fs) = hadoop(spark, root)
-    val conf = spark.sessionState.newHadoopConf()
-    val v = currentVersion(spark, root)
-    val m = readRaw(fs, p, v)
-    val live = m.entries
-    val grain = live.filter { e =>
-      dirOf(e.path) == relDir && {
-        classify(p, e, boundCol, loIncl, hiExcl, conf) match {
-          case Containment.Contained => true
-          case Containment.Disjoint => false
-          case Containment.Unknown => throw new IllegalStateException(
-            s"restatement grain [$loIncl, $hiExcl) is not segment-aligned at " +
-              s"'${e.path}' (straddling range, in-range nulls, or unusable stats) " +
-              "— compact the grain or restate a segment-aligned range")
-        }
-      }
-    }
-    val batch = validatedRestateBatch(replacement, boundCol, loIncl, hiExcl)
-    val staged = stageAppend(p, fs,
-      batch.repartitionByRange(1, org.apache.spark.sql.functions.col(boundCol))
-        .sortWithinPartitions(boundCol), Nil, relDir)
-    failpoint("written:restate")
-    commit(fs, p, v + 1,
-      live.diff(grain) ++ entriesFor(spark, p, staged, Seq(boundCol)),
-      "restate", m.batchHwm)
-  }
 
   /** The self-driving end of the [[CompactAfterSegments]] policy: ONE
     * maintenance-tick call that finds every over-fragmented grain and
@@ -1395,7 +1347,7 @@ object ManifestLog {
     *
     * `keyCol` must be a physical column of the data files (footer
     * stats and the survivor rewrite both live below the partition-dir
-    * encoding; deleting by a partition value is retention's job).
+    * encoding; a partition value is not a key).
     * Tombstone rows with a null key are ignored — null is not an
     * identity.
     */
@@ -1468,8 +1420,7 @@ object ManifestLog {
       candidates.map(e => new org.apache.hadoop.fs.Path(p, e.path).toString): _*)
     require(scan.columns.contains(keyCol),
       s"'$keyCol' is not a physical column of $root — keyed deletion works " +
-        "below the partition-dir encoding; use expireBefore for partition-" +
-        "valued retention")
+        "below the partition-dir encoding")
     val perFile = scan.select(col(keyCol), input_file_name().as("_gf_file"))
       .join(tomb.withColumn("_gf_hit", lit(1)), Seq(keyCol), "left")
       .groupBy("_gf_file")
@@ -1522,38 +1473,6 @@ object ManifestLog {
     commit(fs, p, v + 1, remaining ++ entriesFor(spark, p, staged, boundCol.toSeq),
       "delete", m.batchHwm)
     DeleteResult(touched.length - retired, retired, rowsDeleted)
-  }
-
-  /** Layout-level retention: commit a generation WITHOUT the files
-    * that lie wholly below `cutoff` on `boundCol` — a metadata-only
-    * operation (no data is read or rewritten; one footer read per
-    * candidate file decides it). Straddling files, null-bearing files,
-    * and files without trustworthy stats are KEPT — retention must
-    * never over-delete; compact the boundary grain first if a tighter
-    * cut is needed. The expired files stay on disk for pinned readers
-    * and for [[readAt]] audit until [[vacuum]] — retention and
-    * disposal are deliberately separate steps, because a retention
-    * policy answers "what may queries see" while vacuum answers "what
-    * may we destroy", and regulated deployments time those
-    * differently. Returns the number of files retired (0 = no commit).
-    */
-  def expireBefore(spark: SparkSession, root: String, boundCol: String,
-      cutoff: Long): Int = {
-    val (p, fs) = hadoop(spark, root)
-    val conf = spark.sessionState.newHadoopConf()
-    val v = currentVersion(spark, root)
-    val m = readRaw(fs, p, v)
-    val (expired, kept) = m.entries.partition { e =>
-      classify(p, e, boundCol, Long.MinValue, cutoff, conf) ==
-        Containment.Contained
-    }
-    if (expired.isEmpty) return 0
-    require(kept.nonEmpty,
-      s"retention cutoff $cutoff would expire EVERY live file of $root — " +
-        "an empty layout is indistinguishable from a torn one; drop the " +
-        "layout explicitly instead")
-    commit(fs, p, v + 1, kept, "expire", m.batchHwm)
-    expired.length
   }
 
   /** The disposal end: delete data files no KEPT generation references
@@ -1619,29 +1538,6 @@ object ManifestLog {
   }
 
   // ---- internals ----
-
-  /** The restatement batch contract: non-empty (a whole-grain delete is
-    * not a restatement) and entirely inside the grain — both checked
-    * loudly BEFORE anything is written. Returns the batch locally
-    * checkpointed so the (possibly expensive) upstream plan evaluates
-    * once for both the validation aggregate and the write.
-    */
-  private[util] def validatedRestateBatch(replacement: DataFrame,
-      boundCol: String, loIncl: Long, hiExcl: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit, when}
-    val batch = replacement.localCheckpoint()
-    val checks = batch.agg(
-      count(lit(1)).as("total"),
-      count(when(
-        col(boundCol).isNull || col(boundCol) < loIncl || col(boundCol) >= hiExcl,
-        lit(1))).as("strays")).head()
-    require(checks.getLong(0) > 0,
-      "restatement batch is empty — a whole-grain delete is not a restatement")
-    require(checks.getLong(1) == 0,
-      s"${checks.getLong(1)} replacement row(s) fall outside the grain " +
-        s"[$loIncl, $hiExcl) — a restatement replaces exactly its own grain")
-    batch
-  }
 
   private[util] sealed trait Containment
   private[util] object Containment {
@@ -1831,26 +1727,22 @@ object ManifestLog {
   }
 
   /** A [[tailSince]] result: either the appended files since the
-    * cursor (possibly none — compaction and retention commit versions
+    * cursor (possibly none — compaction and clustering commit versions
     * without new rows), or the instruction to resync from a full read.
     */
   sealed trait Tail { def toVersion: Long }
 
   /** Files holding exactly the rows appended in (fromVersion,
     * toVersion]; advance the cursor to `toVersion` after processing.
-    * `sawExpire` notes that a retention commit REMOVED history inside
-    * the range — irrelevant to a grow-only consumer (nothing is
-    * re-emitted and the appended files are still live), load-bearing
-    * for one that mirrors deletions.
     */
-  final case class TailAppended(
-      toVersion: Long, files: Seq[String], sawExpire: Boolean) extends Tail
+  final case class TailAppended(toVersion: Long, files: Seq[String]) extends Tail
 
   /** Incremental consumption is invalid over this range — the consumer
     * must rebuild its derived state from the current generation (and
-    * resume tailing from `toVersion`). Two causes: a restatement
-    * rewrote committed history, or the cursor fell out of [[vacuum]]'s
-    * kept-manifest window.
+    * resume tailing from `toVersion`). The causes: a commit rewrote or
+    * deleted committed history (a keyed deletion, a whole-generation
+    * rebuild, or an op the tail protocol does not know), or the cursor
+    * fell out of [[vacuum]]'s kept-manifest window.
     */
   final case class TailResync(toVersion: Long, reason: String) extends Tail
 
@@ -1862,10 +1754,10 @@ object ManifestLog {
     * (and the adopting or snapshot first generation, for a cursor of
     * 0) contribute their added files; compaction contributes NOTHING
     * (it rewrites rows the consumer already has — re-emitting them is
-    * exactly the bug this feed exists to avoid); retention
-    * removes-only (flagged); restatement and a whole-generation
-    * rebuild invalidate incremental reading and demand a loud resync,
-    * as does a cursor older than the oldest kept manifest.
+    * exactly the bug this feed exists to avoid); a keyed deletion and
+    * a whole-generation rebuild invalidate incremental reading and
+    * demand a loud resync, as do an op the protocol does not know and
+    * a cursor older than the oldest kept manifest.
     * Files referenced by kept manifests are vacuum-safe by the same
     * contract that protects pinned readers, so every returned file is
     * readable until the consumer's grace window closes.
@@ -1882,7 +1774,7 @@ object ManifestLog {
     val vs = versions(spark, root)
     require(vs.nonEmpty, s"$root has no committed manifest — adopt() it first")
     val cur = vs.max
-    if (fromVersion >= cur) return TailAppended(cur, Nil, sawExpire = false)
+    if (fromVersion >= cur) return TailAppended(cur, Nil)
     // The diff needs every manifest in [max(fromVersion,1), cur]; commits
     // are dense (+1 each), so a vacuumed-away base shows as min > that.
     if (vs.min > math.max(fromVersion, 1L))
@@ -1893,18 +1785,12 @@ object ManifestLog {
       if (fromVersion == 0L) Set.empty
       else readManifest(fs, p, fromVersion).map(_.path).toSet
     val added = Seq.newBuilder[String]
-    var sawExpire = false
     ((fromVersion + 1L) to cur).foreach { v =>
       val m = readRaw(fs, p, v)
       m.op match {
         case "append" | "append-batch" | "adopt" | "create" | "snapshot" =>
           added ++= m.entries.map(_.path).filterNot(prevPaths)
         case "compact" | "cluster" => () // rewrites of rows the consumer already has
-        case "expire" => sawExpire = true
-        case "restate" =>
-          return TailResync(cur,
-            s"v$v restated committed history — incremental consumption " +
-              s"over (v$fromVersion, v$cur] is invalid; rebuild from v$cur")
         case "rebuild" =>
           return TailResync(cur,
             s"v$v replaced the whole generation — rebuild derived state from v$cur")
@@ -1924,8 +1810,7 @@ object ManifestLog {
       prevPaths = m.entries.map(_.path).toSet
     }
     TailAppended(cur,
-      added.result().map(f => new org.apache.hadoop.fs.Path(p, f).toString),
-      sawExpire)
+      added.result().map(f => new org.apache.hadoop.fs.Path(p, f).toString))
   }
 
   /** The rows behind a [[TailAppended]], as one DataFrame (None when

@@ -21,7 +21,7 @@ import org.apache.spark.util.SerializableConfiguration
   * ([[declare]] writes a tiny `bloom-cols` file beside the manifests —
   * the [[BucketedManifest]] `bucket-spec` precedent); every staged
   * write the manifest layer performs afterwards (appends, compaction
-  * and restatement replacements, delete survivors) picks the options
+  * and clustering replacements, delete survivors) picks the options
   * up via [[writerOptions]], so the index maintains itself through
   * the layout's whole lifecycle. Files written before the declaration
   * simply have no filter and stay permanent candidates — the probe is

@@ -15,11 +15,9 @@ import org.apache.spark.sql.functions._
   *     for any positional assumption) and comparing row-for-row.
   *  2. The sorted-log append path survives widening: a widened batch
   *     lands as a new segment and a mergeSchema read sees one table —
-  *     old rows null-filled, boundary stats intact. (The bucketed
-  *     layouts widen the same way — BucketedManifestSpec's mergeSchema
-  *     case; in-place corpus rewrites re-keying the at-rest artifacts
-  *     is SnapshotsSpec's "rewriting the corpus at the same path"
-  *     proof.)
+  *     old rows null-filled, boundary stats intact. (In-place corpus
+  *     rewrites re-keying the at-rest artifacts is SnapshotsSpec's
+  *     "rewriting the corpus at the same path" proof.)
   */
 class SchemaDriftSpec extends SparkTestBase with TempCorpusDirs {
   import sqlImplicits._

@@ -188,14 +188,13 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       .withColumn("o_orderpriority",
         when(col("o_orderkey") % 5 === 0, "1-URGENT").otherwise("3-MEDIUM"))
     // Two segments per layout, split so both segments hit EVERY bucket
-    // (key mod 2 is independent of the bucket hash) — each bucket
-    // holds one file per segment. The first is the one-shot bucketed
-    // build (the orderkey pair's 32 buckets); the second appends
-    // through the manifest.
+    // (key mod 2 is independent of the bucket hash) — the one-shot
+    // bucketed build (the orderkey pair's 32 buckets) commits one file
+    // per bucket per segment, as the li-ok-pair layout does per year.
     def pair(df: DataFrame, key: String, name: String): String = {
       val root = s"${tempCorpusDir(s"graft_seg_$name")}/t"
-      graft.util.BucketedManifest.build(Seq(df.filter(col(key) % 2 === 0)), root, Seq(key), 32)
-      graft.util.BucketedManifest.appendBucketed(df.filter(col(key) % 2 === 1), root)
+      graft.util.BucketedManifest.build(
+        Seq(df.filter(col(key) % 2 === 0), df.filter(col(key) % 2 === 1)), root, Seq(key), 32)
       root
     }
     val liRoot = pair(li, "l_orderkey", "li")
@@ -203,7 +202,7 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     val bktOrd = graft.util.BucketedManifest.read(spark, pair(orders, "o_orderkey", "ord"))
     // Multi-file buckets genuinely exercised: more files than buckets.
     assert(bktLi.inputFiles.length > 32,
-      s"lineitem buckets are single-file (${bktLi.inputFiles.length}) — append produced no second segment")
+      s"lineitem buckets are single-file (${bktLi.inputFiles.length}) — the build wrote no second segment")
     // Row fidelity: the segmented table is a re-clustering of the union.
     assert(rows(bktLi) == rows(li))
     assert(bktOrd.count() == orders.count())
@@ -212,34 +211,16 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
       val joined = bktLi.join(bktOrd, col("l_orderkey") === col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
-        s"segment append broke co-location:\n$plan")
-      val expected = li.join(orders, col("l_orderkey") === col("o_orderkey")).count()
-      assert(joined.count() == expected)
+        s"multi-file buckets broke co-location:\n$plan")
+      // A row landing in the WRONG bucket file would silently drop join
+      // matches here — count equality proves the name-suffix mapping.
+      assert(joined.count() ==
+        li.join(orders, col("l_orderkey") === col("o_orderkey")).count())
       // The q49 shape: a keyed aggregation must also consume the
       // multi-file bucketed scan's distribution with no exchange.
       val agg = bktLi.groupBy("l_orderkey").agg(sum("l_quantity"))
       assert(!agg.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning"),
-        "segment append broke the exchange-free keyed aggregation")
-
-      // Per-grain COMPACTION (ManifestLog.CompactAfterSegments's rewrite):
-      // every lineitem bucket collapses back to one file; rows, bucket
-      // mapping, and co-location must all survive the rewrite.
-      val filesBefore = bktLi.inputFiles.length
-      (0 until 32).foreach(b =>
-        graft.util.BucketedManifest.compactBucket(spark, liRoot, b))
-      val compacted = graft.util.BucketedManifest.read(spark, liRoot)
-      assert(compacted.inputFiles.length <= 32 &&
-        compacted.inputFiles.length < filesBefore,
-        s"compaction left ${compacted.inputFiles.length} files (was $filesBefore)")
-      assert(rows(compacted) == rows(li),
-        "compaction is not a row-exact rewrite")
-      val joined2 = compacted.join(bktOrd, col("l_orderkey") === col("o_orderkey"))
-      val plan2 = joined2.queryExecution.executedPlan.toString
-      assert(!plan2.contains("Exchange hashpartitioning"),
-        s"compaction broke co-location:\n$plan2")
-      // A row landing in the WRONG bucket file would silently drop join
-      // matches here — count equality proves the name-suffix mapping.
-      assert(joined2.count() == expected)
+        "multi-file buckets broke the exchange-free keyed aggregation")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
@@ -471,19 +452,22 @@ class SegmentAppendSpec extends SparkTestBase with graft.TempCorpusDirs {
     pinned.zip(expected).foreach { case (df, exp) =>
       assert(rows(df) == exp, "SCD2 diverged over the manifested events log")
     }
-    // An upstream CORRECTION arrives: the second segment's grain is
-    // restated with byte-identical content (the equality-preserving
-    // probe). The restatement must supersede exactly that grain.
-    graft.util.ManifestLog.restateRange(spark, root, "", "ts_us",
-      cut, span.getLong(1) + 1L, ev.filter(col("ts_us") >= cut))
+    // The second segment's grain is rewritten with identical content
+    // (the equality-preserving probe): a compaction restages exactly
+    // that grain's rows as new files and supersedes its old ones.
+    val v = graft.util.ManifestLog.currentVersion(spark, root)
+    graft.util.ManifestLog.compactRange(spark, root, "", "ts_us",
+      cut, span.getLong(1) + 1L)
+    assert(graft.util.ManifestLog.currentVersion(spark, root) == v + 1,
+      "the grain rewrite committed no generation")
     graft.util.ManifestLog.vacuum(spark, root, keepLast = 2)
     pinned.zip(expected).foreach { case (df, exp) =>
       assert(rows(df) == exp,
-        "a reader pinned pre-restatement lost its generation")
+        "a reader pinned before the rewrite lost its generation")
     }
     queries.zip(expected).foreach { case (q, exp) =>
       assert(rows(graft.SparkEntry.queries(q)(spark, dir)) == exp,
-        s"$q diverged after a manifest-committed restatement")
+        s"$q diverged after a manifest-committed grain rewrite")
     }
   }
 

@@ -11,8 +11,9 @@ import graft.util.{ManifestLog, Tables}
   * consumer that folds each tail into the at-rest tf table (the
   * append-geometry representative from TextMaintenanceSpec) must end
   * bit-identical to the one-shot rebuild — through interleaved
-  * compaction (row-neutral for the feed) and through a restatement,
-  * where the protocol is rebuild-from-current then resume tailing.
+  * compaction (row-neutral for the feed) and through a keyed
+  * deletion, where the protocol is rebuild-from-current then resume
+  * tailing.
   * This closes the loop the streaming sink opened: documents land via
   * [[LogStream]], derived artifacts follow via [[ManifestLog.tailSince]],
   * and no step rescans history except the explicitly-demanded resync.
@@ -78,21 +79,19 @@ class TailMaintenanceSpec extends SparkTestBase with graft.ArtifactSpecHelpers {
       "tail-folded tf diverged from the one-shot rebuild")
   }
 
-  test("a restatement mid-stream forces rebuild-from-current, then tailing resumes clean") {
-    val root = s"${tempCorpusDir("graft_tailmaint_rs")}/docs-log"
+  test("a keyed deletion mid-stream forces rebuild-from-current, then tailing resumes clean") {
+    val root = s"${tempCorpusDir("graft_tailmaint_del")}/docs-log"
     var cursor = 0L
     var tf: Option[DataFrame] = None
     LogStream.ingestBatch(batches(0), 0L, root, "doc_id", filesPerBatch = 1)
     LogStream.ingestBatch(batches(1), 1L, root, "doc_id", filesPerBatch = 1)
     locally { val (c, t) = foldTail(root, cursor, tf, "pre"); cursor = c; tf = t }
 
-    // A correction rewrites batch 0's grain (text scrubbed) — the
-    // derived tf rows for those docs are now WRONG at rest.
-    val r = batches(0).agg(min("doc_id"), max("doc_id")).head()
-    val (lo, hi) = (r.getLong(0), r.getLong(1) + 1L)
-    ManifestLog.compactRange(spark, root, "", "doc_id", lo, hi)
-    ManifestLog.restateRange(spark, root, "", "doc_id", lo, hi,
-      batches(0).withColumn("text", upper(col("text"))))
+    // A takedown deletes every third doc of batch 0 — the derived tf
+    // rows for those docs are now WRONG at rest.
+    val gone = batches(0).filter(col("doc_id") % 3 === 0).select("doc_id")
+    val res = ManifestLog.deleteKeys(spark, root, "doc_id", gone, Some("doc_id"))
+    assert(res.rowsDeleted > 0, s"the takedown deleted nothing: $res")
 
     ManifestLog.tailSince(spark, root, cursor) match {
       case rs: ManifestLog.TailResync =>
@@ -101,15 +100,15 @@ class TailMaintenanceSpec extends SparkTestBase with graft.ArtifactSpecHelpers {
         tf = Some(atRest(TextOps.termFrequenciesOf(
           ManifestLog.read(spark, root)), "tail-tf-resync"))
         cursor = rs.toVersion
-      case a => fail(s"restatement must invalidate the tail, got $a")
+      case a => fail(s"a keyed deletion must invalidate the tail, got $a")
     }
-    // Tailing resumes incrementally on the corrected log.
+    // Tailing resumes incrementally on the pruned log.
     LogStream.ingestBatch(batches(2), 2L, root, "doc_id", filesPerBatch = 1)
     locally { val (c, t) = foldTail(root, cursor, tf, "post"); cursor = c; tf = t }
 
-    val corrected = batches(0).withColumn("text", upper(col("text")))
+    val kept = batches(0).filter(col("doc_id") % 3 =!= 0)
       .unionByName(batches(1)).unionByName(batches(2))
-    assert(rows(tf.get) == rows(TextOps.termFrequenciesOf(corrected)),
-      "the resync protocol did not converge on the corrected corpus")
+    assert(rows(tf.get) == rows(TextOps.termFrequenciesOf(kept)),
+      "the resync protocol did not converge on the pruned corpus")
   }
 }

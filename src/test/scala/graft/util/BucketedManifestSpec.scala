@@ -5,22 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** Manifested bucketed co-location pairs: the manifest-backed
-  * FileIndex plans exchange-free joins exactly like the catalog path,
-  * while maintenance gets the full snapshot-isolation contract —
-  * pinned readers through bucket compaction, retire-don't-delete,
-  * crash-window convergence, time travel.
+/** Manifested bucketed co-location pairs: a build commits one file per
+  * bucket per segment with no catalog table, and the manifest-backed
+  * FileIndex plans exchange-free joins, bucket pruning and stats-based
+  * file pruning exactly like the catalog path.
   */
 class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   import sqlImplicits._
-
-  private final class InjectedCrash extends RuntimeException("injected crash")
-
-  private def killAt(step: String)(body: => Unit): Unit = {
-    ManifestLog.failpoint = s => if (s.startsWith(step)) throw new InjectedCrash
-    try intercept[InjectedCrash](body)
-    finally ManifestLog.failpoint = _ => ()
-  }
 
   private val Buckets = 4
 
@@ -66,53 +57,6 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("appends add one file per bucket, validate the spec, and keep co-location") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val (fact, dim) = freshPair("app")
-      val before = ManifestLog.liveFileCount(spark, fact)
-      BucketedManifest.appendBucketed(
-        (4000 until 4400).map(i => (i.toLong % 400, i.toLong)).toDF("k", "v"), fact)
-      assert(ManifestLog.liveFileCount(spark, fact) == before + Buckets,
-        "a segment append must add one file per non-empty bucket")
-      val got = coAgg(BucketedManifest.read(spark, fact),
-        BucketedManifest.read(spark, dim))
-      assertCoLocated(got)
-      assert(got.agg(sum("n")).as[Long].head() == 4400L)
-      // A segment without the recorded key fails before any write.
-      intercept[IllegalArgumentException] {
-        BucketedManifest.appendBucketed(
-          Seq((1L, 1L)).toDF("wrong", "v"), fact)
-      }
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("bucket compaction is snapshot-isolated: pinned readers keep retired files") {
-    val (fact, _) = freshPair("cmp")
-    BucketedManifest.appendBucketed(
-      (4000 until 4400).map(i => (i.toLong % 400, i.toLong)).toDF("k", "v"), fact)
-    val pinned = BucketedManifest.read(spark, fact) // 2 files per bucket
-    val expect = canon(pinned.groupBy("k").agg(sum("v").as("sv")))
-    // The tick compacts every over-fragmented bucket grain.
-    assert(BucketedManifest.maintain(spark, fact, maxFiles = 1).length == Buckets)
-    val after = BucketedManifest.read(spark, fact)
-    assert(ManifestLog.liveFileCount(spark, fact) == Buckets)
-    assert(canon(after.groupBy("k").agg(sum("v").as("sv"))) == expect)
-    // The pinned plan still answers from the retired files …
-    assert(canon(pinned.groupBy("k").agg(sum("v").as("sv"))) == expect,
-      "compaction deleted files a pinned reader references")
-    // … and time travel reaches the pre-compaction generation.
-    val v = ManifestLog.currentVersion(spark, fact)
-    assert(canon(BucketedManifest.readAt(spark, fact, v - Buckets)
-      .groupBy("k").agg(sum("v").as("sv"))) == expect)
-    // Vacuum (pins released) drops the retired grain files.
-    assert(ManifestLog.vacuum(spark, fact).count(_.endsWith(".parquet")) == 2 * Buckets)
-    assert(canon(BucketedManifest.read(spark, fact)
-      .groupBy("k").agg(sum("v").as("sv"))) == expect)
-    // Idempotent tick.
-    assert(BucketedManifest.maintain(spark, fact, maxFiles = 1).isEmpty)
-  }
-
   test("bucket pruning: a key-equality filter scans one bucket's files") {
     // Auto-bucketed-scan turns bucketed reads off for plans with no
     // exchange to save (identical treatment to a catalog table); pin
@@ -129,52 +73,6 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
         s"bucket pruning not in play:\n$p")
     } finally
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-  }
-
-  test("the streamed bucketed batch is exactly-once; the layout stays tailable") {
-    val (fact, _) = freshPair("batch")
-    val cursor = ManifestLog.currentVersion(spark, fact)
-    val seg = (4000 until 4400).map(i => (i.toLong % 400, i.toLong)).toDF("k", "v")
-    assert(BucketedManifest.appendBucketedBatch(seg, fact, 0L))
-    assert(!BucketedManifest.appendBucketedBatch(seg, fact, 0L),
-      "a committed batch must replay as a no-op")
-    assert(BucketedManifest.read(spark, fact).count() == 4400)
-    // Maintenance carries the mark; the replay stays refused after it.
-    BucketedManifest.maintain(spark, fact, maxFiles = 1)
-    assert(!BucketedManifest.appendBucketedBatch(seg, fact, 0L))
-    assert(ManifestLog.batchHwm(spark, fact) == 0L)
-    // The changes feed works unchanged over the bucketed layout: the
-    // batch's files alone, compaction contributing nothing.
-    ManifestLog.tailSince(spark, fact, cursor) match {
-      case a: ManifestLog.TailAppended =>
-        val t = ManifestLog.readTail(spark, fact, a).get
-        assert(t.count() == 400, "the tail must carry exactly the batch")
-      case r: ManifestLog.TailResync => fail(r.reason)
-    }
-  }
-
-  test("crash windows converge: torn append stays invisible, torn compaction retries") {
-    val (fact, _) = freshPair("crash")
-    val expect = canon(BucketedManifest.read(spark, fact))
-    val seg = (4000 until 4400).map(i => (i.toLong % 400, i.toLong)).toDF("k", "v")
-    killAt("written:append-bucketed") {
-      BucketedManifest.appendBucketed(seg, fact)
-    }
-    assert(canon(BucketedManifest.read(spark, fact)) == expect,
-      "a crashed append leaked into the current generation")
-    ManifestLog.vacuum(spark, fact) // orphaned bucket files
-    BucketedManifest.appendBucketed(seg, fact)
-    assert(BucketedManifest.read(spark, fact).count() == 4400,
-      "retry duplicated or lost the segment")
-    killAt("written:compact-bucket") {
-      BucketedManifest.compactBucket(spark, fact, 0)
-    }
-    assert(BucketedManifest.read(spark, fact).count() == 4400)
-    BucketedManifest.compactBucket(spark, fact, 0)
-    assert(BucketedManifest.read(spark, fact).count() == 4400)
-    assert(ManifestLog.currentEntries(spark, fact)
-      .count(_.path.matches(""".*_0{4}0(?:\..*)?$""")) == 1,
-      "bucket 0's grain did not collapse")
   }
 
   /** Every file the current generation lists holds only rows whose
@@ -198,20 +96,16 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
       (lo until hi).map(i => (i.toLong % 300, i.toLong % 7, i.toLong)).toDF("k1", "k2", "v")
     val tablesBefore = spark.catalog.listTables().collect().map(_.name).toSet
     val executions = executionsOf {
-      BucketedManifest.build(Seq(rows(0, 2000).drop("k2").withColumnRenamed("k1", "k")),
+      BucketedManifest.build(
+        Seq(rows(0, 2000), rows(2000, 2400)).map(_.drop("k2").withColumnRenamed("k1", "k")),
         single, Seq("k"), Buckets)
-      BucketedManifest.appendBucketed(
-        rows(2000, 2400).drop("k2").withColumnRenamed("k1", "k"), single)
-      BucketedManifest.compactBucket(spark, single, 0)
-      val del = BucketedManifest.deleteKeys(spark, single, Seq(1L, 2L, 3L, 4L).toDF("k"))
-      assert(del.rowsDeleted == 32L, s"four keys of eight rows each: $del")
-      BucketedManifest.build(Seq(rows(0, 2000)), composite, Seq("k1", "k2"), Buckets)
-      BucketedManifest.appendBucketed(rows(2000, 2400), composite)
-      BucketedManifest.compactBucket(spark, composite, 0)
+      BucketedManifest.build(Seq(rows(0, 2000), rows(2000, 2400)), composite,
+        Seq("k1", "k2"), Buckets)
     }
-    assert(ManifestLog.currentEntries(spark, single)
-      .count(_.path.matches(""".*_0{5}(?:\..*)?$""")) == 1, "bucket 0 did not compact")
-    assert(BucketedManifest.read(spark, single).count() == 2400L - 4L * 8L)
+    // Both segments reach every bucket: one file per bucket per segment.
+    assert(ManifestLog.liveFileCount(spark, single) == 2 * Buckets)
+    assert(ManifestLog.liveFileCount(spark, composite) == 2 * Buckets)
+    assert(BucketedManifest.read(spark, single).count() == 2400L)
     assert(BucketedManifest.read(spark, composite).count() == 2400L)
     assertPlacement(single, Seq("k"))
     assertPlacement(composite, Seq("k1", "k2"))
@@ -222,12 +116,12 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(spark.catalog.listTables().collect().map(_.name).toSet == tablesBefore)
   }
 
-  test("a composite-key build records every key, plans its full BucketSpec and refuses keyed deletion") {
+  test("a composite-key build records every key and plans its full BucketSpec") {
     val root = s"${tempCorpusDir("graft_bman_composite")}/grain"
     val grain = (0 until 400).map(i => (i.toLong % 20, i.toLong % 7, i.toLong)).toDF("a", "b", "v")
     BucketedManifest.build(Seq(grain), root, Seq("a", "b"), Buckets)
     val s = BucketedManifest.spec(spark, root)
-    assert(s.keys == Seq("a", "b") && s.buckets == Buckets && s.keyType.isEmpty, s"spec: $s")
+    assert(s == BucketedManifest.Spec(Seq("a", "b"), Buckets), s"spec: $s")
     val agg = BucketedManifest.read(spark, root).groupBy("a", "b").agg(sum("v").as("sv"))
     val scan = agg.queryExecution.sparkPlan.collectLeaves().collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
@@ -239,14 +133,6 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(!p.contains("Arguments: hashpartitioning("),
       s"the composite-key aggregate must not re-shuffle:\n$p")
     assert(canon(agg) == canon(grain.groupBy("a", "b").agg(sum("v").as("sv"))))
-    // hash(a) cannot find rows placed by hash(a, b): refused before
-    // anything is read or written.
-    val v = ManifestLog.currentVersion(spark, root)
-    val e = intercept[IllegalArgumentException] {
-      BucketedManifest.deleteKeys(spark, root, Seq(1L).toDF("a"))
-    }
-    assert(e.getMessage.contains("single-key"), e.getMessage)
-    assert(ManifestLog.currentVersion(spark, root) == v)
   }
 
   test("a build onto a root that records another bucket spec fails and keeps the recorded spec") {
@@ -262,26 +148,6 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(canon(BucketedManifest.read(spark, root)) == canon(df))
   }
 
-  test("mergeSchema widens the bucketed read across schema-drifted appends") {
-    val (fact, _) = freshPair("drift")
-    // A later producer adds a column; the bucketed append takes the
-    // segment's own schema (parquet is self-describing per file).
-    BucketedManifest.appendBucketed(
-      (400 until 410).map(i => (i.toLong, i.toLong, s"n$i"))
-        .toDF("k", "v", "note"), fact)
-    val merged = BucketedManifest.read(spark, fact,
-      Map("mergeSchema" -> "true"))
-    assert(merged.columns.toSet == Set("k", "v", "note"),
-      s"merged schema lost columns: ${merged.columns.mkString(",")}")
-    assert(merged.where(col("note").isNotNull).count() == 10L)
-    assert(merged.count() == 4010L)
-    // And the widened relation still joins exchange-free on k.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try assertCoLocated(coAgg(merged,
-      BucketedManifest.read(spark, freshPair("driftdim")._2)))
-    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
   /** Executed-scan file count (the LogStreamSpec idiom): pruning that
     * matters is what the EXECUTED plan reads, not what the logical
     * plan mentions. */
@@ -292,33 +158,36 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
   }
 
   test("declared stat columns prune files at PLAN time through the manifest index") {
-    val root = s"${tempCorpusDir("graft_bman_stats")}/fact"
+    val dir = tempCorpusDir("graft_bman_stats")
+    val (root, plain) = (s"$dir/fact", s"$dir/plain")
     def rows(lo: Int, hi: Int) =
       (lo until hi).map(i => (i.toLong % 100, i.toLong, i.toLong))
         .toDF("k", "v", "ts")
-    BucketedManifest.build(Seq(rows(0, 1000)), root, Seq("k"), Buckets)
-    // Declaration AFTER the build: the initial generation is stats-less
-    // and must stay a permanent candidate; only later appends record.
-    BucketedManifest.declareStats(spark, root, Seq("ts"))
-    BucketedManifest.appendBucketed(rows(1000, 2000), root)
-    BucketedManifest.appendBucketed(rows(2000, 3000), root)
+    val segments = Seq(rows(0, 1000), rows(1000, 2000), rows(2000, 3000))
+    // Three ts-disjoint segments: each bucket holds one file per
+    // segment, and every file records its ts range in the manifest.
+    BucketedManifest.build(segments, root, Seq("k"), Buckets, statCols = Seq("ts"))
     val df = BucketedManifest.read(spark, root)
     val total = df.inputFiles.length
     assert(total == 3 * Buckets)
-    // A ts window inside the SECOND batch: the stats-less build files
-    // stay admitted (conservative), batch 1's files prune — through
-    // the ordinary .filter, no special read API.
+    // A ts window inside the LAST segment scans only its files —
+    // through the ordinary .filter, no special read API.
     val q = df.filter(col("ts") >= 2000L && col("ts") < 2500L)
-    assert(scannedFiles(q) == 2L * Buckets,
-      "pushed ts bounds did not prune the disjoint batch's files")
+    assert(scannedFiles(q) == Buckets.toLong,
+      "pushed ts bounds did not prune the disjoint segments' files")
     assert(canon(q.select("k", "v", "ts")) ==
       canon(spark.read.parquet(root)
         .filter(col("ts") >= 2000L && col("ts") < 2500L)
         .select("k", "v", "ts")))
     // Point predicate prunes the same way.
-    assert(scannedFiles(df.filter(col("ts") === 1500L)) == 2L * Buckets)
+    assert(scannedFiles(df.filter(col("ts") === 1500L)) == Buckets.toLong)
     // A filter on an UNDECLARED column prunes nothing (conservative).
     assert(scannedFiles(df.filter(col("v") >= 2000L)) == total.toLong)
+    // Nor does a build that records no stat column: stats-less files
+    // stay candidates for every filter.
+    BucketedManifest.build(segments, plain, Seq("k"), Buckets)
+    assert(scannedFiles(BucketedManifest.read(spark, plain)
+      .filter(col("ts") >= 2000L && col("ts") < 2500L)) == total.toLong)
     // The filtered co-located join still plans with zero key exchanges
     // and answers exactly.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -331,16 +200,27 @@ class BucketedManifestSpec extends SparkTestBase with graft.TempCorpusDirs {
         spark.read.parquet(root).filter(col("ts") >= 2000L),
         spark.read.parquet(dim))))
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    // Maintenance keeps recording: a bucket compaction's replacement
-    // carries merged ts stats, so the window filter keeps pruning the
-    // OTHER batch after the rewrite.
-    BucketedManifest.maintain(spark, root, maxFiles = 1)
-    ManifestLog.vacuum(spark, root) // a raw dir read must not see retired files
-    val dfc = BucketedManifest.read(spark, root)
-    assert(dfc.inputFiles.length == Buckets, "compaction should leave 1 file/bucket")
-    assert(canon(dfc.filter(col("ts") >= 2000L && col("ts") < 2500L)
-      .select("k", "v", "ts")) ==
-      canon(spark.read.parquet(root).filter(col("ts") >= 2000L && col("ts") < 2500L)
-        .select("k", "v", "ts")))
+  }
+
+  test("a spec line that also records the key type reads as the same spec") {
+    // Older builds wrote `keys<TAB>buckets<TAB>type-json`; committed
+    // roots of fixed corpora outlive the build that wrote them.
+    val root = s"${tempCorpusDir("graft_bman_spec3")}/grain"
+    val df = (0 until 400).map(i => (i.toLong % 40, i.toLong)).toDF("k", "v")
+    BucketedManifest.build(Seq(df), root, Seq("k"), Buckets)
+    val f = java.nio.file.Paths.get(root, "_manifests", "bucket-spec")
+    assert(new String(java.nio.file.Files.readAllBytes(f), "UTF-8") == s"k\t$Buckets\n")
+    // The local filesystem checksums what it writes; drop the stale sum.
+    java.nio.file.Files.deleteIfExists(f.getParent.resolve(".bucket-spec.crc"))
+    java.nio.file.Files.write(f,
+      s"k\t$Buckets\t${org.apache.spark.sql.types.LongType.json}\n".getBytes("UTF-8"))
+    assert(BucketedManifest.spec(spark, root) == BucketedManifest.Spec(Seq("k"), Buckets))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val (_, dim) = freshPair("spec3dim")
+      val got = coAgg(BucketedManifest.read(spark, root), BucketedManifest.read(spark, dim))
+      assertCoLocated(got)
+      assert(canon(got) == canon(coAgg(df, spark.read.parquet(dim))))
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

@@ -1,13 +1,11 @@
 package graft.util
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkTestBase
 import graft.streaming.LogStream
 
 /** The changes feed over a manifested log: tails return exactly the
-  * rows appended after a version cursor, compaction and retention
-  * never re-emit, restatement and an outrun cursor demand a loud
+  * rows appended after a version cursor, compaction never re-emits, an
+  * outrun cursor and an op the protocol does not know demand a loud
   * resync, and every tailed file is readable under the pinned-reader
   * vacuum contract.
   */
@@ -75,36 +73,11 @@ class LogTailSpec extends SparkTestBase with graft.TempCorpusDirs {
         java.nio.file.Paths.get(new java.net.URI(f).getPath))))
   }
 
-  test("restatement demands a loud resync, after which tailing resumes") {
-    val root = s"${tempCorpusDir("graft_tail_restate")}/log"
-    LogStream.ingestBatch(batchDf(0, 500), 0L, root, "ts")
-    val cursor = ManifestLog.tailSince(spark, root, 0L).toVersion
-    ManifestLog.compactRange(spark, root, "", "ts", 0L, 1000000L)
-    ManifestLog.restateRange(spark, root, "", "ts", 0L, 1000000L,
-      batchDf(0, 500).withColumn("k", col("k") + 100000L))
-    ManifestLog.tailSince(spark, root, cursor) match {
-      case r: ManifestLog.TailResync =>
-        assert(r.reason.contains("restated"), r.reason)
-        // The protocol: rebuild from the current generation, resume
-        // the cursor there.
-        assert(ManifestLog.read(spark, root).count() == 500)
-        LogStream.ingestBatch(batchDf(500, 700), 1L, root, "ts")
-        assert(canonTail(ManifestLog.tailSince(spark, root, r.toVersion), root)
-          == expect(500, 700))
-      case a => fail(s"restatement must invalidate the tail, got $a")
-    }
-  }
-
-  test("retention flags but never re-emits; a vacuum-outrun cursor resyncs") {
-    val root = s"${tempCorpusDir("graft_tail_expire")}/log"
+  test("a vacuum-outrun cursor resyncs; the current cursor tails cleanly after vacuum") {
+    val root = s"${tempCorpusDir("graft_tail_vacuum")}/log"
     LogStream.ingestBatch(batchDf(0, 500), 0L, root, "ts")
     val cursor = ManifestLog.tailSince(spark, root, 0L).toVersion
     LogStream.ingestBatch(batchDf(500, 800), 1L, root, "ts")
-    assert(ManifestLog.expireBefore(spark, root, "ts", 500000L) == 1)
-    val t = ManifestLog.tailSince(spark, root, cursor)
-    assert(canonTail(t, root) == expect(500, 800))
-    assert(t.asInstanceOf[ManifestLog.TailAppended].sawExpire,
-      "a retention commit inside the range must be flagged")
     // Vacuum to the current generation only: the old cursor's manifests
     // are gone — the feed must refuse, not guess.
     ManifestLog.vacuum(spark, root)
@@ -112,9 +85,31 @@ class LogTailSpec extends SparkTestBase with graft.TempCorpusDirs {
       case r: ManifestLog.TailResync => assert(r.reason.contains("vacuum"), r.reason)
       case a => fail(s"an outrun cursor must resync, got $a")
     }
-    // The current cursor still tails cleanly after vacuum.
     val cur = ManifestLog.currentVersion(spark, root)
     LogStream.ingestBatch(batchDf(800, 900), 2L, root, "ts")
     assert(canonTail(ManifestLog.tailSince(spark, root, cur), root) == expect(800, 900))
+  }
+
+  test("a generation committed with op expire resyncs as an op unknown to the tail protocol") {
+    // Roots committed by older builds can carry retention generations:
+    // op `expire`, the files wholly below a cutoff dropped from the
+    // list. The protocol no longer knows the op, so it must not guess.
+    val root = s"${tempCorpusDir("graft_tail_expire")}/log"
+    LogStream.ingestBatch(batchDf(0, 500), 0L, root, "ts")
+    val cursor = ManifestLog.tailSince(spark, root, 0L).toVersion
+    LogStream.ingestBatch(batchDf(500, 800), 1L, root, "ts")
+    val (p, fs) = ManifestLog.hadoop(spark, root)
+    val v = ManifestLog.currentVersion(spark, root)
+    val m = ManifestLog.readRaw(fs, p, v)
+    val expired = ManifestLog.readRaw(fs, p, cursor).entries
+    assert(expired.nonEmpty)
+    ManifestLog.commit(fs, p, v + 1, m.entries.diff(expired), "expire", m.batchHwm)
+    assert(ManifestLog.describe(spark, root).last._2 == "expire")
+    ManifestLog.tailSince(spark, root, cursor) match {
+      case r: ManifestLog.TailResync =>
+        assert(r.reason.contains("unknown to the tail protocol"), r.reason)
+        assert(r.toVersion == v + 1)
+      case a => fail(s"an expire generation must resync, got $a")
+    }
   }
 }

@@ -172,7 +172,7 @@ class ManifestDeleteSpec extends SparkTestBase with graft.TempCorpusDirs {
       rows.filterNot(r => deleted(r._1)).sorted)
     // Replacement files live under their own partition dirs.
     assert(ManifestLog.currentEntries(spark, root).forall(_.path.contains("year=")))
-    // Deleting by the partition-dir column is retention's job, loudly.
+    // The partition-dir column is not a physical key: refused loudly.
     intercept[IllegalArgumentException] {
       ManifestLog.deleteKeys(spark, root, "year", Seq(2020).toDF("year"))
     }

@@ -9,11 +9,11 @@ import graft.SparkTestBase
 /** Seeded fuzz of the manifest lifecycle (the SegmentsPropertySpec
   * idiom): random interleavings of append / streaming batch ingest
   * (with torn attempts and checkpoint replays) / compact-tick /
-  * restate / expire / vacuum, with readers pinned at random points,
+  * z-cluster / vacuum, with readers pinned at random points,
   * must always satisfy the manifest invariants — the current read
   * equals a plain in-memory model of the operations, the batch
   * high-water mark tracks exactly the committed batches (so a replay
-  * is refused even after the batch's rows were restated or expired),
+  * is refused even after the batch's rows were compacted or clustered),
   * every pinned reader inside the kept window re-collects its
   * generation exactly, and slice reads agree with filtered full
   * reads. The directed ManifestLogSpec/LogStreamSpec prove each
@@ -63,49 +63,15 @@ class ManifestLogPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
           root, batchId, boundCol = Some("ts"))
 
       (1 to 12).foreach { _ =>
-        rng.nextInt(9) match {
+        rng.nextInt(7) match {
           case 0 | 1 => // append a random-span batch (possibly far future)
             val lo = rng.nextInt(4).toLong * 1000000L
             append(batch(lo, lo + 1000000L, 50 + rng.nextInt(150)))
           case 2 => // maintenance tick at a small bound
             ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 2)
-          case 3 => // restate a random committed span with shifted keys
-            val lo = rng.nextInt(4).toLong * 1000000L
-            val hi = lo + 1000000L
-            val grainRows = model.filter(r => r._2 >= lo && r._2 < hi)
-            if (grainRows.nonEmpty) {
-              val replacement = grainRows.map { case (k, ts) => (k + 1000000L, ts) }
-              // Only aligned grains restate; fragmented ones throw —
-              // compact first, as the contract prescribes.
-              ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1)
-              // A z-clustered history may have merged ts bands into
-              // files no boundary grain can align to — then the
-              // restate REFUSES loudly (the documented contract), and
-              // the refusal must leave the generation untouched.
-              try {
-                ManifestLog.restateRange(spark, root, "", "ts", lo, hi,
-                  replacement.toDF("k", "ts"))
-                model = model.filterNot(r => r._2 >= lo && r._2 < hi) ++ replacement
-              } catch {
-                case e: IllegalStateException =>
-                  assert(e.getMessage.contains("not segment-aligned"))
-                  assert(canon(ManifestLog.read(spark, root)) == model.sorted,
-                    s"trial $trial: a refused restate mutated the layout")
-              }
-            }
-          case 4 => // retention at a random cutoff (best-effort: may expire nothing)
-            val cutoff = rng.nextInt(3).toLong * 1000000L
-            val wouldKeep = model.exists(_._2 >= cutoff)
-            if (cutoff > 0 && wouldKeep) {
-              // Align grains so whole files fall below the cutoff.
-              ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1)
-              val dropped = ManifestLog.expireBefore(spark, root, "ts", cutoff)
-              if (dropped > 0)
-                model = model.filter(_._2 >= cutoff)
-            }
-          case 5 => // pin a reader on the current generation
+          case 3 => // pin a reader on the current generation
             pinned :+= ((ManifestLog.read(spark, root), model.sorted))
-          case 6 => // streaming batch, possibly with a torn first attempt
+          case 4 => // streaming batch, possibly with a torn first attempt
             val lo = rng.nextInt(4).toLong * 1000000L
             val rows = batch(lo, lo + 1000000L, 30 + rng.nextInt(70))
             val id = committedBatches.length.toLong
@@ -121,13 +87,13 @@ class ManifestLogPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
             assert(ingest(rows, id), s"trial $trial: fresh batch refused")
             committedBatches :+= rows
             model ++= rows
-          case 7 => // checkpoint replay of a random already-committed batch
+          case 5 => // checkpoint replay of a random already-committed batch
             if (committedBatches.nonEmpty) {
               val id = rng.nextInt(committedBatches.length)
               assert(!ingest(committedBatches(id), id.toLong),
                 s"trial $trial: committed batch $id re-ran")
             }
-          case 8 => // z-cluster: row-neutral, both columns gain stats
+          case 6 => // z-cluster: row-neutral, both columns gain stats
             ManifestLog.cluster(spark, root, Seq("ts", "k"),
               targetFileRows = 100L)
         }

@@ -23,9 +23,8 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
   private def freshLog(): (String, Seq[(Long, Long)]) = {
     val root = s"${tempCorpusDir("graft_mlog")}/log"
     val rows = (0 until 2000).map(i => (i.toLong, i.toLong * 1000L))
-    // Two files with EXACT ranges [0, 1M) and [1M, 2M) — the
-    // restatement test's grain edge must not depend on a range
-    // partitioner's sampled boundary.
+    // Two files with EXACT ranges [0, 1M) and [1M, 2M) — a grain edge
+    // at 1M must not depend on a range partitioner's sampled boundary.
     rows.toDF("k", "ts").filter(col("ts") < 1000000L)
       .coalesce(1).sortWithinPartitions("ts").write.mode("append").parquet(root)
     rows.toDF("k", "ts").filter(col("ts") >= 1000000L)
@@ -82,50 +81,12 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(ManifestLog.currentVersion(spark, root) == v)
   }
 
-  test("restatement supersedes the grain in the LIST; prior generation remains auditable") {
-    val (root, rows) = freshLog()
-    // v1 has 2 files over [0, 2M); restate the upper file's range.
-    val files = ManifestLog.read(spark, root).inputFiles.sorted
-    assert(files.length == 2)
-    val corrected = (1000 until 2000).map(i => (i.toLong + 100000L, i.toLong * 1000L))
-    ManifestLog.restateRange(spark, root, "", "ts", 1000000L, 2000000L,
-      corrected.toDF("k", "ts"))
-    val lower = rows.filter(_._2 < 1000000L)
-    assert(canon(ManifestLog.read(spark, root)) == (lower ++ corrected).sorted)
-    assert(canon(ManifestLog.readAt(spark, root, 1L)) == rows.sorted,
-      "the pre-correction state must stay readable for audit")
-  }
-
-  test("an empty restatement batch is refused before anything is written") {
-    val (root, rows) = freshLog()
-    val before = filesUnder(root)
-    val v = ManifestLog.currentVersion(spark, root)
-    val e = intercept[IllegalArgumentException](
-      ManifestLog.restateRange(spark, root, "", "ts", 1000000L, 2000000L,
-        Seq.empty[(Long, Long)].toDF("k", "ts")))
-    assert(e.getMessage.contains("a whole-grain delete is not a restatement"), e.getMessage)
-    assert(filesUnder(root) == before, "a refused restatement wrote into the log")
-    assert(ManifestLog.currentVersion(spark, root) == v)
-    assert(canon(ManifestLog.read(spark, root)) == rows.sorted)
-  }
-
   test("every crash window leaves the current generation untouched; vacuum removes the orphans") {
     val compact = (root: String) =>
       ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)
-    val corrected = (1000 until 2000).map(i => (i.toLong + 100000L, i.toLong * 1000L))
-    val restate = (root: String) =>
-      ManifestLog.restateRange(spark, root, "", "ts", 1000000L, 2000000L,
-        corrected.toDF("k", "ts"))
-    val restated = (rows: Seq[(Long, Long)]) => rows.filter(_._2 < 1000000L) ++ corrected
-    // (window, mutation, rows once the retry converges, live files then)
-    Seq[(String, String => Unit, Seq[(Long, Long)] => Seq[(Long, Long)], Int)](
-      ("written:", compact, identity, 1),
-      ("staged:manifest", compact, identity, 1),
-      ("written:restate", restate, restated, 2),
-      ("staged:manifest", restate, restated, 2)
-    ).foreach { case (window, mutate, converged, filesAfter) =>
+    Seq("written:", "staged:manifest").foreach { window =>
       val (root, rows) = freshLog()
-      killAt(window) { mutate(root) }
+      killAt(window) { compact(root) }
       // No torn state: v1 is still current and complete.
       assert(ManifestLog.currentVersion(spark, root) == 1L, s"window '$window'")
       assert(canon(ManifestLog.read(spark, root)) == rows.sorted, s"window '$window'")
@@ -134,11 +95,9 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       assert(canon(ManifestLog.read(spark, root)) == rows.sorted,
         s"window '$window': vacuum touched a live file")
       // Retry converges.
-      mutate(root)
-      assert(canon(ManifestLog.read(spark, root)) == converged(rows).sorted,
-        s"window '$window'")
-      assert(ManifestLog.read(spark, root).inputFiles.length == filesAfter,
-        s"window '$window'")
+      compact(root)
+      assert(canon(ManifestLog.read(spark, root)) == rows.sorted, s"window '$window'")
+      assert(ManifestLog.read(spark, root).inputFiles.length == 1, s"window '$window'")
     }
   }
 
@@ -157,9 +116,6 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
       "appendSorted" -> (() => ManifestLog.appendSorted(batch.coalesce(1), root)),
       "compactRange" -> (() =>
         ManifestLog.compactRange(spark, root, "", "ts", 0L, 3000000L)),
-      "restateRange" -> (() =>
-        ManifestLog.restateRange(spark, root, "", "ts", 0L, 1000000L,
-          rows.filter(_._2 < 1000000L).toDF("k", "ts"))),
       "maintainSorted" -> (() =>
         ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 1))
     ).foreach { case (op, call) =>
@@ -238,25 +194,6 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     // commit nothing the root's manifest lists.
     intercept[IllegalStateException] {
       ManifestLog.compactRange(spark, s"$root/year=1991", "", "ts", 0L, 3000000L)
-    }
-  }
-
-  test("retention expires whole files below the cutoff, keeps straddlers, never empties the layout") {
-    val (root, rows) = freshLog() // files [0, 1M) and [1M, 2M)
-    // A cutoff inside the second file: only the first file is wholly
-    // below it — the straddler is KEPT (retention never over-deletes).
-    assert(ManifestLog.expireBefore(spark, root, "ts", 1500000L) == 1)
-    assert(canon(ManifestLog.read(spark, root)) == rows.filter(_._2 >= 1000000L).sorted,
-      "expiry must retire exactly the wholly-below files")
-    // The expired history is still auditable, then vacuumable.
-    assert(canon(ManifestLog.readAt(spark, root, 1L)) == rows.sorted)
-    val deleted = ManifestLog.vacuum(spark, root)
-    assert(deleted.count(_.endsWith(".parquet")) == 1)
-    // Idempotent: nothing else is wholly below the cutoff.
-    assert(ManifestLog.expireBefore(spark, root, "ts", 1500000L) == 0)
-    // Expiring EVERYTHING is refused loudly.
-    intercept[IllegalArgumentException] {
-      ManifestLog.expireBefore(spark, root, "ts", Long.MaxValue)
     }
   }
 
@@ -380,14 +317,13 @@ class ManifestLogSpec extends SparkTestBase with graft.TempCorpusDirs {
     val (root, _) = freshLog()
     ManifestLog.appendSorted(
       Seq((5000L, 2500000L)).toDF("k", "ts").coalesce(1), root)
-    assert(ManifestLog.expireBefore(spark, root, "ts", 1500000L) == 1)
     ManifestLog.compactRange(spark, root, "", "ts", 1000000L, 3000000L)
     val trail = ManifestLog.describe(spark, root)
-    assert(trail.map(_._2) == Seq("adopt", "append", "expire", "compact"),
+    assert(trail.map(_._2) == Seq("adopt", "append", "compact"),
       s"unexpected audit trail: $trail")
-    assert(trail.map(_._1) == Seq(1L, 2L, 3L, 4L))
-    // File counts narrate the shape: 2 → 3 → 2 → 1.
-    assert(trail.map(_._3) == Seq(2, 3, 2, 1), s"unexpected live counts: $trail")
+    assert(trail.map(_._1) == Seq(1L, 2L, 3L))
+    // File counts narrate the shape: 2 → 3 → 2.
+    assert(trail.map(_._3) == Seq(2, 3, 2), s"unexpected live counts: $trail")
   }
 
   test("a truncated manifest is refused, never served as a shrunken table") {

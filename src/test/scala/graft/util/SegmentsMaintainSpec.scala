@@ -72,20 +72,4 @@ class SegmentsMaintainSpec extends SparkTestBase with graft.TempCorpusDirs {
     assert(ManifestLog.readAt(spark, root, 2L).count() == 2 * 500)
     assert(ManifestLog.maintainSorted(spark, root, "ts", maxFiles = 3).isEmpty)
   }
-
-  test("bucketed tick compacts exactly the over-fragmented buckets") {
-    val df = (0 until 400).map(i => (i.toLong, i.toString)).toDF("k", "v")
-    // Four segments (the one-shot build plus three appends) leave
-    // every bucket at the bound; the fifth tips both over it.
-    val root = s"${tempCorpusDir("graft_maint_bkt")}/t"
-    BucketedManifest.build(Seq(df), root, Seq("k"), 2)
-    (0 until 3).foreach(_ => BucketedManifest.appendBucketed(df, root))
-    assert(BucketedManifest.maintain(spark, root, maxFiles = 4).isEmpty,
-      "4 files per bucket is within the bound")
-    BucketedManifest.appendBucketed(df, root)
-    val targets = BucketedManifest.maintain(spark, root, maxFiles = 4)
-    assert(targets == Seq(0, 1), s"expected both buckets compacted: $targets")
-    assert(BucketedManifest.read(spark, root).count() == 5 * 400)
-    assert(BucketedManifest.maintain(spark, root, maxFiles = 4).isEmpty)
-  }
 }

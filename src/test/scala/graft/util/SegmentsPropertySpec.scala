@@ -9,8 +9,9 @@ import graft.SparkTestBase
 /** Seeded fuzz of the segment-append lifecycle (the OpsPropertySpec
   * idiom — plain seeded loops, scalatestplus bridge not in the offline
   * cache): random batch splits, empty batches, and NULL boundary
-  * values, folded through append → read → compact, must always
-  * preserve the multiset and keep the boundary scan correct. The
+  * values, folded through append → read → compact (and random
+  * segment counts through one bucketed build), must always preserve
+  * the multiset and keep the boundary scan correct. The
   * directed SegmentAppendSpec proves the geometry (pruning metrics,
   * co-location); this spec proves the lifecycle has no
   * split-shape-dependent correctness edges.
@@ -77,22 +78,22 @@ class SegmentsPropertySpec extends SparkTestBase with graft.TempCorpusDirs {
         .toDF("l_orderkey", "l_quantity")
       val orders = (0 until n / 2).map(i => (i.toLong, s"p${i % 5}"))
         .toDF("o_orderkey", "o_flag")
-      // Random batch count; batches may be empty (an ingest tick with
-      // no matching rows must be harmless). Batch 0 is the one-shot
-      // bucketed build; the rest append as segments.
+      // Random segment count, all committed by one bucketed build;
+      // the lineitem side adds an empty segment (an ingest tick with
+      // no matching rows must be harmless).
       val nBatches = 1 + rng.nextInt(4)
-      def layout(df: org.apache.spark.sql.DataFrame, key: String, name: String): String = {
+      def layout(df: org.apache.spark.sql.DataFrame, key: String, name: String,
+          extra: Seq[org.apache.spark.sql.DataFrame] = Nil): String = {
         val root = s"${tempCorpusDir(s"graft_fuzz_$name$trial")}/t"
-        BucketedManifest.build(Seq(df.filter(col(key) % nBatches === 0)), root, Seq(key), 8)
-        (1 until nBatches).foreach(b =>
-          BucketedManifest.appendBucketed(df.filter(col(key) % nBatches === b), root))
+        BucketedManifest.build(
+          (0 until nBatches).map(b => df.filter(col(key) % nBatches === b)) ++ extra,
+          root, Seq(key), 8)
         root
       }
-      val (liRoot, ordRoot) = (layout(li, "l_orderkey", "li"), layout(orders, "o_orderkey", "ord"))
-      // Empty-batch append: no-op on content, still valid.
-      BucketedManifest.appendBucketed(li.filter(lit(false)), liRoot)
+      val liRoot = layout(li, "l_orderkey", "li", Seq(li.filter(lit(false))))
+      val ordRoot = layout(orders, "o_orderkey", "ord")
       val bl = BucketedManifest.read(spark, liRoot)
-      assert(bl.count() == n, s"trial $trial: bucket append lost rows")
+      assert(bl.count() == n, s"trial $trial: a bucket segment lost rows")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try {
         val j = bl.join(BucketedManifest.read(spark, ordRoot),

@@ -243,7 +243,7 @@ class ZClusterSpec extends SparkTestBase with graft.TempCorpusDirs {
     val cursor = ManifestLog.currentVersion(spark, root)
     ManifestLog.cluster(spark, root, Seq("ts", "uid"), targetFileRows = 8192L)
     ManifestLog.tailSince(spark, root, cursor) match {
-      case ManifestLog.TailAppended(to, files, _) =>
+      case ManifestLog.TailAppended(to, files) =>
         assert(files.isEmpty, s"cluster() re-emitted ${files.length} files to a tail consumer")
         assert(to == cursor + 1L)
       case other => fail(s"expected a quiet TailAppended, got $other")
@@ -254,7 +254,7 @@ class ZClusterSpec extends SparkTestBase with graft.TempCorpusDirs {
         .coalesce(1).sortWithinPartitions("ts"),
       root, Nil, Some("ts"))
     ManifestLog.tailSince(spark, root, cursor + 1L) match {
-      case ManifestLog.TailAppended(_, files, _) => assert(files.length == 1)
+      case ManifestLog.TailAppended(_, files) => assert(files.length == 1)
       case other => fail(s"expected the appended file, got $other")
     }
   }
